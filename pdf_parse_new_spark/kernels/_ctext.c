@@ -2,13 +2,14 @@
  *
  * Tokenizes one PDF content stream and executes the *positional* part of
  * the text state (Tm/Td/TD/TL/T* line matrix, Tc/Tw/Tz/Ts spacing state,
- * BT resets) at C speed, emitting a compact event array. Python replays
- * the events — font decode, x-advance accumulation, line folding — over
- * ~10-50x fewer iterations than per-token interpretation.
+ * BT resets) at C speed, emitting a compact event array. pdftext_replay
+ * below replays the events — font decode, x-advance accumulation, line
+ * folding — over ~10-50x fewer iterations than per-token interpretation.
  *
- * Semantics mirror pdf_parse_new_spark/kernels/pdfb.py:_TextInterp.run
+ * Semantics mirror pdf_parse_new_spark/kernels/pdfb.py:_TextInterp._run_py
  * exactly (that pure-Python interpreter remains the reference
- * implementation and the fallback when no C compiler is available); the
+ * implementation and the fallback for every stream the C replay cannot
+ * take, and for every stream when no C compiler is available); the
  * equivalence is asserted by tests/test_ctext.py over the reference corpus
  * and the synthetic fixture dialects.
  *
@@ -1307,7 +1308,7 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
  * pdftext_replay — event replay at C speed.
  *
  * Consumes the event array produced by pdftext_interpret and performs
- * what _TextInterp._run_events does in Python: font decode through
+ * what _TextInterp._run_py does per token in Python: font decode through
  * per-font byte->UTF-8 translate tables, x-advance accumulation
  * (widths + Tc/Tw/Tz), and the show()/line-fold model (y-tolerance
  * breaks, gap-fraction word spaces), writing final UTF-8 text into
@@ -1316,7 +1317,7 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
  * construction no K_XOBJ can occur between K_TJSTART and K_TJEND, so
  * no TJ scratch crosses a segment boundary. Fonts must all be simple
  * (1-byte, non-identity, no RTL-capable table entries); the Python
- * caller prescans K_FONT events and falls back to the Python replay
+ * caller prescans K_FONT events and runs the stream through _run_py
  * otherwise.
  *
  * state: 32 doubles, in-out (written back only on success):
@@ -2409,7 +2410,7 @@ long pdftext_replay(const unsigned char *d, long n, const Ev *ev, long nev,
             if (e->kind == K_TJSTR && nruns > 0) {
                 /* mid-TJ per-glyph splits: segment 0 completes the
                  * buffered group, the LAST segment becomes the new
-                 * buffer (mirrors pdfb._run_events kind==6). The
+                 * buffer (mirrors pdfb._run_py's mid-TJ _seg_split). The
                  * staged tail parks at the top of `out` while each
                  * earlier segment runs through rp_show. */
                 long base = tjmark < 0 ? mark : tjmark;
@@ -2512,7 +2513,7 @@ long pdftext_replay(const unsigned char *d, long n, const Ev *ev, long nev,
             } else if (nruns > 0) {
                 /* quad-0 split emission: nruns+1 segments, each run
                  * riding as the next segment's leading pend
-                 * (mirrors pdfb._run_events K_STR seg path) */
+                 * (mirrors pdfb._run_py's Tj _seg_split path) */
                 long base = mark;
                 for (int k = 0; k <= nruns; k++) {
                     long bnd = k < nruns ? runs[k].off : olen;

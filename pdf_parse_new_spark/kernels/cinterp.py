@@ -158,11 +158,6 @@ def interpret(data: bytes, lm_seed: tuple | None = None) -> np.ndarray:
         cap *= 2
 
 
-# the full-C replay (decode + line fold in pdftext_replay) can be turned
-# off independently of the lexer to exercise the Python event loop
-REPLAY = os.environ.get("PDF_PARSE_DISABLE_CREPLAY", "") != "1"
-
-
 def replay(
     data: bytes,
     ev: np.ndarray,

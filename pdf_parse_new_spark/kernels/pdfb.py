@@ -2848,7 +2848,7 @@ def _hex_content(data: bytes, pos: int, n: int):
 def _hex_span(data: bytes, pos: int):
     """Content hex-string decode at a C-event span start (drop-dangling
     getHexString semantics); signature-compatible with the
-    _parse_literal_string call sites in the event consumers."""
+    _parse_literal_string call sites in the TJ event rewrite."""
     return _hex_content(data, pos, len(data))
 
 
@@ -3148,7 +3148,7 @@ class _TextInterp:
         # FontMap a form inherits from its parent stream (see _INH_FONT)
         self._inh_fm: FontMap | None = None
         # no_c: this page deferred out of the C replay (_CDefer) —
-        # the rerun takes the Python consumers throughout
+        # the rerun takes _run_py for every stream, forms included
         self.no_c = False
         # item_hsize: the item's CROSS-AXIS height — pdf.js's
         # textContentItem.height = hypot(trm[2], trm[3]), captured at
@@ -3932,7 +3932,7 @@ class _TextInterp:
         widths, dw = fm.widths, fm.default_width
         # position arithmetic mirrors the C twin's PUTCODE exactly
         # (px = start_x + wsum*kx + (glyphs-clipped)*ktc + spaces*ktw)
-        # so split decisions stay float-identical across the three paths
+        # so split decisions stay float-identical across C and Python
         kx = size / 1000.0 * sxz
         ktc = tc * sxz
         ktw = tw * sxz
@@ -4371,8 +4371,8 @@ class _TextInterp:
     # from its parent stream (pdf.js clones the whole eval state into the
     # form run, paintXObject/stateManager — the form's shows use the
     # page's current font when it sets none of its own). _do_xobject
-    # prepends synthetic `Tc/Tw/Tz/Tf` ops under this name so all three
-    # execution paths consume the inherited state through their normal
+    # prepends synthetic `Tc/Tw/Tz/Tf` ops under this name so both the C
+    # replay and _run_py consume the inherited state through their normal
     # operator machinery.
     _INH_FONT = "pdfb-inherited-font"
 
@@ -4440,14 +4440,16 @@ class _TextInterp:
     def run(self, data: bytes, resources, depth: int = 0,
             seen: frozenset = frozenset(),
             lm_seed: tuple | None = None) -> None:
-        """Interpret one content stream. Dispatches to the C lexer + event
+        """Interpret one content stream. Dispatches to the C lexer + C
         replay when the compiled extension is available; the pure-Python
-        interpreter below is the reference implementation and the fallback
-        (equivalence asserted by tests/test_ctext.py). Streams that can
-        set the font through an ExtGState (`gs` with a /Font entry —
-        pdf.js setGState -> handleSetFont) take the Python interpreter:
-        the C lexer cannot resolve resources, and the pattern is rare."""
-        if cinterp.AVAILABLE and not (
+        interpreter ``_run_py`` is the reference implementation and the
+        fallback for every stream the C replay cannot take (equivalence
+        asserted by tests/test_ctext.py). Pages re-run after a
+        ``_CDefer`` (``no_c``) go straight to ``_run_py``, as do streams
+        that can set the font through an ExtGState (`gs` with a /Font
+        entry — pdf.js setGState -> handleSetFont): the C lexer cannot
+        resolve resources, and the pattern is rare."""
+        if cinterp.AVAILABLE and not self.no_c and not (
             b"gs" in data and self._has_gs_font(resources)
         ):
             try:
@@ -4486,9 +4488,7 @@ class _TextInterp:
         blob + offsets/widths per font index, and a per-event font index
         for every K_FONT event. None when any font used by the stream
         can't take the C path (multi-byte, RTL-capable, failed build) —
-        the caller then replays the events in Python."""
-        if not cinterp.REPLAY or self.no_c:
-            return None
+        the caller then runs the stream through ``_run_py``."""
         font_idx = _np.full(len(ev), -1, _np.int32)
         specs = [_ASCII_FM.cspec()]
         # FontMap per spec index (0 = the pre-Tf ASCII default -> no
@@ -4548,7 +4548,7 @@ class _TextInterp:
         """Drive ``pdftext_replay`` over the event array, recursing into
         Form XObjects between C segments. Line-model state round-trips
         through the state vector so C segments and Python recursion
-        compose (a Form may itself fall back to the Python replay)."""
+        compose (a Form may itself fall back to ``_run_py``)."""
         tbytes, toff, widths, cats, font_idx, fms = plan
         st = _np.zeros(32, _np.float64)
         st[3] = 1.0  # sx
@@ -4678,738 +4678,7 @@ class _TextInterp:
             return self._replay_c(
                 data, ev, plan, xobjs, res, depth, seen, scratch
             )
-        fm = _ASCII_FM
-        ev_have_font = False  # a K_FONT ran (the form-inherit condition)
-        inh_tl = inh_ts = 0.0  # K_INH rider: leading + raw rise at Do
-        inh_lm = (0.0, 0.0)  # K_INH rider: parent lm e/f (text space)
-        anch_seen = False  # a K_ANCHOR ran (tm-clone reconstruction gate)
-        ev_qstack: list[tuple] = []  # q/Q TextState snapshots (K_QSAVE)
-        y = rise = 0.0
-        cur_x = 0.0
-        size = 0.0
-        sx = 1.0
-        sy = 0.0
-        line_ox = line_oy = 0.0
-        tc = tw = 0.0
-        tz = 1.0
-        tj_buf: list[str] = []
-        tj_start_x = 0.0
-        tj_prev: float | None = None
-        tj_first: float | None = None
-        # real trailing space GLYPHS behind the TJ buffer tail (letter-
-        # gap join spaces don't count: pdf.js's twoLastChars ring only
-        # ever saw the glyphs)
-        tj_tail_sp = 0
-        # a kern-killed trailing run leaves pdf.js's twoLastChars ring
-        # at [' ',' '] (notASpace resets TO spaces; the tracking merge
-        # never resets), so no later single space can arm a pend1
-        # standalone until a real glyph rolls the ring. The buffer kept
-        # none of the killed glyphs — re-arm the pend memory as a
-        # MULTI run right after the buffer itself is shown (the show's
-        # own decision must still see the pre-TJ pend state).
-        tj_kill = False
-        # the buffered group appended a width!=0 glyph since the last
-        # flush (tj_prev carries VALUES across all-zero-width segments,
-        # so it can't stand in for prevTransform movement)
-        tj_hadw = False
-        # the buffered group's WIDTH-REGISTER contribution since the
-        # last flush: appended glyph widths + absorbed quiet/in-flow
-        # gaps (kern rows included). The live register mid-TJ is
-        # tj_stale + tj_wacc, where tj_stale is what the DEFERRED
-        # group-boundary compare leaves of item_wreg (0 on flush,
-        # item_wreg + gap on absorb) — evaluated at the group's first
-        # real glyph (_tj_boundary_stale)
-        tj_wacc = 0.0
-        tj_stale = 0.0
-        tj_bpend = True  # boundary not yet evaluated for this buffer
-        # cumulative kern gap already absorbed since the last real-
-        # glyph append (gap2 is measured from a FIXED anchor, so
-        # successive kern rows see cumulative values — absorb deltas)
-        tj_gabs = 0.0
-        # the CURRENT (unconsumed) boundary's absorbed contribution
-        # inside tj_wacc: pdf.js only runs width += advanceX at the
-        # NEXT real glyph's compare, so until one arrives the eager
-        # absorb is provisional — a show() that hands the buffer off
-        # (TJ end / mid-TJ kern flush) must exclude it, because the
-        # next show's own boundary compare re-derives the same gap
-        # from positions (tx - last_end_x) and absorbs it there.
-        # Reset to 0 when a real glyph consumes the boundary.
-        tj_tailw = 0.0
-        # deferred kern fake space: pdf.js only decides at the NEXT
-        # real glyph — if the next group leads with space glyphs their
-        # advances (tw can be negative!) change the gap, so the space
-        # materializes only when the next group starts with a real
-        # glyph; otherwise the leading-run machinery owns the decision
-        tj_fake_pend = False
-        # the preceding element's FINAL glyph was box-rejected: the
-        # next kern row's riding component (f1) is dropped with it
-        # (pdf.js's reject path translates scaledDim only,
-        # pdf.worker.js:36704-36711)
-        tj_last_clip = False
-        show = self.show
-        lit, hexs = _parse_literal_string, _hex_span
-        for kind, flag, a, b, f0, f1, f2, f3 in ev.tolist():
-            if kind == 6 or kind == 4:  # TJSTR / STR (show text)
-                # flag: 0 = escape-free literal (slice), 1 = hex,
-                #       2 = literal needing full unescape,
-                #       3 = coalesced TJ group (scratch blob span)
-                if flag == 0:
-                    item = data[a + 1 : b - 1]
-                elif flag == 1:
-                    item = hexs(data, a)[0]
-                elif flag == 3:
-                    item = scratch[a:b]
-                else:
-                    item = lit(data, a)[0]
-                glyphs = len(item) // fm.nbytes - fm.ncf(item)
-                spaces = fm.nsp(item)
-                adv = (
-                    fm.advance(item) / 1000.0 * size + glyphs * tc
-                    + spaces * tw
-                ) * sx * tz
-                dec = fm.decode(item)
-                vb = self.viewbox
-                cprev: float | None = None
-                cfvx: float | None = None
-                clipped_item = False
-                nclip = 0
-                lclip = False
-                segs = None
-                prev0 = tj_prev if kind == 6 else None
-                # zw staleness machinery is RTL-gated: per-glyph splits
-                # would fragment the bidi runs show() reorders per piece
-                zw_item = (
-                    fm.has_zw(item) and _RTL_RUN.search(dec) is None
-                )
-                if kind == 6 and tj_bpend and dec.strip(" "):
-                    # first real glyph of this buffered group: decide
-                    # what the deferred boundary compare leaves of the
-                    # stale register
-                    fxp = (
-                        self._first_x(
-                            fm, item, dec, cur_x, size, sx * tz, tc, tw
-                        )
-                        if fm.nbytes == 1 else None
-                    )
-                    tj_stale = self._tj_boundary_stale(
-                        fxp if fxp is not None else cur_x, y + rise,
-                        size * sx, (size * abs(sy)) if sy else None,
-                    )
-                    tj_bpend = False
-                # the live width register at this element's first
-                # glyph: textOrientation = sign(register), so a
-                # non-positive register makes every nonzero intra-item
-                # gap flush — run the per-glyph walk
-                reg0_el = (
-                    (tj_stale if not tj_bpend else self.item_wreg)
-                    + tj_wacc
-                    if kind == 6 else self.item_wreg
-                )
-                # seg-split FIRST (it box-rejects glyphs itself,
-                # mirroring pdf.js's test at the top of
-                # compareWithLastPosition); _clip_x is the inline-path
-                # fallback when no split point exists
-                if (
-                    fm.nbytes == 1 and size > 0
-                    and len(dec) == len(item) - fm.ncf(item)
-                    and (
-                        " " in dec[1:-1]
-                        or (prev0 is not None and dec[:1] == " ")
-                        or tc < 0.0
-                        or self._big_tc(tc, sx * tz, size * sx)
-                        or zw_item
-                        or reg0_el <= 0.0
-                        # x-straddle: a rejected glyph's gap can split.
-                        # adv < 0 (negative size / Tz mirror) extends
-                        # the item LEFT — test the interval, not the end
-                        or (
-                            vb is not None
-                            and (min(cur_x, cur_x + adv) < vb[0]
-                                 or max(cur_x, cur_x + adv) > vb[2])
-                        )
-                    )
-                ):
-                    r = self._seg_split(
-                        fm, item, dec, cur_x, size, sx * tz, tc, tw,
-                        size * sx, prev0=prev0,
-                        fallback_prev=self.last_end_x,
-                        zw_mode=zw_item,
-                        reg0=reg0_el,
-                    )
-                    if r is not None:
-                        segs, nclip, lclip = r
-                        if nclip:
-                            # TJ/pend bookkeeping below runs on the
-                            # VISIBLE text (pdf.js's ring only ever
-                            # saw emitted glyphs)
-                            dec = "".join(
-                                t for t, _f, _p, _h, _w in segs
-                            )
-                if segs is None and (
-                    vb is not None
-                    and fm.nbytes == 1
-                    and len(dec) == len(item)
-                    and (min(cur_x, cur_x + adv) < vb[0]
-                         or max(cur_x, cur_x + adv) > vb[2])
-                ):
-                    dec, cprev, nclip, lclip, cfvx = self._clip_x(
-                        fm, item, dec, cur_x, size, sx * tz, tc, tw
-                    )
-                    # a straddle test that rejected NOTHING is normal
-                    # emission
-                    clipped_item = nclip > 0
-                # view-box-rejected glyphs advance by WIDTH ONLY —
-                # pdf.js's reject path translates scaledDim and skips
-                # the charSpacing translate (pdf.worker.js:36705-36711).
-                # x-straddle: subtract the clipped glyphs' tc; y-clip
-                # (whole item outside): only space glyphs keep tc+tw.
-                if nclip:
-                    adv -= nclip * tc * sx * tz
-                clip_y = (
-                    fm.nbytes == 1 and vb is not None
-                    and not vb[1] <= y + rise <= vb[3]
-                )
-                if clip_y:
-                    adv = (
-                        fm.advance(item) / 1000.0 * size
-                        + spaces * (tc + tw)
-                    ) * sx * tz
-                if kind == 6:
-                    # a box-rejected FINAL glyph takes the next kern
-                    # row's riding extraSpacing (f1) down with it
-                    # (space glyphs never reject — their branch runs
-                    # before the box test)
-                    tj_last_clip = False
-                    if item and fm.nbytes == 1 and (clip_y or lclip):
-                        tj_last_clip = not (
-                            item[-1] == 0x20
-                            or fm.decode(item[-1:]) == " "
-                        )
-                    if (
-                        item and fm.nbytes == 1
-                        and fm._cf_arr is not None
-                        and fm._cf_arr[item[-1]]
-                    ):
-                        # Cf final glyph (soft hyphen / ZWJ): pdf.js
-                        # skips isInvisibleFormatMark BEFORE computing
-                        # charSpacing, so the riding extraSpacing is
-                        # LOST with it (pdf.worker.js:36684-36687)
-                        tj_last_clip = True
-                lg = (size > 0 and tc * tz > self.GAP_FRACTION * size
-      and not zw_item)  # zw items: the cascade decides
-                if kind == 6 and dec and tj_prev is None \
-                        and self.last_end_x is None:
-                    # NULL-anchor ring across the buffer join: a
-                    # whitespace run spanning the buffer tail and this
-                    # element's lead reaches the next real glyph with
-                    # pdf.js's ring at [' ',' '] when 2+ glyphs were
-                    # saved — no space materializes (saveLastChar,
-                    # pdf.worker.js:36373-36378); exactly one saved
-                    # glyph pushes the single " " the literal join
-                    # already keeps
-                    txt0 = segs[0][0] if segs is not None else dec
-                    lead = len(txt0) - len(txt0.lstrip(" "))
-                    if txt0.strip(" ") and tj_tail_sp + lead >= 2:
-                        if tj_tail_sp and tj_buf:
-                            tj_buf[-1] = tj_buf[-1].rstrip(" ")
-                        if lead:
-                            if segs is not None:
-                                t0_, f0s, p0s, h0s, w0s = segs[0]
-                                segs[0] = (
-                                    t0_.lstrip(" "), f0s, p0s, h0s, w0s
-                                )
-                            else:
-                                dec = dec.lstrip(" ")
-                        tj_tail_sp = 0
-                if kind == 6 and tj_fake_pend and dec:
-                    if not dec.startswith(" "):
-                        tj_buf.append(" ")
-                    tj_fake_pend = False
-                if kind == 6:
-                    t_run = len(dec) - len(dec.rstrip(" "))
-                    tj_tail_sp = (
-                        t_run if dec.strip(" ")
-                        else tj_tail_sp + dec.count(" ")
-                    )
-                if segs is not None:
-                    # per-glyph item splitting at quad 0: out-of-window
-                    # internal space runs end the item mid-string; each
-                    # run rides as the next segment's leading pend (see
-                    # _seg_split). TJ: the first segment completes the
-                    # buffered group, the last becomes the new buffer.
-                    sub = [
-                        (self._lgap_join(t) if lg else t, sfx, spv, hw, sw)
-                        for t, sfx, spv, hw, sw in segs
-                    ]
-                    if kind == 6 and len(sub) == 1:
-                        # no split point — the walk only REWROTE the
-                        # text (null-anchor run): plain append, using
-                        # the walk's own first/prev values
-                        d0, f0_, p0, h0, w0 = sub[0]
-                        tj_buf.append(d0)
-                        if d0.strip(" "):
-                            tj_kill = False
-                        if tj_first is None:
-                            tj_first = f0_
-                        cur_x += adv
-                        tj_wacc += w0
-                        if d0.strip(" "):
-                            tj_gabs = 0.0
-                            tj_tailw = 0.0
-                        if p0 is not None and h0:
-                            tj_prev = p0
-                            tj_hadw = True
-                        continue
-                    if kind == 6:
-                        d0, f0_, p0, h0, w0 = sub[0]
-                        if d0.strip(" "):
-                            # real glyphs of THIS item precede the
-                            # split: the ring rolled — the killed-run
-                            # memory dies unconsumed
-                            tj_kill = False
-                        tj_buf.append(d0)
-                        fx0 = tj_first if tj_first is not None else f0_
-                        if show("".join(tj_buf), y + rise,
-                                fx0 if fx0 is not None else tj_start_x,
-                                size * sx,
-                                hsize=(size * abs(sy)) if sy else None,
-                                # prevTransform moves only on a
-                                # width!=0 glyph — a carried VALUE
-                                # (all-zero-width segment) must not
-                                # refresh glyph_y to this line
-                                move_prev=(
-                                    p0 is not None and (tj_hadw or h0)
-                                ),
-                                seg_w=tj_wacc + w0):
-                            self.last_end_x = p0
-                        if tj_kill:
-                            self.pending_space = True
-                            self.pending_multi = True
-                            tj_kill = False
-                        for dmid, fmid, pmid, hmid, wmid in sub[1:-1]:
-                            if show(dmid, y + rise, fmid, size * sx,
-                                    hsize=(size * abs(sy)) if sy else None,
-                                    move_prev=pmid is not None and hmid,
-                                    seg_w=wmid):
-                                self.last_end_x = pmid
-                        dl, fl, pl, hl, wl = sub[-1]
-                        tj_buf = [dl]
-                        tj_first = fl
-                        tj_start_x = fl
-                        tj_prev = pl
-                        tj_hadw = hl
-                        tj_wacc = wl
-                        tj_gabs = 0.0
-                        tj_tailw = 0.0
-                        # the NEW buffer (the last segment) has its own
-                        # pending boundary vs the freshly-shown item
-                        if dl.strip(" "):
-                            tj_stale = self._tj_boundary_stale(
-                                fl, y + rise, size * sx,
-                                (size * abs(sy)) if sy else None,
-                            )
-                            tj_bpend = False
-                        else:
-                            tj_bpend = True
-                        cur_x += adv
-                    else:
-                        for dseg, fseg, pseg, hseg, wseg in sub:
-                            if show(dseg, y + rise, fseg, size * sx,
-                                    hsize=(size * abs(sy)) if sy else None,
-                                    move_prev=pseg is not None and hseg,
-                                    seg_w=wseg):
-                                self.last_end_x = pseg
-                        cur_x += adv
-                    continue
-                if lg:
-                    # charSpacing > trackingSpaceMin: pdf.js's per-glyph
-                    # compare sees advanceX == tc*hscale between every
-                    # glyph pair -> a fake space between each
-                    # (letter-spaced headings, pdf.worker.js:36633-36651;
-                    # the Tz factor rides the translate, the thresholds
-                    # don't; trailing real spaces stay unjoined)
-                    dec = self._lgap_join(dec)
-                if clipped_item:
-                    prev = cprev
-                elif fm.nbytes == 1:
-                    # adv is the exact float added to cur_x below, so
-                    # the next compare round-trips the analytic tail;
-                    # y-clipped items keep the legacy prefix form (adv
-                    # was rewritten to the clip variant above)
-                    prev = self._prev_x(
-                        fm, item, dec, cur_x, size, sx * tz, tc, tw,
-                        adv_full=None if clip_y else adv,
-                    )
-                else:
-                    prev = (cur_x + adv - tc * sx * tz) if item else None
-                if kind == 6:
-                    tj_buf.append(dec)
-                    if dec.strip(" "):
-                        # a real glyph rolled the ring: the killed-run
-                        # memory dies unconsumed
-                        tj_kill = False
-                    if tj_first is None and fm.nbytes == 1:
-                        tj_first = (
-                            cfvx if clipped_item else self._first_x(
-                                fm, item, dec, cur_x, size, sx * tz,
-                                tc, tw,
-                            )
-                        )
-                    cur_x += adv
-                    tj_wacc += self._inline_wcontrib(
-                        fm, item, dec, adv, tc, tw, sx * tz,
-                        size / 1000.0 * sx * tz,
-                        anchored=(
-                            tj_prev is not None
-                            or self.last_end_x is not None
-                        ),
-                    )
-                    if dec.strip(" "):
-                        tj_gabs = 0.0
-                        tj_tailw = 0.0
-                    if prev is not None:
-                        tj_prev = prev
-                        # _prev_x is per-item: non-None means THIS
-                        # element emitted a width!=0 glyph
-                        tj_hadw = True
-                else:
-                    # leading box-rejected glyphs advance width-only
-                    # with NO compare: the anchor is the first VISIBLE
-                    # glyph (pdf.js returns false before the cascade)
-                    fx = (
-                        cfvx if clipped_item else (
-                            self._first_x(
-                                fm, item, dec, cur_x, size, sx * tz,
-                                tc, tw,
-                            )
-                            if fm.nbytes == 1
-                            else None
-                        )
-                    )
-                    shown = show(
-                        dec, y + rise,
-                        fx if fx is not None else cur_x,
-                        size * sx,
-                        hsize=(size * abs(sy)) if sy else None,
-                        move_prev=prev is not None,
-                        seg_w=self._inline_wcontrib(
-                            fm, item, dec, adv, tc, tw, sx * tz,
-                            size / 1000.0 * sx * tz,
-                            anchored=self.last_end_x is not None,
-                        ),
-                    )
-                    cur_x += adv
-                    # prevTransform = after the last emitted NON-SPACE
-                    # glyph's width, before its charSpacing; space-only
-                    # and clipped items leave it untouched
-                    if shown and prev is not None:
-                        self.last_end_x = prev
-            elif kind == 7:  # TJNUM kern (x textHScale: the kern rides
-                # charSpacing through translateTextMatrix)
-                # f1 = the component riding the preceding string's LAST
-                # glyph as extraSpacing: when that glyph was
-                # box-rejected, pdf.js translates scaledDim only and
-                # the riding kern is LOST (pdf.worker.js:36704-36711)
-                kf0 = f0 - f1 if tj_last_clip else f0
-                tj_last_clip = False
-                cur_x -= kf0 / 1000.0 * size * sx * tz
-                if flag:
-                    # flag = count of merged kerns that ran with an
-                    # EMPTY buffer: each applied charSpacing in its
-                    # translate (the !chars branch,
-                    # pdf.worker.js:36663-36675)
-                    cur_x += flag * tc * sx * tz
-                # a TJ number is extra charSpacing on the preceding
-                # glyph (pdf.worker.js:36687). When that glyph is a
-                # SPACE, the next glyph's advanceX includes the space
-                # width — a kern pulling it to <= notASpace (0.03*fs)
-                # resets the pending space (pdf.worker.js:36630-36631),
-                # so the space never materializes (justified-text
-                # tighten: "(...Calibra ) 567 (tion)" reads
-                # "Calibration" in the reference output)
-                if size > 0:
-                    kern = kf0 / 1000.0 * size
-                    gap = None if tj_prev is None else cur_x - tj_prev
-                    # leading kerns have no TJ-internal anchor, but
-                    # pdf.js's advanceX at the next glyph compares
-                    # against the ONE page-level prevTransform — fall
-                    # back to it for every decision (there is only one
-                    # prevTransform; the flush bands see it too)
-                    gap2 = gap
-                    if gap2 is None and self.last_end_x is not None:
-                        gap2 = cur_x - self.last_end_x
-                    # the bands are the last-ENSURED item's thresholds
-                    # (ensureTextContentItem freezes them; a font-change
-                    # flush does NOT refresh them until the next glyph
-                    # re-opens the item) — a kern right after /F2 8 Tf
-                    # still compares against the fs-24 item's windows
-                    # (combo hunt seed 20,800,184: 'gambet' glued). The
-                    # staleness window is exactly tj_bpend: it closes at
-                    # the buffer's first real glyph (pdf.js re-ensures
-                    # there), after which the CURRENT size rules.
-                    lim = (
-                        self.item_size
-                        if tj_bpend and self.item_size > 0
-                        else size * sx
-                    )
-                    # live width register at the next glyph's compare:
-                    # a non-positive register degenerates/inverts every
-                    # window — ANY nonzero gap flushes (show()'s zero/
-                    # negative register branches then take the CR /
-                    # standalone-space band exactly)
-                    # EXCLUDING the current boundary's provisional
-                    # absorb (tj_tailw): pdf.js's compare — which
-                    # hasn't run yet — reads the register from before
-                    # any of this boundary's width += advanceX
-                    reg_k = (
-                        tj_stale if not tj_bpend else self.item_wreg
-                    ) + tj_wacc - tj_tailw
-                    # a kept SINGLE trailing space in the
-                    # shouldAddWhitepsace window is a FLUSH in pdf.js
-                    # (flushTextContentItem + pushWhitespace,
-                    # pdf.worker.js:36634-36639) — flush eagerly so
-                    # the register restarts; the pend machinery then
-                    # re-materializes the standalone space
-                    keep1 = (
-                        tj_buf and tj_buf[-1].endswith(" ")
-                        and gap2 is not None and reg_k > 0.0
-                        and 0.03 * lim < gap2 <= self.GAP_FRACTION * lim
-                        and (tj_tail_sp if tj_tail_sp > 0 else 1) == 1
-                    )
-                    if gap2 is not None and (
-                        keep1
-                        or (reg_k <= 0.0 and gap2 != 0.0)
-                        or gap2 < -0.2 * lim or gap2 > 0.6 * lim
-                    ):
-                        # the kern leaves the in-flow window: pdf.js
-                        # FLUSHES mid-TJ (carriage return / standalone
-                        # space) and the next element's item anchors at
-                        # the CURRENT pen — visible through the
-                        # pdf-parse join whenever anchors differ. End
-                        # the buffered segment; the next show takes the
-                        # CR/standalone path naturally.
-                        if (
-                            show(
-                                "".join(tj_buf), y + rise,
-                                tj_first if tj_first is not None
-                                else tj_start_x,
-                                size * sx,
-                                hsize=(size * abs(sy)) if sy else None,
-                                move_prev=tj_hadw,
-                                # an unconsumed earlier absorb stays
-                                # with the boundary: the next show's
-                                # compare re-derives it from positions
-                                seg_w=tj_wacc - tj_tailw,
-                            )
-                            and tj_prev is not None
-                        ):
-                            self.last_end_x = tj_prev
-                        if tj_kill:
-                            self.pending_space = True
-                            self.pending_multi = True
-                            tj_kill = False
-                        tj_buf = []
-                        tj_start_x = cur_x
-                        tj_prev = None
-                        tj_first = None
-                        tj_hadw = False
-                        tj_wacc = 0.0
-                        tj_bpend = True
-                        tj_gabs = 0.0
-                        tj_tailw = 0.0
-                        tj_tail_sp = 0
-                        tj_fake_pend = False
-                    elif tj_buf and tj_buf[-1].endswith(" "):
-                        # pdf.js buffers NO space glyphs — the whole
-                        # trailing run's fate is decided ONCE at the
-                        # next glyph (compareWithLastPosition over the
-                        # accumulated translate): gap <= notASpace
-                        # (0.03) kills it; gap <= trackingSpaceMin
-                        # (0.102) keeps a space only when exactly ONE
-                        # glyph was saved (shouldAddWhitepsace's two-
-                        # char ring holds [' ',' '] for runs); above
-                        # that exactly one space materializes — the
-                        # kept run collapses downstream. The position
-                        # gap (cur_x - tj_prev) IS pdf.js's advanceX
-                        # here; the width formula is the fallback when
-                        # no real glyph anchors the buffer yet.
-                        # NO anchor at all (null page-level
-                        # prevTransform — an all-zero-width prefix):
-                        # pdf.js's compare at the next glyph
-                        # early-returns TRUE (pdf.worker.js:36543-36545)
-                        # before notASpace/shouldAddWhitepsace, so the
-                        # kern makes NO decision — no kill, no fake
-                        n_real = tj_tail_sp if tj_tail_sp > 0 else 1
-                        if gap2 is not None:
-                            kill = gap2 <= 0.03 * lim or (
-                                n_real != 1
-                                and gap2 <= self.GAP_FRACTION * lim
-                            )
-                            if kill or gap2 > self.GAP_FRACTION * lim:
-                                # killed (tracking-else) and in-flow
-                                # outcomes absorb the gap into the
-                                # width register (width += advanceX,
-                                # pdf.worker.js:36641-36651) —
-                                # incrementally (gap2 is cumulative
-                                # from a fixed anchor) and only once
-                                # the boundary is resolved (while
-                                # pending, _tj_boundary_stale owns
-                                # the whole gap)
-                                if not tj_bpend:
-                                    tj_wacc += gap2 - tj_gabs
-                                    tj_tailw += gap2 - tj_gabs
-                                tj_gabs = gap2
-                        else:
-                            kill = False
-                        if kill:
-                            tj_buf[-1] = tj_buf[-1].rstrip(" ")
-                            tj_tail_sp = 0
-                            tj_kill = True
-                    elif gap2 is not None and gap2 > self.GAP_FRACTION * lim:
-                        # the POSITION gap (cur_x - tj_prev) is pdf.js's
-                        # advanceX at the next glyph; with a null
-                        # prevTransform the compare never runs, so a
-                        # no-anchor kern adds nothing
-                        tj_fake_pend = True
-                        if not tj_bpend:
-                            tj_wacc += gap2 - tj_gabs  # in-flow absorb
-                            tj_tailw += gap2 - tj_gabs
-                        tj_gabs = gap2
-                    elif gap2 is not None and gap2 != 0.0:
-                        # quiet kern gap: absorbed (width += advanceX)
-                        if not tj_bpend:
-                            tj_wacc += gap2 - tj_gabs
-                            tj_tailw += gap2 - tj_gabs
-                        tj_gabs = gap2
-            elif kind == 1:  # ANCHOR: new line origin
-                if (
-                    flag == 1 and f2 != sx and self.line_open
-                    and not self.force_flush
-                ):
-                    # Tm scale change on an OPEN item (updateAdvanceScale
-                    # zeroes width): the next glyph flushes. pdf.js
-                    # early-returns when the item is not initialized
-                    # (pdf.worker.js updateAdvanceScale) — after a
-                    # deferred flush (Tf/Do/stream end arms force_flush)
-                    # the item is closed, so the scale change is a no-op.
-                    # The width register is now zero and STAYS zero until
-                    # the next append re-opens the item (item_wreg).
-                    # The open item's advance thresholds rescale by the
-                    # scale ratio (pdf.js divides advanceX by the NEW
-                    # textAdvanceScale; see the _run_py twin).
-                    self.scale_flush = True
-                    self.item_wreg = 0.0
-                    if sx:
-                        self.item_size *= abs(f2 / sx)
-                cur_x = f0
-                y = f1
-                sx = f2
-                sy = f3
-                line_ox, line_oy = f0, f1
-                anch_seen = True
-            elif kind == 11:  # CM: cm/Q mid-text — the PEN follows the
-                # new matrix (pdf.js derives positions from ctm x tm);
-                # prevTransform keeps its old device point
-                rx = f2 / sx if sx else 1.0
-                ry = f3 / sy if sy else 1.0
-                cur_x = f0 + (cur_x - line_ox) * rx
-                y = f1 + (y - line_oy) * ry
-                line_ox, line_oy = f0, f1
-                sx, sy = f2, f3
-            elif kind == 5:  # TJSTART
-                tj_buf = []
-                tj_start_x = cur_x
-                tj_prev = None
-                tj_first = None
-                tj_hadw = False
-                tj_wacc = 0.0
-                tj_bpend = True
-                tj_gabs = 0.0
-                tj_tailw = 0.0
-                tj_tail_sp = 0
-                tj_kill = False
-                tj_fake_pend = False
-            elif kind == 8:  # TJEND
-                if (
-                    show(
-                        "".join(tj_buf), y + rise,
-                        tj_first if tj_first is not None else tj_start_x,
-                        size * sx,
-                        hsize=(size * abs(sy)) if sy else None,
-                        move_prev=tj_hadw,
-                        # a trailing kern's provisional absorb stays
-                        # with the boundary — the NEXT show's compare
-                        # re-derives it from tx - last_end_x (pdf.js
-                        # only absorbs at that compare)
-                        seg_w=tj_wacc - tj_tailw,
-                    )
-                    and tj_prev is not None
-                ):
-                    self.last_end_x = tj_prev
-                if tj_kill:
-                    self.pending_space = True
-                    self.pending_multi = True
-                    tj_kill = False
-                tj_fake_pend = False
-            elif kind == 2:  # FONT
-                # flag=1: the size operand failed float() in the fallback —
-                # the font still changes (it converts FIRST there), size
-                # keeps its previous value
-                nfm = self._font_for(fonts_dict, _span_name(data, a, b))
-                nsize = f0 if flag == 0 else size
-                if nfm is not fm or nsize != size:
-                    # setFont flushes the open item unless name AND size
-                    # are unchanged (pdf.worker.js:36838-36843)
-                    self.force_flush = True
-                fm, size = nfm, nsize
-                ev_have_font = True
-            elif kind == 3:  # STATE
-                tc, tw, tz, rise = f0, f1, f2, f3
-            elif kind == 10:  # SETY: partial Td/TD/Tm — y moved, cur_x stays
-                y = f0
-                line_oy = f0
-            elif kind == 13:  # INH: leading + raw rise rider before Do
-                inh_tl, inh_ts = f0, f1
-                inh_lm = (f2, f3)  # parent LINE matrix e/f (text space)
-            elif kind == 14:  # QSAVE: q snapshots the whole TextState
-                ev_qstack.append((
-                    cur_x, y, sx, sy, tc, tw, tz, rise, size, fm,
-                    ev_have_font, line_ox, line_oy,
-                ))
-            elif kind == 15:  # QRESTORE: pop; flush ONLY on a font/size
-                # change (pdf.worker.js:37112, no updateAdvanceScale)
-                if ev_qstack:
-                    (cur_x, y, sx, sy, tc, tw, tz, rise, ssize, sfm,
-                     ev_have_font, line_ox, line_oy) = ev_qstack.pop()
-                    if sfm is not fm or ssize != size:
-                        self.force_flush = True
-                    fm, size = sfm, ssize
-            elif kind == 16:  # MCFLUSH: BMC/BDC/EMC flush the open item
-                # unconditionally (pdf.worker.js:37075,37085,37100)
-                self.force_flush = True
-            elif kind == 9:  # XOBJ (Do)
-                # paintXObject flushes before resolving anything
-                # (pdf.worker.js:36946)
-                self.force_flush = True
-                if depth < self.MAX_DEPTH:
-                    # advanced text matrix in TEXT space for the clone
-                    # (divide the diagonal CTM back out of the device
-                    # pen/scales); see the _replay_c twin for rationale
-                    itm = None
-                    if f0 and f1 and anch_seen:
-                        itm = (
-                            sx / f0, 0.0, 0.0, sy / f1,
-                            (cur_x - f2) / f0, (y - f3) / f1,
-                        )
-                    self._do_xobject(
-                        xobjs, _span_name(data, a, b), res, depth, seen,
-                        cm=(f0, 0.0, 0.0, f1, f2, f3),
-                        inherit=(
-                            fm if ev_have_font else None,
-                            size, tc, tw, tz, inh_tl, inh_ts, itm,
-                            inh_lm,
-                        ),
-                    )
+        return self._run_py(data, resources, depth, seen, lm_seed)
 
     def _run_py(self, data: bytes, resources, depth: int = 0,
                 seen: frozenset = frozenset(),
@@ -6376,7 +5645,7 @@ class _TextInterp:
                     tjprev: float | None = None
                     tjfirst: float | None = None
                     # buffered group appended a width!=0 glyph since
-                    # the last flush (see the event consumer's tj_hadw)
+                    # the last flush (see pdftext_replay)
                     tjhadw = False
                     # buffered register contribution (see tj_wacc)
                     tjwacc = 0.0
@@ -6384,15 +5653,15 @@ class _TextInterp:
                     tjbpend = True  # deferred boundary not evaluated
                     tjgabs = 0.0  # cumulative kern gap absorbed
                     # current boundary's provisional absorb inside
-                    # tjwacc (see the event consumer's tj_tailw)
+                    # tjwacc (see pdftext_replay's tj_tailw)
                     tjtailw = 0.0
                     # real trailing space GLYPHS behind the buffer tail
                     # (letter-gap join spaces don't count: pdf.js's
                     # twoLastChars ring only ever saw the glyphs)
                     tail_sp = 0
-                    # kern-killed-run carry (see the event consumer)
+                    # kern-killed-run carry (see pdftext_replay's tj_kill)
                     tj_kill = False
-                    # deferred kern fake space (see the event consumer)
+                    # deferred kern fake space (see pdftext_replay's tj_fake)
                     tj_fake = False
                     lgap = (
                         size > 0 and tc * tz > self.GAP_FRACTION * size
@@ -6495,7 +5764,7 @@ class _TextInterp:
                             if dec and tjprev is None \
                                     and self.last_end_x is None:
                                 # NULL-anchor ring across the buffer
-                                # join (see the event consumer)
+                                # join (see pdftext_replay)
                                 txt0 = (
                                     segs[0][0] if segs is not None
                                     else dec
@@ -6549,7 +5818,7 @@ class _TextInterp:
                                 and fm._cf_arr[item[-1]]
                             ):
                                 # Cf final glyph loses the riding
-                                # kern (see the event consumer)
+                                # kern (see pdftext_replay)
                                 ride_lost = True
                             t_run = len(dec) - len(dec.rstrip(" "))
                             tail_sp = (
@@ -6737,8 +6006,8 @@ class _TextInterp:
                                     else cur_x - tjprev
                                 )
                                 # leading kerns: fall back to the
-                                # page-level prevTransform (see the
-                                # event consumer's K_TJNUM)
+                                # page-level prevTransform (see
+                                # pdftext_replay's K_TJNUM)
                                 gap2 = gap
                                 if (
                                     gap2 is None
@@ -6754,10 +6023,10 @@ class _TextInterp:
                                     else size * asx
                                 )
                                 # non-positive live register: any
-                                # nonzero gap flushes (see the event
-                                # consumer)
+                                # nonzero gap flushes (see
+                                # pdftext_replay)
                                 # excluding the provisional
-                                # absorb (see the event consumer)
+                                # absorb (see pdftext_replay)
                                 reg_k = (
                                     tjstale if not tjbpend
                                     else self.item_wreg
@@ -6836,7 +6105,7 @@ class _TextInterp:
                                             > self.GAP_FRACTION * lim
                                         ):
                                             # absorbed outcomes (see
-                                            # the event consumer)
+                                            # pdftext_replay)
                                             if not tjbpend:
                                                 tjwacc += gap2 - tjgabs
                                                 tjtailw += gap2 - tjgabs
@@ -6872,7 +6141,7 @@ class _TextInterp:
                             move_prev=tjhadw,
                             mirror=tz_mirror,
                             # trailing provisional absorb stays with
-                            # the boundary (see the event consumer)
+                            # the boundary (see pdftext_replay)
                             seg_w=tjwacc - tjtailw,
                         )
                         and tjprev is not None

@@ -16,8 +16,6 @@ from pyspark.sql import functions as F
 
 
 def partition_manifest(extracted: DataFrame) -> list[dict]:
-    has_kernel_ms = "kernel_ms" in extracted.columns
-    has_batch_seq = "batch_seq" in extracted.columns
     aggs = [
         F.count("*").alias("n_rows"),
         F.count("error").alias("n_errors"),
@@ -25,7 +23,7 @@ def partition_manifest(extracted: DataFrame) -> list[dict]:
         F.max("conv_id").alias("max_conv_id"),
         F.countDistinct("conv_id").alias("n_convs"),
     ]
-    if has_kernel_ms and has_batch_seq:
+    if "kernel_ms" in extracted.columns:
         # kernel_ms is per Arrow batch (replicated across the batch's rows);
         # batch_seq is the per-task monotonic batch id, so summing one
         # (batch_seq, kernel_ms) pair per batch is EXACT even when two
@@ -44,9 +42,6 @@ def partition_manifest(extracted: DataFrame) -> list[dict]:
             .collect()
         )
         return [r.asDict() for r in rows]
-    if has_kernel_ms:
-        # legacy shape without batch ids: distinct-sum approximation
-        aggs.append(F.round(F.sum_distinct("kernel_ms"), 1).alias("kernel_ms"))
     rows = (
         extracted.groupBy(F.spark_partition_id().alias("partition_id"))
         .agg(*aggs)

@@ -1,8 +1,29 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from pdf_parse_new_spark.session import get_spark
+
+# the reference project's own test corpus (01-valid.pdf ... and their
+# .pdf.txt goldens); tests marked ``requires_reference`` open it
+REFERENCE_DATA = "/root/reference/test/data"
+
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "requires_reference: opens the reference corpus; skipped when "
+        f"{REFERENCE_DATA} is absent",
+    )
+
+
+def pytest_runtest_setup(item):
+    if item.get_closest_marker("requires_reference") and not os.path.isdir(
+        REFERENCE_DATA
+    ):
+        pytest.skip(f"needs the reference corpus at {REFERENCE_DATA}")
 
 
 @pytest.fixture(scope="session")

@@ -114,6 +114,7 @@ def test_dict_keys_are_plain_str():
     assert type(k) is str
 
 
+@pytest.mark.requires_reference
 def test_full_document_identical():
     raw = open("/root/reference/test/data/02-valid.pdf", "rb").read()
     c = pdfb.parse_pdf_bytes(raw)

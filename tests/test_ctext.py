@@ -11,6 +11,27 @@ from __future__ import annotations
 import pytest
 
 from pdf_parse_new_spark.kernels import cinterp, pdfb
+from tests.test_node_differential import (
+    _BIGTC_RISE_PINNED,
+    _CHARSCACHE_PINNED,
+    _CLOSED_PREV_STREAMS,
+    _COERCE_PINNED,
+    _PRE_TF_STREAMS,
+    TJ_KILLER_SEEDS,
+    _assemble as _nd_assemble,
+    _assemble_with_form,
+    _assemble_with_tounicode,
+    _gen_bigtc_stream,
+    _gen_clipseg_stream,
+    _gen_coerce_stream,
+    _gen_form_inherit_stream,
+    _gen_form_lm_stream,
+    _gen_nzreg_stream,
+    _gen_qq_stream,
+    _gen_stream,
+    _gen_tj_coalesce_stream,
+    _gen_zwreg_stream,
+)
 
 DATA = "/root/reference/test/data"
 
@@ -38,6 +59,7 @@ def _assert_same(raw: bytes) -> None:
     assert c["n_pages"] == py["n_pages"]
 
 
+@pytest.mark.requires_reference
 @pytest.mark.parametrize(
     "name", ["01-valid", "02-valid", "03-invalid", "04-valid",
              "05-versions-space"]
@@ -170,6 +192,7 @@ def test_encrypted_fixture_paths_identical():
     _assert_same(_build_rc4_doc(r=3, v=2, key_bits=128))
 
 
+@pytest.mark.requires_reference
 def test_mutation_sweep_never_crashes_c_path():
     raw = open(f"{DATA}/01-valid.pdf", "rb").read()
     n = len(raw)
@@ -252,27 +275,20 @@ def test_random_token_soup_paths_identical():
 def test_coalesce_tj_c_twin_identical_to_python():
     """pdftext_coalesce_tj must produce the EXACT (events, scratch)
     the pure-Python _coalesce_tj_events builds — the event rewrite
-    feeds both replay paths, so a single differing field (merged kern
+    feeds the C replay, so a single differing field (merged kern
     sums, empty-buffer counts, blob spans, the odd-digit hex pad)
     would silently fork the engines. 300 seeded streams over the TJ
     decision space + operator soup."""
-    if not cinterp.AVAILABLE:
-        pytest.skip("no C compiler")
-    import os
     import random
-    import sys
 
     import numpy as np
-
-    sys.path.insert(0, os.path.dirname(__file__))
-    import test_node_differential as T
 
     for s in range(300):
         rng = random.Random(31337 + s)
         content = (
-            T._gen_tj_coalesce_stream(rng)
+            _gen_tj_coalesce_stream(rng)
             if s % 2 == 0
-            else T._gen_stream(rng)
+            else _gen_stream(rng)
         )
         ev = cinterp.interpret(content)
         chunks: list[bytes] = []
@@ -288,3 +304,187 @@ def test_coalesce_tj_c_twin_identical_to_python():
         if len(pyev):
             assert (cev == pyev).all(), s
         assert csc == pysc, s
+
+
+# ---------------------------------------------------------------------------
+# Path identity over the differential generators and their pinned
+# reproducers: every stream takes the C lexer + C replay where it can
+# and ``_run_py`` otherwise, and must match ``_run_py`` on every stream.
+# ---------------------------------------------------------------------------
+
+def test_tj_coalesce_path_identity():
+    import random
+
+    for s in [*range(171000, 171040), *TJ_KILLER_SEEDS]:
+        _assert_same(_nd_assemble(_gen_tj_coalesce_stream(random.Random(s))))
+
+
+def test_round4_path_identity():
+    """Big-Tc rise splits, clip-straddle seg splits and pre-Tf drops."""
+    import random
+
+    streams = (
+        list(_BIGTC_RISE_PINNED)
+        + list(_PRE_TF_STREAMS)
+        + [_gen_bigtc_stream(random.Random(510000 + s)) for s in range(15)]
+        + [_gen_clipseg_stream(random.Random(600000 + s)) for s in range(15)]
+    )
+    for stream in streams:
+        _assert_same(_nd_assemble(stream))
+
+
+def test_form_inherit_path_identity():
+    for tc in (0.0, 0.5, 3.0, 9.0):
+        _assert_same(_assemble_with_form(
+            b"",
+            b"BT /F1 12 Tf %.1f Tc 1 0 0 1 72 700 Tm (pg) Tj ET /Fm Do" % tc,
+            b"BT 1 0 0 1 72 650 Tm (sun moon  star) Tj (tail) Tj ET",
+        ))
+
+
+def test_form_inherit_tm_path_identity():
+    import random
+
+    pdfs = [
+        # clone-window form mid-BT (the reconstructed-tm path)
+        _assemble_with_form(
+            b"",
+            b"BT /F1 12 Tf 1 0 0 1 72 700 Tm (pre) Tj /Fm Do (post) Tj"
+            b" ET",
+            b"(inform) Tj",
+        ),
+        # inherited TL through the quote, inherited Ts through BT
+        _assemble_with_form(
+            b"",
+            b"BT /F1 12 Tf 40 TL 8 Ts 1 0 0 1 72 700 Tm (page) Tj ET"
+            b" /Fm Do",
+            b"BT /F1 10 Tf 1 0 0 1 72 500 Tm (fa) Tj (fb) ' 0 Ts (fc)"
+            b" Tj ET",
+        ),
+        # rise across BT with no form at all
+        _nd_assemble(
+            b"BT /F1 12 Tf 1 0 0 1 72 700 Tm (one) Tj 30 Ts (up) Tj ET"
+            b" BT /F1 12 Tf 1 0 0 1 72 700 Tm (two) Tj ET"
+        ),
+    ] + [
+        _gen_form_inherit_stream(random.Random(905000 + s))
+        for s in range(20)
+    ]
+    for raw in pdfs:
+        _assert_same(raw)
+
+
+def test_qq_path_identity():
+    import random
+
+    pdfs = [
+        _nd_assemble(
+            b"BT /F1 12 Tf 1 0 0 1 72 700 Tm (one) Tj q /F2 24 Tf 3 Tc"
+            b" (two) Tj Q (three) Tj 0 -14 Td (four) Tj ET"
+        ),
+        _nd_assemble(
+            b"BT /F1 12 Tf 1 0 0 1 72 700 Tm (a) Tj q 1 0 0 1 200 500"
+            b" Tm 8 Ts (b) Tj Q (c) Tj ET"
+        ),
+    ] + [_gen_qq_stream(random.Random(935000 + s)) for s in range(20)]
+    for raw in pdfs:
+        _assert_same(raw)
+
+
+def test_category_path_identity():
+    w = [278] * 38
+    _assert_same(
+        _nd_assemble(b"BT /F1 12 Tf 1 0 0 1 72 700 Tm (a\240b\011c) Tj ET")
+    )
+    _assert_same(_assemble_with_tounicode(
+        b"BT /F1 12 Tf 1 0 0 1 72 700 Tm (abAcd) Tj ET",
+        [(0x41, b"00AD")], w,
+    ))
+    _assert_same(_assemble_with_tounicode(
+        b"BT /F1 12 Tf 1 0 0 1 72 700 Tm (hijCabc) Tj (abcEEhij)"
+        b" Tj [(defg) 86 (EEhij)] TJ ET",
+        [(0x41, b"2003"), (0x42, b"0009"), (0x43, b"0078"),
+         (0x44, b"0020"), (0x45, b"0020")], w,
+    ))
+
+
+def test_form_lm_path_identity():
+    import random
+
+    pdfs = [
+        _assemble_with_form(
+            b"",
+            b"BT /F1 12 Tf 1 0 0 1 200 700 Tm [(abcd) %d (ef)] TJ"
+            b" /Fm Do (post) Tj ET" % k,
+            form,
+        )
+        for k in (-5000, 2000, 8000)
+        for form in (
+            b"(pre) Tj 0 0 Td (gamma) Tj",
+            b"T* (gamma) Tj",
+            b"q (g0) Tj 0 0 Td (g1) Tj Q 0 0 Td (g2) Tj",
+        )
+    ] + [
+        _gen_form_lm_stream(random.Random(1505000 + s)) for s in range(20)
+    ]
+    for raw in pdfs:
+        _assert_same(raw)
+
+
+def test_register_path_identity():
+    """The C replay (with its defer-to-``_run_py`` escape hatch) agrees
+    with ``_run_py`` on both register generators."""
+    import random
+
+    docs = [_gen_zwreg_stream(random.Random(9000 + s)) for s in range(12)]
+    docs += [_gen_nzreg_stream(random.Random(9100 + s)) for s in range(12)]
+    for raw in docs:
+        _assert_same(raw)
+
+
+def test_lgap_leading_space_path_identity():
+    for s in (
+        b"BT /F1 10 Tf 1 0 0 1 40 700 Tm 6.500 Tc [(i) 1500] TJ ( i) Tj ET",
+        b"BT /F1 10 Tf 1 0 0 1 40 700 Tm 6.500 Tc [(i) 1500] TJ (  i) Tj ET",
+        b"BT /F1 10 Tf 1 0 0 1 -10 700 Tm 6.500 Tc (alp delt ze) Tj"
+        b" [-700 (pi) (psi) 1500] TJ ( iot  del ) Tj ET",
+    ):
+        _assert_same(_nd_assemble(s))
+
+
+def test_closed_form_prev_path_identity():
+    for s in _CLOSED_PREV_STREAMS:
+        _assert_same(_nd_assemble(s))
+
+
+def test_coerce_c_defer_path_identity():
+    """The C lexer must DEFER coercion streams (return -2 -> exact
+    Python page -> _JsCoerce -> jsvm), so C-enabled and C-disabled runs
+    are identical on every pinned + swept stream."""
+    import random
+
+    streams = list(_COERCE_PINNED) + list(_CHARSCACHE_PINNED) + [
+        _gen_coerce_stream(random.Random(920000 + s)) for s in range(25)
+    ]
+    for stream in streams:
+        _assert_same(_nd_assemble(stream))
+
+
+def test_generator_sweep_paths_identical():
+    """8 seeded documents from each of the 32 differential generators
+    ``scripts/hunt_fresh.py`` runs against the live reference."""
+    import random
+
+    from scripts import hunt_fresh
+
+    plain = {name for name, _ in hunt_fresh.PLAIN}
+    gens = hunt_fresh.PLAIN + hunt_fresh.FULL
+    assert len(gens) == 32
+    for i, (name, gen) in enumerate(gens):
+        for s in range(8):
+            doc = gen(random.Random(3_200_000 + i * 10_000 + s))
+            if name in plain:
+                doc = _nd_assemble(doc)
+            c, py = _both(doc)
+            for key in ("text", "page_spans", "error"):
+                assert c[key] == py[key], (name, s, key)

@@ -101,6 +101,7 @@ def test_lang_id_expr_matches_udf(spark):
     assert agree == len(both)
 
 
+@pytest.mark.requires_reference
 def test_sql_pdf_functions(spark):
     from pdf_parse_new_spark.functions import register_all
 

@@ -705,31 +705,6 @@ def test_tj_coalesce_killer_seeds_byte_equal_vs_live_reference(tmp_path):
     )
 
 
-def test_tj_coalesce_three_way_path_identity():
-    """The TJ rewrite must hold across ALL THREE execution paths: C
-    lexer + C replay, C lexer + Python event loop, and the pure-Python
-    per-op interpreter (the reference implementation)."""
-    from pdf_parse_new_spark.kernels import cinterp
-
-    if not cinterp.AVAILABLE:
-        pytest.skip("no C compiler")
-    for s in [*range(171000, 171040), *TJ_KILLER_SEEDS]:
-        raw = _assemble(_gen_tj_coalesce_stream(random.Random(s)))
-        c_full = pdfb.parse_pdf_bytes(raw)
-        cinterp.REPLAY = False
-        try:
-            c_lex = pdfb.parse_pdf_bytes(raw)
-        finally:
-            cinterp.REPLAY = True
-        cinterp.AVAILABLE = False
-        try:
-            py = pdfb.parse_pdf_bytes(raw)
-        finally:
-            cinterp.AVAILABLE = True
-        assert c_full["text"] == py["text"], f"seed {s}: C replay"
-        assert c_lex["text"] == py["text"], f"seed {s}: event loop"
-
-
 # ---------------------------------------------------------------------------
 # round 4: big-Tc standalone splits x stale-rise anchors, clip-aware
 # seg-splitting on view-box straddles, and pre-Tf show dropping
@@ -955,37 +930,6 @@ def test_pre_tf_shows_dropped_byte_equal_vs_live_reference(tmp_path):
     )
 
 
-def test_round4_three_way_path_identity():
-    """Big-Tc rise splits, clip-straddle seg splits and pre-Tf drops
-    must hold across ALL THREE execution paths: C lexer + C replay, C
-    lexer + Python event loop, and the pure-Python interpreter."""
-    from pdf_parse_new_spark.kernels import cinterp
-
-    if not cinterp.AVAILABLE:
-        pytest.skip("no C compiler")
-    streams = (
-        list(_BIGTC_RISE_PINNED)
-        + list(_PRE_TF_STREAMS)
-        + [_gen_bigtc_stream(random.Random(510000 + s)) for s in range(15)]
-        + [_gen_clipseg_stream(random.Random(600000 + s)) for s in range(15)]
-    )
-    for i, stream in enumerate(streams):
-        raw = _assemble(stream)
-        c_full = pdfb.parse_pdf_bytes(raw)
-        cinterp.REPLAY = False
-        try:
-            c_lex = pdfb.parse_pdf_bytes(raw)
-        finally:
-            cinterp.REPLAY = True
-        cinterp.AVAILABLE = False
-        try:
-            py = pdfb.parse_pdf_bytes(raw)
-        finally:
-            cinterp.AVAILABLE = True
-        assert c_full["text"] == py["text"], f"stream {i}: C replay"
-        assert c_lex["text"] == py["text"], f"stream {i}: event loop"
-
-
 def test_form_inherits_text_state_byte_equal_vs_live_reference(tmp_path):
     """pdf.js clones the eval state into a Form XObject run
     (paintXObject/stateManager), so a form showing text WITHOUT its own
@@ -1026,37 +970,6 @@ def test_form_inherits_text_state_byte_equal_vs_live_reference(tmp_path):
             ),
         ],
     )
-
-
-def test_form_inherit_three_way_path_identity():
-    from pdf_parse_new_spark.kernels import cinterp
-
-    if not cinterp.AVAILABLE:
-        pytest.skip("no C compiler")
-    pdfs = [
-        _assemble_with_form(
-            b"",
-            b"BT /F1 12 Tf %.1f Tc 1 0 0 1 72 700 Tm (pg) Tj ET /Fm Do"
-            % tc,
-            b"BT 1 0 0 1 72 650 Tm (sun moon  star) Tj "
-            b"(tail) Tj ET",
-        )
-        for tc in (0.0, 0.5, 3.0, 9.0)
-    ]
-    for i, raw in enumerate(pdfs):
-        c_full = pdfb.parse_pdf_bytes(raw)
-        cinterp.REPLAY = False
-        try:
-            c_lex = pdfb.parse_pdf_bytes(raw)
-        finally:
-            cinterp.REPLAY = True
-        cinterp.AVAILABLE = False
-        try:
-            py = pdfb.parse_pdf_bytes(raw)
-        finally:
-            cinterp.AVAILABLE = True
-        assert c_full["text"] == py["text"], f"pdf {i}: C replay"
-        assert c_lex["text"] == py["text"], f"pdf {i}: event loop"
 
 
 # --------------------------------------------------------------------
@@ -1320,52 +1233,6 @@ def test_form_inherit_sweep_byte_equal_vs_live_reference(tmp_path):
     _run_differential(tmp_path, docs)
 
 
-def test_form_inherit_tm_three_way_path_identity():
-    from pdf_parse_new_spark.kernels import cinterp
-
-    if not cinterp.AVAILABLE:
-        pytest.skip("no C compiler")
-    pdfs = [
-        # clone-window form mid-BT (the reconstructed-tm path)
-        _assemble_with_form(
-            b"",
-            b"BT /F1 12 Tf 1 0 0 1 72 700 Tm (pre) Tj /Fm Do (post) Tj"
-            b" ET",
-            b"(inform) Tj",
-        ),
-        # inherited TL through the quote, inherited Ts through BT
-        _assemble_with_form(
-            b"",
-            b"BT /F1 12 Tf 40 TL 8 Ts 1 0 0 1 72 700 Tm (page) Tj ET"
-            b" /Fm Do",
-            b"BT /F1 10 Tf 1 0 0 1 72 500 Tm (fa) Tj (fb) ' 0 Ts (fc)"
-            b" Tj ET",
-        ),
-        # rise across BT with no form at all
-        _assemble(
-            b"BT /F1 12 Tf 1 0 0 1 72 700 Tm (one) Tj 30 Ts (up) Tj ET"
-            b" BT /F1 12 Tf 1 0 0 1 72 700 Tm (two) Tj ET"
-        ),
-    ] + [
-        _gen_form_inherit_stream(random.Random(905000 + s))
-        for s in range(20)
-    ]
-    for i, raw in enumerate(pdfs):
-        c_full = pdfb.parse_pdf_bytes(raw)
-        cinterp.REPLAY = False
-        try:
-            c_lex = pdfb.parse_pdf_bytes(raw)
-        finally:
-            cinterp.REPLAY = True
-        cinterp.AVAILABLE = False
-        try:
-            py = pdfb.parse_pdf_bytes(raw)
-        finally:
-            cinterp.AVAILABLE = True
-        assert c_full["text"] == py["text"], f"pdf {i}: C replay"
-        assert c_lex["text"] == py["text"], f"pdf {i}: event loop"
-
-
 # --------------------------------------------------------------------
 # q/Q snapshot the WHOLE TextState (pdf.js StateManager: ctm, text/line
 # matrices, font, Tc/Tw/Tz/TL/Ts), restoring flushes only on a
@@ -1559,37 +1426,6 @@ def test_qq_sweep_byte_equal_vs_live_reference(tmp_path):
     _run_differential(tmp_path, docs)
 
 
-def test_qq_three_way_path_identity():
-    from pdf_parse_new_spark.kernels import cinterp
-
-    if not cinterp.AVAILABLE:
-        pytest.skip("no C compiler")
-    pdfs = [
-        _assemble(
-            b"BT /F1 12 Tf 1 0 0 1 72 700 Tm (one) Tj q /F2 24 Tf 3 Tc"
-            b" (two) Tj Q (three) Tj 0 -14 Td (four) Tj ET"
-        ),
-        _assemble(
-            b"BT /F1 12 Tf 1 0 0 1 72 700 Tm (a) Tj q 1 0 0 1 200 500"
-            b" Tm 8 Ts (b) Tj Q (c) Tj ET"
-        ),
-    ] + [_gen_qq_stream(random.Random(935000 + s)) for s in range(20)]
-    for i, raw in enumerate(pdfs):
-        c_full = pdfb.parse_pdf_bytes(raw)
-        cinterp.REPLAY = False
-        try:
-            c_lex = pdfb.parse_pdf_bytes(raw)
-        finally:
-            cinterp.REPLAY = True
-        cinterp.AVAILABLE = False
-        try:
-            py = pdfb.parse_pdf_bytes(raw)
-        finally:
-            cinterp.AVAILABLE = True
-        assert c_full["text"] == py["text"], f"pdf {i}: C replay"
-        assert c_lex["text"] == py["text"], f"pdf {i}: event loop"
-
-
 def _assemble_with_image(content: bytes) -> bytes:
     """Page with a 1x1 Image XObject at /Im — paintXObject flush
     probes."""
@@ -1668,9 +1504,10 @@ def test_do_always_flushes_byte_equal_vs_live_reference(tmp_path):
 # --------------------------------------------------------------------
 
 def _assemble_with_tounicode(content: bytes, pairs, widths=None,
-                             first=32) -> bytes:
+                             first=32, pages=1) -> bytes:
     """Helvetica with a /ToUnicode bfchar CMap (code, utf16-hex) and an
-    optional /Widths run starting at ``first``."""
+    optional /Widths run starting at ``first``; ``pages`` pages all show
+    ``content``."""
     body = b"\n".join(b"<%02x> <%s>" % (c, u) for c, u in pairs)
     tu = (
         b"/CIDInit /ProcSet findresource begin 12 dict begin begincmap"
@@ -1685,15 +1522,17 @@ def _assemble_with_tounicode(content: bytes, pairs, widths=None,
             b" ".join(str(w).encode() for w in widths),
         )
     fdict += b" /ToUnicode 5 0 R >>"
+    page = (b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+            b"/Resources << /Font << /F1 4 0 R >> >> /Contents 6 0 R >>")
+    kids = b" ".join(b"%d 0 R" % n for n in [3, *range(7, 6 + pages)])
     objs = [
         b"<< /Type /Catalog /Pages 2 0 R >>",
-        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
-        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-        b"/Resources << /Font << /F1 4 0 R >> >> /Contents 6 0 R >>",
+        b"<< /Type /Pages /Kids [%s] /Count %d >>" % (kids, pages),
+        page,
         fdict,
         b"<< /Length %d >>\nstream\n%s\nendstream" % (len(tu), tu),
         b"<< /Length %d >>\nstream\n%s\nendstream" % (len(content), content),
-    ]
+    ] + [page] * (pages - 1)
     out = bytearray(b"%PDF-1.4\n")
     offs = []
     for i, o in enumerate(objs, 1):
@@ -1804,41 +1643,6 @@ def test_zero_width_cascade_byte_equal_vs_live_reference(tmp_path):
             ),
         ],
     )
-
-
-def test_category_three_way_path_identity():
-    from pdf_parse_new_spark.kernels import cinterp
-
-    if not cinterp.AVAILABLE:
-        pytest.skip("no C compiler")
-    w = [278] * 38
-    pdfs = [
-        _assemble(b"BT /F1 12 Tf 1 0 0 1 72 700 Tm (a\240b\011c) Tj ET"),
-        _assemble_with_tounicode(
-            b"BT /F1 12 Tf 1 0 0 1 72 700 Tm (abAcd) Tj ET",
-            [(0x41, b"00AD")], w,
-        ),
-        _assemble_with_tounicode(
-            b"BT /F1 12 Tf 1 0 0 1 72 700 Tm (hijCabc) Tj (abcEEhij)"
-            b" Tj [(defg) 86 (EEhij)] TJ ET",
-            [(0x41, b"2003"), (0x42, b"0009"), (0x43, b"0078"),
-             (0x44, b"0020"), (0x45, b"0020")], w,
-        ),
-    ]
-    for i, raw in enumerate(pdfs):
-        c_full = pdfb.parse_pdf_bytes(raw)
-        cinterp.REPLAY = False
-        try:
-            c_lex = pdfb.parse_pdf_bytes(raw)
-        finally:
-            cinterp.REPLAY = True
-        cinterp.AVAILABLE = False
-        try:
-            py = pdfb.parse_pdf_bytes(raw)
-        finally:
-            cinterp.AVAILABLE = True
-        assert c_full["text"] == py["text"], f"pdf {i}: C replay"
-        assert c_lex["text"] == py["text"], f"pdf {i}: event loop"
 
 
 def test_kern_gap_positional_with_td_rewinds_byte_equal_vs_live_reference(
@@ -2092,43 +1896,6 @@ def test_form_lm_sweep_byte_equal_vs_live_reference(tmp_path):
         _gen_form_lm_stream(random.Random(1500000 + s)) for s in range(40)
     ]
     _run_differential(tmp_path, docs)
-
-
-def test_form_lm_three_way_path_identity():
-    from pdf_parse_new_spark.kernels import cinterp
-
-    if not cinterp.AVAILABLE:
-        pytest.skip("no C compiler")
-    pdfs = [
-        _assemble_with_form(
-            b"",
-            b"BT /F1 12 Tf 1 0 0 1 200 700 Tm [(abcd) %d (ef)] TJ"
-            b" /Fm Do (post) Tj ET" % k,
-            form,
-        )
-        for k in (-5000, 2000, 8000)
-        for form in (
-            b"(pre) Tj 0 0 Td (gamma) Tj",
-            b"T* (gamma) Tj",
-            b"q (g0) Tj 0 0 Td (g1) Tj Q 0 0 Td (g2) Tj",
-        )
-    ] + [
-        _gen_form_lm_stream(random.Random(1505000 + s)) for s in range(20)
-    ]
-    for i, raw in enumerate(pdfs):
-        c_full = pdfb.parse_pdf_bytes(raw)
-        cinterp.REPLAY = False
-        try:
-            c_lex = pdfb.parse_pdf_bytes(raw)
-        finally:
-            cinterp.REPLAY = True
-        cinterp.AVAILABLE = False
-        try:
-            py = pdfb.parse_pdf_bytes(raw)
-        finally:
-            cinterp.AVAILABLE = True
-        assert c_full["text"] == py["text"], f"pdf {i}: C replay"
-        assert c_lex["text"] == py["text"], f"pdf {i}: event loop"
 
 
 def test_no_anchor_kern_makes_no_decision_byte_equal_vs_live_reference(
@@ -2667,35 +2434,6 @@ def test_register_minimals_byte_equal_vs_live_reference(tmp_path):
     )
 
 
-def test_register_three_way_path_identity():
-    """C replay (with its defer-to-Python escape hatch), C-lexer +
-    Python consumer, and pure-Python interpreter agree byte-for-byte
-    on both register generators."""
-    from pdf_parse_new_spark.kernels import cinterp
-
-    if not cinterp.AVAILABLE:
-        pytest.skip("no C compiler")
-    docs = [_gen_zwreg_stream(random.Random(9000 + s)) for s in range(12)]
-    docs += [_gen_nzreg_stream(random.Random(9100 + s)) for s in range(12)]
-    for raw in docs:
-        c_full = pdfb.parse_pdf_bytes(raw)["text"]
-        cinterp.REPLAY = False
-        try:
-            c_lex = pdfb.parse_pdf_bytes(raw)["text"]
-        finally:
-            cinterp.REPLAY = True
-        import os
-        os.environ["PDF_PARSE_DISABLE_CTEXT"] = "1"
-        try:
-            avail = cinterp.AVAILABLE
-            cinterp.AVAILABLE = False
-            py = pdfb.parse_pdf_bytes(raw)["text"]
-        finally:
-            cinterp.AVAILABLE = avail
-            os.environ.pop("PDF_PARSE_DISABLE_CTEXT", None)
-        assert c_full == c_lex == py
-
-
 def test_lgap_trailing_space_and_clip_anchor_byte_equal_vs_live_reference(
     tmp_path,
 ):
@@ -2789,40 +2527,6 @@ def test_lgap_leading_space_boundary_byte_equal_vs_live_reference(tmp_path):
         _assemble(_gen_clipseg_stream(random.Random(12_680_020))),
     ]
     _run_differential(tmp_path, docs)
-
-
-def test_lgap_leading_space_three_way_identity():
-    from pdf_parse_new_spark.kernels import cinterp, pdfb
-
-    if not cinterp.AVAILABLE:
-        return
-    streams = [
-        b"BT /F1 10 Tf 1 0 0 1 40 700 Tm 6.500 Tc [(i) 1500] TJ ( i) Tj ET",
-        b"BT /F1 10 Tf 1 0 0 1 40 700 Tm 6.500 Tc [(i) 1500] TJ (  i) Tj ET",
-        b"BT /F1 10 Tf 1 0 0 1 -10 700 Tm 6.500 Tc (alp delt ze) Tj"
-        b" [-700 (pi) (psi) 1500] TJ ( iot  del ) Tj ET",
-    ]
-    for s in streams:
-        doc = _assemble(s)
-        full = pdfb.parse_pdf_bytes(doc)["text"]
-        import os
-        import subprocess
-        import sys as _sys
-
-        out = subprocess.run(
-            [_sys.executable, "-c",
-             "import sys;sys.path.insert(0,%r);"
-             "from pdf_parse_new_spark.kernels import pdfb;"
-             "import base64;"
-             "print(repr(pdfb.parse_pdf_bytes(base64.b64decode("
-             "sys.argv[1]))['text']))" % os.getcwd(),
-             __import__("base64").b64encode(doc).decode()],
-            capture_output=True, text=True,
-            env={**os.environ, "PDF_PARSE_DISABLE_CTEXT": "1"},
-            timeout=120,
-        )
-        assert out.returncode == 0, out.stderr[-500:]
-        assert eval(out.stdout.strip()) == full, s
 
 
 def _gen_combo_stream(rng: random.Random) -> bytes:
@@ -3358,35 +3062,6 @@ def test_closed_form_prev_equal_position_byte_equal_vs_live_reference(
     _run_differential(tmp_path, docs)
 
 
-def test_closed_form_prev_three_way_identity():
-    from pdf_parse_new_spark.kernels import cinterp, pdfb
-
-    if not cinterp.AVAILABLE:
-        return
-    import base64
-    import os
-    import subprocess
-    import sys as _sys
-
-    for s in _CLOSED_PREV_STREAMS:
-        doc = _assemble(s)
-        full = pdfb.parse_pdf_bytes(doc)["text"]
-        out = subprocess.run(
-            [_sys.executable, "-c",
-             "import sys;sys.path.insert(0,%r);"
-             "from pdf_parse_new_spark.kernels import pdfb;"
-             "import base64;"
-             "print(repr(pdfb.parse_pdf_bytes(base64.b64decode("
-             "sys.argv[1]))['text']))" % os.getcwd(),
-             base64.b64encode(doc).decode()],
-            capture_output=True, text=True,
-            env={**os.environ, "PDF_PARSE_DISABLE_CTEXT": "1"},
-            timeout=120,
-        )
-        assert out.returncode == 0, out.stderr[-500:]
-        assert eval(out.stdout.strip()) == full, s
-
-
 # ---- JS value-coercion tier (kernels/jsvm.py) ----------------------------
 # A non-numeric operand in a numeric text-state slot routes the page to the
 # faithful JS-semantics interpreter (pdfb._JsCoerce -> jsvm.JsVM): raw slot
@@ -3528,28 +3203,6 @@ def test_coerce_sweep_byte_equal_vs_live_reference(tmp_path):
         [_assemble(_gen_coerce_stream(random.Random(910000 + s)))
          for s in range(40)],
     )
-
-
-def test_coerce_c_defer_path_identity():
-    """The C lexer must DEFER coercion streams (return -2 -> exact
-    Python page -> _JsCoerce -> jsvm), so C-enabled and C-disabled runs
-    are identical on every pinned + swept stream."""
-    from pdf_parse_new_spark.kernels import cinterp
-
-    if not cinterp.AVAILABLE:
-        pytest.skip("no C compiler")
-    streams = list(_COERCE_PINNED) + list(_CHARSCACHE_PINNED) + [
-        _gen_coerce_stream(random.Random(920000 + s)) for s in range(25)
-    ]
-    for i, stream in enumerate(streams):
-        raw = _assemble(stream)
-        c_full = pdfb.parse_pdf_bytes(raw)
-        cinterp.AVAILABLE = False
-        try:
-            py = pdfb.parse_pdf_bytes(raw)
-        finally:
-            cinterp.AVAILABLE = True
-        assert c_full["text"] == py["text"], f"stream {i}: {stream!r}"
 
 
 def test_coerce_through_forms_byte_equal_vs_live_reference(tmp_path):

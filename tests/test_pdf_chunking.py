@@ -38,6 +38,7 @@ def _rows_by_id(df):
     return {r.doc_id: r for r in df.collect()}
 
 
+@pytest.mark.requires_reference
 def test_chunked_equals_single_task(spark, big_pdf, tmp_path):
     # mixed input: one huge doc (chunked) + the reference corpus (small path)
     (tmp_path / "huge.pdf").write_bytes(big_pdf)
@@ -69,6 +70,46 @@ def test_chunked_equals_single_task(spark, big_pdf, tmp_path):
     huge_id = next(i for i in single if i.endswith("huge.pdf"))
     assert single[huge_id].n_pages == N_PAGES
     assert N_PAGES / 250 >= 8
+
+
+def test_chunked_equals_single_task_generated(spark, big_pdf):
+    """The equivalence above on generated documents only: two chunked
+    documents of different lengths, a truncated one whose probe fails
+    (per-document fallback), a small one and a NULL payload."""
+    rows = [
+        ("huge", big_pdf),
+        ("mid", fixtures.build_big_binary_pdf(370)),
+        ("cut", big_pdf[: len(big_pdf) // 2]),
+        ("small", fixtures.build_big_binary_pdf(3)),
+        ("null", None),
+    ]
+    df = spark.createDataFrame(rows, "path string, content binary")
+    single = _rows_by_id(ex.extract_pdf_documents(df))
+    chunked = _rows_by_id(ex.extract_pdf_documents_chunked(
+        df, pages_per_chunk=150, big_doc_bytes=20_000
+    ))
+    assert set(single) == set(chunked) == {r[0] for r in rows}
+    for doc_id, a in single.items():
+        b = chunked[doc_id]
+        assert (a.text, a.n_pages, a.n_render, a.info, a.error) == (
+            b.text, b.n_pages, b.n_render, b.info, b.error
+        ), doc_id
+        assert [tuple(s) for s in a.page_spans] == [
+            tuple(s) for s in b.page_spans
+        ], doc_id
+    assert chunked["mid"].n_pages == 370
+
+
+def test_collect_payloads_groups_by_size(spark, monkeypatch):
+    """Payloads come back whole however the ids split into collects."""
+    rows = [(f"d{i}", bytes([i]) * (10 + i)) for i in range(5)]
+    df = spark.createDataFrame(rows, "doc_id string, payload binary")
+    ids = [r[0] for r in rows]
+    sizes = {d: len(p) for d, p in rows}
+    for group_bytes in (1, 25, 1 << 30):
+        monkeypatch.setattr(ex, "_COLLECT_GROUP_BYTES", group_bytes)
+        got = dict(ex._collect_payloads(df, ids, sizes))
+        assert got == dict(rows), group_bytes
 
 
 def test_chunked_max_pages_clamps(spark, big_pdf, tmp_path):
@@ -147,6 +188,7 @@ def test_chunked_speedup_over_single_task(spark, tmp_path):
     assert min(fanned) < min(serial) / 1.4, (serial, fanned)
 
 
+@pytest.mark.requires_reference
 def test_files_chunked_equals_files_single(spark, big_pdf, tmp_path):
     """The path-addressed chunk operator (tasks read the FILE and parse
     only their range — the reference's pdf-child shape) must be

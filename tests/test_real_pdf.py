@@ -53,6 +53,7 @@ def _words(t: str) -> Counter:
     return Counter(re.findall(r"\w+", t.lower()))
 
 
+@pytest.mark.requires_reference
 @pytest.mark.parametrize("name,n_pages,first,last,floor", CASES)
 def test_reference_corpus_assertions(name, n_pages, first, last, floor):
     raw = open(f"{DATA}/{name}.pdf", "rb").read()
@@ -70,6 +71,7 @@ def test_reference_corpus_assertions(name, n_pages, first, last, floor):
     assert recall >= floor, f"word recall {recall:.3f} < {floor}"
 
 
+@pytest.mark.requires_reference
 def test_reference_corpus_max_pages():
     # test/01-valid-default.js "option max: N-1": numrender = N-1, first-page
     # text still present, LAST-page text absent
@@ -86,6 +88,7 @@ def test_reference_corpus_max_pages():
     assert r2["n_render"] == 14
 
 
+@pytest.mark.requires_reference
 def test_invalid_pdf_rejects_as_error_row():
     # test/03-invalid-default.js: the reference REJECTS this truncated file;
     # our distributed semantics = an error row, never a task failure
@@ -95,6 +98,7 @@ def test_invalid_pdf_rejects_as_error_row():
     assert r["text"] == "" and r["n_pages"] == 0
 
 
+@pytest.mark.requires_reference
 def test_info_dict_fields():
     # lib/pdf-parse.js:91-96 returns the /Info dict; spot-check known fields
     raw = open(f"{DATA}/01-valid.pdf", "rb").read()
@@ -103,6 +107,7 @@ def test_info_dict_fields():
     assert info.get("Creator") == "TeX"
 
 
+@pytest.mark.requires_reference
 def test_spark_binaryfile_pipeline(spark):
     # end-to-end through the binaryFile source + mapInPandas operator
     from pdf_parse_new_spark.operators import extract as ex
@@ -303,6 +308,7 @@ def test_xref_stream_with_png_predictor():
     assert r["text"].strip() == "predictor path" and r["n_pages"] == 1
 
 
+@pytest.mark.requires_reference
 def test_page_spans_offsets():
     # north rule: "extracted text + span offsets" — each rendered page's
     # span must slice exactly that page's text out of the full result
@@ -338,6 +344,7 @@ def test_encrypted_pdf_rejects_as_error_row():
     assert r["text"] == "" and r["n_pages"] == 0
 
 
+@pytest.mark.requires_reference
 def test_pdf_documents_parallelism_equivalence(spark):
     # U3 analog for the real-PDF path: identical results at different
     # partitionings (per-document parse is deterministic and shuffle-free)
@@ -355,6 +362,7 @@ def test_pdf_documents_parallelism_equivalence(spark):
     assert a == b and len(a) == 5
 
 
+@pytest.mark.requires_reference
 def test_pdf_files_equals_documents_operator(spark):
     """extract_pdf_files (paths through the plan, bytes read task-side —
     the reference benchmark's own I/O shape) must produce byte-identical
@@ -373,6 +381,7 @@ def test_pdf_files_equals_documents_operator(spark):
     assert a == b and len(a) == 5
 
 
+@pytest.mark.requires_reference
 def test_pdf_files_io_error_row(spark):
     from pdf_parse_new_spark.operators import extract as ex
 
@@ -389,6 +398,40 @@ def test_pdf_files_io_error_row(spark):
     assert null_row.error is not None and null_row.text == ""
 
 
+def test_lone_surrogate_text_becomes_replacement_char(spark, tmp_path):
+    """A ToUnicode map can send a code to a lone surrogate (<D800>): the
+    parse keeps it, as pdf.js's JS string does, but UTF-8 cannot carry
+    it, so the operators write U+FFFD instead of aborting the job. The
+    chunked operators parse one page per chunk, so their reassembly
+    shifts the second page's span."""
+    from pdf_parse_new_spark.operators import extract as ex
+    from tests.test_node_differential import _assemble_with_tounicode
+
+    raw = _assemble_with_tounicode(
+        b"BT /F1 12 Tf 1 0 0 1 72 700 Tm (xAy) Tj ET", [(0x41, b"D800")],
+        pages=2,
+    )
+    assert pdfb.parse_pdf_bytes(raw)["text"] == "\n\nx\ud800y" * 2
+    path = tmp_path / "surrogate.pdf"
+    path.write_bytes(raw)
+    df = spark.createDataFrame([(str(path), raw)], "path string, content binary")
+    for out in (
+        ex.extract_pdf_files(df.select("path")),
+        ex.extract_pdf_documents(df),
+        ex.extract_pdf_files_chunked(
+            df.select("path"), pages_per_chunk=1, big_file_bytes=0
+        ),
+        ex.extract_pdf_documents_chunked(
+            df, pages_per_chunk=1, big_doc_bytes=0
+        ),
+    ):
+        (row,) = out.collect()
+        assert row.error is None and row.n_pages == 2
+        assert row.text == "\n\nx\ufffdy" * 2
+        assert [tuple(s) for s in row.page_spans] == [(1, 2, 5), (2, 7, 10)]
+
+
+@pytest.mark.requires_reference
 def test_parser_survives_mutations():
     """Web-scale hygiene: deterministic corruption sweep over a real PDF —
     truncations, byte flips, and splices must yield a result dict (possibly
@@ -438,6 +481,7 @@ def test_rotated_parser_survives_mutations():
             assert r["error"] is None or isinstance(r["error"], str)
 
 
+@pytest.mark.requires_reference
 def test_pdf_documents_payload_guard(spark):
     from pdf_parse_new_spark.operators import extract as ex
 
@@ -668,6 +712,7 @@ REF_CURRENT_FLOORS = {
 }
 
 
+@pytest.mark.requires_reference
 @pytest.mark.parametrize("name", sorted(REF_CURRENT_FLOORS))
 def test_recall_vs_current_reference_output(name):
     """Parity against what the reference produces TODAY (node-generated
@@ -765,6 +810,7 @@ def test_pending_space_model():
     assert it.text() == "z"
 
 
+@pytest.mark.requires_reference
 @pytest.mark.parametrize(
     "name", ["01-valid", "02-valid", "04-valid", "05-versions-space"]
 )
