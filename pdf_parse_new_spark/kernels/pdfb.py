@@ -6477,21 +6477,23 @@ class _TextInterp:
         self.force_flush = True  # form stream end flush (getTextContent tail)
 
 
-def _page_view_box(doc: Document, page: dict) -> list[float]:
+def _page_view_box(doc: Document, page: dict, hops: int = 0) -> list[float]:
     """The page's visible box in PDF units — pdf.js ``Page.view``:
     CropBox intersected with MediaBox, MediaBox alone when CropBox is
     absent/degenerate, LETTER when both are missing. Both keys are
     INHERITABLE, so walk /Parent links. A page with NEITHER key inherits
     the box fully from its parent chain — cached per parent object so a
-    20k-page sibling run resolves the chain once, not once per page."""
-    if "MediaBox" not in page and "CropBox" not in page:
+    20k-page sibling run resolves the chain once, not once per page. The
+    chain recursion stops after 64 hops (a /Parent cycle among box-less
+    nodes), leaving the rest to ``find``'s own capped walk."""
+    if "MediaBox" not in page and "CropBox" not in page and hops < 64:
         par = page.get("Parent")
         if isinstance(par, Ref):
             vb = doc.viewbox_cache.get(par.num)
             if vb is None:
                 parent = doc.resolve(par)
                 vb = _page_view_box(
-                    doc, parent if isinstance(parent, dict) else {}
+                    doc, parent if isinstance(parent, dict) else {}, hops + 1
                 )
                 doc.viewbox_cache[par.num] = vb
             return vb
@@ -6687,6 +6689,30 @@ def _js_page_text(doc: Document, page: dict, data: bytes, resources,
     return vm.text()
 
 
+def _document_pages(doc: Document) -> tuple[list, bool]:
+    """Every ``(page, resources)`` of ``doc`` in page-tree order, and
+    whether the catalog's page tree yielded them. With no catalog or a
+    broken tree, the pages are every ``/Type /Page`` object in object
+    order."""
+    pages: list = []
+    try:
+        root = doc.resolve(doc.trailer.get("Root"))
+        if isinstance(root, dict):
+            _walk_pages(doc, root.get("Pages"), pages, set(), None)
+    except Exception:
+        pages = []
+    if pages:
+        return pages, True
+    for num in sorted(doc.index):
+        try:
+            o = doc.get_object(num)
+        except Exception:
+            continue
+        if isinstance(o, dict) and str(o.get("Type", "")) == "Page":
+            pages.append((o, o.get("Resources")))
+    return pages, False
+
+
 def parse_pdf_bytes(
     raw: bytes, max_pages: int = 0,
     page_range: tuple[int, int] | None = None,
@@ -6768,23 +6794,7 @@ def parse_pdf_bytes(
         except Exception:
             sel = None
     if sel is None:
-        pages: list = []
-        try:
-            root = doc.resolve(doc.trailer.get("Root"))
-            if isinstance(root, dict):
-                _walk_pages(doc, root.get("Pages"), pages, set(), None)
-        except Exception:
-            pages = []
-        tree_ok = bool(pages)
-        if not pages:
-            # no catalog / broken tree: fall back to every /Type /Page object
-            for num in sorted(doc.index):
-                try:
-                    o = doc.get_object(num)
-                except Exception:
-                    continue
-                if isinstance(o, dict) and str(o.get("Type", "")) == "Page":
-                    pages.append((o, o.get("Resources")))
+        pages, tree_ok = _document_pages(doc)
         if not pages:
             return {
                 "text": "", "n_pages": 0, "n_render": 0, "info": info,
@@ -6801,26 +6811,11 @@ def parse_pdf_bytes(
             n_pages_total if max_pages <= 0
             else min(max_pages, n_pages_total)
         )
-    def _all_pages() -> list:
-        # full page list for _JsCtx's charsCache accrual: the chunk
-        # fast path materializes only its range, but cache population
-        # is pinned to the reference's sequential page order from page
-        # 0 (output must be partition-independent)
-        root_ = doc.resolve(doc.trailer.get("Root"))
-        full: list = []
-        if isinstance(root_, dict):
-            _walk_pages(doc, root_.get("Pages"), full, set(), None)
-        if not full:
-            for num_ in sorted(doc.index):
-                try:
-                    o_ = doc.get_object(num_)
-                except Exception:
-                    continue
-                if isinstance(o_, dict) and str(o_.get("Type", "")) == "Page":
-                    full.append((o_, o_.get("Resources")))
-        return full
-
-    jsctx = _JsCtx(doc, _all_pages)
+    # the full page list for _JsCtx's charsCache accrual: the chunk fast
+    # path materializes only its range, but cache population is pinned to
+    # the reference's sequential page order from page 0 (output must be
+    # partition-independent)
+    jsctx = _JsCtx(doc, lambda: _document_pages(doc)[0])
     texts: list[str] = []
     error = None
     for k, (pg, res) in enumerate(sel):

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import importlib
 import json
+import os
 import re
 import time
 from collections.abc import Callable, Iterator
@@ -313,8 +314,6 @@ _BC_CACHE: dict = {}
 _BC_CACHE_MAX = 4
 # driver-side structure probes, content-addressed: sha1(payload) -> result
 _PROBE_CACHE: dict = {}
-# path-addressed probe results, validated by (mtime_ns, size)
-_FILE_PROBE_CACHE: dict = {}
 
 
 def _broadcast_cached(sc, payloads: dict):
@@ -378,6 +377,109 @@ def _collect_payloads(
         )
 
 
+def _probe_pages(raw: bytes, max_pages: int) -> tuple[int, str | None]:
+    """``(n_render, error)`` of one document from a structure-only probe:
+    ``page_range=(0, 0)`` walks xref and page tree and renders nothing —
+    the reference parent process also opens the document once for
+    numpages."""
+    from pdf_parse_new_spark.kernels import pdfb
+
+    r = pdfb.parse_pdf_bytes(raw, max_pages=max_pages, page_range=(0, 0))
+    n = r["n_pages"] if max_pages <= 0 else min(max_pages, r["n_pages"])
+    return n, r["error"]
+
+
+def _fan_out_chunks(
+    rest: DataFrame,
+    plain: Callable[[DataFrame], DataFrame],
+    big: list[tuple[str, int]],
+    plan: Callable[[list[str]], tuple[list[tuple], Callable]],
+    pages_per_chunk: int,
+    max_pages: int,
+) -> DataFrame:
+    """The reference's process strategy, shared by both chunked operators:
+    fixed page ranges ``{start, end, index}`` of each big document go to
+    tasks that extract only their range (lib/pdf-parse-processes.js:92-99,
+    lib/pdf-child.js:83-97), and the ranges reassemble into one row per
+    document.
+
+    ``rest`` holds every input row as ``doc_id`` plus what ``plain`` (the
+    operator's per-document path) reads. ``big`` is ``(doc_id, size)`` of
+    the rows over the operator's size bar. ``plan(ids)`` gets the unique
+    big ids, largest first, and returns ``(plans, reader)``: ``plans`` are
+    ``(doc_id, key, n_render, error)`` of the documents it probed, and
+    ``reader()`` builds, once per task, the ``key -> bytes`` read. Every
+    row that is not chunked — small, replicated or NULL id, unprobed,
+    probe error, zero pages — takes ``plain``, so the output is
+    row-identical to ``plain(rest)``."""
+    from pdf_parse_new_spark.kernels import pdfb
+
+    # Duplicate ids (replicated benchmark corpora produce them, and the
+    # plain operators keep one output row per input row) cannot go
+    # chunked: reassembly groups chunk rows by doc_id, which would merge
+    # the replicas into ONE doubled-text row. Neither can a NULL id.
+    n_rows: dict[str, int] = {}
+    for doc_id, _ in big:
+        n_rows[doc_id] = n_rows.get(doc_id, 0) + 1
+    ids = [
+        doc_id for doc_id, _ in sorted(big, key=lambda r: -r[1])
+        if doc_id is not None and n_rows[doc_id] == 1
+    ]
+    if not ids:
+        return plain(rest)
+    plans, reader = plan(ids)
+    ranges = [
+        (doc_id, key, idx, start, min(start + pages_per_chunk, n_render))
+        for doc_id, key, n_render, err in plans
+        if err is None and n_render > 0
+        for idx, start in enumerate(range(0, n_render, pages_per_chunk))
+    ]
+    if not ranges:
+        return plain(rest)
+
+    spark = rest.sparkSession
+    # a left anti join keeps a NULL doc_id row (it matches nothing), and
+    # the pandas-built id table is a LocalTableScan, not a Python RDD
+    chunk_ids = spark.createDataFrame(
+        pd.DataFrame({"doc_id": list(dict.fromkeys(r[0] for r in ranges))}),
+        "doc_id string",
+    )
+    unchunked = plain(rest.join(F.broadcast(chunk_ids), "doc_id", "left_anti"))
+    # EXACTLY one range per partition: round-robin repartition() starts each
+    # input split at a random offset, so 16 range rows can land on 8 tasks
+    # (measured: one task got 5 ranges -> 5x serial parse). spark.range is
+    # a deterministic 1:1 split, and its rows are indices into ``ranges``
+    # (shipped with the function): a parallelize()d list would be re-read
+    # through a second Python worker in every chunk task (measured at
+    # local[8] on 4 vCPUs, 16 ranges of a 10,000-page document: chunk stage
+    # 3.4-3.9 s -> 2.2-2.5 s).
+    range_df = spark.range(len(ranges), numPartitions=min(len(ranges), 8192))
+
+    def run_chunks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        read = reader()
+        for pdf in batches:
+            recs = []
+            for doc_id, key, idx, start, end in (ranges[i] for i in pdf["id"]):
+                try:
+                    raw = read(key)
+                except Exception as e:  # noqa: BLE001 — error row, not task
+                    recs.append((doc_id, idx,
+                                 *_pdf_row(None, f"io:{type(e).__name__}")))
+                    continue
+                r = pdfb.parse_pdf_bytes(
+                    raw, max_pages=max_pages, page_range=(start, end)
+                )
+                recs.append((doc_id, idx, *_pdf_row(r)))
+            yield pd.DataFrame(recs, columns=_CHUNK_COLUMNS)
+
+    chunked = range_df.mapInPandas(run_chunks, _CHUNK_SCHEMA)
+    return unchunked.unionByName(
+        chunked.groupBy("doc_id").applyInArrow(
+            _reassemble_arrow, PDF_DOC_SCHEMA
+        )
+    )
+
+
 def extract_pdf_documents_chunked(
     df: DataFrame,
     payload_col: str = "content",
@@ -400,128 +502,62 @@ def extract_pdf_documents_chunked(
     - bigger ones are collected (bounded by ``max_broadcast_bytes``; docs
       past the budget fall back to the per-document path — never fail),
       page-counted once on the driver (structure walk only, no content
-      decode — the reference parent also opens the doc once for numpages),
-      and BROADCAST — one copy per executor, not per chunk row and no
-      payload shuffle;
-    - the (doc_id, chunk_idx, start, end) ranges become one row and one
-      partition each; each task parses only its range;
-    - reassembly is pure JVM: sort_array(collect_list(...)) per doc, text
-      concat, span offsets shifted by the cumulative length of preceding
-      chunks (the ordered-concat J1 shape).
+      decode), and BROADCAST — one copy per executor, not per chunk row
+      and no payload shuffle;
+    - the page ranges run as in :func:`_fan_out_chunks`: one row and one
+      partition each, each task parsing only its range, then an ordered
+      per-document reassembly.
 
     Output is byte-identical to ``extract_pdf_documents`` (asserted by the
     U3-style equivalence test in tests/test_pdf_chunking.py)."""
-    from pdf_parse_new_spark.kernels import pdfb
+    import hashlib
 
-    spark = df.sparkSession
-    sc = spark.sparkContext
-    # coalesce: length(NULL) is NULL, which is false in BOTH branch filters
-    # — a null-payload row must still reach the per-document path (it
-    # becomes an error row there, never silently dropped)
-    payload_len = F.coalesce(F.length(F.col(payload_col)), F.lit(0))
-    small_df = df.filter(payload_len <= big_doc_bytes)
-    big_df = df.filter(payload_len > big_doc_bytes).select(
+    sc = df.sparkSession.sparkContext
+    rest = df.select(
         F.col(id_col).cast("string").alias("doc_id"),
         F.col(payload_col).alias("payload"),
     )
+    # a NULL payload has a NULL length, so it stays on the per-document
+    # path and becomes an error row there
+    big_df = rest.filter(F.length("payload") > big_doc_bytes)
+    # sizes only — never collect a payload the budget can't hold
+    big = [
+        (r.doc_id, r.sz)
+        for r in big_df.select("doc_id", F.length("payload").alias("sz"))
+        .collect()
+    ]
 
-    # pass 1: sizes only — never collect a payload the budget can't hold
-    sizes = big_df.select("doc_id", F.length("payload").alias("sz")).collect()
-    budget = max_broadcast_bytes
-    chosen: list[str] = []
-    fallback_ids: list[str] = []
-    # Duplicate ids (replicated benchmark corpora produce them, and
-    # extract_pdf_files explicitly supports them) cannot go through the
-    # chunked path: reassembly groups chunk rows by doc_id, which would
-    # merge the replicas into ONE doubled-text row. The per-document
-    # fallback keeps the one-output-row-per-input-row contract.
-    id_counts: dict[str, int] = {}
-    for row in sizes:
-        id_counts[row.doc_id] = id_counts.get(row.doc_id, 0) + 1
-    for row in sorted(sizes, key=lambda r: -(r.sz or 0)):
-        if id_counts[row.doc_id] > 1:
-            if row.doc_id not in fallback_ids:
-                fallback_ids.append(row.doc_id)
-        elif (row.sz or 0) <= budget:
-            chosen.append(row.doc_id)
-            budget -= row.sz or 0
-        else:  # over budget: the per-document path owns it — never fail
-            fallback_ids.append(row.doc_id)
-
-    payloads: dict[str, bytes] = {}
-    ranges: list[tuple[str, int, int, int]] = []  # (doc_id, idx, start, end)
-    if chosen:
-        import hashlib
-
-        sz = {row.doc_id: row.sz or 0 for row in sizes}
-        for doc_id, raw in _collect_payloads(big_df, chosen, sz):
-            # structure-only probe (page_range=(0,0) renders nothing): the
-            # driver learns n_pages once, like the reference parent process.
-            # Content-addressed cache: re-running the operator on the same
-            # document (benches, retries) skips the re-probe.
-            pkey = (hashlib.sha1(raw).hexdigest(), max_pages)
-            cached = _PROBE_CACHE.get(pkey)
-            if cached is None:
-                probe = pdfb.parse_pdf_bytes(raw, max_pages=max_pages,
-                                             page_range=(0, 0))
-                n_render = (
-                    probe["n_pages"] if max_pages <= 0
-                    else min(max_pages, probe["n_pages"])
-                )
-                cached = (probe["error"], n_render)
-                _PROBE_CACHE[pkey] = cached
+    def plan(ids: list[str]):
+        sizes = dict(big)
+        chosen: list[str] = []
+        budget = max_broadcast_bytes
+        for doc_id in ids:  # over budget: the per-document path owns it
+            if sizes[doc_id] <= budget:
+                chosen.append(doc_id)
+                budget -= sizes[doc_id]
+        plans, payloads = [], {}
+        for doc_id, raw in _collect_payloads(big_df, chosen, sizes):
+            # content-addressed: re-running the operator on the same
+            # document (benches, retries) skips the re-probe
+            key = (hashlib.sha1(raw).hexdigest(), max_pages)
+            probe = _PROBE_CACHE.get(key)
+            if probe is None:
+                probe = _PROBE_CACHE[key] = _probe_pages(raw, max_pages)
                 while len(_PROBE_CACHE) > 64:
                     _PROBE_CACHE.pop(next(iter(_PROBE_CACHE)))
-            err, n_render = cached
-            if err is not None or n_render <= 0:
-                fallback_ids.append(doc_id)
-                continue
-            payloads[doc_id] = raw
-            for idx, start in enumerate(range(0, n_render, pages_per_chunk)):
-                ranges.append(
-                    (doc_id, idx, start,
-                     min(start + pages_per_chunk, n_render))
-                )
+            plans.append((doc_id, doc_id, *probe))
+            if probe[1] is None and probe[0] > 0:
+                payloads[doc_id] = raw
+        bc = _broadcast_cached(sc, payloads) if payloads else None
+        return plans, lambda: bc.value.__getitem__
 
-    small_out = extract_pdf_documents(
-        small_df, payload_col=payload_col, id_col=id_col, max_pages=max_pages
+    return _fan_out_chunks(
+        rest,
+        lambda d: extract_pdf_documents(
+            d, payload_col="payload", id_col="doc_id", max_pages=max_pages
+        ),
+        big, plan, pages_per_chunk, max_pages,
     )
-    if fallback_ids:
-        fb = big_df.filter(F.col("doc_id").isin(fallback_ids))
-        small_out = small_out.unionByName(
-            extract_pdf_documents(
-                fb, payload_col="payload", id_col="doc_id",
-                max_pages=max_pages,
-            )
-        )
-    if not ranges:
-        return small_out
-
-    bc = _broadcast_cached(sc, payloads)
-    # EXACTLY one chunk per partition: round-robin repartition() starts each
-    # input split at a random offset, so 16 chunk rows can land on 8 tasks
-    # (measured: one task got 5 chunks -> 5x serial parse). spark.range
-    # with numPartitions=len(ranges) is deterministic 1:1, and its rows are
-    # indices into ``ranges`` (shipped with the function): a parallelize()d
-    # list would be re-read through a second Python worker in every chunk
-    # task (measured at local[8] on 4 vCPUs, 16 chunks of a 10,000-page
-    # document: chunk stage 3.4-3.9 s -> 2.2-2.5 s).
-    range_df = spark.range(len(ranges), numPartitions=min(len(ranges), 8192))
-
-    def run_chunks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        docs = bc.value
-        for pdf in batches:
-            recs = []
-            for doc_id, idx, start, end in (ranges[i] for i in pdf["id"]):
-                r = pdfb.parse_pdf_bytes(
-                    docs[doc_id], max_pages=max_pages,
-                    page_range=(start, end),
-                )
-                recs.append((doc_id, idx, *_pdf_row(r)))
-            yield pd.DataFrame(recs, columns=_CHUNK_COLUMNS)
-
-    chunked = range_df.mapInPandas(run_chunks, _CHUNK_SCHEMA)
-    return small_out.unionByName(_assemble_chunks(chunked))
 
 
 def _reassemble_arrow(table):
@@ -578,12 +614,6 @@ def _reassemble_arrow(table):
     )
 
 
-def _assemble_chunks(chunked: DataFrame) -> DataFrame:
-    return chunked.groupBy("doc_id").applyInArrow(
-        _reassemble_arrow, PDF_DOC_SCHEMA
-    )
-
-
 def _make_fetcher():
     """Task-local path->bytes reader: fsspec for URL schemes when present,
     plain open otherwise, with a small per-task blob cache for replicated
@@ -613,6 +643,29 @@ def _make_fetcher():
     return fetch
 
 
+def _file_size(path: str | None, fsspec=None) -> int:
+    """Bytes in the file at ``path`` (``fsspec`` for URL schemes when
+    given); -1 when NULL or unreadable, which the per-file path turns into
+    an error row."""
+    try:
+        if path is None:
+            return -1
+        if fsspec is not None and "://" in path:
+            return int(fsspec.open(path).fs.size(path))
+        return int(os.stat(path.removeprefix("file:")).st_size)
+    except Exception:
+        return -1
+
+
+def _probe_file(path: str, fetch, max_pages: int) -> tuple[int, str | None]:
+    """:func:`_probe_pages` of the file at ``path``; a read error is
+    ``(0, "io:<ExceptionName>")``."""
+    try:
+        return _probe_pages(fetch(path), max_pages)
+    except Exception as e:  # noqa: BLE001
+        return 0, f"io:{type(e).__name__}"
+
+
 def extract_pdf_files_chunked(
     df: DataFrame,
     path_col: str = "path",
@@ -628,214 +681,85 @@ def extract_pdf_files_chunked(
 
     Unlike :func:`extract_pdf_documents_chunked` (payload column ->
     driver collect + broadcast, costs that scale with document size), here
-    NOTHING but path strings and tiny range rows ever moves: a distributed
-    stat sizes the files, a one-task-per-file probe page-counts the big
-    ones, chunk tasks read the file themselves (page cache / object store)
-    and parse only their range, and the ordered reassembly shuffles just
-    the extracted text. Driver-side work is two small collects regardless
-    of file size. Small files take the plain :func:`extract_pdf_files`
-    path. Output is row-identical to ``extract_pdf_files``."""
-    from pdf_parse_new_spark.kernels import pdfb
-
+    NOTHING but path strings and tiny range rows ever moves: the files are
+    stat-ed, the big ones structure-probed, chunk tasks read the file
+    themselves (page cache / object store) and parse only their range, and
+    the ordered reassembly shuffles just the extracted text. Driver memory
+    is bounded by 10,000 path rows plus the big files' stat rows,
+    regardless of file size or corpus size. Small files take the plain
+    :func:`extract_pdf_files` path. Output is row-identical to
+    ``extract_pdf_files``."""
     spark = df.sparkSession
-    sc = spark.sparkContext
     cols = df.select(
         F.col(id_col if id_col else path_col).cast("string").alias("doc_id"),
         F.col(path_col).cast("string").alias("path"),
     )
 
-    def _stat_one(p, fsspec, _os):
-        try:
-            if p is None:
-                return -1
-            if fsspec is not None and "://" in p:
-                return int(fsspec.open(p).fs.size(p))
-            return int(_os.stat(p.removeprefix("file:")).st_size)
-        except Exception:
-            return -1  # unreadable: error row downstream
-
-    def _probe_one(p, fetch):
-        # structure probe (page_range=(0,0) renders nothing — xref +
-        # page tree only), cached on (path, mtime, size) so steady-state
-        # reruns skip the re-walk (same policy as the payload-addressed
-        # _PROBE_CACHE of the documents operator)
-        import os as _os
-
-        key = None
-        try:
-            st = _os.stat(p.removeprefix("file:"))
-            key = (p, st.st_mtime_ns, st.st_size, max_pages)
-            hit = _FILE_PROBE_CACHE.get(key)
-            if hit is not None:
-                return hit
-        except Exception:
-            pass
-        try:
-            r = pdfb.parse_pdf_bytes(
-                fetch(p), max_pages=max_pages, page_range=(0, 0)
-            )
-            n = (r["n_pages"] if max_pages <= 0
-                 else min(max_pages, r["n_pages"]))
-            res = (n, r["error"])
-        except Exception as e:  # noqa: BLE001
-            res = (0, f"io:{type(e).__name__}")
-        if key is not None:
-            _FILE_PROBE_CACHE[key] = res
-            while len(_FILE_PROBE_CACHE) > 256:
-                _FILE_PROBE_CACHE.pop(next(iter(_FILE_PROBE_CACHE)))
-        return res
-
     def stat_probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # ONE distributed pass stats every path AND structure-probes the
-        # big ones in place: the separate probe job this replaces cost a
-        # full extra driver round-trip on the critical path. A big file
-        # later excluded as a duplicate id wastes its (cheap) probe —
-        # duplicates are rare and the probe is structure-only.
-        import os as _os
-
+        # big ones in place; only the big rows leave the task
         try:
             import fsspec
         except Exception:
             fsspec = None
         fetch = _make_fetcher()
         for pdf in batches:
-            sizes, npages, errs = [], [], []
-            for p in pdf["path"]:
-                sz = _stat_one(p, fsspec, _os)
-                n, err = (
-                    _probe_one(p, fetch) if sz > big_file_bytes else (0, None)
-                )
-                sizes.append(sz)
-                npages.append(n)
-                errs.append(err)
-            out = pdf[["doc_id", "path"]].copy()
-            out["sz"] = sizes
-            out["n_render"] = npages
-            out["err"] = errs
-            yield out
+            out = pdf[["doc_id", "path"]].assign(
+                sz=[_file_size(p, fsspec) for p in pdf["path"]]
+            )
+            out = out[out["sz"] > big_file_bytes]
+            probes = [_probe_file(p, fetch, max_pages) for p in out["path"]]
+            yield out.assign(
+                n_render=[n for n, _ in probes], err=[e for _, e in probes]
+            )
 
-    # Path A (small local corpora): collect the path rows once and stat +
-    # probe on the driver — the distributed pass costs a full Python-runner
-    # job (~0.5 s of fixed latency) that dwarfs a handful of os.stat calls
-    # and one or two structure probes (the reference parent process probes
-    # exactly the same way). Path B (big or remote corpora): the one-job
-    # distributed stat+probe pass. The collect is bounded the same way in
-    # both paths — Path B's result set carries the same (id, path) rows.
-    rows = cols.collect()
-    local_only = all(
+    # Path A (small local corpora): stat + probe on the driver — the
+    # distributed pass costs a full Python-runner job (~0.5 s of fixed
+    # latency) that dwarfs a handful of os.stat calls and up to 8
+    # structure probes (the reference parent process probes the same way).
+    # Path B (more than 10,000 rows, a URL, or more than 8 big files): the
+    # one-job distributed stat+probe pass, which returns only big rows.
+    rows = cols.limit(10_001).collect()
+    stats = None
+    if len(rows) <= 10_000 and all(
         r.path is None or "://" not in r.path for r in rows
-    )
-    use_driver = local_only and len(rows) <= 10_000
-    if use_driver:
-        import os as _os
-
-        from collections import namedtuple
-
-        StatRow = namedtuple("StatRow", "doc_id path sz n_render err")
-        fetch = _make_fetcher()
-        stats = []
-        n_driver_probes = 0
-        for r in rows:
-            sz = _stat_one(r.path, None, _os)
-            n, err = 0, None
-            if sz > big_file_bytes:
-                if n_driver_probes >= 8:
-                    use_driver = False  # too many big docs: probe on the grid
-                    break
-                n, err = _probe_one(r.path, fetch)
-                n_driver_probes += 1
-            stats.append(StatRow(r.doc_id, r.path, sz, n, err))
-    if use_driver:
-        # the plain-path branch re-reads its input on every action; the
-        # original df is a driver-local relation here (rows just
-        # collected), so rebuild it as a LocalTableScan — the
-        # python-pickled-RDD scan behind a list-based createDataFrame
-        # costs ~0.3 s of worker round-trip per action and its lone task
-        # contends with the chunk wave for a core
-        cols = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "doc_id": [r.doc_id for r in rows],
-                    "path": [r.path for r in rows],
-                }
-            ).astype(object),
-            "doc_id string, path string",
-        )
-    else:
+    ):
+        sized = [(r.doc_id, r.path, _file_size(r.path)) for r in rows]
+        big_rows = [s for s in sized if s[2] > big_file_bytes]
+        if len(big_rows) <= 8:
+            fetch = _make_fetcher()
+            stats = [
+                (doc_id, path, sz, *_probe_file(path, fetch, max_pages))
+                for doc_id, path, sz in big_rows
+            ]
+            # the plain-path branch re-reads its input on every action;
+            # rebuild the collected rows as a LocalTableScan — the
+            # python-pickled-RDD scan behind a list-based createDataFrame
+            # costs ~0.3 s of worker round-trip per action and its lone
+            # task contends with the chunk wave for a core
+            cols = spark.createDataFrame(
+                pd.DataFrame(
+                    {
+                        "doc_id": [r.doc_id for r in rows],
+                        "path": [r.path for r in rows],
+                    }
+                ).astype(object),
+                "doc_id string, path string",
+            )
+    if stats is None:
         stats = cols.mapInPandas(
             stat_probe,
             "doc_id string, path string, sz long, n_render int, err string",
         ).collect()
-    big_all = [r for r in stats if r.sz > big_file_bytes]
-    # Duplicate ids (replicated corpora — extract_pdf_files supports
-    # them) must NOT go chunked: reassembly groups by doc_id and would
-    # merge replicas into one doubled-text row. Dup ids keep the plain
-    # per-file path, preserving one output row per input row.
-    id_counts: dict[str, int] = {}
-    for r in big_all:
-        id_counts[r.doc_id] = id_counts.get(r.doc_id, 0) + 1
-    big = [r for r in big_all if id_counts[r.doc_id] == 1]
-    big_ids = {r.doc_id for r in big}
+    # (doc_id, path, n_render, err) by id; ``plan`` only asks unique ids
+    plans = {s[0]: (s[0], s[1], s[3], s[4]) for s in stats}
 
-    small_out = extract_pdf_files(
-        # coalesce: NULL doc_id (null path) must keep its error row — a
-        # bare ~isin() is NULL for NULL and would silently drop it
-        cols.filter(
-            F.coalesce(~F.col("doc_id").isin(list(big_ids)), F.lit(True))
-            if big_ids else F.lit(True)
+    return _fan_out_chunks(
+        cols,
+        lambda d: extract_pdf_files(
+            d, path_col="path", id_col="doc_id", max_pages=max_pages
         ),
-        path_col="path", id_col="doc_id",
-        max_pages=max_pages,
+        [(s[0], s[2]) for s in stats],
+        lambda ids: ([plans[d] for d in ids], _make_fetcher),
+        pages_per_chunk, max_pages,
     )
-    if not big:
-        return small_out
-
-    ranges: list[tuple[str, str, int, int, int]] = []
-    fallback_ids: list[str] = []
-    for r in big:
-        if r.err is not None or r.n_render <= 0:
-            fallback_ids.append(r.doc_id)  # error row via the plain path
-            continue
-        for idx, start in enumerate(range(0, r.n_render, pages_per_chunk)):
-            ranges.append(
-                (r.doc_id, r.path, idx, start,
-                 min(start + pages_per_chunk, r.n_render))
-            )
-    if fallback_ids:
-        small_out = small_out.unionByName(
-            extract_pdf_files(
-                cols.filter(F.col("doc_id").isin(fallback_ids)),
-                path_col="path", id_col="doc_id", max_pages=max_pages,
-            )
-        )
-    if not ranges:
-        return small_out
-
-    range_df = spark.createDataFrame(
-        sc.parallelize(ranges, min(len(ranges), 8192)),
-        "doc_id string, path string, chunk_idx int, start int, end int",
-    )
-
-    def run_chunks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fetch = _make_fetcher()
-        for pdf in batches:
-            recs = []
-            for doc_id, path, idx, start, end in zip(
-                pdf["doc_id"], pdf["path"], pdf["chunk_idx"], pdf["start"],
-                pdf["end"],
-            ):
-                try:
-                    raw = fetch(path)
-                except Exception as e:  # noqa: BLE001
-                    recs.append((doc_id, int(idx),
-                                 *_pdf_row(None, f"io:{type(e).__name__}")))
-                    continue
-                r = pdfb.parse_pdf_bytes(
-                    raw, max_pages=max_pages,
-                    page_range=(int(start), int(end)),
-                )
-                recs.append((doc_id, int(idx), *_pdf_row(r)))
-            yield pd.DataFrame(recs, columns=_CHUNK_COLUMNS)
-
-    chunked = range_df.mapInPandas(run_chunks, _CHUNK_SCHEMA)
-    return small_out.unionByName(_assemble_chunks(chunked))

@@ -152,7 +152,9 @@ def main() -> None:
         "extract_pdf_documents_chunked",
         "page ranges fan out one-per-partition over the BROADCAST payload "
         "(no payload shuffle — the only Exchange carries chunk TEXT into "
-        "the ordered reassembly agg); no join, no cartesian",
+        "the ordered reassembly agg); the only join is the broadcast left "
+        "anti join that keeps chunked ids off the per-document path; no "
+        "cartesian",
         formatted_plan(extract.extract_pdf_documents_chunked(
             big_df, pages_per_chunk=50, big_doc_bytes=10_000
         )),
@@ -167,10 +169,13 @@ def main() -> None:
     path_df = spark.createDataFrame([(big_path,)], "path string")
     sections.append((
         "extract_pdf_files_chunked",
-        "path-addressed chunking: ONLY path strings + tiny range rows in "
-        "the plan (tasks read the file themselves); the single Exchange "
-        "carries extracted chunk TEXT into the ordered reassembly — "
-        "driver work is two small collects regardless of file size",
+        "path-addressed chunking: ONLY path strings + range indices in "
+        "the plan (a Range scan; tasks read the file themselves); small "
+        "files reach the plain path through a left anti join on the "
+        "chunked ids; the single Exchange carries extracted chunk TEXT "
+        "into the ordered reassembly — the driver collects at most "
+        "10,001 path rows, or on big corpora only the big files' stat "
+        "rows, regardless of file size",
         formatted_plan(extract.extract_pdf_files_chunked(
             path_df, pages_per_chunk=50, big_file_bytes=10_000
         )),

@@ -223,6 +223,53 @@ def test_files_chunked_equals_files_single(spark, big_pdf, tmp_path):
     assert chunked[None].error is not None
 
 
+@pytest.mark.parametrize("n_big", [2, 7])
+def test_files_chunked_equals_files_single_generated(spark, big_pdf, tmp_path,
+                                                     monkeypatch, n_big):
+    """The equivalence above on generated files only: ``n_big`` chunked
+    documents, a truncated one whose probe fails, a small one, a
+    duplicated big path, a missing path and a NULL path. With 2 distinct
+    big documents there are 4 big rows and the driver stats and probes
+    them (Path A); with 7 there are 9 big rows, past the driver's 8, and
+    the distributed stat+probe pass plans them (Path B)."""
+    paths = []
+    for i in range(n_big):
+        p = tmp_path / f"big{i}.pdf"
+        p.write_bytes(fixtures.build_big_binary_pdf(150 + 60 * i, seed=i))
+        paths.append(str(p))
+    (tmp_path / "cut.pdf").write_bytes(big_pdf[: len(big_pdf) // 2])
+    (tmp_path / "small.pdf").write_bytes(fixtures.build_big_binary_pdf(3))
+    paths += [str(tmp_path / n) for n in ("cut.pdf", "small.pdf")]
+    paths += [paths[0], str(tmp_path / "missing.pdf"), None]
+    df = spark.createDataFrame([(p,) for p in paths], "path string")
+
+    probed = []
+    probe = ex._probe_file
+    monkeypatch.setattr(
+        ex, "_probe_file", lambda *a: probed.append(a[0]) or probe(*a)
+    )
+    chunked = ex.extract_pdf_files_chunked(
+        df, pages_per_chunk=100, big_file_bytes=20_000
+    ).collect()
+    # driver-side probes only on Path A (workers append to their own copy)
+    assert len(probed) == (n_big + 2 if n_big + 2 <= 8 else 0)
+
+    single = ex.extract_pdf_files(df).collect()
+    key = lambda r: (r.doc_id or "", r.text)  # noqa: E731
+    assert len(chunked) == len(single) == len(paths)
+    for a, b in zip(sorted(single, key=key), sorted(chunked, key=key)):
+        assert (a.doc_id, a.text, a.n_pages, a.n_render, a.info, a.error) \
+            == (b.doc_id, b.text, b.n_pages, b.n_render, b.info, b.error), \
+            a.doc_id
+        assert [tuple(s) for s in a.page_spans] == [
+            tuple(s) for s in b.page_spans
+        ], a.doc_id
+    rows = {r.doc_id: r for r in chunked}
+    assert rows[paths[n_big - 1]].n_pages == 150 + 60 * (n_big - 1)
+    assert rows[str(tmp_path / "missing.pdf")].error == "io:FileNotFoundError"
+    assert rows[None].error is not None
+
+
 def test_files_chunked_max_pages_clamps(spark, big_pdf, tmp_path):
     (tmp_path / "huge.pdf").write_bytes(big_pdf)
     df = spark.createDataFrame(

@@ -115,6 +115,41 @@ def test_viewbox_cache_inheritance():
     assert pdfb._page_view_box(doc, pages[1][0]) == [0.0, 0.0, 50.0, 60.0]
 
 
+def _one_page_pdf(pages_extra: bytes) -> bytes:
+    """A one-page "hello" document whose page and /Pages node carry no
+    box; ``pages_extra`` goes into that /Pages node's dict."""
+    ops = b"BT /F1 12 Tf 1 0 0 1 72 700 Tm (hello) Tj ET"
+    return (
+        b"%PDF-1.4\n"
+        b"1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n"
+        b"2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 " + pages_extra
+        + b" >>\nendobj\n"
+        b"3 0 obj\n<< /Type /Page /Parent 2 0 R /Contents 4 0 R "
+        b"/Resources << /Font << /F1 6 0 R >> >> >>\nendobj\n"
+        b"4 0 obj\n<< /Length %d >>\nstream\n%s\nendstream\nendobj\n"
+        % (len(ops), ops)
+        + b"5 0 obj\n<< /Type /Pages /Kids [] /Count 0 /Parent 2 0 R >>\n"
+        b"endobj\n"
+        b"6 0 obj\n<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>\n"
+        b"endobj\n"
+        b"trailer\n<< /Root 1 0 R >>\n"
+    )
+
+
+def test_viewbox_parent_cycle_falls_back_to_letter():
+    # a /Parent cycle among box-less /Pages nodes (2 -> 5 -> 2) must not
+    # recurse without end: the page gets LETTER and renders as without
+    # the cycle, instead of "" with a page error
+    plain = pdfb.parse_pdf_bytes(_one_page_pdf(b""))
+    assert (plain["text"], plain["error"]) == ("\n\nhello", None)
+    cyclic = _one_page_pdf(b"/Parent 5 0 R")
+    r = pdfb.parse_pdf_bytes(cyclic)
+    assert (r["text"], r["error"], r["n_pages"]) == ("\n\nhello", None, 1)
+    doc = pdfb.Document(cyclic)
+    (page, _), = pdfb._document_pages(doc)[0]
+    assert pdfb._page_view_box(doc, page) == [0.0, 0.0, 612.0, 792.0]
+
+
 def test_simhash_buckets_matches_column_expression(spark):
     from pyspark.sql import functions as F
 
