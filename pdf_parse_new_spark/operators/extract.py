@@ -389,11 +389,28 @@ def _probe_pages(raw: bytes, max_pages: int) -> tuple[int, str | None]:
     return n, r["error"]
 
 
+def _unique_big_ids(big: list[tuple[str | None, int]]) -> list[str]:
+    """The ids of ``big``, the ``(doc_id, size)`` rows over a chunked
+    operator's size bar, that may go chunked, largest first. Duplicate ids
+    (replicated benchmark corpora produce them, and the plain operators
+    keep one output row per input row) cannot: reassembly groups chunk rows
+    by doc_id, which would merge the replicas into ONE doubled-text row.
+    Neither can a NULL id."""
+    n_rows: dict[str | None, int] = {}
+    for doc_id, _ in big:
+        n_rows[doc_id] = n_rows.get(doc_id, 0) + 1
+    return [
+        doc_id for doc_id, _ in sorted(big, key=lambda r: -r[1])
+        if doc_id is not None and n_rows[doc_id] == 1
+    ]
+
+
 def _fan_out_chunks(
-    rest: DataFrame,
+    small: DataFrame,
+    big_rows: DataFrame,
     plain: Callable[[DataFrame], DataFrame],
-    big: list[tuple[str, int]],
-    plan: Callable[[list[str]], tuple[list[tuple], Callable]],
+    plans: list[tuple[str, object, int, str | None]],
+    reader: Callable[[], Callable[[object], bytes]],
     pages_per_chunk: int,
     max_pages: int,
 ) -> DataFrame:
@@ -403,31 +420,17 @@ def _fan_out_chunks(
     lib/pdf-child.js:83-97), and the ranges reassemble into one row per
     document.
 
-    ``rest`` holds every input row as ``doc_id`` plus what ``plain`` (the
-    operator's per-document path) reads. ``big`` is ``(doc_id, size)`` of
-    the rows over the operator's size bar. ``plan(ids)`` gets the unique
-    big ids, largest first, and returns ``(plans, reader)``: ``plans`` are
-    ``(doc_id, key, n_render, error)`` of the documents it probed, and
-    ``reader()`` builds, once per task, the ``key -> bytes`` read. Every
-    row that is not chunked — small, replicated or NULL id, unprobed,
-    probe error, zero pages — takes ``plain``, so the output is
-    row-identical to ``plain(rest)``."""
+    ``small`` and ``big_rows`` hold the input rows under and over the
+    operator's size bar, as ``doc_id`` plus what ``plain`` (the operator's
+    per-document path) reads. ``plans`` are ``(doc_id, key, n_render,
+    error)`` of the probed big documents whose ids are unique, and
+    ``reader()`` builds, once per task, the ``key -> bytes`` read. Only the
+    ``big_rows`` row of a chunked id leaves the plain path; every other
+    row — small, replicated or NULL id, unprobed, probe error, zero pages —
+    takes ``plain``, so the output is row-identical to
+    ``plain(small.unionByName(big_rows))``."""
     from pdf_parse_new_spark.kernels import pdfb
 
-    # Duplicate ids (replicated benchmark corpora produce them, and the
-    # plain operators keep one output row per input row) cannot go
-    # chunked: reassembly groups chunk rows by doc_id, which would merge
-    # the replicas into ONE doubled-text row. Neither can a NULL id.
-    n_rows: dict[str, int] = {}
-    for doc_id, _ in big:
-        n_rows[doc_id] = n_rows.get(doc_id, 0) + 1
-    ids = [
-        doc_id for doc_id, _ in sorted(big, key=lambda r: -r[1])
-        if doc_id is not None and n_rows[doc_id] == 1
-    ]
-    if not ids:
-        return plain(rest)
-    plans, reader = plan(ids)
     ranges = [
         (doc_id, key, idx, start, min(start + pages_per_chunk, n_render))
         for doc_id, key, n_render, err in plans
@@ -435,16 +438,18 @@ def _fan_out_chunks(
         for idx, start in enumerate(range(0, n_render, pages_per_chunk))
     ]
     if not ranges:
-        return plain(rest)
+        return plain(small.unionByName(big_rows))
 
-    spark = rest.sparkSession
+    spark = big_rows.sparkSession
     # a left anti join keeps a NULL doc_id row (it matches nothing), and
     # the pandas-built id table is a LocalTableScan, not a Python RDD
     chunk_ids = spark.createDataFrame(
         pd.DataFrame({"doc_id": list(dict.fromkeys(r[0] for r in ranges))}),
         "doc_id string",
     )
-    unchunked = plain(rest.join(F.broadcast(chunk_ids), "doc_id", "left_anti"))
+    unchunked = plain(small.unionByName(
+        big_rows.join(F.broadcast(chunk_ids), "doc_id", "left_anti")
+    ))
     # EXACTLY one range per partition: round-robin repartition() starts each
     # input split at a random offset, so 16 range rows can land on 8 tasks
     # (measured: one task got 5 ranges -> 5x serial parse). spark.range is
@@ -521,42 +526,47 @@ def extract_pdf_documents_chunked(
     # path and becomes an error row there
     big_df = rest.filter(F.length("payload") > big_doc_bytes)
     # sizes only — never collect a payload the budget can't hold
-    big = [
+    sizes = [
         (r.doc_id, r.sz)
         for r in big_df.select("doc_id", F.length("payload").alias("sz"))
         .collect()
     ]
 
-    def plan(ids: list[str]):
-        sizes = dict(big)
-        chosen: list[str] = []
-        budget = max_broadcast_bytes
-        for doc_id in ids:  # over budget: the per-document path owns it
-            if sizes[doc_id] <= budget:
-                chosen.append(doc_id)
-                budget -= sizes[doc_id]
-        plans, payloads = [], {}
-        for doc_id, raw in _collect_payloads(big_df, chosen, sizes):
-            # content-addressed: re-running the operator on the same
-            # document (benches, retries) skips the re-probe
-            key = (hashlib.sha1(raw).hexdigest(), max_pages)
-            probe = _PROBE_CACHE.get(key)
-            if probe is None:
-                probe = _PROBE_CACHE[key] = _probe_pages(raw, max_pages)
-                while len(_PROBE_CACHE) > 64:
-                    _PROBE_CACHE.pop(next(iter(_PROBE_CACHE)))
-            plans.append((doc_id, doc_id, *probe))
-            if probe[1] is None and probe[0] > 0:
-                payloads[doc_id] = raw
-        bc = _broadcast_cached(sc, payloads) if payloads else None
-        return plans, lambda: bc.value.__getitem__
-
-    return _fan_out_chunks(
-        rest,
-        lambda d: extract_pdf_documents(
+    def plain(d: DataFrame) -> DataFrame:
+        return extract_pdf_documents(
             d, payload_col="payload", id_col="doc_id", max_pages=max_pages
-        ),
-        big, plan, pages_per_chunk, max_pages,
+        )
+
+    ids = _unique_big_ids(sizes)
+    if not ids:
+        return plain(rest)
+    size_of = dict(sizes)
+    chosen: list[str] = []
+    budget = max_broadcast_bytes
+    for doc_id in ids:  # over budget: the per-document path owns it
+        if size_of[doc_id] <= budget:
+            chosen.append(doc_id)
+            budget -= size_of[doc_id]
+    plans, payloads = [], {}
+    for doc_id, raw in _collect_payloads(big_df, chosen, size_of):
+        # content-addressed: re-running the operator on the same document
+        # (benches, retries) skips the re-probe
+        key = (hashlib.sha1(raw).hexdigest(), max_pages)
+        probe = _PROBE_CACHE.get(key)
+        if probe is None:
+            probe = _PROBE_CACHE[key] = _probe_pages(raw, max_pages)
+            while len(_PROBE_CACHE) > 64:
+                _PROBE_CACHE.pop(next(iter(_PROBE_CACHE)))
+        plans.append((doc_id, doc_id, *probe))
+        if probe[1] is None and probe[0] > 0:
+            payloads[doc_id] = raw
+    bc = _broadcast_cached(sc, payloads) if payloads else None
+    small = rest.filter(
+        F.col("payload").isNull() | (F.length("payload") <= big_doc_bytes)
+    )
+    return _fan_out_chunks(
+        small, big_df, plain, plans, lambda: bc.value.__getitem__,
+        pages_per_chunk, max_pages,
     )
 
 
@@ -713,6 +723,27 @@ def extract_pdf_files_chunked(
                 n_render=[n for n, _ in probes], err=[e for _, e in probes]
             )
 
+    def plain(d: DataFrame) -> DataFrame:
+        return extract_pdf_files(
+            d, path_col="path", id_col="doc_id", max_pages=max_pages
+        )
+
+    def local(rows: list) -> DataFrame:
+        # the plain path re-reads its input on every action: an Arrow-built
+        # relation is a LocalTableScan, even when empty, while the
+        # python-pickled-RDD scan behind a list-based (or empty pandas)
+        # createDataFrame costs ~0.3 s of worker round-trip per action and
+        # its lone task contends with the chunk wave for a core
+        import pyarrow as pa
+
+        return spark.createDataFrame(
+            pa.table({
+                "doc_id": pa.array([r[0] for r in rows], pa.string()),
+                "path": pa.array([r[1] for r in rows], pa.string()),
+            }),
+            "doc_id string, path string",
+        )
+
     # Path A (small local corpora): stat + probe on the driver — the
     # distributed pass costs a full Python-runner job (~0.5 s of fixed
     # latency) that dwarfs a handful of os.stat calls and up to 8
@@ -725,41 +756,33 @@ def extract_pdf_files_chunked(
         r.path is None or "://" not in r.path for r in rows
     ):
         sized = [(r.doc_id, r.path, _file_size(r.path)) for r in rows]
-        big_rows = [s for s in sized if s[2] > big_file_bytes]
-        if len(big_rows) <= 8:
+        big = [s for s in sized if s[2] > big_file_bytes]
+        if len(big) <= 8:
             fetch = _make_fetcher()
             stats = [
                 (doc_id, path, sz, *_probe_file(path, fetch, max_pages))
-                for doc_id, path, sz in big_rows
+                for doc_id, path, sz in big
             ]
-            # the plain-path branch re-reads its input on every action;
-            # rebuild the collected rows as a LocalTableScan — the
-            # python-pickled-RDD scan behind a list-based createDataFrame
-            # costs ~0.3 s of worker round-trip per action and its lone
-            # task contends with the chunk wave for a core
-            cols = spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "doc_id": [r.doc_id for r in rows],
-                        "path": [r.path for r in rows],
-                    }
-                ).astype(object),
-                "doc_id string, path string",
-            )
+            small = local([s for s in sized if s[2] <= big_file_bytes])
+            big_rows = local(big)
     if stats is None:
         stats = cols.mapInPandas(
             stat_probe,
             "doc_id string, path string, sz long, n_render int, err string",
         ).collect()
-    # (doc_id, path, n_render, err) by id; ``plan`` only asks unique ids
-    plans = {s[0]: (s[0], s[1], s[3], s[4]) for s in stats}
-
+        big_rows = local(stats)
+        # a row is big by its (doc_id, path); a NULL doc_id matches too
+        b = F.broadcast(big_rows.alias("b"))
+        small = cols.alias("c").join(
+            b,
+            F.col("c.doc_id").eqNullSafe(F.col("b.doc_id"))
+            & (F.col("c.path") == F.col("b.path")),
+            "left_anti",
+        )
+    # (doc_id, path, n_render, err) of the unique big ids
+    by_id = {s[0]: (s[0], s[1], s[3], s[4]) for s in stats}
+    plans = [by_id[d] for d in _unique_big_ids([(s[0], s[2]) for s in stats])]
     return _fan_out_chunks(
-        cols,
-        lambda d: extract_pdf_files(
-            d, path_col="path", id_col="doc_id", max_pages=max_pages
-        ),
-        [(s[0], s[2]) for s in stats],
-        lambda ids: ([plans[d] for d in ids], _make_fetcher),
-        pages_per_chunk, max_pages,
+        small, big_rows, plain, plans, _make_fetcher, pages_per_chunk,
+        max_pages,
     )

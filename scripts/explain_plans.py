@@ -153,8 +153,8 @@ def main() -> None:
         "page ranges fan out one-per-partition over the BROADCAST payload "
         "(no payload shuffle — the only Exchange carries chunk TEXT into "
         "the ordered reassembly agg); the only join is the broadcast left "
-        "anti join that keeps chunked ids off the per-document path; no "
-        "cartesian",
+        "anti join that keeps the chunked big rows off the per-document "
+        "path; no cartesian",
         formatted_plan(extract.extract_pdf_documents_chunked(
             big_df, pages_per_chunk=50, big_doc_bytes=10_000
         )),
@@ -171,8 +171,9 @@ def main() -> None:
         "extract_pdf_files_chunked",
         "path-addressed chunking: ONLY path strings + range indices in "
         "the plan (a Range scan; tasks read the file themselves); small "
-        "files reach the plain path through a left anti join on the "
-        "chunked ids; the single Exchange carries extracted chunk TEXT "
+        "files go straight to the plain path, and big files not chunked "
+        "join them through a left anti join on the chunked ids; the "
+        "single Exchange carries extracted chunk TEXT "
         "into the ordered reassembly — the driver collects at most "
         "10,001 path rows, or on big corpora only the big files' stat "
         "rows, regardless of file size",

@@ -38,6 +38,18 @@ def _rows_by_id(df):
     return {r.doc_id: r for r in df.collect()}
 
 
+def _assert_same_rows(single, chunked):
+    key = lambda r: (r.doc_id or "", r.text or "", r.error or "")  # noqa: E731
+    assert len(chunked) == len(single)
+    for a, b in zip(sorted(single, key=key), sorted(chunked, key=key)):
+        assert (a.doc_id, a.text, a.n_pages, a.n_render, a.info, a.error) \
+            == (b.doc_id, b.text, b.n_pages, b.n_render, b.info, b.error), \
+            a.doc_id
+        assert [tuple(s) for s in a.page_spans] == [
+            tuple(s) for s in b.page_spans
+        ], a.doc_id
+
+
 @pytest.mark.requires_reference
 def test_chunked_equals_single_task(spark, big_pdf, tmp_path):
     # mixed input: one huge doc (chunked) + the reference corpus (small path)
@@ -226,22 +238,29 @@ def test_files_chunked_equals_files_single(spark, big_pdf, tmp_path):
 @pytest.mark.parametrize("n_big", [2, 7])
 def test_files_chunked_equals_files_single_generated(spark, big_pdf, tmp_path,
                                                      monkeypatch, n_big):
-    """The equivalence above on generated files only: ``n_big`` chunked
-    documents, a truncated one whose probe fails, a small one, a
-    duplicated big path, a missing path and a NULL path. With 2 distinct
-    big documents there are 4 big rows and the driver stats and probes
-    them (Path A); with 7 there are 9 big rows, past the driver's 8, and
-    the distributed stat+probe pass plans them (Path B)."""
+    """The equivalence above on generated files only, with ``id_col``:
+    ``n_big`` chunked documents, a truncated one whose probe fails, a
+    small one, a duplicated big path, a missing path and a NULL path, each
+    with its path as id; then one id on a big, a small and a NULL path,
+    and a NULL id on a big path. Only the big row of a chunked id may
+    leave the per-file path. With 2 distinct big documents there are 6
+    big rows and the driver stats and probes them (Path A); with 7 there
+    are 11, past the driver's 8, and the distributed stat+probe pass
+    plans them (Path B)."""
     paths = []
     for i in range(n_big):
         p = tmp_path / f"big{i}.pdf"
         p.write_bytes(fixtures.build_big_binary_pdf(150 + 60 * i, seed=i))
         paths.append(str(p))
+    small = str(tmp_path / "small.pdf")
     (tmp_path / "cut.pdf").write_bytes(big_pdf[: len(big_pdf) // 2])
     (tmp_path / "small.pdf").write_bytes(fixtures.build_big_binary_pdf(3))
-    paths += [str(tmp_path / n) for n in ("cut.pdf", "small.pdf")]
+    paths += [str(tmp_path / "cut.pdf"), small]
     paths += [paths[0], str(tmp_path / "missing.pdf"), None]
-    df = spark.createDataFrame([(p,) for p in paths], "path string")
+    rows = [(p or "null-path", p) for p in paths] + [
+        ("d", paths[1]), ("d", small), ("d", None), (None, paths[1]),
+    ]
+    df = spark.createDataFrame(rows, "id string, path string")
 
     probed = []
     probe = ex._probe_file
@@ -249,25 +268,18 @@ def test_files_chunked_equals_files_single_generated(spark, big_pdf, tmp_path,
         ex, "_probe_file", lambda *a: probed.append(a[0]) or probe(*a)
     )
     chunked = ex.extract_pdf_files_chunked(
-        df, pages_per_chunk=100, big_file_bytes=20_000
+        df, id_col="id", pages_per_chunk=100, big_file_bytes=20_000
     ).collect()
     # driver-side probes only on Path A (workers append to their own copy)
-    assert len(probed) == (n_big + 2 if n_big + 2 <= 8 else 0)
+    assert len(probed) == (n_big + 4 if n_big + 4 <= 8 else 0)
 
-    single = ex.extract_pdf_files(df).collect()
-    key = lambda r: (r.doc_id or "", r.text)  # noqa: E731
-    assert len(chunked) == len(single) == len(paths)
-    for a, b in zip(sorted(single, key=key), sorted(chunked, key=key)):
-        assert (a.doc_id, a.text, a.n_pages, a.n_render, a.info, a.error) \
-            == (b.doc_id, b.text, b.n_pages, b.n_render, b.info, b.error), \
-            a.doc_id
-        assert [tuple(s) for s in a.page_spans] == [
-            tuple(s) for s in b.page_spans
-        ], a.doc_id
-    rows = {r.doc_id: r for r in chunked}
-    assert rows[paths[n_big - 1]].n_pages == 150 + 60 * (n_big - 1)
-    assert rows[str(tmp_path / "missing.pdf")].error == "io:FileNotFoundError"
-    assert rows[None].error is not None
+    assert len(chunked) == len(rows)
+    _assert_same_rows(ex.extract_pdf_files(df, id_col="id").collect(),
+                      chunked)
+    by_id = {r.doc_id: r for r in chunked}
+    assert by_id[paths[n_big - 1]].n_pages == 150 + 60 * (n_big - 1)
+    assert by_id[str(tmp_path / "missing.pdf")].error == "io:FileNotFoundError"
+    assert by_id["null-path"].error is not None
 
 
 def test_files_chunked_max_pages_clamps(spark, big_pdf, tmp_path):
@@ -329,3 +341,19 @@ def test_chunked_null_payload_becomes_error_row(spark):
     assert set(rows) == {"null-doc", "tiny"}
     assert rows["null-doc"].error is not None
     assert rows["tiny"].error is not None
+
+
+def test_chunked_mixed_size_duplicate_id_keeps_every_row(spark, big_pdf):
+    # one id on a big, a small and a NULL payload: the big row goes
+    # chunked, and only it may leave the per-document path
+    df = spark.createDataFrame(
+        [("d", bytearray(big_pdf)),
+         ("d", bytearray(fixtures.build_big_binary_pdf(3))),
+         ("d", None)],
+        "path string, content binary",
+    )
+    chunked = ex.extract_pdf_documents_chunked(
+        df, pages_per_chunk=500, big_doc_bytes=20_000
+    ).collect()
+    assert len(chunked) == 3
+    _assert_same_rows(ex.extract_pdf_documents(df).collect(), chunked)
