@@ -1,27 +1,20 @@
 """ctypes loader for the C content-stream lexer (``_ctext.c``).
 
-The C source ships with the package; it is compiled ONCE per machine with
-the system C compiler into a content-hash-keyed shared object under the
-temp dir (override with ``PDF_PARSE_CTEXT_CACHE``), then loaded via
-ctypes. Concurrent executors race safely: each compiles to a private temp
-file and ``os.replace``s it into place (atomic on POSIX).
-
-When no compiler is available — or ``PDF_PARSE_DISABLE_CTEXT=1`` —
-``AVAILABLE`` is False and callers fall back to the pure-Python
-interpreter, which remains the reference implementation. At cluster scale
-the .c file rides in the same ``--py-files`` archive as the package and
-each executor pays one ~0.2 s compile at first use.
+The C source ships with the package; :func:`cbuild.build` compiles it
+once per machine into a content-hash-keyed shared object, loaded here via
+ctypes. When no compiler is available ``AVAILABLE`` is False and callers
+fall back to the pure-Python interpreter, which remains the reference
+implementation.
 """
 
 from __future__ import annotations
 
 import ctypes
-import hashlib
 import os
-import subprocess
-import tempfile
 
 import numpy as np
+
+from pdf_parse_new_spark.kernels import cbuild
 
 _SRC = os.path.join(os.path.dirname(__file__), "_ctext.c")
 
@@ -59,20 +52,8 @@ _lib = None
 AVAILABLE = False
 
 
-def _build() -> ctypes.CDLL:
-    with open(_SRC, "rb") as f:
-        src = f.read()
-    h = hashlib.sha1(src).hexdigest()[:16]
-    cache = os.environ.get("PDF_PARSE_CTEXT_CACHE", tempfile.gettempdir())
-    so = os.path.join(cache, f"pdf_parse_ctext_{h}.so")
-    if not os.path.exists(so):
-        tmp = f"{so}.tmp.{os.getpid()}"
-        subprocess.run(
-            ["cc", "-O2", "-shared", "-fPIC", "-o", tmp, _SRC],
-            check=True, capture_output=True, timeout=120,
-        )
-        os.replace(tmp, so)
-    lib = ctypes.CDLL(so)
+def _load() -> ctypes.CDLL:
+    lib = ctypes.CDLL(cbuild.build(_SRC, "ctext"))
     lib.pdftext_interpret.restype = ctypes.c_long
     lib.pdftext_interpret.argtypes = [
         ctypes.c_char_p, ctypes.c_long, ctypes.c_void_p, ctypes.c_long,
@@ -113,12 +94,11 @@ def _build() -> ctypes.CDLL:
     return lib
 
 
-if os.environ.get("PDF_PARSE_DISABLE_CTEXT", "") != "1":
-    try:
-        _lib = _build()
-        AVAILABLE = True
-    except Exception:
-        AVAILABLE = False
+try:
+    _lib = _load()
+    AVAILABLE = True
+except Exception:
+    AVAILABLE = False
 
 
 class PreprocessorEngaged(Exception):

@@ -3,25 +3,21 @@
 Unlike ``_ctext.c`` (plain shared object driven through ctypes), this one
 is a real CPython extension — it builds Python dicts/lists/bytes/Name/Ref
 directly through the C API, so it needs the interpreter headers at compile
-time. The build mirrors cinterp: compiled once per machine into a
-content-hash-keyed .so under the temp dir (override with
-``PDF_PARSE_CTEXT_CACHE``), atomic-replace for concurrent executors, then
-imported via :class:`importlib.machinery.ExtensionFileLoader`.
+time. :func:`cbuild.build` compiles it once per machine (as for cinterp);
+it is then imported via :class:`importlib.machinery.ExtensionFileLoader`.
 
-When headers or a compiler are missing — or ``PDF_PARSE_DISABLE_COBJ=1``
-— ``AVAILABLE`` is False and pdfb keeps its pure-Python
-``parse_object`` (the reference implementation; equivalence asserted by
-tests/test_cobj.py)."""
+When headers or a compiler are missing ``AVAILABLE`` is False and pdfb
+keeps its pure-Python ``parse_object`` (the reference implementation;
+equivalence asserted by tests/test_cobj.py)."""
 
 from __future__ import annotations
 
-import hashlib
 import os
-import subprocess
 import sysconfig
-import tempfile
 from importlib.machinery import ExtensionFileLoader
 from importlib.util import module_from_spec, spec_from_loader
+
+from pdf_parse_new_spark.kernels import cbuild
 
 _SRC = os.path.join(os.path.dirname(__file__), "_cobj.c")
 _MODNAME = "_pdf_parse_cobj"
@@ -30,20 +26,10 @@ _mod = None
 AVAILABLE = False
 
 
-def _build():
-    with open(_SRC, "rb") as f:
-        src = f.read()
-    h = hashlib.sha1(src).hexdigest()[:16]
-    cache = os.environ.get("PDF_PARSE_CTEXT_CACHE", tempfile.gettempdir())
-    so = os.path.join(cache, f"pdf_parse_cobj_{h}.so")
-    if not os.path.exists(so):
-        inc = sysconfig.get_paths()["include"]
-        tmp = f"{so}.tmp.{os.getpid()}"
-        subprocess.run(
-            ["cc", "-O2", "-shared", "-fPIC", f"-I{inc}", "-o", tmp, _SRC],
-            check=True, capture_output=True, timeout=120,
-        )
-        os.replace(tmp, so)
+def _load():
+    so = cbuild.build(
+        _SRC, "cobj", (f"-I{sysconfig.get_paths()['include']}",)
+    )
     loader = ExtensionFileLoader(_MODNAME, so)
     spec = spec_from_loader(_MODNAME, loader)
     mod = module_from_spec(spec)
@@ -51,12 +37,11 @@ def _build():
     return mod
 
 
-if os.environ.get("PDF_PARSE_DISABLE_COBJ", "") != "1":
-    try:
-        _mod = _build()
-        AVAILABLE = True
-    except Exception:
-        AVAILABLE = False
+try:
+    _mod = _load()
+    AVAILABLE = True
+except Exception:
+    AVAILABLE = False
 
 
 # bind the raw C function (no Python-frame wrapper in the hot path)

@@ -631,7 +631,9 @@ class Document:
         total_rows = sum(
             int(index[s + 1]) for s in range(0, len(index) - 1, 2)
         )
-        if len(w) == 3 and rw and all(0 <= x <= 8 for x in w) \
+        # widths <= 7: a width-8 field with its top bit set overflows the
+        # int64 matmul below, so such rows take the exact per-row loop
+        if len(w) == 3 and rw and all(0 <= x <= 7 for x in w) \
                 and total_rows >= 64:
             # numpy fast path (the classic-table twin): decode every
             # W-packed row in one vectorized pass — the per-row

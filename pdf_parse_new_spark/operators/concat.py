@@ -9,15 +9,17 @@ Semantics (reference lib/pdf-parse.js):
   reports the kept count while ``n_turns`` reports the full count (:98-99,
   :138). ``n_errors`` counts error rows among the *kept* turns.
 
-Scale design: everything is ONE aggregation pass — the max-turns clamp and
-the error count are conditional expressions inside the aggregate, so the
-extraction kernel upstream runs exactly once and no window/join re-shuffles
-appear (verified by tests/test_plans.py). The salted variant adds a second
-level: partial ordered concat per (conv_id, turn_idx // block) — map-side
-combinable, bounded state per group — then a final concat of ordered
-partials; "\\n\\n"-join is associative, so partial+final equals the direct
-fold (the exact shape of the reference's child/parent partial joins,
-lib/pdf-child.js:104 + pdf-parse-processes.js:108).
+Scale design: a partial ordered concat per (conv_id, turn_idx // block) —
+map-side combinable, bounded state per group — then a final concat of the
+ordered partials per conv_id. "\\n\\n"-join is associative, so
+partial+final equals the direct fold (the exact shape of the reference's
+child/parent partial joins, lib/pdf-child.js:104 +
+pdf-parse-processes.js:108). The max-turns clamp and the error count are
+conditional expressions inside the aggregates, so the extraction kernel
+upstream runs exactly once and no window/join re-shuffles appear
+(verified by tests/test_plans.py). For pathological conversations an
+optional superblock level merges ``fanout`` consecutive partials between
+the two, so the final group never holds one piece per block.
 """
 
 from __future__ import annotations
@@ -28,15 +30,6 @@ from pyspark.sql import functions as F
 from pdf_parse_new_spark import spec
 
 _SEP = spec.PAGE_SEP
-
-
-def _sorted_structs(max_turns: int) -> Column:
-    s = F.array_sort(
-        F.collect_list(F.struct("turn_idx", "extracted_text", "error"))
-    )
-    if max_turns > 0:
-        s = F.filter(s, lambda t: t["turn_idx"] < max_turns)
-    return s
 
 
 def _info_key(max_turns: int) -> Column:
@@ -50,64 +43,16 @@ def _info_key(max_turns: int) -> Column:
     return F.when(cond, F.col("turn_idx"))
 
 
-def _join_texts(structs: Column) -> Column:
-    return F.array_join(
-        F.transform(structs, lambda t: t["extracted_text"]), _SEP
-    )
-
-
-def _err_count(structs: Column) -> Column:
-    return F.size(F.filter(structs, lambda t: t["error"].isNotNull()))
-
-
-def _finish(df: DataFrame, leading_separator: bool) -> DataFrame:
-    if leading_separator:
-        # sequential-mode parity: prepend only when something was extracted
-        df = df.withColumn(
-            "full_text",
-            F.when(
-                F.col("n_extracted") > 0, F.concat(F.lit(_SEP), F.col("full_text"))
-            ).otherwise(F.col("full_text")),
-        )
-    return df.select(
-        "conv_id",
-        F.col("n_turns").cast("int").alias("n_turns"),
-        F.col("n_extracted").cast("int").alias("n_extracted"),
-        "full_text",
-        F.col("n_errors").cast("long").alias("n_errors"),
-        F.create_map(
-            F.lit("families"), F.col("_families"),
-            F.lit("n_pages"), F.col("_pages").cast("string"),
-            F.lit("info"), F.coalesce(F.col("_info"), F.lit("")),
-        ).alias("meta"),  # ≙ the reference Result's info/metadata
-    )
-
-
-def concat_conversations(
-    extracted: DataFrame,
-    leading_separator: bool = False,
-    max_turns: int = 0,
-) -> DataFrame:
-    """One-level ordered concat: a single groupBy(conv_id) — one exchange."""
-    kept = _sorted_structs(max_turns)
-    out = extracted.groupBy("conv_id").agg(
-        F.count("*").alias("n_turns"),
-        F.size(kept).alias("n_extracted"),
-        _join_texts(kept).alias("full_text"),
-        _err_count(kept).alias("n_errors"),
-        F.array_join(F.array_sort(F.collect_set("family")), ",").alias("_families"),
-        F.sum("n_pages").alias("_pages"),
-        F.min_by("info", _info_key(max_turns)).alias("_info"),
-    )
-    return _finish(out, leading_separator)
-
-
 def _block_partials(
     extracted: DataFrame, block: int, max_turns: int
 ) -> DataFrame:
     """Level-1 partial ordered concat per (conv_id, turn_idx // block) —
     map-side combinable, bounded per-group state."""
-    kept = _sorted_structs(max_turns)
+    kept = F.array_sort(
+        F.collect_list(F.struct("turn_idx", "extracted_text", "error"))
+    )
+    if max_turns > 0:
+        kept = F.filter(kept, lambda t: t["turn_idx"] < max_turns)
     return (
         extracted.withColumn(
             "salt", (F.col("turn_idx") / F.lit(block)).cast("long")
@@ -116,8 +61,12 @@ def _block_partials(
         .agg(
             F.count("*").alias("pn_all"),
             F.size(kept).alias("pn_kept"),
-            _join_texts(kept).alias("ptext"),
-            _err_count(kept).alias("perr"),
+            F.array_join(
+                F.transform(kept, lambda t: t["extracted_text"]), _SEP
+            ).alias("ptext"),
+            F.size(F.filter(kept, lambda t: t["error"].isNotNull())).alias(
+                "perr"
+            ),
             F.collect_set("family").alias("pfams"),
             F.sum("n_pages").alias("ppages"),
             F.min_by("info", _info_key(max_turns)).alias("pinfo"),
@@ -151,18 +100,25 @@ def _merge_partials(
     )
 
 
-def _finalize_partials(merged: DataFrame, leading_separator: bool) -> DataFrame:
-    out = merged.select(
+def _finalize(merged: DataFrame, leading_separator: bool) -> DataFrame:
+    text = F.col("ptext")
+    if leading_separator:
+        # sequential-mode parity: prepend only when something was extracted
+        text = F.when(
+            F.col("pn_kept") > 0, F.concat(F.lit(_SEP), text)
+        ).otherwise(text)
+    return merged.select(
         "conv_id",
-        F.col("pn_all").alias("n_turns"),
-        F.col("pn_kept").alias("n_extracted"),
-        F.col("ptext").alias("full_text"),
-        F.col("perr").alias("n_errors"),
-        F.array_join(F.array_sort("pfams"), ",").alias("_families"),
-        F.col("ppages").alias("_pages"),
-        F.col("pinfo").alias("_info"),
+        F.col("pn_all").cast("int").alias("n_turns"),
+        F.col("pn_kept").cast("int").alias("n_extracted"),
+        text.alias("full_text"),
+        F.col("perr").cast("long").alias("n_errors"),
+        F.create_map(
+            F.lit("families"), F.array_join(F.array_sort("pfams"), ","),
+            F.lit("n_pages"), F.col("ppages").cast("string"),
+            F.lit("info"), F.coalesce(F.col("pinfo"), F.lit("")),
+        ).alias("meta"),  # ≙ the reference Result's info/metadata
     )
-    return _finish(out, leading_separator)
 
 
 def concat_conversations_salted(
@@ -170,35 +126,29 @@ def concat_conversations_salted(
     block: int = 1024,
     leading_separator: bool = False,
     max_turns: int = 0,
+    fanout: int = 0,
 ) -> DataFrame:
-    """Two-level skew-proof concat: partial per (conv_id, turn_idx // block)
+    """Skew-proof ordered concat: partial per (conv_id, turn_idx // block)
     then final per conv_id — two exchanges, each with bounded per-group
-    state, so a 10^6-turn conversation never lands on one reducer."""
+    state, so a 10^6-turn conversation never lands on one reducer.
+
+    ``fanout > 0`` adds a superblock level (``fanout`` consecutive blocks
+    per (conv_id, salt2) group) between the two: at 10^7 turns / 1024-block
+    the final group would otherwise collect ~10k text pieces; with it, it
+    sees ``ceil(n_blocks / fanout)`` rows (~153 at fanout 64), so reducer
+    state stays flat no matter how long one conversation grows
+    (``planner.tree_fanout`` decides when). Same output for every
+    block/fanout (ordered-merge associativity; asserted by tests)."""
     partial = _block_partials(extracted, block, max_turns)
-    merged = _merge_partials(partial, ["conv_id"], "salt")
-    return _finalize_partials(merged, leading_separator)
-
-
-def concat_conversations_tree(
-    extracted: DataFrame,
-    block: int = 1024,
-    fanout: int = 64,
-    leading_separator: bool = False,
-    max_turns: int = 0,
-) -> DataFrame:
-    """Three-level concat for PATHOLOGICAL conversations (>10^7 turns):
-    block partials -> superblocks of ``fanout`` blocks -> final. The
-    two-level variant's final reducer holds one partial per block — at
-    10^7 turns / 1024-block that is ~10k text pieces in one collect_list;
-    here the final group sees only ``ceil(n_blocks / fanout)`` superblock
-    rows (~153 at 10^7 turns), so reducer state stays flat no matter how
-    long one conversation grows. Same output as the other variants
-    (ordered-merge associativity; asserted by tests)."""
-    partial = _block_partials(extracted, block, max_turns).withColumn(
-        "salt2", (F.col("salt") / F.lit(fanout)).cast("long")
-    )
-    mid = _merge_partials(
-        partial, ["conv_id", "salt2"], "salt"
-    ).withColumnRenamed("salt2", "o2")
-    merged = _merge_partials(mid, ["conv_id"], "o2")
-    return _finalize_partials(merged, leading_separator)
+    order = "salt"
+    if fanout > 0:
+        partial = _merge_partials(
+            partial.withColumn(
+                "salt2", (F.col("salt") / F.lit(fanout)).cast("long")
+            ),
+            ["conv_id", "salt2"],
+            "salt",
+        ).withColumnRenamed("salt2", "o2")
+        order = "o2"
+    merged = _merge_partials(partial, ["conv_id"], order)
+    return _finalize(merged, leading_separator)

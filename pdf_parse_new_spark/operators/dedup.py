@@ -400,13 +400,19 @@ def simhash_buckets(df: DataFrame, text_col: str = "text",
     at sf0.1). Values are bit-identical to :func:`simhash` (LSB bit
     indexing, integer counts, disjoint power-of-two terms summed — which
     equals the bitwise OR, including the b=63 sign-bit term); pinned by
-    tests/test_r06_optimizations.py. Note: a NULL text yields no row here
-    (its token array is null), where the column expression produced a
-    null signature — identical on any corpus with non-null text."""
+    tests/test_r06_optimizations.py. A NULL text keeps its row with a
+    NULL ``simhash`` and ``bucket``, as the column expression gives: its
+    null token array explodes (outer) to one NULL token, whose hash stays
+    NULL (``xxhash64(NULL)`` is 42, so it is not hashed), so every bit
+    count sums to NULL."""
     toks = F.array_distinct(F.split(F.col(text_col), " "))
     h = df.select(
-        F.col(id_col), F.size(toks).alias("n"), F.explode(toks).alias("t")
-    ).select(id_col, "n", F.xxhash64("t").alias("h"))
+        F.col(id_col), F.size(toks).alias("n"),
+        F.explode_outer(toks).alias("t"),
+    ).select(
+        id_col, "n",
+        F.when(F.col("t").isNotNull(), F.xxhash64("t")).alias("h"),
+    )
     aggs = [
         F.sum(F.bit_get("h", F.lit(b)).cast("long")).alias(f"c{b}")
         for b in range(64)
@@ -418,6 +424,7 @@ def simhash_buckets(df: DataFrame, text_col: str = "text",
         sig = sig + F.when(
             2 * F.col(f"c{b}") >= F.col("n"), term
         ).otherwise(F.lit(0).cast("long"))
+    sig = F.when(F.col("c0").isNotNull(), sig)  # NULL text -> NULL
     return cnt.select(
         F.col(id_col),
         sig.alias("simhash"),

@@ -23,11 +23,10 @@ class Options:
     kernel: str | None = None          # pagerender / pagerenderModule analog
     max_turns: int = 0                 # max: <=0 -> all, clamped
     leading_separator: bool = False    # sequential (True) vs parallel join
-    salted: bool = True                # two-level skew-proof concat
-    salt_block: int = 1024
-    # >0: three-level tree concat (block -> fanout-sized superblocks ->
-    # final) for pathological conversations where even one-partial-per-
-    # block overwhelms the final reducer (see planner.TREE_FANOUT_AT)
+    salt_block: int = 1024             # turns per partial-concat group
+    # >0: superblock level (block -> fanout-sized superblocks -> final)
+    # for pathological conversations where even one-partial-per-block
+    # overwhelms the final reducer (see planner.tree_fanout)
     tree_fanout: int = 0
     partitions: int | None = None      # extraction-stage repartition
 
@@ -44,10 +43,10 @@ def extract_conversations_planned(
 ) -> DataFrame:
     """``extract_conversations`` behind the one-job planner probe: sizes
     Arrow batches / partitions / salt block from the corpus stats and
-    AUTO-UPGRADES to the three-level tree concat when the biggest
-    conversation spreads over more than ``planner.TREE_FANOUT_AT``
-    blocks (the point where even one-partial-per-block overwhelms the
-    final reducer's collect_list). Explicitly-set Options fields win."""
+    adds the superblock concat level when ``planner.tree_fanout`` asks
+    for it at the EFFECTIVE block size (an explicitly smaller
+    ``Options.salt_block`` lowers the upgrade point). Explicitly-set
+    Options fields win."""
     import dataclasses
 
     from pdf_parse_new_spark.plans import planner
@@ -59,15 +58,10 @@ def extract_conversations_planned(
         opt.partitions = plan.partitions
     if opt.salt_block == Options.salt_block:
         opt.salt_block = plan.salt_block
-    # re-evaluate the tree trigger against the EFFECTIVE block size (an
-    # explicitly smaller Options.salt_block lowers the upgrade point)
-    if (
-        opt.tree_fanout == 0
-        and opt.salt_block > 0
-        and plan.max_conv_turns // max(opt.salt_block, 1)
-        > planner.TREE_FANOUT_AT
-    ):
-        opt.tree_fanout = planner.TREE_FANOUT
+    if opt.tree_fanout == 0:
+        opt.tree_fanout = planner.tree_fanout(
+            plan.max_conv_turns, opt.salt_block
+        )
     return extract_conversations(df, opt)
 
 
@@ -75,24 +69,10 @@ def extract_conversations(
     df: DataFrame, options: Options | None = None
 ) -> DataFrame:
     opt = options or Options()
-    turns = extract_turns(df, opt)
-    if opt.tree_fanout > 0:
-        return concat.concat_conversations_tree(
-            turns,
-            block=opt.salt_block,
-            fanout=opt.tree_fanout,
-            leading_separator=opt.leading_separator,
-            max_turns=opt.max_turns,
-        )
-    if opt.salted:
-        return concat.concat_conversations_salted(
-            turns,
-            block=opt.salt_block,
-            leading_separator=opt.leading_separator,
-            max_turns=opt.max_turns,
-        )
-    return concat.concat_conversations(
-        turns,
+    return concat.concat_conversations_salted(
+        extract_turns(df, opt),
+        block=opt.salt_block,
         leading_separator=opt.leading_separator,
         max_turns=opt.max_turns,
+        fanout=opt.tree_fanout,
     )

@@ -13,8 +13,9 @@ the extraction UDF, so the planner sets the three knobs that matter there:
 
 The probe is one cheap aggregation (count / avg+p95 payload length / max
 group size) — the analog of the reference's max:1 probe parse
-(SmartPDFParser.js:323-339). Decisions are cached per (rows, cores) bucket
-the way the reference LRU-caches by (sizeMB, cpus) (:120-134).
+(SmartPDFParser.js:323-339). Plans are not cached: the reference's
+(sizeMB, cpus) decision cache (:120-134) exists to skip its probe, but a
+plan must follow its own corpus's stats, so every call re-probes.
 """
 
 from __future__ import annotations
@@ -52,13 +53,19 @@ class Plan:
     partitions: int
     salt_block: int
     arrow_batch: int
-    tree_fanout: int = 0  # >0: use concat_conversations_tree
+    tree_fanout: int = 0  # >0: concat adds the superblock level
 
     def asdict(self) -> dict:
         return asdict(self)
 
 
-_cache: dict[tuple, Plan] = {}
+def tree_fanout(max_conv_turns: int, block: int) -> int:
+    """Superblock fan-out for ``concat.concat_conversations_salted``:
+    ``TREE_FANOUT`` once the biggest conversation spans more than
+    ``TREE_FANOUT_AT`` block partials, else 0 (partial + final only)."""
+    if block > 0 and max_conv_turns // block > TREE_FANOUT_AT:
+        return TREE_FANOUT
+    return 0
 
 
 def probe(df: DataFrame) -> tuple[int, float, float, int]:
@@ -91,11 +98,6 @@ def make_plan(df: DataFrame, cores: int | None = None) -> Plan:
     spark = df.sparkSession
     cores = cores or spark.sparkContext.defaultParallelism
     n, avg_len, p95_len, biggest = probe(df)
-
-    key = (n // 10_000, cores)  # decision-cache bucket (size x cpus)
-    if key in _cache:
-        return _cache[key]
-
     for max_rows, mult, salt_block, arrow_batch in TIERS:
         if max_rows is None or n <= max_rows:
             break
@@ -105,7 +107,7 @@ def make_plan(df: DataFrame, cores: int | None = None) -> Plan:
     # a conversation longer than salt_block spreads over ceil(n/B) partials
     if biggest <= salt_block:
         salt_block = max(biggest, 1) if salt_block == 1 << 30 else salt_block
-    plan = Plan(
+    return Plan(
         n_rows=n,
         avg_len=round(avg_len, 1),
         p95_len=round(p95_len, 1),
@@ -114,14 +116,8 @@ def make_plan(df: DataFrame, cores: int | None = None) -> Plan:
         partitions=max(cores, min(cores * mult, max(1, n // 1000))),
         salt_block=salt_block,
         arrow_batch=arrow_batch,
-        tree_fanout=(
-            TREE_FANOUT
-            if salt_block > 0 and biggest // max(salt_block, 1) > TREE_FANOUT_AT
-            else 0
-        ),
+        tree_fanout=tree_fanout(biggest, salt_block),
     )
-    _cache[key] = plan
-    return plan
 
 
 def apply_plan(spark, plan: Plan) -> None:

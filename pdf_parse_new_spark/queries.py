@@ -54,12 +54,14 @@ FROM documents GROUP BY source
 
 def q_conv_concat_tree(spark, sf_dir):
     """J1 three-level tree concat (block partials -> superblocks ->
-    final; operators/concat.concat_conversations_tree) driven over the
-    documents table and oracle-checked against the SAME ordered
-    string_agg as conv_concat — the hash match doubles as an
-    associativity proof for the tree merge (any nesting of ordered
-    merges equals the direct fold). Tiny block/fanout values force all
-    three levels to do real work even at sf0.01."""
+    final: operators/concat.concat_conversations_salted with
+    ``fanout > 0``, the shape ``planner.tree_fanout`` picks for
+    pathological conversations) driven over the documents table and
+    oracle-checked against the SAME ordered string_agg as conv_concat —
+    the hash match doubles as an associativity proof for the superblock
+    merge (any nesting of ordered merges equals the direct fold). Tiny
+    block/fanout values force all three levels to do real work even at
+    sf0.01."""
     from pdf_parse_new_spark.operators import concat
 
     d = load(spark, sf_dir, "documents")
@@ -76,7 +78,7 @@ def q_conv_concat_tree(spark, sf_dir):
         F.lit(1).alias("n_pages"),
         F.lit(None).cast("string").alias("info"),
     )
-    out = concat.concat_conversations_tree(turns, block=8, fanout=4)
+    out = concat.concat_conversations_salted(turns, block=8, fanout=4)
     return out.select(
         F.col("conv_id").alias("source"),
         F.col("n_turns").cast("bigint").alias("n_docs"),
@@ -735,8 +737,10 @@ def q_extract_turns(spark, sf_dir):
 def q_extract_conversations(spark, sf_dir):
     """rows-only justification: extraction kernel + ordered concat over
     executor-generated payloads (no DuckDB twin for the kernel); the concat
-    semantics themselves ARE oracle-checked via conv_concat, and
-    salted==unsalted + golden-concat pytest cover this exact pipeline."""
+    semantics themselves ARE oracle-checked via conv_concat and
+    conv_concat_tree, and tests/test_pipeline.py checks every output field
+    of this exact pipeline against the per-turn oracle goldens for every
+    block/fanout shape."""
     from pdf_parse_new_spark import fixtures, pipeline
 
     df = fixtures.make_transcripts_df_dist(

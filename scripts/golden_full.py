@@ -57,7 +57,7 @@ def main() -> int:
             if mismatches <= 3:
                 print(f"MISMATCH {cid}:{t}", file=sys.stderr)
 
-    # conversation level, both join modes, salted vs unsalted
+    # conversation level, both join modes
     conv_ok = True
     for leading in (False, True):
         opts = pipeline.Options(leading_separator=leading, salt_block=256)

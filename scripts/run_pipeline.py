@@ -92,18 +92,11 @@ def main(argv: list[str] | None = None) -> int:
     }))
 
     if args.conversations and written is not None:
-        if plan.tree_fanout > 0:
-            convs = concat.concat_conversations_tree(
-                written, block=plan.salt_block, fanout=plan.tree_fanout,
-                leading_separator=args.leading_separator,
-                max_turns=args.max_turns,
-            )
-        else:
-            convs = concat.concat_conversations_salted(
-                written, block=plan.salt_block,
-                leading_separator=args.leading_separator,
-                max_turns=args.max_turns,
-            )
+        convs = concat.concat_conversations_salted(
+            written, block=plan.salt_block,
+            leading_separator=args.leading_separator,
+            max_turns=args.max_turns, fanout=plan.tree_fanout,
+        )
         convs.write.mode("overwrite").parquet(f"{args.output}/conversations")
         print(f"CONVERSATIONS written: {args.output}/conversations")
     return 0

@@ -90,17 +90,24 @@ def test_planner_probe_and_tiers(spark, smoke_df):
     # tree upgrade only fires when ONE conversation spans more block
     # partials than the final reducer should collect
     assert plan.tree_fanout == 0
-    base = dict(
-        n_rows=plan.n_rows, avg_len=plan.avg_len, p95_len=plan.p95_len,
-        cores=plan.cores, partitions=plan.partitions,
-        arrow_batch=plan.arrow_batch,
+    at = planner.TREE_FANOUT_AT
+    assert planner.tree_fanout(at * 1024, 1024) == 0
+    assert planner.tree_fanout((at + 1) * 1024, 1024) == planner.TREE_FANOUT
+    assert planner.tree_fanout(20_000_000, 1024) == planner.TREE_FANOUT
+    # a second corpus in the same 10,000-row bucket gets its OWN stats and
+    # decisions: one 1,000-turn conversation of 32,000-char turns
+    from pyspark.sql import functions as F
+
+    big = spark.range(1000).select(
+        F.lit("one").alias("conv_id"),
+        F.col("id").cast("int").alias("turn_idx"),
+        F.repeat(F.lit("x"), 32_000).alias("text"),
     )
-    assert planner.Plan(
-        **base, max_conv_turns=20_000_000, salt_block=1024, tree_fanout=(
-            planner.TREE_FANOUT
-            if 20_000_000 // 1024 > planner.TREE_FANOUT_AT else 0
-        ),
-    ).tree_fanout == planner.TREE_FANOUT
+    plan2 = planner.make_plan(big, cores=8)
+    assert plan2.n_rows == 1000
+    assert plan2.max_conv_turns == plan2.salt_block == 1000
+    # 64 MB Arrow-batch cap: 64e6 / 32,000 chars
+    assert plan2.arrow_batch == 2000
 
 
 def test_resume_across_engine_schema_versions(spark, tmp_path):

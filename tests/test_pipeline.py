@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import json
+
 import pandas as pd
 import pytest
 
@@ -21,41 +23,79 @@ def test_per_turn_byte_equality(spark, smoke_df, golden):
         assert [(s.start, s.end, s.kind) for s in r.spans] == ex.spans
 
 
+# (salt_block, tree_fanout): several blocks per conversation, then the
+# superblock level with every level merging several pieces
+SHAPES = [(16, 0), (4, 0), (3, 2)]
+
+
+def _golden(rows) -> dict:
+    """Per-turn oracle rows keyed (conv_id, turn_idx)."""
+    return {(r[0], r[1]): oracle.extract(r[3]) for r in rows}
+
+
 def _expected_convs(golden, leading=False, max_turns=0):
+    """Every concat output field per conversation, built from the per-turn
+    oracle rows: the reference join (oracle.concat_conversation), errors
+    among the kept turns, and the meta map — families and summed n_pages
+    over all turns, /Info of the first kept turn that carries one."""
     by_conv: dict[str, list] = {}
-    for (cid, t), ex in golden.items():
-        by_conv.setdefault(cid, []).append((t, ex.text))
+    for (cid, t), ex in sorted(golden.items()):
+        by_conv.setdefault(cid, []).append(ex)
     out = {}
     for cid, turns in by_conv.items():
-        texts = [x for _, x in sorted(turns)]
-        out[cid] = oracle.concat_conversation(texts, leading, max_turns)
+        text, n, k = oracle.concat_conversation(
+            [ex.text for ex in turns], leading, max_turns
+        )
+        kept = turns[:k]
+        info = next((ex.info for ex in kept if ex.info), None)
+        out[cid] = {
+            "full_text": text,
+            "n_turns": n,
+            "n_extracted": k,
+            "n_errors": sum(ex.error is not None for ex in kept),
+            "meta": {
+                "families": ",".join(sorted({ex.family for ex in turns})),
+                "n_pages": str(sum(ex.n_pages for ex in turns)),
+                "info": json.dumps(info, sort_keys=True) if info else "",
+            },
+        }
     return out
 
 
-@pytest.mark.parametrize("salted", [False, True])
-@pytest.mark.parametrize("leading", [False, True])
-def test_conversation_concat(spark, smoke_df, golden, salted, leading):
-    opts = pipeline.Options(leading_separator=leading, salted=salted, salt_block=16)
-    got = {r.conv_id: r for r in pipeline.extract_conversations(smoke_df, opts).collect()}
-    want = _expected_convs(golden, leading=leading)
+def _assert_convs(df, want):
+    got = {r.conv_id: r.asDict() for r in df.collect()}
     assert set(got) == set(want)
-    for cid, (text, n, k) in want.items():
-        assert got[cid].full_text == text, cid
-        assert got[cid].n_turns == n
-        assert got[cid].n_extracted == k
+    for cid, fields in want.items():
+        for name, value in fields.items():
+            assert got[cid][name] == value, (cid, name)
 
 
-@pytest.mark.parametrize("salted", [False, True])
-def test_max_turns_limit(spark, smoke_df, golden, salted):
+@pytest.mark.parametrize("salt_block, tree_fanout", SHAPES)
+@pytest.mark.parametrize("leading", [False, True])
+def test_conversation_concat(
+    spark, smoke_df, golden, leading, salt_block, tree_fanout
+):
+    opts = pipeline.Options(
+        leading_separator=leading, salt_block=salt_block,
+        tree_fanout=tree_fanout,
+    )
+    _assert_convs(
+        pipeline.extract_conversations(smoke_df, opts),
+        _expected_convs(golden, leading=leading),
+    )
+
+
+@pytest.mark.parametrize("salt_block, tree_fanout", SHAPES)
+def test_max_turns_limit(spark, smoke_df, golden, salt_block, tree_fanout):
     # case 5 of the reference suite: max = N-1 -> last-turn text absent,
     # n_extracted = N-1, n_turns = N (test/01-valid-default.js:86-114)
-    opts = pipeline.Options(max_turns=5, salted=salted, salt_block=4)
-    got = {r.conv_id: r for r in pipeline.extract_conversations(smoke_df, opts).collect()}
+    opts = pipeline.Options(
+        max_turns=5, salt_block=salt_block, tree_fanout=tree_fanout
+    )
     want = _expected_convs(golden, max_turns=5)
-    for cid, (text, n, k) in want.items():
-        assert got[cid].full_text == text
-        assert got[cid].n_turns == n
-        assert got[cid].n_extracted == k == min(5, n)
+    for w in want.values():
+        assert w["n_extracted"] == min(5, w["n_turns"])
+    _assert_convs(pipeline.extract_conversations(smoke_df, opts), want)
 
 
 def test_max_turns_negative_means_all(spark, smoke_df, golden):
@@ -171,37 +211,37 @@ def test_payload_size_guard(spark, smoke_df):
     )
 
 
-def test_salted_equals_unsalted(spark, smoke_df):
-    a = concat.concat_conversations(extract.extract_turns(smoke_df))
-    b = concat.concat_conversations_salted(extract.extract_turns(smoke_df), block=7)
-    pa = {r.conv_id: r for r in a.collect()}
-    pb = {r.conv_id: r for r in b.collect()}
-    assert set(pa) == set(pb)
-    for cid in pa:
-        assert pa[cid].full_text == pb[cid].full_text
-        assert pa[cid].n_turns == pb[cid].n_turns
-        assert pa[cid].n_extracted == pb[cid].n_extracted
-        assert pa[cid].n_errors == pb[cid].n_errors
-        assert pa[cid].meta == pb[cid].meta  # families + n_pages map
+def _rows(df) -> dict:
+    return {r.conv_id: r.asDict() for r in df.collect()}
 
 
-def test_tree_equals_salted_equals_plain(spark, smoke_df):
-    """Three-level tree concat (block -> superblock -> final) must equal
-    the one- and two-level plans exactly — tiny block/fanout so every
-    level actually merges multiple pieces, plus a max_turns clamp."""
+def test_salted_equals_unsalted(spark, smoke_df, golden):
+    """Block 7 splits conversations into several salted blocks; a block
+    larger than any conversation leaves one block each (the unsalted
+    shape). Both must give every field the oracle gives."""
+    ex = extract.extract_turns(smoke_df)
+    want = _expected_convs(golden)
+    salted = concat.concat_conversations_salted(ex, block=7)
+    unsalted = concat.concat_conversations_salted(ex, block=1 << 30)
+    assert _rows(salted) == _rows(unsalted)
+    _assert_convs(salted, want)
+
+
+def test_tree_equals_salted_equals_plain(spark, smoke_df, golden):
+    """Superblock tree (block 3, fanout 2), two-level salted (block 7) and
+    one block per conversation must all agree with the oracle, with and
+    without a max_turns clamp that cuts inside a block."""
     ex = extract.extract_turns(smoke_df)
     for max_turns in (0, 3):
-        a = {r.conv_id: r for r in concat.concat_conversations(
-            ex, max_turns=max_turns).collect()}
-        t = {r.conv_id: r for r in concat.concat_conversations_tree(
-            ex, block=3, fanout=2, max_turns=max_turns).collect()}
-        assert set(a) == set(t)
-        for cid in a:
-            assert a[cid].full_text == t[cid].full_text, (max_turns, cid)
-            assert a[cid].n_turns == t[cid].n_turns
-            assert a[cid].n_extracted == t[cid].n_extracted
-            assert a[cid].n_errors == t[cid].n_errors
-            assert a[cid].meta == t[cid].meta
+        want = _expected_convs(golden, max_turns=max_turns)
+        tree, salted, plain = (
+            concat.concat_conversations_salted(
+                ex, block=block, fanout=fanout, max_turns=max_turns
+            )
+            for block, fanout in ((3, 2), (7, 0), (1 << 30, 0))
+        )
+        assert _rows(tree) == _rows(salted) == _rows(plain), max_turns
+        _assert_convs(tree, want)
 
 
 def test_tree_concat_leading_separator_and_sparse_idx(spark):
@@ -213,40 +253,28 @@ def test_tree_concat_leading_separator_and_sparse_idx(spark):
         rows, "conv_id string, turn_idx int, role string, text string, "
               "tool string, ts timestamp",
     )
-    ex = extract.extract_turns(df)
-    a = concat.concat_conversations(ex, leading_separator=True).collect()[0]
-    t = concat.concat_conversations_tree(
-        ex, block=2, fanout=3, leading_separator=True
-    ).collect()[0]
-    assert a.full_text == t.full_text and a.full_text.startswith("\n\n")
-    assert a.n_turns == t.n_turns == 20
+    want = _expected_convs(_golden(rows), leading=True)
+    assert want["c"]["full_text"].startswith("\n\n")
+    assert want["c"]["n_turns"] == 20
+    _assert_convs(
+        concat.concat_conversations_salted(
+            extract.extract_turns(df), block=2, fanout=3,
+            leading_separator=True,
+        ),
+        want,
+    )
 
 
 def test_conversation_meta_info(spark):
     # P2: the concat meta map carries the first non-null per-turn /Info
-    # (reference Result.info); identical in salted and unsalted plans
-    from pdf_parse_new_spark import fixtures, pipeline
-
-    df = fixtures.make_transcripts_df(
-        spark, n_convs=12, median_turns=8, skew_convs=1, skew_turns=40
-    )
-    plain = {
-        r.conv_id: r.meta
-        for r in pipeline.extract_conversations(
-            df, pipeline.Options(salted=False)
-        ).collect()
-    }
-    salted = {
-        r.conv_id: r.meta
-        for r in pipeline.extract_conversations(
-            df, pipeline.Options(salt_block=16)
-        ).collect()
-    }
-    assert plain == salted
-    assert "info" in next(iter(plain.values()))
-    infos = [m["info"] for m in plain.values() if m["info"]]
+    # (reference Result.info) in every block/fanout shape
+    shape = dict(n_convs=12, median_turns=8, skew_convs=1, skew_turns=40)
+    df = fixtures.make_transcripts_df(spark, **shape)
+    want = _expected_convs(_golden(fixtures.transcript_rows(**shape)))
+    infos = [w["meta"]["info"] for w in want.values() if w["meta"]["info"]]
     assert infos, "corpus must contain PDFs with /Info"
-    import json
-
     for i in infos:
         assert json.loads(i)["producer"] == "pdf-parse-new-spark"
+    for salt_block, tree_fanout in SHAPES:
+        opts = pipeline.Options(salt_block=salt_block, tree_fanout=tree_fanout)
+        _assert_convs(pipeline.extract_conversations(df, opts), want)

@@ -156,6 +156,14 @@ def test_simhash_buckets_matches_column_expression(spark):
     from pdf_parse_new_spark.operators import dedup
 
     d = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    # NULL-text rows (fresh ids) keep their row, with a NULL signature
+    # and bucket
+    nulls = (
+        d.limit(3)
+        .withColumn("doc_id", F.col("doc_id") + 10**9)
+        .withColumn("text", F.lit(None).cast("string"))
+    )
+    d = d.unionByName(nulls)
     sh = dedup.simhash(F.col("text"))
     old = d.select(
         F.col("doc_id"), sh.alias("simhash"),
@@ -164,11 +172,16 @@ def test_simhash_buckets_matches_column_expression(spark):
     new = dedup.simhash_buckets(d)
     assert old.exceptAll(new).count() == 0
     assert new.exceptAll(old).count() == 0
+    assert new.filter("simhash IS NULL AND bucket IS NULL").count() == 3
 
 
-def _build_xref_stream_pdf(n_pages: int) -> bytes:
-    """Binary doc whose xref lives in a /Type /XRef stream (W [1 4 2]),
-    with enough rows to engage the vectorized decode path."""
+def _build_xref_stream_pdf(
+    n_pages: int, w: tuple[int, int, int] = (1, 4, 2), extra: tuple = ()
+) -> bytes:
+    """Binary doc whose xref lives in a /Type /XRef stream with field
+    widths ``w``, with enough rows to engage the vectorized decode path.
+    ``extra`` appends raw ``(type, field2, field3)`` rows for object
+    numbers past the last real object (never referenced)."""
     import zlib as z
 
     bodies = {
@@ -196,15 +209,20 @@ def _build_xref_stream_pdf(n_pages: int) -> bytes:
         out += b"%d 0 obj\n" % num + bodies[num] + b"\nendobj\n"
     xref_num = nxt
     xref_off = len(out)
-    rows = [bytes([0]) + (0).to_bytes(4, "big") + (0xFFFF).to_bytes(2, "big")]
+
+    def row(*fields):
+        return b"".join(f.to_bytes(n, "big") for f, n in zip(fields, w))
+
+    rows = [row(0, 0, 0xFFFF)]
     for num in range(1, xref_num):
-        rows.append(bytes([1]) + offsets[num].to_bytes(4, "big") + b"\x00\x00")
-    rows.append(bytes([1]) + xref_off.to_bytes(4, "big") + b"\x00\x00")
+        rows.append(row(1, offsets[num], 0))
+    rows.append(row(1, xref_off, 0))
+    rows += [row(*e) for e in extra]
     comp = z.compress(b"".join(rows))
     out += (
-        b"%d 0 obj\n<< /Type /XRef /W [1 4 2] /Size %d /Root 1 0 R "
+        b"%d 0 obj\n<< /Type /XRef /W [%d %d %d] /Size %d /Root 1 0 R "
         b"/Filter /FlateDecode /Length %d >>\nstream\n%s\nendstream\nendobj\n"
-        % (xref_num, xref_num + 1, len(comp), comp)
+        % (xref_num, *w, len(rows), len(comp), comp)
     )
     out += b"startxref\n%d\n%%%%EOF" % xref_off
     return bytes(out)
@@ -213,21 +231,32 @@ def _build_xref_stream_pdf(n_pages: int) -> bytes:
 def test_xref_stream_numpy_matches_row_loop():
     # the index decoded by the vectorized path must equal the reference
     # per-row int.from_bytes loop computed independently here, and the
-    # document must parse end-to-end through it
-    raw = _build_xref_stream_pdf(64)  # 130 objects >= the 64-row gate
-    fast = pdfb.Document(raw)
-    assert len(fast.index) >= 128
-
+    # document must parse end-to-end through it; the second input has a
+    # width-8 field with its top bit set (2**63 + 1 does not fit int64)
     import zlib as z
 
-    start = raw.rindex(b"stream\n", 0, raw.rindex(b"endstream")) + 7
-    data = z.decompress(raw[start:raw.rindex(b"\nendstream")])
-    expect = {}
-    for k in range(len(data) // 7):
-        typ = data[7 * k]
-        f2 = int.from_bytes(data[7 * k + 1:7 * k + 5], "big")
-        if typ == 1:
-            expect[k] = ("n", f2)  # free entries drop from Document.index
-    assert fast.index == expect
-    r = pdfb.parse_pdf_bytes(raw)
-    assert r["n_pages"] == 64 and "pg 63" in r["text"]
+    for w, extra in (
+        ((1, 4, 2), ()),
+        ((1, 8, 2), ((1, 0x8000000000000001, 0), (2, 0xFF << 56, 3))),
+    ):
+        raw = _build_xref_stream_pdf(64, w, extra)  # >= the 64-row gate
+        fast = pdfb.Document(raw)
+        assert len(fast.index) >= 128
+
+        start = raw.rindex(b"stream\n", 0, raw.rindex(b"endstream")) + 7
+        data = z.decompress(raw[start:raw.rindex(b"\nendstream")])
+        rw = sum(w)
+        expect = {}
+        for k in range(len(data) // rw):
+            p = rw * k
+            typ = data[p]
+            f2 = int.from_bytes(data[p + w[0]:p + w[0] + w[1]], "big")
+            f3 = int.from_bytes(data[p + w[0] + w[1]:p + rw], "big")
+            # free entries drop from Document.index
+            if typ == 1:
+                expect[k] = ("n", f2)
+            elif typ == 2:
+                expect[k] = ("c", f2, f3)
+        assert fast.index == expect, w
+        r = pdfb.parse_pdf_bytes(raw)
+        assert r["n_pages"] == 64 and "pg 63" in r["text"]
