@@ -6789,7 +6789,10 @@ def parse_pdf_bytes(
                 total = _walk_pages_range(
                     doc, root.get("Pages"), lo, hi, sl, set(), None
                 )
-                if total > 0 and len(sl) == max(0, min(hi, total) - lo):
+                # only a wholly found range: a root /Count that
+                # understates the pages would have the walk skip real
+                # ones past it (a range past the end takes the full walk)
+                if total > 0 and hi > lo and len(sl) == hi - lo:
                     sel = sl
                     first_page = lo
                     n_pages_total = total

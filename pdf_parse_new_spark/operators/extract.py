@@ -15,11 +15,13 @@ enforces for its worker processes.
 from __future__ import annotations
 
 import importlib
+import itertools
 import json
 import os
 import re
 import time
 from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -148,6 +150,7 @@ PDF_DOC_SCHEMA = (
     "info string, error string, "
     "page_spans array<struct<page:int,start:int,end:int>>"
 )
+_PDF_COLUMNS = [c.split()[0] for c in PDF_DOC_SCHEMA.split(", ")]
 
 # any surrogate code point: a ToUnicode map can emit D800-DFFF code units
 # that pdf.js's JS strings carry but UTF-8 (Arrow, Parquet) cannot
@@ -172,9 +175,10 @@ def _pdf_row(r: dict | None, error: str | None = None) -> tuple:
     )
 
 
-def _pdf_record_batch(ids: list, rows: list[tuple]):
+def _pdf_record_batch(ids: list, rows: list[tuple], units: list | None = None):
     """``PDF_DOC_SCHEMA`` Arrow batch of ``doc_id``s and their
-    :func:`_pdf_row` rows."""
+    :func:`_pdf_row` rows; with ``units``, the ``(chunk_idx, n_units)`` of
+    each row follow ``doc_id`` (``_UNIT_SCHEMA``)."""
     import pyarrow as pa
 
     span_t = pa.list_(
@@ -185,12 +189,50 @@ def _pdf_record_batch(ids: list, rows: list[tuple]):
     types = (pa.string(), pa.int32(), pa.int32(), pa.string(), pa.string(),
              span_t)
     cols = list(zip(*rows)) or [()] * len(types)
+    arrays = [pa.array(ids, pa.string())]
+    names = _PDF_COLUMNS[:1]
+    if units is not None:
+        idx, n = zip(*units) if units else ((), ())
+        arrays += [pa.array(idx, pa.int32()), pa.array(n, pa.int32())]
+        names += ["chunk_idx", "n_units"]
     return pa.RecordBatch.from_arrays(
-        [pa.array(ids, pa.string())]
-        + [pa.array(c, t) for c, t in zip(cols, types)],
-        names=["doc_id", "text", "n_pages", "n_render", "info", "error",
-               "page_spans"],
+        arrays + [pa.array(c, t) for c, t in zip(cols, types)],
+        names=names + _PDF_COLUMNS[1:],
     )
+
+
+def _parse_unit(
+    read: Callable[[object], bytes],
+    key,
+    max_pages: int,
+    page_range: tuple[int, int] | None = None,
+    max_payload_bytes: int | None = 512 << 20,
+) -> tuple:
+    """:func:`_pdf_row` of one work unit: the bytes ``read(key)`` returns,
+    parsed whole or, with ``page_range``, over that range only. A read
+    error becomes an ``io:<ExceptionName>`` row, and a whole document over
+    ``max_payload_bytes`` a ``payload-too-large`` row — the guard
+    philosophy of extract_turns: one pathological input is an error row,
+    never a task failure or an executor OOM (default 512 MB, far above any
+    sane PDF)."""
+    from pdf_parse_new_spark.kernels import pdfb
+
+    try:
+        raw = read(key)
+    except Exception as e:  # noqa: BLE001 — error row, not task
+        return _pdf_row(None, f"io:{type(e).__name__}")
+    if page_range is None and max_payload_bytes is not None \
+            and len(raw) > max_payload_bytes:
+        return _pdf_row(None, "payload-too-large")
+    return _pdf_row(
+        pdfb.parse_pdf_bytes(raw, max_pages=max_pages, page_range=page_range)
+    )
+
+
+def _scalar_bytes(v) -> bytes:
+    """The bytes of one Arrow binary scalar; a NULL payload parses as
+    empty bytes and becomes an error row."""
+    return v.as_py() if v.is_valid else b""
 
 
 def extract_pdf_documents(
@@ -214,8 +256,6 @@ def extract_pdf_documents(
     straight off the Arrow buffers); at 100 TB the parallelism comes from
     the file-source split, with ``partitions`` as an explicit rebalance
     knob for skewed file sizes."""
-    from pdf_parse_new_spark.kernels import pdfb
-
     cols = df.select(
         F.col(id_col).cast("string").alias("doc_id"),
         F.col(payload_col).alias("payload"),
@@ -225,22 +265,12 @@ def extract_pdf_documents(
 
     def run(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
         for batch in batches:
-            ids = batch.column(0).to_pylist()
             payloads = batch.column(1)
-            rows = []
-            for i in range(len(ids)):
-                v = payloads[i]
-                raw = v.as_py() if v.is_valid else b""
-                if max_payload_bytes is not None and len(raw) > max_payload_bytes:
-                    # same guard philosophy as extract_turns: one
-                    # pathological input becomes an error row, never an
-                    # executor OOM (default 512 MB, far above any sane PDF)
-                    rows.append(_pdf_row(None, "payload-too-large"))
-                    continue
-                rows.append(
-                    _pdf_row(pdfb.parse_pdf_bytes(raw, max_pages=max_pages))
-                )
-            yield _pdf_record_batch(ids, rows)
+            yield _pdf_record_batch(batch.column(0).to_pylist(), [
+                _parse_unit(_scalar_bytes, payloads[i], max_pages,
+                            max_payload_bytes=max_payload_bytes)
+                for i in range(len(payloads))
+            ])
 
     return cols.mapInArrow(run, PDF_DOC_SCHEMA)
 
@@ -266,8 +296,6 @@ def extract_pdf_files(
     ``id_col`` defaults to the path itself. Dedupe of repeated paths is
     deliberate non-behavior: each row parses independently (replicated
     benchmark corpora rely on it)."""
-    from pdf_parse_new_spark.kernels import pdfb
-
     cols = df.select(
         F.col(id_col if id_col else path_col).cast("string").alias("doc_id"),
         F.col(path_col).cast("string").alias("path"),
@@ -277,27 +305,12 @@ def extract_pdf_files(
 
     def run(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
         fetch = _make_fetcher()
-
         for batch in batches:
-            ids = batch.column(0).to_pylist()
-            paths = batch.column(1).to_pylist()
-            rows = []
-            for i in range(len(ids)):
-                err = None
-                try:
-                    raw = fetch(paths[i]) if paths[i] is not None else b""
-                except Exception as e:  # noqa: BLE001 — error row, not task
-                    raw, err = b"", f"io:{type(e).__name__}"
-                if err is None and max_payload_bytes is not None \
-                        and len(raw) > max_payload_bytes:
-                    err = "payload-too-large"
-                if err is not None:
-                    rows.append(_pdf_row(None, err))
-                    continue
-                rows.append(
-                    _pdf_row(pdfb.parse_pdf_bytes(raw, max_pages=max_pages))
-                )
-            yield _pdf_record_batch(ids, rows)
+            yield _pdf_record_batch(batch.column(0).to_pylist(), [
+                _parse_unit(fetch, p, max_pages,
+                            max_payload_bytes=max_payload_bytes)
+                for p in batch.column(1).to_pylist()
+            ])
 
     return cols.mapInArrow(run, PDF_DOC_SCHEMA)
 
@@ -338,17 +351,6 @@ def _broadcast_cached(sc, payloads: dict):
     return bc
 
 
-_CHUNK_SCHEMA = (
-    "doc_id string, chunk_idx int, text string, n_pages int, n_render int, "
-    "info string, error string, "
-    "page_spans array<struct<page:int,start:int,end:int>>"
-)
-_CHUNK_COLUMNS = [
-    "doc_id", "chunk_idx", "text", "n_pages", "n_render", "info", "error",
-    "page_spans",
-]
-
-
 # payload bytes per driver collect: the broadcast budget (2 GiB by default)
 # can exceed what one Arrow binary column addresses (int32 offsets)
 _COLLECT_GROUP_BYTES = 1 << 30
@@ -378,15 +380,14 @@ def _collect_payloads(
 
 
 def _probe_pages(raw: bytes, max_pages: int) -> tuple[int, str | None]:
-    """``(n_render, error)`` of one document from a structure-only probe:
-    ``page_range=(0, 0)`` walks xref and page tree and renders nothing —
-    the reference parent process also opens the document once for
-    numpages."""
+    """``(n_pages, error)`` of one document from a structure-only probe:
+    ``page_range=(0, 0)`` walks xref and the whole page tree and renders
+    nothing — the reference parent process also opens the document once
+    for numpages."""
     from pdf_parse_new_spark.kernels import pdfb
 
     r = pdfb.parse_pdf_bytes(raw, max_pages=max_pages, page_range=(0, 0))
-    n = r["n_pages"] if max_pages <= 0 else min(max_pages, r["n_pages"])
-    return n, r["error"]
+    return r["n_pages"], r["error"]
 
 
 def _unique_big_ids(big: list[tuple[str | None, int]]) -> list[str]:
@@ -405,83 +406,191 @@ def _unique_big_ids(big: list[tuple[str | None, int]]) -> list[str]:
     ]
 
 
-def _fan_out_chunks(
-    small: DataFrame,
-    big_rows: DataFrame,
-    plain: Callable[[DataFrame], DataFrame],
-    plans: list[tuple[str, object, int, str | None]],
-    reader: Callable[[], Callable[[object], bytes]],
+class _Unit(NamedTuple):
+    """One unit of parse work: a whole document (``page_range`` None,
+    ``n_units`` 1) or one page range of a chunked document. ``key`` is what
+    the operator's task-side read takes (a path, or a broadcast payload's
+    id); ``cost`` is the estimated parse cost (file bytes times the range's
+    share of pages); ``n_pages`` is a chunked document's probed page
+    count."""
+
+    doc_id: str | None
+    key: object
+    cost: float
+    idx: int = 0
+    n_units: int = 1
+    page_range: tuple[int, int] | None = None
+    n_pages: int | None = None
+
+
+# a parse task's unit rows, before the merge: ``chunk_idx``/``n_units``
+# place a range row in its document, and a row with ``n_units`` 1 is final
+_UNIT_SCHEMA = (
+    "doc_id string, chunk_idx int, n_units int, "
+    + PDF_DOC_SCHEMA.removeprefix("doc_id string, ")
+)
+# unit rows per Arrow batch a parse task yields: a bucket can hold
+# thousands of whole documents, so its text streams out in slices
+_UNITS_PER_BATCH = 64
+
+
+def _chunk_ranges(
+    plans: list[tuple[str, object, int, int, str | None]],
     pages_per_chunk: int,
+    max_pages: int,
+) -> list[_Unit]:
+    """The page-range units of ``plans``, the ``(doc_id, key, size,
+    n_pages, error)`` structure probes of big documents whose ids are
+    unique: fixed ranges ``{start, end, index}`` over the first ``n_render``
+    pages (lib/pdf-parse-processes.js:92-99), none for a probe error or
+    zero pages. Every range carries the probe's full-walk ``n_pages``: a
+    range parse can take a lying root ``/Count`` for it."""
+    out = []
+    for doc_id, key, size, n_pages, err in plans:
+        n_render = n_pages if max_pages <= 0 else min(max_pages, n_pages)
+        if err is not None or n_render <= 0:
+            continue
+        starts = range(0, n_render, pages_per_chunk)
+        for idx, start in enumerate(starts):
+            end = min(start + pages_per_chunk, n_render)
+            out.append(_Unit(doc_id, key, size * (end - start) / n_render,
+                             idx, len(starts), (start, end), n_pages))
+    return out
+
+
+def _pack_units(units: list[_Unit], slots: int) -> list[list[_Unit]]:
+    """``units`` in parse buckets, one task each: longest first (by
+    ``cost``) into the least-loaded bucket, and a range only into a bucket
+    that holds fewer than 2 ranges. There are ``max(slots, ceil(ranges /
+    2))`` buckets, at most one per unit: the floor keeps one document's
+    ranges spread however few task slots exist at plan time. Ties go to
+    the bucket with fewer units, then the lower index, so the packing is
+    deterministic and zero-cost units spread too."""
+    import heapq
+
+    n_ranges = sum(u.page_range is not None for u in units)
+    n = min(len(units), max(slots, -(-n_ranges // 2)))
+    buckets: list[list[_Unit]] = [[] for _ in range(n)]
+    held = [0] * n  # ranges per bucket
+    heap = [(0.0, 0, b) for b in range(n)]  # (load, units, bucket)
+    # sorted() is stable: input order breaks cost ties
+    for u in sorted(units, key=lambda u: -u.cost):
+        skipped = []
+        while u.page_range is not None and held[heap[0][2]] >= 2:
+            skipped.append(heapq.heappop(heap))
+        load, count, b = heapq.heappop(heap)
+        buckets[b].append(u)
+        held[b] += u.page_range is not None
+        heapq.heappush(heap, (load + u.cost, count + 1, b))
+        for entry in skipped:
+            heapq.heappush(heap, entry)
+    return buckets
+
+
+def _merge_units(batches: "Iterator[pa.RecordBatch]"):
+    """The merge stage behind the ``doc_id`` exchange: rows of single-unit
+    documents pass straight through as zero-copy slices, and the range
+    rows of a chunked document go through :func:`_reassemble_arrow` as
+    soon as all ``n_units`` of them have arrived. Only the range rows of
+    unfinished documents are held, as copies that do not pin their
+    batch."""
+    import numpy as np
+    import pyarrow as pa
+
+    pending: dict[str, list] = {}
+    for batch in batches:
+        start = 0
+        for i in np.flatnonzero(batch.column("n_units").to_numpy() != 1):
+            if i > start:
+                yield batch.slice(start, i - start).select(_PDF_COLUMNS)
+            start = i + 1
+            row = batch.take(pa.array([i]))
+            doc_id, n_units = row.column("doc_id")[0].as_py(), \
+                row.column("n_units")[0].as_py()
+            parts = pending.setdefault(doc_id, [])
+            parts.append(row)
+            if len(parts) == n_units:
+                del pending[doc_id]
+                yield _reassemble_arrow(parts)
+        if start < batch.num_rows:
+            yield batch.slice(start).select(_PDF_COLUMNS)
+
+
+def _fan_out_chunks(
+    spark,
+    ranges: list[_Unit],
+    held: list[tuple[str | None, object, int, bool]],
+    rest: DataFrame | None,
+    rest_big,
+    readers: Callable[[], tuple[Callable, Callable]],
     max_pages: int,
 ) -> DataFrame:
     """The reference's process strategy, shared by both chunked operators:
-    fixed page ranges ``{start, end, index}`` of each big document go to
-    tasks that extract only their range (lib/pdf-parse-processes.js:92-99,
-    lib/pdf-child.js:83-97), and the ranges reassemble into one row per
-    document.
+    the page ranges of big documents parse in separate tasks
+    (lib/pdf-parse-processes.js:92-99, lib/pdf-child.js:83-97) and
+    reassemble into one row per document, in ONE parse stage and ONE merge
+    stage.
 
-    ``small`` and ``big_rows`` hold the input rows under and over the
-    operator's size bar, as ``doc_id`` plus what ``plain`` (the operator's
-    per-document path) reads. ``plans`` are ``(doc_id, key, n_render,
-    error)`` of the probed big documents whose ids are unique, and
-    ``reader()`` builds, once per task, the ``key -> bytes`` read. Only the
-    ``big_rows`` row of a chunked id leaves the plain path; every other
-    row — small, replicated or NULL id, unprobed, probe error, zero pages —
-    takes ``plain``, so the output is row-identical to
-    ``plain(small.unionByName(big_rows))``."""
-    from pdf_parse_new_spark.kernels import pdfb
+    Units the driver holds — ``ranges`` (from :func:`_chunk_ranges`) and
+    one whole-document unit per ``held`` row ``(doc_id, key, size, big)``
+    — are packed by :func:`_pack_units` into buckets that
+    ``spark.range`` rows index. ``rest`` (``doc_id`` plus the operator's
+    per-document column, or None) holds the rows the driver does not; they
+    join the same ``mapInArrow`` through a union, and ``readers()`` builds,
+    once per task, the reads of a held key and of a ``rest`` value. The
+    only row that leaves the whole-document path is the one big row of a
+    chunked id (``big``, or ``rest_big`` for ``rest``): a chunked id is
+    unique among big rows, so every other row — small, replicated or NULL
+    id, unprobed, probe error, zero pages — parses whole, and the output
+    is row-identical to the operator's per-document path.
 
-    ranges = [
-        (doc_id, key, idx, start, min(start + pages_per_chunk, n_render))
-        for doc_id, key, n_render, err in plans
-        if err is None and n_render > 0
-        for idx, start in enumerate(range(0, n_render, pages_per_chunk))
+    Every output row then crosses one hash exchange on ``doc_id`` into the
+    streaming :func:`_merge_units`; the exchange carries extracted text,
+    never payload bytes. The parse output is not split into a pass-through
+    and a grouped branch: a filter pushes down through the exchange, so
+    the parse would run twice."""
+    chunked = {u.doc_id for u in ranges}
+    units = ranges + [
+        _Unit(doc_id, key, max(size, 0))
+        for doc_id, key, size, big in held
+        if not (big and doc_id in chunked)
     ]
-    if not ranges:
-        return plain(small.unionByName(big_rows))
+    buckets = _pack_units(units, spark.sparkContext.defaultParallelism)
+    src = spark.range(len(buckets), numPartitions=len(buckets)).toDF("bucket")
+    if rest is not None:
+        # NULL doc_id: isin() is NULL, and the row stays
+        keep = ~F.coalesce(F.col("doc_id").isin(list(chunked)) & rest_big,
+                           F.lit(False))
+        src = src.unionByName(rest.filter(keep).toDF("doc_id", "key"),
+                              allowMissingColumns=True)
 
-    spark = big_rows.sparkSession
-    # a left anti join keeps a NULL doc_id row (it matches nothing), and
-    # the pandas-built id table is a LocalTableScan, not a Python RDD
-    chunk_ids = spark.createDataFrame(
-        pd.DataFrame({"doc_id": list(dict.fromkeys(r[0] for r in ranges))}),
-        "doc_id string",
-    )
-    unchunked = plain(small.unionByName(
-        big_rows.join(F.broadcast(chunk_ids), "doc_id", "left_anti")
-    ))
-    # EXACTLY one range per partition: round-robin repartition() starts each
-    # input split at a random offset, so 16 range rows can land on 8 tasks
-    # (measured: one task got 5 ranges -> 5x serial parse). spark.range is
-    # a deterministic 1:1 split, and its rows are indices into ``ranges``
-    # (shipped with the function): a parallelize()d list would be re-read
-    # through a second Python worker in every chunk task (measured at
-    # local[8] on 4 vCPUs, 16 ranges of a 10,000-page document: chunk stage
-    # 3.4-3.9 s -> 2.2-2.5 s).
-    range_df = spark.range(len(ranges), numPartitions=min(len(ranges), 8192))
+    def parse(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
+        read_held, read_rest = readers()
 
-    def run_chunks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        read = reader()
-        for pdf in batches:
-            recs = []
-            for doc_id, key, idx, start, end in (ranges[i] for i in pdf["id"]):
-                try:
-                    raw = read(key)
-                except Exception as e:  # noqa: BLE001 — error row, not task
-                    recs.append((doc_id, idx,
-                                 *_pdf_row(None, f"io:{type(e).__name__}")))
+        def unit_rows(batch):
+            for i, b in enumerate(batch.column("bucket").to_pylist()):
+                if b is None:  # a ``rest`` row: one whole document
+                    yield (batch.column("doc_id")[i].as_py(), (0, 1),
+                           _parse_unit(read_rest, batch.column("key")[i],
+                                       max_pages))
                     continue
-                r = pdfb.parse_pdf_bytes(
-                    raw, max_pages=max_pages, page_range=(start, end)
-                )
-                recs.append((doc_id, idx, *_pdf_row(r)))
-            yield pd.DataFrame(recs, columns=_CHUNK_COLUMNS)
+                for u in buckets[b]:
+                    row = _parse_unit(read_held, u.key, max_pages,
+                                      u.page_range)
+                    if u.n_pages is not None:
+                        row = (row[0], u.n_pages, *row[2:])
+                    yield u.doc_id, (u.idx, u.n_units), row
 
-    chunked = range_df.mapInPandas(run_chunks, _CHUNK_SCHEMA)
-    return unchunked.unionByName(
-        chunked.groupBy("doc_id").applyInArrow(
-            _reassemble_arrow, PDF_DOC_SCHEMA
-        )
+        for batch in batches:
+            it = unit_rows(batch)
+            while part := list(itertools.islice(it, _UNITS_PER_BATCH)):
+                ids, units, rows = zip(*part)
+                yield _pdf_record_batch(list(ids), list(rows), list(units))
+
+    return (
+        src.mapInArrow(parse, _UNIT_SCHEMA)
+        .repartition("doc_id")
+        .mapInArrow(_merge_units, PDF_DOC_SCHEMA)
     )
 
 
@@ -503,15 +612,20 @@ def extract_pdf_documents_chunked(
 
     Spark shape (SURVEY §3.3: "document bytes broadcast, ranges as rows"):
 
-    - documents <= ``big_doc_bytes`` take the normal per-document path;
+    - documents <= ``big_doc_bytes`` take the per-document parse;
     - bigger ones are collected (bounded by ``max_broadcast_bytes``; docs
-      past the budget fall back to the per-document path — never fail),
+      past the budget fall back to the per-document parse — never fail),
       page-counted once on the driver (structure walk only, no content
       decode), and BROADCAST — one copy per executor, not per chunk row
       and no payload shuffle;
-    - the page ranges run as in :func:`_fan_out_chunks`: one row and one
-      partition each, each task parsing only its range, then an ordered
-      per-document reassembly.
+    - their page ranges, packed into per-slot buckets, and every other row
+      parse in one ``mapInArrow``, as in :func:`_fan_out_chunks`.
+
+    Once any document is chunked, every output row crosses one hash
+    exchange on ``doc_id`` into the merge that reassembles the chunked
+    documents in order; the exchange carries extracted text, never payload
+    bytes. With no chunked document the operator is
+    ``extract_pdf_documents``: one ``mapInArrow``, no exchange.
 
     Output is byte-identical to ``extract_pdf_documents`` (asserted by the
     U3-style equivalence test in tests/test_pdf_chunking.py)."""
@@ -524,7 +638,8 @@ def extract_pdf_documents_chunked(
     )
     # a NULL payload has a NULL length, so it stays on the per-document
     # path and becomes an error row there
-    big_df = rest.filter(F.length("payload") > big_doc_bytes)
+    big = F.length("payload") > big_doc_bytes
+    big_df = rest.filter(big)
     # sizes only — never collect a payload the budget can't hold
     sizes = [
         (r.doc_id, r.sz)
@@ -557,45 +672,46 @@ def extract_pdf_documents_chunked(
             probe = _PROBE_CACHE[key] = _probe_pages(raw, max_pages)
             while len(_PROBE_CACHE) > 64:
                 _PROBE_CACHE.pop(next(iter(_PROBE_CACHE)))
-        plans.append((doc_id, doc_id, *probe))
-        if probe[1] is None and probe[0] > 0:
-            payloads[doc_id] = raw
-    bc = _broadcast_cached(sc, payloads) if payloads else None
-    small = rest.filter(
-        F.col("payload").isNull() | (F.length("payload") <= big_doc_bytes)
-    )
+        plans.append((doc_id, doc_id, len(raw), *probe))
+        payloads[doc_id] = raw
+    ranges = _chunk_ranges(plans, pages_per_chunk, max_pages)
+    if not ranges:
+        return plain(rest)
+    bc = _broadcast_cached(sc, {u.doc_id: payloads[u.doc_id] for u in ranges})
     return _fan_out_chunks(
-        small, big_df, plain, plans, lambda: bc.value.__getitem__,
-        pages_per_chunk, max_pages,
+        df.sparkSession, ranges, [], rest, big,
+        lambda: (bc.value.__getitem__, _scalar_bytes), max_pages,
     )
 
 
-def _reassemble_arrow(table):
-    # per-doc ordered concat: a few chunk rows per group, so the state is
-    # bounded. Python string join is a memcpy (the JVM higher-order
-    # expression version measured ~15 MB/s on 40 MB of page text), and the
-    # span shift runs on the flattened Arrow buffers with numpy — the
-    # per-dict pandas version cost ~0.5 s on a 20k-page document's 20k
-    # span structs.
+def _reassemble_arrow(parts: list) -> "pa.RecordBatch":
+    """One chunked document's row from its range rows (one-row
+    ``_UNIT_SCHEMA`` batches, in any order): texts joined in chunk order,
+    ``n_render`` summed, the first error, ``n_pages`` and ``info`` of the
+    first range, and each range's page spans shifted by the characters
+    before it. Everything runs on Arrow buffers: the text joins in one
+    copy, never as Python strings (a 20,000-page document carries ~40 MB
+    of text), and the span shift is numpy over the flattened structs."""
     import numpy as np
     import pyarrow as pa
+    import pyarrow.compute as pc
 
-    idx = np.argsort(table.column("chunk_idx").to_numpy(), kind="stable")
-    order = pa.array(idx)
-    texts = table.column("text").take(order).to_pylist()
-    text = "".join(t or "" for t in texts)
-    err = None
-    for e in table.column("error").take(order).to_pylist():
-        if e is not None:
-            err = e
-            break
-    spans = table.column("page_spans").take(order).combine_chunks()
-    lens = np.diff(spans.offsets.to_numpy())
-    # offset of each chunk's text inside the joined text, repeated per span
-    text_lens = np.fromiter((len(t or "") for t in texts), np.int64,
-                            count=len(texts))
-    chunk_off = np.concatenate(([0], np.cumsum(text_lens)[:-1]))
-    shift = np.repeat(chunk_off, lens).astype(np.int32)
+    t = pa.Table.from_batches(sorted(
+        parts, key=lambda b: b.column("chunk_idx")[0].as_py()
+    )).combine_chunks()
+    texts = pc.fill_null(t.column("text").chunk(0), "")
+    text = pc.binary_join(
+        pa.ListArray.from_arrays(pa.array([0, len(texts)], pa.int32()), texts),
+        "",
+    )
+    errors = pc.drop_null(t.column("error"))
+    spans = t.column("page_spans").chunk(0)
+    # offset of each range's text inside the joined text, repeated per span
+    text_lens = pc.utf8_length(texts).to_numpy().astype(np.int64)
+    shift = np.repeat(
+        np.concatenate(([0], np.cumsum(text_lens)[:-1])),
+        np.diff(spans.offsets.to_numpy()),
+    ).astype(np.int32)
     vals = spans.flatten()
     out_vals = pa.StructArray.from_arrays(
         [
@@ -605,22 +721,19 @@ def _reassemble_arrow(table):
         ],
         names=["page", "start", "end"],
     )
-    span_list = pa.ListArray.from_arrays(
-        pa.array([0, len(out_vals)], pa.int32()), out_vals
-    )
-    first = int(idx[0])
-    return pa.table(
-        {
-            "doc_id": pa.array([table.column("doc_id")[first].as_py()]),
-            "text": pa.array([text]),
-            "n_pages": table.column("n_pages").take(pa.array([first])),
-            "n_render": pa.array(
-                [int(table.column("n_render").to_numpy().sum())], pa.int32()
+    return pa.RecordBatch.from_arrays(
+        [
+            t.column("doc_id").chunk(0)[:1],
+            text,
+            t.column("n_pages").chunk(0)[:1],
+            pa.array([pc.sum(t.column("n_render")).as_py()], pa.int32()),
+            t.column("info").chunk(0)[:1],
+            errors[:1] if len(errors) else pa.nulls(1, pa.string()),
+            pa.ListArray.from_arrays(
+                pa.array([0, len(out_vals)], pa.int32()), out_vals
             ),
-            "info": table.column("info").take(pa.array([first])),
-            "error": pa.array([err], pa.string()),
-            "page_spans": span_list,
-        }
+        ],
+        names=_PDF_COLUMNS,
     )
 
 
@@ -636,7 +749,9 @@ def _make_fetcher():
     budget = [256 << 20]  # total cached bytes per task — NOT per entry:
     # 64 arbitrary-size entries could pin tens of GB on a wide corpus
 
-    def fetch(path: str) -> bytes:
+    def fetch(path: str | None) -> bytes:
+        if path is None:  # parses as empty bytes: an error row
+            return b""
         raw = cache.get(path)
         if raw is None:
             if fsspec is not None and "://" in path:
@@ -692,13 +807,17 @@ def extract_pdf_files_chunked(
     Unlike :func:`extract_pdf_documents_chunked` (payload column ->
     driver collect + broadcast, costs that scale with document size), here
     NOTHING but path strings and tiny range rows ever moves: the files are
-    stat-ed, the big ones structure-probed, chunk tasks read the file
-    themselves (page cache / object store) and parse only their range, and
-    the ordered reassembly shuffles just the extracted text. Driver memory
-    is bounded by 10,000 path rows plus the big files' stat rows,
-    regardless of file size or corpus size. Small files take the plain
-    :func:`extract_pdf_files` path. Output is row-identical to
-    ``extract_pdf_files``."""
+    stat-ed, the big ones structure-probed, and every task reads its files
+    itself (page cache / object store). Each call is one parse stage, as in
+    :func:`_fan_out_chunks`: page ranges and whole files packed into
+    per-slot buckets, plus, on big corpora, the rows the driver did not
+    collect. Once any file is chunked, every output row crosses one hash
+    exchange on ``doc_id`` into the merge that reassembles the chunked
+    files in order; the exchange carries extracted text only. With no
+    chunked file the operator is :func:`extract_pdf_files`: one
+    ``mapInArrow``, no exchange. Driver memory is bounded by 10,000 path
+    rows plus the big files' stat rows, regardless of file size or corpus
+    size. Output is row-identical to ``extract_pdf_files``."""
     spark = df.sparkSession
     cols = df.select(
         F.col(id_col if id_col else path_col).cast("string").alias("doc_id"),
@@ -720,7 +839,7 @@ def extract_pdf_files_chunked(
             out = out[out["sz"] > big_file_bytes]
             probes = [_probe_file(p, fetch, max_pages) for p in out["path"]]
             yield out.assign(
-                n_render=[n for n, _ in probes], err=[e for _, e in probes]
+                n_pages=[n for n, _ in probes], err=[e for _, e in probes]
             )
 
     def plain(d: DataFrame) -> DataFrame:
@@ -728,30 +847,20 @@ def extract_pdf_files_chunked(
             d, path_col="path", id_col="doc_id", max_pages=max_pages
         )
 
-    def local(rows: list) -> DataFrame:
-        # the plain path re-reads its input on every action: an Arrow-built
-        # relation is a LocalTableScan, even when empty, while the
-        # python-pickled-RDD scan behind a list-based (or empty pandas)
-        # createDataFrame costs ~0.3 s of worker round-trip per action and
-        # its lone task contends with the chunk wave for a core
-        import pyarrow as pa
-
-        return spark.createDataFrame(
-            pa.table({
-                "doc_id": pa.array([r[0] for r in rows], pa.string()),
-                "path": pa.array([r[1] for r in rows], pa.string()),
-            }),
-            "doc_id string, path string",
-        )
+    def readers():
+        fetch = _make_fetcher()
+        return fetch, lambda v: fetch(v.as_py())
 
     # Path A (small local corpora): stat + probe on the driver — the
     # distributed pass costs a full Python-runner job (~0.5 s of fixed
     # latency) that dwarfs a handful of os.stat calls and up to 8
-    # structure probes (the reference parent process probes the same way).
+    # structure probes (the reference parent process probes the same way),
+    # and every row becomes a unit the driver packs.
     # Path B (more than 10,000 rows, a URL, or more than 8 big files): the
-    # one-job distributed stat+probe pass, which returns only big rows.
+    # one-job distributed stat+probe pass, which returns only big rows; the
+    # others stay in ``cols``.
     rows = cols.limit(10_001).collect()
-    stats = None
+    held = None
     if len(rows) <= 10_000 and all(
         r.path is None or "://" not in r.path for r in rows
     ):
@@ -763,26 +872,35 @@ def extract_pdf_files_chunked(
                 (doc_id, path, sz, *_probe_file(path, fetch, max_pages))
                 for doc_id, path, sz in big
             ]
-            small = local([s for s in sized if s[2] <= big_file_bytes])
-            big_rows = local(big)
-    if stats is None:
-        stats = cols.mapInPandas(
+            held = [(d, p, sz, sz > big_file_bytes) for d, p, sz in sized]
+    if held is None:
+        stats = [tuple(r) for r in cols.mapInPandas(
             stat_probe,
-            "doc_id string, path string, sz long, n_render int, err string",
-        ).collect()
-        big_rows = local(stats)
-        # a row is big by its (doc_id, path); a NULL doc_id matches too
-        b = F.broadcast(big_rows.alias("b"))
-        small = cols.alias("c").join(
-            b,
-            F.col("c.doc_id").eqNullSafe(F.col("b.doc_id"))
-            & (F.col("c.path") == F.col("b.path")),
-            "left_anti",
-        )
-    # (doc_id, path, n_render, err) of the unique big ids
-    by_id = {s[0]: (s[0], s[1], s[3], s[4]) for s in stats}
+            "doc_id string, path string, sz long, n_pages int, err string",
+        ).collect()]
+    by_id = {s[0]: s for s in stats}
     plans = [by_id[d] for d in _unique_big_ids([(s[0], s[2]) for s in stats])]
-    return _fan_out_chunks(
-        small, big_rows, plain, plans, _make_fetcher, pages_per_chunk,
-        max_pages,
-    )
+    ranges = _chunk_ranges(plans, pages_per_chunk, max_pages)
+    if held is None:
+        if not ranges:
+            return plain(cols)
+        # a chunked id has one big row, so its big path picks that row out
+        big_path = F.col("path").isin([s[1] for s in stats])
+        return _fan_out_chunks(spark, ranges, [], cols, big_path, readers,
+                               max_pages)
+    if not ranges:
+        # the plain path re-reads its input on every action: an Arrow-built
+        # relation is a LocalTableScan, while the python-pickled-RDD scan
+        # behind a list-based createDataFrame costs ~0.3 s of worker
+        # round-trip per action
+        import pyarrow as pa
+
+        return plain(spark.createDataFrame(
+            pa.table({
+                "doc_id": pa.array([r[0] for r in held], pa.string()),
+                "path": pa.array([r[1] for r in held], pa.string()),
+            }),
+            "doc_id string, path string",
+        ))
+    return _fan_out_chunks(spark, ranges, held, None, None, readers,
+                           max_pages)

@@ -3,13 +3,21 @@
 hold (filter pushdown, column pruning, partial aggregation, broadcast joins,
 no cartesian products, extraction-kernel-runs-once).
 
-Usage: python scripts/explain_plans.py [sf_dir]
+Usage: python scripts/explain_plans.py [sf_dir] [--only NAME ...]
+                                       [--out DIR --tag TAG]
+
+``--only`` rebuilds just the named sections, in place in PLANS.md;
+``--out``/``--tag`` also write each rebuilt plan to ``DIR/<name>_<TAG>.txt``
+(the before/after files under ``plans/``).
 """
 
 from __future__ import annotations
 
+import argparse
 import os
+import re
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -106,89 +114,124 @@ NOTES = {
 }
 
 
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = get_spark("plans", cores=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    sections = []
-
+def sections(spark, sf_dir: str) -> list:
+    """``(name, note, build)`` per PLANS.md section; ``build()`` returns
+    the formatted plan."""
+    out = []
     for name, note in NOTES.items():
         fn, _ = q.SQL_CHECKED[name]
-        sections.append((name, note, formatted_plan(fn(spark, sf_dir))))
+        out.append((name, note,
+                    lambda fn=fn: formatted_plan(fn(spark, sf_dir))))
 
-    smoke = fixtures.make_transcripts_df(spark, 5, 4)
-    turns = extract.extract_turns(smoke)
-    sections.append((
+    def turns():
+        return extract.extract_turns(fixtures.make_transcripts_df(spark, 5, 4))
+
+    out.append((
         "extract_turns",
         "shuffle-free map stage: scan -> MapInPandas (Arrow batches), no "
         "Exchange anywhere",
-        formatted_plan(turns),
+        lambda: formatted_plan(turns()),
     ))
-    sections.append((
+    out.append((
         "extract_conversations (salted)",
         "extraction kernel appears exactly once; two bounded-state "
         "exchanges (partial by (conv_id, salt), final by conv_id); no "
         "window, no join",
-        formatted_plan(concat.concat_conversations_salted(turns, block=64)),
+        lambda: formatted_plan(
+            concat.concat_conversations_salted(turns(), block=64)),
     ))
 
     # real-PDF per-document path: MapInArrow, shuffle-free
-    pdf_df = spark.createDataFrame(
-        [("d1", bytearray(fixtures.build_big_binary_pdf(3)))],
-        "path string, content binary",
-    )
-    sections.append((
+    small_doc = fixtures.build_big_binary_pdf(3)
+    out.append((
         "extract_pdf_documents",
         "binary payloads through ONE MapInArrow (no Arrow->pandas copy of "
         "megabyte cells), no Exchange — parallelism comes from the source "
         "split",
-        formatted_plan(extract.extract_pdf_documents(pdf_df)),
+        lambda: formatted_plan(extract.extract_pdf_documents(
+            spark.createDataFrame([("d1", bytearray(small_doc))],
+                                  "path string, content binary"))),
     ))
     big_doc = fixtures.build_big_binary_pdf(400)
-    big_df = spark.createDataFrame(
-        [("huge", bytearray(big_doc))], "path string, content binary"
-    )
-    sections.append((
+    out.append((
         "extract_pdf_documents_chunked",
-        "page ranges fan out one-per-partition over the BROADCAST payload "
-        "(no payload shuffle — the only Exchange carries chunk TEXT into "
-        "the ordered reassembly agg); the only join is the broadcast left "
-        "anti join that keeps the chunked big rows off the per-document "
-        "path; no cartesian",
-        formatted_plan(extract.extract_pdf_documents_chunked(
-            big_df, pages_per_chunk=50, big_doc_bytes=10_000
+        "one huge and one small document: the huge one's page ranges "
+        "read the BROADCAST payload and are packed, at most two per "
+        "bucket, into Range rows; the rows under the size bar join them "
+        "through a Union (a filter keeps the chunked row out), so ONE "
+        "MapInArrow parses every unit; every row then crosses ONE hash "
+        "Exchange on doc_id into the streaming merge MapInArrow, which "
+        "passes single-unit rows through and reassembles the chunked "
+        "document in order. The Exchange carries extracted text, never "
+        "payload bytes; no join, "
+        "no grouped aggregate, no cartesian",
+        lambda: formatted_plan(extract.extract_pdf_documents_chunked(
+            spark.createDataFrame(
+                [("huge", bytearray(big_doc)), ("small", bytearray(small_doc))],
+                "path string, content binary"),
+            pages_per_chunk=50, big_doc_bytes=10_000,
         )),
     ))
-    import os as _os
-    import tempfile as _tf
 
-    tmpd = _tf.mkdtemp(prefix="plans_pdf_")
-    big_path = _os.path.join(tmpd, "huge.pdf")
-    with open(big_path, "wb") as f:
-        f.write(big_doc)
-    path_df = spark.createDataFrame([(big_path,)], "path string")
-    sections.append((
+    def files_df():
+        d = tempfile.mkdtemp(prefix="plans_pdf_")
+        paths = []
+        for name, raw in (("huge", big_doc), ("small", small_doc)):
+            paths.append(os.path.join(d, f"{name}.pdf"))
+            with open(paths[-1], "wb") as f:
+                f.write(raw)
+        return spark.createDataFrame([(p,) for p in paths], "path string")
+
+    out.append((
         "extract_pdf_files_chunked",
-        "path-addressed chunking: ONLY path strings + range indices in "
-        "the plan (a Range scan; tasks read the file themselves); small "
-        "files go straight to the plain path, and big files not chunked "
-        "join them through a left anti join on the chunked ids; the "
-        "single Exchange carries extracted chunk TEXT "
-        "into the ordered reassembly — the driver collects at most "
-        "10,001 path rows, or on big corpora only the big files' stat "
-        "rows, regardless of file size",
-        formatted_plan(extract.extract_pdf_files_chunked(
-            path_df, pages_per_chunk=50, big_file_bytes=10_000
+        "path-addressed chunking, one huge and one small file planned on "
+        "the driver: ONLY path strings in the plan — the huge file's page "
+        "ranges and the small file are packed into per-slot buckets read "
+        "as Range rows, ONE MapInArrow parses every unit (tasks read the "
+        "files themselves), and ONE hash Exchange on doc_id carries "
+        "extracted text into the streaming merge MapInArrow; no join, no "
+        "grouped aggregate. The driver collects at most 10,001 path rows, "
+        "or on big corpora only the big files' stat rows (the other rows "
+        "then join the parse stage through a Union), regardless of file "
+        "size",
+        lambda: formatted_plan(extract.extract_pdf_files_chunked(
+            files_df(), pages_per_chunk=50, big_file_bytes=10_000
         )),
     ))
+    return out
 
-    out = ["# PLANS — physical-plan evidence (generated by "
-           "scripts/explain_plans.py)\n"]
-    for name, note, plan in sections:
-        out.append(f"## {name}\n\n*{note}*\n\n```\n{plan.strip()}\n```\n")
+
+def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.001")
+    ap.add_argument("--only", action="append", default=[])
+    ap.add_argument("--out")
+    ap.add_argument("--tag")
+    args = ap.parse_args()
+    spark = get_spark("plans", cores=8)
+    spark.sparkContext.setLogLevel("ERROR")
+    built = {}
+    for name, note, build in sections(spark, args.sf_dir):
+        if args.only and name not in args.only:
+            continue
+        plan = build().strip()
+        built[name] = f"## {name}\n\n*{note}*\n\n```\n{plan}\n```"
+        if args.out:
+            stem = re.sub(r"\W+", "_", name).strip("_")
+            with open(os.path.join(args.out, f"{stem}_{args.tag}.txt"),
+                      "w") as f:
+                f.write(plan + "\n")
+    if args.only:
+        with open("PLANS.md") as f:
+            blocks = [b.rstrip("\n")
+                      for b in re.split(r"(?m)^(?=## )", f.read())]
+        blocks = [built.get(b[3:].split("\n", 1)[0], b) for b in blocks]
+    else:
+        blocks = ["# PLANS — physical-plan evidence (generated by "
+                  "scripts/explain_plans.py)", *built.values()]
     with open("PLANS.md", "w") as f:
-        f.write("\n".join(out))
-    print(f"wrote PLANS.md ({len(sections)} plans)")
+        f.write("\n\n".join(blocks) + "\n")
+    print(f"wrote PLANS.md ({len(built)} plans)")
     spark.stop()
 
 

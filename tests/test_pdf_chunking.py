@@ -86,11 +86,15 @@ def test_chunked_equals_single_task(spark, big_pdf, tmp_path):
 
 def test_chunked_equals_single_task_generated(spark, big_pdf):
     """The equivalence above on generated documents only: two chunked
-    documents of different lengths, a truncated one whose probe fails
+    documents of different lengths, one whose root ``/Count`` (100)
+    understates its 370 pages, a truncated one whose probe fails
     (per-document fallback), a small one and a NULL payload."""
+    understated = fixtures.build_big_binary_pdf(370, seed=5).replace(
+        b"/Count 370", b"/Count 100", 1)
     rows = [
         ("huge", big_pdf),
         ("mid", fixtures.build_big_binary_pdf(370)),
+        ("understated", understated),
         ("cut", big_pdf[: len(big_pdf) // 2]),
         ("small", fixtures.build_big_binary_pdf(3)),
         ("null", None),
@@ -110,6 +114,7 @@ def test_chunked_equals_single_task_generated(spark, big_pdf):
             tuple(s) for s in b.page_spans
         ], doc_id
     assert chunked["mid"].n_pages == 370
+    assert chunked["understated"].n_render == 370
 
 
 def test_collect_payloads_groups_by_size(spark, monkeypatch):
@@ -240,13 +245,14 @@ def test_files_chunked_equals_files_single_generated(spark, big_pdf, tmp_path,
                                                      monkeypatch, n_big):
     """The equivalence above on generated files only, with ``id_col``:
     ``n_big`` chunked documents, a truncated one whose probe fails, a
-    small one, a duplicated big path, a missing path and a NULL path, each
-    with its path as id; then one id on a big, a small and a NULL path,
-    and a NULL id on a big path. Only the big row of a chunked id may
-    leave the per-file path. With 2 distinct big documents there are 6
-    big rows and the driver stats and probes them (Path A); with 7 there
-    are 11, past the driver's 8, and the distributed stat+probe pass
-    plans them (Path B)."""
+    truncated one whose root ``/Count`` (150) overstates the 81 pages the
+    full walk finds, a small one, a duplicated big path, a missing path
+    and a NULL path, each with its path as id; then one id on a big, a
+    small and a NULL path, and a NULL id on a big path. Only the big row
+    of a chunked id may leave the per-file path. With 2 distinct big
+    documents there are 7 big rows and the driver stats and probes them
+    (Path A); with 7 there are 12, past the driver's 8, and the
+    distributed stat+probe pass plans them (Path B)."""
     paths = []
     for i in range(n_big):
         p = tmp_path / f"big{i}.pdf"
@@ -255,7 +261,9 @@ def test_files_chunked_equals_files_single_generated(spark, big_pdf, tmp_path,
     small = str(tmp_path / "small.pdf")
     (tmp_path / "cut.pdf").write_bytes(big_pdf[: len(big_pdf) // 2])
     (tmp_path / "small.pdf").write_bytes(fixtures.build_big_binary_pdf(3))
-    paths += [str(tmp_path / "cut.pdf"), small]
+    lying = fixtures.build_big_binary_pdf(150, seed=0)
+    (tmp_path / "count.pdf").write_bytes(lying[: len(lying) // 2])
+    paths += [str(tmp_path / "cut.pdf"), str(tmp_path / "count.pdf"), small]
     paths += [paths[0], str(tmp_path / "missing.pdf"), None]
     rows = [(p or "null-path", p) for p in paths] + [
         ("d", paths[1]), ("d", small), ("d", None), (None, paths[1]),
@@ -271,13 +279,14 @@ def test_files_chunked_equals_files_single_generated(spark, big_pdf, tmp_path,
         df, id_col="id", pages_per_chunk=100, big_file_bytes=20_000
     ).collect()
     # driver-side probes only on Path A (workers append to their own copy)
-    assert len(probed) == (n_big + 4 if n_big + 4 <= 8 else 0)
+    assert len(probed) == (n_big + 5 if n_big + 5 <= 8 else 0)
 
     assert len(chunked) == len(rows)
     _assert_same_rows(ex.extract_pdf_files(df, id_col="id").collect(),
                       chunked)
     by_id = {r.doc_id: r for r in chunked}
     assert by_id[paths[n_big - 1]].n_pages == 150 + 60 * (n_big - 1)
+    assert by_id[str(tmp_path / "count.pdf")].n_pages == 81
     assert by_id[str(tmp_path / "missing.pdf")].error == "io:FileNotFoundError"
     assert by_id["null-path"].error is not None
 
@@ -357,3 +366,40 @@ def test_chunked_mixed_size_duplicate_id_keeps_every_row(spark, big_pdf):
     ).collect()
     assert len(chunked) == 3
     _assert_same_rows(ex.extract_pdf_documents(df).collect(), chunked)
+
+
+def _units(n_ranges: int, costs: list[float]) -> list:
+    doc = [ex._Unit("big", "big", 8.0 / max(n_ranges, 1), i, n_ranges,
+                    (10 * i, 10 * i + 10), 10 * n_ranges)
+           for i in range(n_ranges)]
+    return doc + [ex._Unit(f"s{i}", f"s{i}", c) for i, c in enumerate(costs)]
+
+
+@pytest.mark.parametrize("n_ranges,costs,slots", [
+    (8, [1.0] * 1024, 4),     # the benchmark's shape
+    (16, [], 4),              # ranges only, few slots: the ceil(n/2) floor
+    (3, [5.0, 0.0, 0.0], 8),  # fewer units than slots
+    (4, [100.0], 1),          # cheap ranges beside a costly file: the cap
+    (0, [3.0, 1.0, 2.0, 0.0, 0.0, 7.0], 2),
+    (7, [0.5 * i for i in range(40)], 2),
+    (0, [], 4),
+])
+def test_pack_units(n_ranges, costs, slots):
+    """Every unit lands in exactly one bucket; there are
+    ``max(slots, ceil(ranges / 2))`` buckets, capped at the number of
+    units; no bucket holds more than 2 ranges; the packing is
+    deterministic."""
+    units = _units(n_ranges, costs)
+    buckets = ex._pack_units(units, slots)
+    assert len(buckets) == min(len(units), max(slots, -(-n_ranges // 2)))
+    placed = [u for b in buckets for u in b]
+    assert sorted(placed) == sorted(units)
+    assert all(sum(u.page_range is not None for u in b) <= 2 for b in buckets)
+    assert ex._pack_units(list(units), slots) == buckets
+    if units and not n_ranges:
+        # longest first into the least-loaded bucket: no bucket is
+        # heavier than the lightest one plus its own costliest unit (the
+        # 2-range cap can send a range past the least-loaded bucket)
+        loads = [sum(u.cost for u in b) for b in buckets]
+        for b, load in zip(buckets, loads):
+            assert load <= min(loads) + max(u.cost for u in b) + 1e-9

@@ -4,6 +4,8 @@ these, we prove we didn't accidentally defeat them)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from pdf_parse_new_spark import fixtures, queries as q
@@ -197,3 +199,26 @@ def test_bucketed_join_colocated_no_exchange(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql("DROP TABLE IF EXISTS bkt_left")
         spark.sql("DROP TABLE IF EXISTS bkt_right")
+
+
+def test_files_chunked_one_parse_stage(spark, tmp_path):
+    # a by-path call the driver plans (one big file, a few small ones):
+    # every unit parses in ONE Python map, and the only Exchange is the
+    # doc_id hash into the merge — no anti join feeding a second parse
+    # stage, no grouped reassembly
+    paths = [str(tmp_path / "big.pdf")]
+    (tmp_path / "big.pdf").write_bytes(fixtures.build_big_binary_pdf(300))
+    for i in range(3):
+        paths.append(str(tmp_path / f"s{i}.pdf"))
+        (tmp_path / f"s{i}.pdf").write_bytes(
+            fixtures.build_big_binary_pdf(2, seed=i))
+    df = spark.createDataFrame([(p,) for p in paths], "path string")
+    out = extract.extract_pdf_files_chunked(
+        df, pages_per_chunk=50, big_file_bytes=10_000)
+    plan = formatted_plan(out)
+    tree = plan.split("\n\n")[0]
+    assert tree.count("Exchange") == 1, tree
+    python_maps = re.compile(r"MapIn(Arrow|Pandas)|FlatMapGroupsIn|EvalPython")
+    assert len(python_maps.findall(tree.split("Exchange", 1)[1])) == 1, tree
+    assert "LeftAnti" not in plan and "FlatMapGroupsInArrow" not in plan, tree
+    assert out.count() == len(paths)
