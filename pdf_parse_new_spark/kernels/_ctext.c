@@ -6,12 +6,11 @@
  * below replays the events — font decode, x-advance accumulation, line
  * folding — over ~10-50x fewer iterations than per-token interpretation.
  *
- * Semantics mirror pdf_parse_new_spark/kernels/pdfb.py:_TextInterp._run_py
- * exactly (that pure-Python interpreter remains the reference
- * implementation and the fallback for every stream the C replay cannot
- * take, and for every stream when no C compiler is available); the
- * equivalence is asserted by tests/test_ctext.py over the reference corpus
- * and the synthetic fixture dialects.
+ * Semantics mirror pdf.js getTextContent as transcribed by
+ * pdf_parse_new_spark/kernels/jsvm.py, the Python tier that renders every
+ * page the C replay cannot take (and every page when no C compiler is
+ * available); the equivalence is asserted by tests/test_ctext.py over the
+ * reference corpus and the synthetic fixture dialects.
  *
  * Event records are 48 bytes, written into a caller-allocated buffer:
  *   int32 kind; int32 flag; int64 a; int64 b; double f0,f1,f2,f3;
@@ -67,7 +66,7 @@ enum {
                    * picks up rotation/skew (any of tm_b, tm_c, cm_b,
                    * cm_c nonzero): the event stream flattens the matrix
                    * to translate+scale, so the caller must re-run the
-                   * stream through the full-matrix Python interpreter
+                   * page through the full-matrix jsvm tier
                    * (pdf.js swaps compare axes per rotation quadrant,
                    * compareWithLastPosition pdf.worker.js:36545-36568) */
 };
@@ -579,9 +578,9 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
     double tc = 0.0, tw = 0.0, tz = 1.0;
     int rot_emitted = 0;
 /* one-shot rotation marker: the flattened events cannot carry the 2x2,
- * so the first rotated/skewed matrix routes the whole stream to the
- * full-matrix Python interpreter (delegation is stream-level — position
- * of the marker within the stream does not matter) */
+ * so the first rotated/skewed matrix routes the page to the full-matrix
+ * jsvm tier (position of the marker within the stream does not
+ * matter) */
 #define CHECK_ROT()                                                          \
     do {                                                                     \
         if (!rot_emitted &&                                                  \
@@ -912,7 +911,7 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
                      * events) for the next operator */
                     continue;
                 if (!varargs && nst != numargs)
-                    return -2; /* stash would engage: exact Python page */
+                    return -2; /* stash would engage: jsvm page */
             }
 
             /* JS value-coercion defer: a non-NUM operand in a numeric
@@ -920,15 +919,15 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
              * pdf.js's raw-store + use-site coercion semantics — string
              * concat in `charSpacing + extraSpacing` ("5"+0 == "50"),
              * ToNumber in every multiply, NaN position cascades. The
-             * fallback raises _JsCoerce and the page restarts through
-             * the Python jsvm tier. Numeric NAMES defer too: pdf.js
+             * page runs through the raw-value jsvm tier instead.
+             * Numeric NAMES defer too: pdf.js
              * Name instances coerce to "[object Object]" == NaN, not
              * to their text. */
             if ((oplen == 2 && op[0] == 'T' && op[1] == 'j') ||
                 (oplen == 1 && (op[0] == '\'' || op[0] == '"'))) {
                 /* an array is pending at a show op: if it is the
                  * effective chars operand, charsToGlyphs throws (page
-                 * stop). The Python tier re-derives the exact stack
+                 * stop). The jsvm tier re-derives the exact stack
                  * shape (a stashed extra array does NOT throw). */
                 if (tj_start >= 0)
                     return -2;
@@ -1106,8 +1105,8 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
                             /* negative Tz mirrors the writing
                              * direction (pdf.js rotate == 180 via the
                              * textHScale sign): the flattened events
-                             * can't carry it — delegate the stream to
-                             * the full-matrix Python interpreter */
+                             * can't carry it — delegate the page to
+                             * the full-matrix jsvm tier */
                             EMIT(K_ROT, 0, 0, 0, 0, 0, 0, 0);
                             rot_emitted = 1;
                         }
@@ -1224,7 +1223,7 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
                 }
             } else if (oplen == 2 && op[0] == 'c' && op[1] == 'm') {
                 /* CTM' = m x CTM; applied only when all six operands
-                 * convert (mirrored by the Python fallback) */
+                 * convert */
                 if (nst >= 6 && st[nst - 6].conv && st[nst - 5].conv &&
                     st[nst - 4].conv && st[nst - 3].conv &&
                     st[nst - 2].conv && st[nst - 1].conv) {
@@ -1308,7 +1307,7 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
  * pdftext_replay — event replay at C speed.
  *
  * Consumes the event array produced by pdftext_interpret and performs
- * what _TextInterp._run_py does per token in Python: font decode through
+ * what jsvm.JsVM does per glyph in Python: font decode through
  * per-font byte->UTF-8 translate tables, x-advance accumulation
  * (widths + Tc/Tw/Tz), and the show()/line-fold model (y-tolerance
  * breaks, gap-fraction word spaces), writing final UTF-8 text into
@@ -1317,7 +1316,7 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
  * construction no K_XOBJ can occur between K_TJSTART and K_TJEND, so
  * no TJ scratch crosses a segment boundary. Fonts must all be simple
  * (1-byte, non-identity, no RTL-capable table entries); the Python
- * caller prescans K_FONT events and runs the stream through _run_py
+ * caller prescans K_FONT events and runs the page through jsvm
  * otherwise.
  *
  * state: 32 doubles, in-out (written back only on success):
@@ -2410,7 +2409,8 @@ long pdftext_replay(const unsigned char *d, long n, const Ev *ev, long nev,
             if (e->kind == K_TJSTR && nruns > 0) {
                 /* mid-TJ per-glyph splits: segment 0 completes the
                  * buffered group, the LAST segment becomes the new
-                 * buffer (mirrors pdfb._run_py's mid-TJ _seg_split). The
+                 * buffer (pdf.js compares per glyph, so a split lands
+                 * mid-element exactly where jsvm's would). The
                  * staged tail parks at the top of `out` while each
                  * earlier segment runs through rp_show. */
                 long base = tjmark < 0 ? mark : tjmark;
@@ -2512,8 +2512,8 @@ long pdftext_replay(const unsigned char *d, long n, const Ev *ev, long nev,
                 }
             } else if (nruns > 0) {
                 /* quad-0 split emission: nruns+1 segments, each run
-                 * riding as the next segment's leading pend
-                 * (mirrors pdfb._run_py's Tj _seg_split path) */
+                 * riding as the next segment's leading pend (the per-glyph
+                 * compare jsvm runs) */
                 long base = mark;
                 for (int k = 0; k <= nruns; k++) {
                     long bnd = k < nruns ? runs[k].off : olen;

@@ -2,9 +2,8 @@
 
 The C source ships with the package; :func:`cbuild.build` compiles it
 once per machine into a content-hash-keyed shared object, loaded here via
-ctypes. When no compiler is available ``AVAILABLE`` is False and callers
-fall back to the pure-Python interpreter, which remains the reference
-implementation.
+ctypes. When no compiler is available ``AVAILABLE`` is False and every
+page runs through the Python tier, ``kernels/jsvm.py``.
 """
 
 from __future__ import annotations
@@ -30,8 +29,8 @@ EV_DTYPE = np.dtype(
 K_ANCHOR, K_FONT, K_STATE, K_STR = 1, 2, 3, 4
 K_TJSTART, K_TJSTR, K_TJNUM, K_TJEND, K_XOBJ, K_SETY = 5, 6, 7, 8, 9, 10
 # K_CM = 11 is consumed C-side only; K_ROT marks a rotated/skewed matrix
-# (the flattened events drop the 2x2 — callers re-run the stream through
-# the full-matrix Python interpreter)
+# (the flattened events drop the 2x2 — callers re-run the page through
+# the full-matrix jsvm tier)
 K_ROT = 12
 # K_INH precedes every K_XOBJ: f0 = leading, f1 = RAW rise — the text
 # state a Form XObject inherits that is otherwise lexer-internal
@@ -106,8 +105,8 @@ class PreprocessorEngaged(Exception):
     machinery engages (operand over/underflow stash, the 34-operand
     FormatError — pdf.worker.js:38608-38672): the event stream cannot
     be built by the exact-count fast path, so the caller re-runs the
-    stream through the Python interpreter, which implements the full
-    stash semantics."""
+    page through kernels/jsvm.py, which implements the full stash
+    semantics."""
 
 
 def interpret(data: bytes, lm_seed: tuple | None = None) -> np.ndarray:

@@ -1,7 +1,7 @@
 """Faithful pdf.js ``getTextContent`` interpreter with JS value semantics.
 
-The main engine (`pdfb._TextInterp`) is a heavily optimized float pipeline:
-it assumes every operand that reaches a numeric text-state slot converts to
+The C path (`pdfb._TextInterp` over ``_ctext.c``) is a float pipeline: it
+assumes every operand that reaches a numeric text-state slot converts to
 a number. pdf.js makes no such assumption — operands are stored RAW into
 the text state (``textState.charSpacing = args[0]``, pdf.worker.js:36874)
 and coercion happens per USE SITE through whatever JS operator touches the
@@ -20,16 +20,16 @@ slot:
   glyph, a space between each ("gamma" reads "g a m m a"), and pdf-parse's
   ``Math.abs(NaN - lastY) > 1`` join keeps everything on one line.
 
-Modeling that inside the float pipeline would poison 400 green tests, so
-this module is a THIRD TIER: a direct, slow, per-glyph transcription of the
-reference algorithm (pdf.worker.js:36347-36960 ``getTextContent`` +
-lib/pdf-parse.js:16-46 ``render_page``) operating on raw JS values. The
-main interpreter raises ``pdfb._JsCoerce`` the moment a non-numeric operand
-reaches a numeric slot (and the C lexer defers the same streams), and
-``_page_text`` re-runs the page here. Coercion pages are adversarial /
-malformed by construction, so throughput is irrelevant; exactness is the
-point (differential-tested against the live node reference by
-tests/test_node_differential.py's coerce generator).
+This module is the engine's one Python interpreter tier: a direct,
+per-glyph transcription of the reference algorithm
+(pdf.worker.js:36347-36960 ``getTextContent`` + lib/pdf-parse.js:16-46
+``render_page``) operating on raw JS values. ``pdfb._page_text`` runs a
+page here whenever the C lexer + C replay cannot take one of its streams:
+multi-byte (CID) or RTL-capable fonts, rotated or skewed matrices, the
+operand stash, ExtGState fonts, width-register-sensitive constructs, and
+the coercion streams above. Those pages are rare fallbacks, so exactness
+is the point, not throughput (differential-tested against the live node
+reference by tests/test_node_differential.py).
 """
 
 from __future__ import annotations
@@ -41,9 +41,9 @@ import unicodedata
 from . import bidi as _bidi_mod
 from .pdfb import (
     _JS_WS,
+    _NORM_RE,
     _OP_ARITY,
     _OPERATOR,
-    FontMap,
     Name,
     Ref,
     Stream,
@@ -55,6 +55,7 @@ from .pdfb import (
     _lex_number,
     _lex_op,
     _LexThrow,
+    _normalize_unicode,
     _prescan_lexer_throw,
     _parse_content_array,
     _peek_ref,
@@ -138,6 +139,8 @@ def _str_to_num(s: str) -> float:
 
 def to_number(v) -> float:
     """JS ToNumber."""
+    if type(v) is float:
+        return v
     if isinstance(v, bool):
         return 1.0 if v else 0.0
     if isinstance(v, (int, float)):
@@ -160,6 +163,8 @@ def js_add(a, b):
     (strings, arrays, dicts, Names), else numeric. Returns float or str."""
     a_str = isinstance(a, (bytes, str, list, dict, Ref)) \
         and not isinstance(a, bool)
+    if type(a) is float and type(b) is float:
+        return a + b
     b_str = isinstance(b, (bytes, str, list, dict, Ref)) \
         and not isinstance(b, bool)
     if a_str or b_str:
@@ -183,6 +188,8 @@ def truthy(v) -> bool:
 
 
 def jmul(a, b) -> float:
+    if type(a) is float and type(b) is float:
+        return a * b
     return to_number(a) * to_number(b)
 
 
@@ -211,11 +218,35 @@ def strict_eq(a, b) -> bool:
     return a is b
 
 
+def _floats(m) -> list | None:
+    """The matrix as floats when every cell is a plain number (the common
+    case), else None."""
+    out = []
+    for v in m:
+        t = type(v)
+        if t is float:
+            out.append(v)
+        elif t is int:
+            out.append(float(v))
+        else:
+            return None
+    return out
+
+
 def jtransform(m1, m2) -> list:
     """Util.transform (pdf.worker.js Util.transform) with JS operator
     semantics: the four products sum numerically, the trailing ``+ m1[4]``
     / ``+ m1[5]`` is a JS ``+`` (a raw string slot CONCATENATES — Td onto
     a string-holding e slot gives "105", not 15)."""
+    f1 = _floats(m1)
+    f2 = _floats(m2) if f1 is not None else None
+    if f2 is not None:
+        a, b, c, d, e, f = f1
+        g, h, i, j, k, l_ = f2
+        return [
+            a * g + c * h, b * g + d * h, a * i + c * j, b * i + d * j,
+            a * k + c * l_ + e, b * k + d * l_ + f,
+        ]
     return [
         jmul(m1[0], m2[0]) + jmul(m1[2], m2[1]),
         jmul(m1[1], m2[0]) + jmul(m1[3], m2[1]),
@@ -328,20 +359,45 @@ class JsStop(Exception):
     """FormatError inside getTextContent — page stops, partial kept."""
 
 
-def _glyph_unicode(fm: FontMap, code: int) -> str:
-    """Per-code glyph.unicode through the SAME lookups FontMap.decode
-    uses (table is already ligature-expanded and category-normalized)."""
-    if fm._trans is not None:
-        return fm.table.get(code) or ""
-    if fm.identity or fm.var_ranges:
-        return fm._one(code)
-    return fm.table.get(code, "")
+class NeedsCharsCache(Exception):
+    """A page-local JsVM reached an operand that needs JS coercion (see
+    ``_needs_coercion``): the caller re-runs the page with the
+    document's charsCache."""
 
 
-def _glyph_width(fm: FontMap, code: int) -> float:
-    if fm.identity or fm.var_ranges:
-        return fm.widths.get(fm._cid(code), fm.default_width)
-    return fm.widths.get(code, fm.default_width)
+# op -> how many TRAILING operands feed numeric text-state slots (Tf:
+# only the size; the quote's string operand is checked apart). cm feeds
+# Util.transform, whose e/f products coerce the same way.
+_NUMERIC_SLOTS: dict[bytes, int] = {
+    b"Tc": 1, b"Tw": 1, b"Tz": 1, b"TL": 1, b"Ts": 1, b"Tf": 1,
+    b"Td": 2, b"TD": 2, b"Tm": 6, b"cm": 6,
+}
+
+
+def _is_num(v) -> bool:
+    return isinstance(v, (int, float))
+
+
+def _needs_coercion(op: bytes, args: list) -> bool:
+    """The operator's (arity-checked) operands need pdf.js's raw-store +
+    use-site coercion or touch the charsCache non-transparently: a
+    non-numeric operand in a numeric slot, a non-Name font operand, a
+    negative font size, a non-string chars operand."""
+    n = _NUMERIC_SLOTS.get(op)
+    if n is not None:
+        if not all(_is_num(v) for v in args[-n:]):
+            return True
+        return op == b"Tf" and (
+            not isinstance(args[0], Name) or args[1] < 0
+        )
+    if op == b'"':
+        return not (
+            _is_num(args[0]) and _is_num(args[1])
+            and isinstance(args[2], bytes)
+        )
+    if op == b"Tj" or op == b"'":
+        return not isinstance(args[0], bytes)
+    return False
 
 
 def _is_zwd(u: str) -> bool:
@@ -360,8 +416,13 @@ VERTICAL_SHIFT_RATIO = 0.25
 
 class JsVM:
     """One page's getTextContent run. ``interp`` is the page's
-    _TextInterp (font resolution + doc access are shared with the main
-    engine so both tiers see identical FontMaps)."""
+    _TextInterp (font resolution + doc access are shared with the C
+    path so both tiers see identical FontMaps).
+
+    ``chars_caches`` is the document's per-font charsCache. Without it
+    the run keeps a page-local cache, which plain string shows see as
+    transparent, and raises ``NeedsCharsCache`` at the first operand
+    that needs JS coercion."""
 
     MAX_DEPTH = 8
 
@@ -375,6 +436,7 @@ class JsVM:
         # document, so the cache survives across pages/forms of one
         # document run — the caller threads one dict through every
         # JsVM of a parse_pdf_bytes invocation)
+        self.page_local = chars_caches is None
         self.chars_caches: dict = (
             {} if chars_caches is None else chars_caches
         )
@@ -517,7 +579,11 @@ class JsVM:
         def flush_item() -> None:
             if not item.initialized:
                 return
+            # runBidiTransform (pdf.worker.js:36495-36510):
+            # normalizeUnicode over the item's string, then bidi
             s = "".join(item.str)
+            if _NORM_RE.search(s) is not None:
+                s = _normalize_unicode(s)
             items.append((_bidi_mod.visual(s), item.transform[5]))
             item.initialized = False
             item.str.clear()
@@ -644,11 +710,11 @@ class JsVM:
             for i, code in enumerate(codes):
                 if code in fm.cf_codes:
                     continue  # isInvisibleFormatMark
-                u = _glyph_unicode(fm, code)
+                u = fm.unicode(code)
                 cs = js_add(
                     state.char_spacing, extra if i + 1 == n else 0.0
                 )
-                scaled_dim = _glyph_width(fm, code) * scale
+                scaled_dim = fm.width(code) * scale
                 if u == " ":  # isWhitespace (normalized at table build)
                     cs = js_add(cs, js_add(scaled_dim, state.word_spacing))
                     state.translate_tm(jmul(cs, state.h_scale), 0.0)
@@ -820,6 +886,8 @@ class JsVM:
                         stack.clear()
                         continue
                 args = stack
+                if self.page_local and _needs_coercion(op, args):
+                    raise NeedsCharsCache()
 
                 # ---- operator dispatch (main switch, pdf.worker.js:36830) ----
                 if op == b"q":
@@ -938,6 +1006,13 @@ class JsVM:
                             # (NaN at every use site), gStateFont[0]
                             # undefined/junk loads the fallback font
                             if truthy(gfont):
+                                if self.page_local and not (
+                                    isinstance(gfont, list)
+                                    and len(gfont) >= 2
+                                    and _is_num(gsz := doc.resolve(gfont[1]))
+                                    and gsz >= 0
+                                ):
+                                    raise NeedsCharsCache()
                                 flush_item()
                                 state.font_name = None
                                 if isinstance(gfont, list):

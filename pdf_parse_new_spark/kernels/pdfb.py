@@ -27,6 +27,9 @@ cited by file:line where we mirror a decision):
   (render_page): same-Y items concatenate, |dY| > Y_TOLERANCE breaks a line,
   TJ kerns below -TJ_SPACE_THRESHOLD contribute one space; pages join with a
   leading "\\n\\n" each (lib/pdf-parse.js:129-135 sequential mode)
+- two interpreter tiers: the C lexer + C replay (``kernels/_ctext.c``) and,
+  for every page it cannot take, ``kernels/jsvm.py``, a transcription of
+  pdf.js ``getTextContent`` over raw JS values
 
 Pure-Python + zlib; designed to run inside Arrow-batched ``mapInPandas``
 (one call per *batch*, C-speed inner loops) — same execution shape as
@@ -42,7 +45,6 @@ import zlib
 
 from pdf_parse_new_spark import spec
 from pdf_parse_new_spark.kernels import cinterp, cobj, crypt
-from pdf_parse_new_spark.kernels import bidi as _bidi_mod
 from pdf_parse_new_spark.kernels import cff as _cffmod
 from pdf_parse_new_spark.kernels import encodings as _encdata
 from pdf_parse_new_spark.kernels.pdfk import _RTL_RUN
@@ -1271,7 +1273,7 @@ class FontMap:
     __slots__ = (
         "table", "nbytes", "widths", "default_width", "identity",
         "cid_ranges", "var_ranges", "_trans", "_warr", "_cspec",
-        "cf_codes", "_sp_arr", "_cf_arr", "_zw_arr", "zw_any", "error",
+        "cf_codes", "error",
     )
 
     def __init__(
@@ -1322,55 +1324,7 @@ class FontMap:
             if self._trans is not None
             else None
         )
-        # per-code category fast arrays (1-byte fonts): ws glyphs take
-        # wordSpacing (pdf.js keys Tw on the GLYPH's whitespace
-        # category, not the byte — pdf.worker.js:36693-36697); cf
-        # glyphs contribute nothing at all
-        if nbytes == 1:
-            self._sp_arr = [
-                1 if (i == 0x20 or table.get(i) == " ") else 0
-                for i in range(256)
-            ]
-            self._cf_arr = [
-                1 if i in self.cf_codes else 0 for i in range(256)
-            ]
-            # zero-width NON-space glyphs stall prevTransform (pdf.js
-            # stores it only when scaledDim != 0), so every following
-            # glyph re-reads the stale gap — such items need the
-            # per-glyph compare (incomplete /Widths subset fonts)
-            self._zw_arr = [
-                1
-                if (
-                    self.widths.get(i, default_width) == 0.0
-                    and not self._sp_arr[i] and not self._cf_arr[i]
-                )
-                else 0
-                for i in range(256)
-            ]
-            self.zw_any = any(self._zw_arr)
-        else:
-            self._sp_arr = None
-            self._cf_arr = None
-            self._zw_arr = None
-            self.zw_any = False
         self._cspec: tuple | None | bool = False  # False = not built yet
-
-    def has_zw(self, s: bytes) -> bool:
-        """Any zero-width non-space glyph in the string (the
-        prevTransform stallers)."""
-        return self.zw_any and bool(sum(map(self._zw_arr.__getitem__, s)))
-
-    def nsp(self, s: bytes) -> int:
-        """Count of whitespace-category glyphs (the Tw recipients)."""
-        if self._sp_arr is None:
-            return 0
-        return sum(map(self._sp_arr.__getitem__, s))
-
-    def ncf(self, s: bytes) -> int:
-        """Count of Cf-category glyphs (excluded from charSpacing)."""
-        if self._cf_arr is None or not self.cf_codes:
-            return 0
-        return sum(map(self._cf_arr.__getitem__, s))
 
     def cspec(self) -> tuple | None:
         """Tables for the full-C replay (``pdftext_replay``):
@@ -1378,7 +1332,7 @@ class FontMap:
         None when this font can't take the C path — multi-byte/identity/
         variable-codespace fonts, or a table entry containing an RTL
         character (``bidi.visual`` would reorder the shown string; the C replay
-        doesn't implement UAX#9, so those streams fall back to Python)."""
+        doesn't implement UAX#9, so those pages run through jsvm)."""
         sp = self._cspec
         if sp is False:
             sp = None
@@ -1395,9 +1349,11 @@ class FontMap:
                     # gap pre-join for the whole font)
                     cat_arr = _np.zeros(256, _np.uint8)
                     for i in range(256):
-                        if self._cf_arr[i]:
+                        if i in self.cf_codes:
                             cat_arr[i] = 2
-                        elif self._zw_arr[i]:
+                        elif self._warr[i] == 0.0 and not (
+                            i == 0x20 or entries[i] == " "
+                        ):
                             cat_arr[i] = 3
                     sp = (
                         b"".join(blobs),
@@ -1464,30 +1420,33 @@ class FontMap:
             return out
         return list(s)
 
+    def unicode(self, code: int) -> str:
+        """glyph.unicode of one char code (the table is already
+        ligature-expanded and category-normalized); an unmapped
+        multi-byte code falls back to its CID's char."""
+        if self._trans is not None:
+            return self.table.get(code) or ""
+        if self.nbytes == 2 or self.identity or self.var_ranges:
+            return self._one(code)
+        return self.table.get(code, "")
+
+    def width(self, code: int) -> float:
+        """Glyph width of one char code in 1/1000 em (CID-keyed for
+        identity and embedded-CMap fonts)."""
+        if self.identity or self.var_ranges:
+            code = self._cid(code)
+        return self.widths.get(code, self.default_width)
+
     def decode(self, s: bytes) -> str:
         if self._trans is not None:
             return s.decode("latin-1").translate(self._trans)
-        if self.identity or self.var_ranges:
-            return "".join(self._one(c) for c in self._codes(s))
-        t = self.table
-        if self.nbytes == 2:
-            out = []
-            for c in self._codes(s):
-                u = t.get(c)
-                out.append(u if u else self._fallback_char(c))
-            return "".join(out)
-        return "".join(t.get(c, "") for c in s)
+        return "".join(map(self.unicode, self._codes(s)))
 
     def advance(self, s: bytes) -> float:
         """Total glyph width of the string in 1/1000 em."""
         if self._warr is not None:
             return sum(map(self._warr.__getitem__, s))
-        w, dw = self.widths, self.default_width
-        if self.identity or self.var_ranges:
-            return sum(w.get(self._cid(c), dw) for c in self._codes(s))
-        if self.nbytes == 2:
-            return sum(w.get(c, dw) for c in self._codes(s))
-        return sum(w.get(c, dw) for c in s)
+        return sum(map(self.width, self._codes(s)))
 
 
 def _js_truthy_obj(v) -> bool:
@@ -2103,7 +2062,6 @@ def _walk_pages(doc: Document, node_ref, pages: list, seen: set, resources) -> N
 
 
 _OPERATOR = re.compile(rb"[A-Za-z'\"][A-Za-z0-9*'\"]*")
-_SPACE_RUN = re.compile("  +")
 
 # pdf.js EvaluatorPreprocessor.opMap (pdf.worker.js:38216-38592):
 # op -> (numArgs, variableArgs). The preprocessor (read(),
@@ -3039,38 +2997,22 @@ def _span_name(data: bytes, a: int, b: int) -> str:
 
 
 class _CDefer(Exception):
-    """The C replay hit a construct whose semantics need the exact
-    width-register model (zero-width glyphs, register <= 0 at a
-    decision, Cf-riding kerns, null-anchor whitespace runs) — the
-    caller re-runs the PAGE through the Python implementation."""
-
-
-class _JsCoerce(Exception):
-    """A NON-NUMERIC operand reached a numeric text-state slot
-    (Tc/Tw/Tz/TL/Ts/Td/TD/Tm/Tf-size/quote-spacing). pdf.js stores the
-    raw value and coerces per USE SITE through JS operators — string
-    concat in ``charSpacing + extraSpacing`` ("5"+0 == "50"), ToNumber
-    in every multiply, NaN cascades through positions. The float
-    pipeline can't represent that; _page_text re-runs the page through
-    the faithful kernels/jsvm.py interpreter. Raised BEFORE the op
-    mutates any state (detection precedes execution), but the page
-    restart makes mid-page ordering irrelevant anyway."""
-
-
-# op -> how many TRAILING operands feed numeric slots (Tf: only the
-# size, stack[-1]; the quote's string operand is exempt — slots are
-# stack[-3:-1]). cm feeds stateManager.transform -> Util.transform,
-# whose e/f products poison ctm with NaN / concat strings the same way.
-_COERCE_OPS: dict[bytes, int] = {
-    b"Tc": 1, b"Tw": 1, b"Tz": 1, b"TL": 1, b"Ts": 1, b"Tf": 1,
-    b"Td": 2, b"TD": 2, b"Tm": 6, b"cm": 6,
-}
+    """The C path cannot render this page exactly: a stream it cannot
+    take (see ``_TextInterp.run``) or a width-register-sensitive
+    construct the C replay flags (zero-width glyphs, register <= 0 at a
+    decision, Cf-riding kerns, null-anchor whitespace runs). Raised from
+    any stream depth, forms included; ``_page_text`` re-runs the whole
+    page through kernels/jsvm.py, which cannot share the C line state
+    mid-page."""
 
 
 class _TextInterp:
-    """Content-stream text interpreter. Recurses into Form XObjects on
-    ``Do`` (figure labels live there; pdf.js PartialEvaluator does the same),
-    with a depth cap and a seen-set against self-referential forms."""
+    """Content-stream text interpreter over the C lexer + C replay.
+    Recurses into Form XObjects on ``Do`` (figure labels live there;
+    pdf.js PartialEvaluator does the same), with a depth cap and a
+    seen-set against self-referential forms. A page the C path cannot
+    take raises ``_CDefer`` and runs through kernels/jsvm.py, which
+    shares this object's font resolution."""
 
     MAX_DEPTH = 8
 
@@ -3110,9 +3052,6 @@ class _TextInterp:
         self.glyph_y: float | None = None
         self.last_end_x: float | None = None
         self.force_flush = False
-        # pieces-index where the OPEN item's text begins — flush-time
-        # bidi runs over the joined span (see _close_item_bidi)
-        self._it_start: int | None = None
         # scale_flush: a Tm scale change ran updateAdvanceScale on an
         # open item, zeroing its width — textOrientation becomes
         # Math.sign(0) == 0 at the next glyph's compare, forcing the
@@ -3139,1086 +3078,17 @@ class _TextInterp:
         # STALE across flushes (flushTextContentItem never resets
         # width; only the next ensureTextContentItem does).
         self.item_wreg = 0.0
-        # sign of the open item's RUNNING width — pdf.js multiplies
-        # every cascade threshold by textOrientation = sign(width);
-        # mirrored glyphs (negative textHScale) accumulate negative
-        # width, so an item OPENED under a negative Tz compares with
-        # inverted windows. Like item_size, the compare reads the
-        # STALE value across flushes (ensureTextContentItem re-inits
-        # only at the next append).
-        self.item_osign = 1
         # FontMap a form inherits from its parent stream (see _INH_FONT)
         self._inh_fm: FontMap | None = None
-        # no_c: this page deferred out of the C replay (_CDefer) —
-        # the rerun takes _run_py for every stream, forms included
-        self.no_c = False
         # item_hsize: the item's CROSS-AXIS height — pdf.js's
         # textContentItem.height = hypot(trm[2], trm[3]), captured at
         # ensureTextContentItem and used for the EOL / 0.25
-        # vertical-shift thresholds. Differs from item_size under shear
-        # or non-uniform scales; rotated/skew callers pass hsize, the
-        # quad-0 paths keep the legacy writing-axis value.
+        # vertical-shift thresholds. Differs from item_size under
+        # non-uniform scales.
         self.item_hsize = 0.0
-        # glyph_mat: the prev glyph's row-normalized composed 2x2 (set
-        # by show() from its mat argument). The quad == -1 compare
-        # inverse-rotates each point under its OWN matrix (pdf.js
-        # applyInverseRotation on prevTransform); None falls back to the
-        # raw device point.
-        self.glyph_mat: tuple | None = None
-
-    # fraction of the font size an inter-item x-gap must exceed to count
-    # as a word break — the reference's TRACKING_SPACE_FACTOR /
-    # SPACE_IN_FLOW_MIN_FACTOR (pdf.worker.js:36387,36390): gaps past
-    # 0.102 x fontSize read as spaces ("in Fig", not "inFig")
-    GAP_FRACTION = 0.102
-
-    @staticmethod
-    def _lgap_join(dec: str) -> str:
-        """Letter-gap fake-space join, EXCLUDING the edge real-space
-        runs: pdf.js's compare never runs at a space glyph (the
-        whitespace branch skips it before compareWithLastPosition,
-        pdf.worker.js:36693-36703), so no fake space can land between
-        the last real glyph and a trailing space — the twoLastChars
-        ring sees exactly the real trailing glyphs. A joined trailing
-        2-run would make the pend machinery vanish a space the
-        reference keeps (distilled: '1.50 Tc [(a ) 567 (c)] TJ' reads
-        'a c' in the reference, 'ac' with the naive join). The LEADING
-        run is spared for the mirror-image reason: the gap between a
-        leading space glyph and the first real glyph belongs to the
-        BOUNDARY compare (whose advance spans the space's translate),
-        and a joined leading 2-run reads as ring [' ',' '] — vanishing
-        the boundary space pdf.js's shouldAddWhitepsace keeps when the
-        net advance lands in the tracking band (distilled:
-        '6.5 Tc [(i) 1500] TJ ( i) Tj' reads 'i i' in the reference,
-        'ii' with the joined lead)."""
-        body = dec.lstrip(" ")
-        lead = dec[: len(dec) - len(body)]
-        core = body.rstrip(" ")
-        return lead + " ".join(core) + body[len(core):]
-
-    def show(self, s: str, ty: float, tx: float | None = None,
-             size: float = 0.0, quad: int = 0,
-             dev_x: float | None = None,
-             dev_y: float | None = None,
-             mat: tuple | None = None,
-             dev_w: float = 0.0,
-             hsize: float | None = None,
-             move_prev: bool = True,
-             mirror: bool = False,
-             seg_w: float | None = None) -> bool:
-        """Returns True when glyphs were emitted or position-tracked
-        (the caller then updates last_end_x / prevTransform), False when
-        the item was clipped by the view box.
-
-        (tx, ty) are COMPARE-FRAME pen coordinates; for rotated
-        quadrants (quad 90/180/270) pdf.js swaps/negates device axes so
-        the rotation-0 decision logic applies unchanged
-        (compareWithLastPosition, pdf.worker.js:36551-36565) — the
-        caller passes the already-swapped pen, and this method applies
-        the SAME swap to the stored prev-glyph DEVICE point
-        (prevTransform is re-swapped under the CURRENT rotation each
-        compare). dev_x/dev_y are the raw device coordinates, used for
-        the view-box test and the pdf-parse anchor join (both operate on
-        item.transform[4..5] device values); they default to (tx, ty),
-        which is exact for quad 0."""
-        if not s:
-            return True
-        if dev_y is None:
-            dev_y = ty
-        # whitespace GLYPHS are never emitted by the reference — pdf.js
-        # skips them (category.isWhitespace, pdf.worker.js:36693-36702),
-        # only advancing position and arming saveLastChar(" "); the
-        # space that appears in output is the fake/pending space decided
-        # at the NEXT glyph. We model that as: collapse runs, convert
-        # edge spaces to a pending flag, and materialize per the rules
-        # below.
-        # whitespace-run lengths BEFORE collapsing (multi-glyph runs
-        # behave differently through twoLastChars — see pending_multi)
-        lead_n = len(s) - len(s.lstrip(" "))
-        trail_n = len(s) - len(s.rstrip(" "))
-        sp_total = s.count(" ")
-        s = _SPACE_RUN.sub(" ", s)
-        vb = self.viewbox
-        if vb is not None and (
-            dev_y < vb[1] or dev_y > vb[3]
-            or (
-                # rotated items: the x half of pdf.js's device-space box
-                # test (the quad-0 path gets per-glyph x clipping from
-                # the caller's _clip_x instead). pdf.js's left-edge test
-                # is posX + glyphWidth < vb0 — the glyph's NAIVE +x
-                # extension, regardless of actual writing direction
-                # (rotation-naive in the reference too) — so a leftward
-                # quad-180 run keeps one extra glyph at the edge.
-                quad != 0
-                and dev_x is not None
-                and (dev_x + dev_w < vb[0] or dev_x > vb[2])
-            )
-        ):
-            # outside the view box: glyphs drop BEFORE any state change
-            # (prevTransform untouched — return False so the caller skips
-            # last_end_x); whitespace glyphs still arm the pending space
-            # (the isWhitespace branch runs before the box check;
-            # clipped NON-space glyphs skip saveLastChar, so the saved
-            # run is ALL of the item's space glyphs)
-            if " " in s and (self.line_open or self.glyph_y is not None):
-                if self.pending_space:
-                    self.pending_multi = True
-                else:
-                    self.pending_space = True
-                    self.pending_multi = sp_total >= 2
-            return False
-        if lead_n and (self.line_open or self.glyph_y is not None):
-            if self.pending_space:
-                self.pending_multi = True  # run continues across items
-            else:
-                self.pending_space = True
-                self.pending_multi = lead_n >= 2
-        core = s.strip(" ")
-        if not core:
-            # all-space item: the lead arm above covered the whole run
-            return True  # position advances (caller), prev-glyph y does not
-        fs = size if size > 0 else 0.0
-        ifs = self.item_size if self.item_size > 0 else fs
-        hs = hsize if hsize is not None and hsize > 0 else fs
-        ihs = self.item_hsize if self.item_hsize > 0 else hs
-        # the prev-glyph point is stored in DEVICE coords; re-swap it
-        # under the CURRENT quadrant (pdf.js re-transforms prevTransform
-        # at every compare with the incoming glyph's rotation,
-        # pdf.worker.js:36551-36565)
-        gx, gy = self.last_end_x, self.glyph_y
-        if quad == 90:
-            lx, ly = gy, gx
-        elif quad == 180:
-            lx = None if gx is None else -gx
-            ly = None if gy is None else -gy
-        elif quad == 270:
-            lx = None if gy is None else -gy
-            ly = None if gx is None else -gx
-        elif (
-            quad == -1
-            and self.glyph_mat is not None
-            and gx is not None
-            and gy is not None
-        ):
-            # arbitrary rotation: the prev point inverse-rotates under
-            # its OWN matrix (pdf.js applyInverseRotation with
-            # prevTransform, pdf.worker.js:36566-36567)
-            m0, m1, m2, m3 = self.glyph_mat
-            lx = m0 * gx + m1 * gy
-            ly = m2 * gx + m3 * gy
-        else:
-            lx, ly = gx, gy
-        dyg = None if ly is None else ty - ly
-        adv = tx - lx if tx is not None and lx is not None else None
-        space = False
-        standalone = False  # " " as its own item, anchored at glyph_y
-        flush = self.force_flush
-        self.force_flush = False
-        # pdf.js's equal-position test runs on the RAW device
-        # translations BEFORE any rotation handling (worker:36547 vs
-        # the applyInverseRotation at 36551-36567) — under one matrix
-        # it coincides with adv/dyg == 0, but when the matrix CHANGED
-        # between items (a Tz sign flip under shear: the mirrored pen
-        # returns exactly to prevTransform) only the raw compare
-        # catches it ('1 0.3 0 1 0 0 cm -100 Tz (io) Tj 85 Tz (bet)
-        # Tj' reads 'iobet' in the reference; form_combo hunt base
-        # 28,000,000 seed 295).
-        raw_eq = (
-            dev_x is not None and gx is not None and gy is not None
-            and dev_x == gx and dev_y == gy
-        )
-        shortcut = False
-        if raw_eq or (adv == 0.0 and dyg == 0.0):
-            # pdf.js equal-position shortcut (lastPosX === posX &&
-            # lastPosY === posY, pdf.worker.js:36547-36549): the glyph
-            # appends with NO cascade decisions; an armed scale_flush
-            # stays armed. The RING-driven pend1 space still
-            # materializes at the append itself (saveLastChar,
-            # pdf.worker.js:36373-36378 — independent of the compare),
-            # so a zero-advance space glyph still separates words.
-            # pdf.js RETURNS here — the vertical-shift check below
-            # must not run (visible only through raw_eq, where the
-            # frame-projected dyg is nonzero across a matrix change).
-            shortcut = True
-            space = self.pending_space and not self.pending_multi
-            self.pending_space = False
-            self.pending_multi = False
-        elif self.scale_flush:
-            # textOrientation == sign(0) == 0 — the zero-threshold
-            # cascade (pdf.worker.js:36616-36655): CR-flush when
-            # advanceX < 0; standalone space + flush when advanceX > 0
-            # (the in-flow window [0, 0] is empty); EOL when
-            # |dy| > height; and — the easily-missed case — advanceX
-            # EXACTLY 0 falls through notASpace/trackingSpaceMin with
-            # width += 0: the item simply CONTINUES (a Times 'nu' at
-            # scale 8 ending exactly where the scale-10 glyph starts
-            # merges in the reference).
-            self.scale_flush = False
-            self.pending_space = False
-            self.pending_multi = False
-            if (
-                adv is not None
-                and ifs > 0
-                and not (dyg is not None and abs(dyg) > ihs)
-            ):
-                if adv < 0:
-                    flush = True
-                elif adv > 0:
-                    space = True
-                    standalone = True
-                    flush = True
-                # adv == 0: item continues (vertical-shift check below
-                # still applies)
-            else:
-                flush = True
-        elif dyg is None:
-            # null prevTransform: pdf.js returns true BEFORE any cascade
-            # (pdf.worker.js:36543-36545) — the glyph appends to the
-            # OPEN item even across Td/y jumps (an all-zero-width line
-            # never sets prevTransform, and the next line's glyphs join
-            # its item with no EOL). With no open item this initializes
-            # the first one. The ring-driven pend1 space still applies —
-            # but ONLY when the ring holds a prior saved glyph:
-            # shouldAddWhitepsace reads twoLastChars, and in a FRESH
-            # closure (a Form XObject's first item — the page's ring is
-            # save/restored around Do) the ring is empty, so a leading
-            # space pend does NOT materialize ('6.5 Tc ( gam) Tj ET
-            # /Fm Do' + form '( io ) Tj' reads 'g a mi o' in the
-            # reference; form_combo hunt base 27,000,000).
-            space = (
-                self.pending_space and not self.pending_multi
-                and self.last_char != ""
-            )
-            self.pending_space = False
-            self.pending_multi = False
-        elif self.item_wreg == 0.0 and ifs > 0.0 and adv is not None:
-            # zero width register (an all-zero-width open item, or the
-            # stale width of a flushed one): textOrientation ==
-            # Math.sign(0) == 0 and every cascade threshold degenerates
-            # (pdf.worker.js:36616-36655) — any negative advance takes
-            # the carriage-return band (or appendEOL past 0.5*height;
-            # both flush), any positive advance falls outside
-            # addFakeSpaces' empty [0, 0] in-flow window (flush +
-            # standalone " " at prevTransform, ring reset), and an
-            # advance of EXACTLY zero resets the ring and absorbs
-            # (width += 0): the item continues.
-            ady = abs(dyg)
-            self.pending_space = False
-            self.pending_multi = False
-            if adv < 0:
-                flush = True
-            elif ady > ihs:
-                flush = True
-            elif adv > 0:
-                space = True
-                standalone = True
-                flush = True
-            # adv == 0: item continues (vertical-shift check below
-            # still applies)
-        elif (
-            (self.item_osign < 0 or self.item_wreg < 0.0)
-            and ifs > 0.0 and adv is not None
-        ):
-            # negative-orientation item (opened under a negative Tz,
-            # or whose register went negative through absorbed
-            # tightened-kern advances over zero-width runs):
-            # pdf.js multiplies every threshold by textOrientation =
-            # sign(width). The CR window flips to advanceX < +0.2*fs
-            # (small letter gaps CR-flush into their own items, joined
-            # by the pdf-parse render with no space); the notASpace/
-            # tracking/in-flow windows invert to unreachable for a
-            # positive advance, so anything larger falls through
-            # addFakeSpaces' outside-window path: flush + standalone
-            # " " at prevTransform, ring reset.
-            ady = abs(dyg)
-            self.pending_space = False
-            self.pending_multi = False
-            if adv < 0.2 * ifs:
-                flush = True
-            elif ady > ihs:
-                flush = True
-            else:
-                space = True
-                standalone = True
-                flush = True
-        elif ifs > 0.0 and adv is not None:
-            ady = abs(dyg)
-            if adv < -0.2 * ifs:
-                # carriage return (NEGATIVE_SPACE_FACTOR,
-                # pdf.worker.js:36617-36625): flush, no space
-                self.pending_space = False
-                self.pending_multi = False
-                flush = True
-            elif ady > ihs:
-                # taller than the item height -> appendEOL
-                # (pdf.worker.js:36626-36629)
-                self.pending_space = False
-                self.pending_multi = False
-                flush = True
-            else:
-                # gap space (TRACKING_SPACE/SPACE_IN_FLOW factors,
-                # pdf.worker.js:36633-36651) or a pending whitespace
-                # glyph. notASpace first: an advance <= 0.03*fs runs
-                # resetLastChars (pdf.worker.js:36630-36632), killing
-                # the pending whitespace — a kern pulling the pen back
-                # over a space glyph un-spaces it ("Calibra )567(tion").
-                # Callers pass tx at the FIRST NON-SPACE glyph (leading
-                # space-glyph advances included), matching where pdf.js
-                # runs this compare.
-                if adv <= 0.03 * ifs:
-                    self.pending_space = False
-                    self.pending_multi = False
-                pend1 = self.pending_space and not self.pending_multi
-                space = pend1 or adv > self.GAP_FRACTION * ifs
-                if pend1 and adv <= self.GAP_FRACTION * ifs:
-                    # shouldAddWhitepsace: flush + standalone " "
-                    # (pdf.worker.js:36634-36639)
-                    standalone = True
-                    flush = True
-                elif space:
-                    # in-flow spaces join the OPEN item; a gap past
-                    # 0.6*fs — or no open item (str empty after a
-                    # flush) — pushes a standalone " " at prevTransform
-                    standalone = (
-                        adv > 0.6 * ifs or flush or not self.line_open
-                    )
-                    if not standalone:
-                        # in-flow fake space: pdf.js ALSO absorbs the
-                        # advance into the width register
-                        # (pdf.worker.js:36641-36651)
-                        self.item_wreg += adv
-                else:
-                    # quiet gap (notASpace / tracking absorb): pdf.js
-                    # runs width += advanceX (pdf.worker.js:36641)
-                    self.item_wreg += adv
-                self.pending_space = False
-                self.pending_multi = False
-                if adv > 0.6 * ifs or ady > 0.25 * ihs:
-                    # VERTICAL_SHIFT_RATIO flush (pdf.worker.js:36653)
-                    flush = True
-        else:
-            # degraded info (no size / no x): legacy single-tracker rules
-            if abs(dyg) > spec.Y_TOLERANCE:
-                self.pending_space = False
-                self.pending_multi = False
-                flush = True
-            else:
-                space = self.pending_space and self.line_open
-                self.pending_space = False
-                self.pending_multi = False
-        if (
-            not shortcut
-            and dyg is not None and ihs > 0.0 and abs(dyg) > 0.25 * ihs
-        ):
-            flush = True  # vertical shift flush applies on every
-            # non-shortcut path (pdf.js returns at the shortcut)
-        new_item = flush or not self.line_open
-        if new_item:
-            # the PREVIOUS item is complete: apply the reference's
-            # flush-time bidi over its WHOLE string (runBidiTransform,
-            # pdf.worker.js:36495-36510 — the ratio test numBidi/len <
-            # 0.3 && len > 4 sees the FULL item, so an item joined from
-            # several shows can stay unreordered where a single show
-            # would flip; caught live by the type0 fuzz)
-            self._close_item_bidi()
-        # emission = pdf-parse's item join (lib/pdf-parse.js:27-38):
-        # "\n" when successive item ANCHORS differ by > Y_TOLERANCE;
-        # items on the same anchor line concatenate directly
-        if space and self.last_char != " ":
-            if standalone and self.glyph_y is not None:
-                # standalone whitespace item carries prevTransform
-                # (pushWhitespace, pdf.worker.js:36401-36416)
-                if (
-                    self.last_y is not None
-                    and abs(self.glyph_y - self.last_y) > spec.Y_TOLERANCE
-                ):
-                    self.pieces.append("\n")
-                self.last_y = self.glyph_y
-            self.pieces.append(" ")
-        if new_item:
-            # pdf-parse's item join compares raw DEVICE transform[5]
-            # anchors regardless of rotation (lib/pdf-parse.js:27-38)
-            if (
-                self.last_y is not None
-                and abs(dev_y - self.last_y) > spec.Y_TOLERANCE
-            ):
-                self.pieces.append("\n")
-            self.last_y = dev_y
-            self.item_size = fs
-            self.item_hsize = hs
-            self.item_osign = -1 if mirror else 1
-            # ensureTextContentItem resets the width register; the
-            # append contributes the segment's own glyph widths plus
-            # its internally-absorbed gaps (seg_w). Callers that can't
-            # compute it pass None: derive zero when no emitted glyph
-            # had scaledDim != 0 (the move_prev condition), else a
-            # sign-exact magnitude-approximate stand-in — NEGATIVE for
-            # mirrored items, where pdf.js's width += scaledDim runs
-            # after scaledDim *= textHScale (< 0) flips every appended
-            # width (the multibyte mirrored fallback path).
-            standin = 0.0 if not move_prev else (fs if fs > 0 else 1.0)
-            if mirror:
-                standin = -standin
-            self.item_wreg = seg_w if seg_w is not None else standin
-            self._it_start = len(self.pieces)
-        else:
-            standin = 0.0 if not move_prev else (fs if fs > 0 else 1.0)
-            if mirror:
-                standin = -standin
-            self.item_wreg += seg_w if seg_w is not None else standin
-        self.pieces.append(core)
-        self.line_open = True
-        self.last_char = core[-1]  # ring reads LOGICAL order (pre-bidi)
-        self.pending_space = trail_n > 0
-        self.pending_multi = trail_n >= 2
-        if move_prev:
-            # prevTransform moves only for items that contained a
-            # nonzero-width non-space glyph (pdf.js stores it only when
-            # scaledDim != 0) — the caller passes the same condition it
-            # uses for last_end_x
-            self.glyph_y = dev_y
-            self.glyph_mat = mat
-        return True
-
-    def _close_item_bidi(self) -> None:
-        """Reference-faithful flush-time transforms at ITEM granularity
-        (runBidiTransform, pdf.worker.js:36495-36510): normalizeUnicode
-        over the item's full string (targeted NFKC — a fallback glyph
-        like U+FB3B decomposes to kaf+dagesh HERE, not at decode), then
-        bidi (pinned to node output by tests/test_bidi_reference.py).
-        Items with neither are identity, so plain LTR pages never pay."""
-        st = self._it_start
-        self._it_start = None
-        if st is None or st >= len(self.pieces):
-            return
-        joined = "".join(self.pieces[st:])
-        changed = False
-        if _NORM_RE.search(joined) is not None:
-            joined = _normalize_unicode(joined)
-            changed = True
-        if _RTL_RUN.search(joined) is not None:
-            joined = _bidi_mod.visual(joined)
-            changed = True
-        if changed:
-            del self.pieces[st:]
-            self.pieces.append(joined)
 
     def text(self) -> str:
-        self._close_item_bidi()
         return "".join(self.pieces)
-
-
-    def _clip_x(self, fm: FontMap, item: bytes, dec: str, start_x: float,
-                size: float, sxz: float, tc: float, tw: float) -> str:
-        """Per-glyph x view-box clip (pdf.js runs the box test PER
-        GLYPH): glyphs whose pen x falls outside [vb0, vb2] vanish while
-        position still advances, so an item straddling the page edge
-        keeps only its visible part. Space glyphs are exempt (whitespace
-        branch precedes the box test). Gated to the rare straddle case
-        by the caller; 1-byte fonts only (the C path mirrors this).
-        Returns (visible_dec, prev_x, n_clipped, last_clipped,
-        first_vis_x) — a CLIPPED glyph advances by its width ONLY
-        (pdf.js's reject path translates scaledDim and skips the
-        charSpacing translate, pdf.worker.js:36705-36711), so the
-        caller subtracts n_clipped * tc from the item advance;
-        ``last_clipped`` is True when the item's FINAL glyph was
-        rejected — a TJ kern riding that glyph as extraSpacing is then
-        dropped with it. ``first_vis_x`` is the first VISIBLE non-space
-        glyph's pen x — the position where pdf.js's compare actually
-        runs: leading rejected glyphs advance the pen width-only with
-        NO compare, so an item whose head straddles the left edge
-        anchors at its first surviving glyph, not at the item start
-        (distilled: '-50 Tz (epsi) Tj 200 Tz (delta) Tj' reads
-        'ep elta' in the reference — the advance at 'e' is +7.51 from
-        the surviving glyph, not -3.61 from the clipped 'd')."""
-        vb = self.viewbox
-        out = []
-        x = start_x
-        prev: float | None = None
-        nclip = 0
-        last_clip = False
-        fvx: float | None = None
-        w, dw = fm.widths, fm.default_width
-        cf = fm._cf_arr
-        for i, code in enumerate(item):
-            if cf is not None and cf[code]:
-                continue  # Cf: invisible, zero advance (worker:36684)
-            ch = dec[i] if i < len(dec) else ""
-            gw = w.get(code, dw) / 1000.0 * size * sxz
-            sp = ch == " " or code == 0x20
-            # pdf.js: posX + glyphWidth < vb0 (left straddlers stay),
-            # posX > vb2 (pdf.worker.js:36529-36536). glyphWidth there
-            # is scaledDim BEFORE the textHScale multiply (and before
-            # any text-matrix scale) — raw width x fontSize only
-            gw_raw = w.get(code, dw) / 1000.0 * size
-            if sp or (x + gw_raw >= vb[0] and x <= vb[2]):
-                out.append(ch)
-                last_clip = False
-                if not sp and fvx is None:
-                    fvx = x
-                if not sp and gw:
-                    # prevTransform follows EMITTED glyphs with NONZERO
-                    # width (pdf.js stores it only when scaledDim != 0)
-                    prev = x + gw
-                x += gw + (tc + (tw if sp else 0.0)) * sxz
-            else:
-                nclip += 1
-                last_clip = True
-                x += gw  # clipped: width only, no charSpacing
-        return "".join(out), prev, nclip, last_clip, fvx
-
-
-    def _first_x(self, fm: FontMap, item: bytes, dec: str, start_x: float,
-                 size: float, sxz: float, tc: float, tw: float
-                 ) -> float | None:
-        """The FIRST NON-SPACE glyph's pen x — where pdf.js runs
-        compareWithLastPosition for this item (leading space glyphs only
-        advance the pen by width+charSpacing+wordSpacing and arm the
-        pending space, pdf.worker.js:36693-36702). None for all-space
-        items. 1-byte fonts; multi-byte callers keep the item start."""
-        n = len(item)
-        aligned = len(dec) == n
-        cf = fm._cf_arr
-        x = start_x
-        for k in range(n):
-            code = item[k]
-            if cf is not None and cf[code]:
-                continue  # Cf: invisible, zero advance (worker:36684)
-            sp = code == 0x20 or (aligned and dec[k] == " ") or (
-                fm._sp_arr is not None and fm._sp_arr[code]
-            )
-            if not sp:
-                return x
-            x += (
-                fm.widths.get(code, fm.default_width) / 1000.0 * size
-                + tc + tw
-            ) * sxz
-        return None
-
-    def _prev_x(self, fm: FontMap, item: bytes, dec: str, start_x: float,
-                size: float, sxz: float, tc: float, tw: float,
-                adv_full: float | None = None) -> float | None:
-        """pdf.js's prevTransform x after this item: the pen right after
-        the last NON-SPACE glyph's width, before its charSpacing
-        (pdf.worker.js:36693-36727). Space glyphs advance position
-        without touching it; an all-space item returns None (the caller
-        leaves last_end_x alone). 1-byte fonts; multi-byte callers keep
-        the whole-advance approximation.
-
-        ``adv_full``: the caller's own closed-form item advance (the
-        exact float it adds to cur_x). pdf.js's prevTransform and the
-        next show's posX are the SAME accumulated translate chain, so
-        the pen returns to prevTransform EXACTLY whenever the tail
-        translates cancel analytically — its equal-position shortcut
-        then fires ACROSS items ('-3 Tc (  zet ) Tj (kap) Tj' reads
-        'zet kap': the trailing space's +w and the two charSpacing
-        translates cancel; combo hunt base 22,000,000 seed 17).
-        Closed-PREFIX arithmetic leaves ulp dust there (the prefix and
-        full-item chains group differently), so when adv_full is given
-        prevTransform anchors to it instead: prev = (start + adv_full)
-        - tail, making the next compare's adv = tx - prev round-trip
-        the analytic tail (exactly 0 at cancellation). Known residual:
-        pdf.js's own chain can fail to round-trip at magnitude
-        boundaries (x crossing a power of 2) where it would glue —
-        ulp-rare, the documented knife-edge family."""
-        n = len(item)
-        aligned = len(dec) == n
-        sp_arr, cf = fm._sp_arr, fm._cf_arr
-        k = n - 1
-        while k >= 0 and (
-            item[k] == 0x20 or (aligned and dec[k] == " ")
-            or (sp_arr is not None and sp_arr[item[k]])
-            or (cf is not None and cf[item[k]])
-            # ZERO-width glyphs never move prevTransform — pdf.js only
-            # stores it when scaledDim is nonzero (`if (scaledDim)
-            # textChunk.prevTransform = ...`); incomplete /Widths
-            # subsets leave it stuck and every following glyph reads
-            # the stale gap
-            or fm.widths.get(item[k], fm.default_width) == 0.0
-        ):
-            k -= 1
-        if k < 0:
-            return None
-        if adv_full is not None:
-            # tail beyond prevTransform: the last kept glyph's own
-            # charSpacing, then each trailing glyph's translate in the
-            # walk's add order (space: one summed ktc+(w*kx+ktw);
-            # zero-width non-space: charSpacing only; Cf: skipped)
-            kx = size / 1000.0 * sxz
-            ktc = tc * sxz
-            ktw = tw * sxz
-            tail = ktc
-            cf = fm._cf_arr
-            sp_arr = fm._sp_arr
-            for j in range(k + 1, n):
-                code = item[j]
-                if cf is not None and cf[code]:
-                    continue
-                if (
-                    code == 0x20 or (aligned and dec[j] == " ")
-                    or (sp_arr is not None and sp_arr[code])
-                ):
-                    tail += ktc + (
-                        fm.widths.get(code, fm.default_width) * kx + ktw
-                    )
-                else:
-                    tail += ktc  # zero-width non-space (w*kx == 0.0)
-            return (start_x + adv_full) - tail
-        prefix = item[: k + 1]
-        # tc applies to the k PRIOR glyphs minus the invisible Cf ones
-        # (pdf.js `continue`s before charSpacing, worker:36684)
-        adv = (
-            fm.advance(prefix) / 1000.0 * size
-            + (k - fm.ncf(prefix)) * tc
-            + fm.nsp(prefix) * tw
-        ) * sxz
-        return start_x + adv
-
-    # splits per item past this are treated as in-flow (the C twin
-    # carries a fixed-size run record array; both paths cap identically)
-    MAX_SEG_SPLITS = 64
-
-    def _big_tc(self, tc: float, sxz: float, fs: float) -> bool:
-        """charSpacing past spaceInFlowMax (0.6 * fontSize) under
-        EITHER candidate item size: pdf.js flushes + pushes a
-        standalone " " at prevTransform between every glyph pair
-        (pdf.worker.js:36641-36651) — the seg-split trigger for
-        big-Tc adjacency splitting."""
-        if tc <= 0.0:
-            return False
-        ktc = tc * sxz
-        stale = self.item_size if self.item_size > 0 else fs
-        return ktc > 0.6 * stale or ktc > 0.6 * fs
-
-    def _inline_wcontrib(self, fm, item: bytes, dec: str, adv: float,
-                         tc: float, tw: float, sxz: float,
-                         kx: float, anchored: bool = True) -> float:
-        """WIDTH-REGISTER contribution of an element appended on the
-        inline (no-split) path: appended glyph widths + absorbed
-        intra-element gaps, accumulated ADDITIVELY the way pdf.js does
-        (width += scaledDim per glyph, width += advanceX per absorbed
-        compare) so an all-zero-width element contributes an EXACT
-        zero — a subtractive formula leaves float dust that flips
-        textOrientation. Edge whitespace runs are excluded (a leading
-        run belongs to the deferred boundary compare's gap, a trailing
-        run to the next compare's); internal in-flow runs stay
-        included (pdf.worker.js:36641-36651)."""
-        if not dec.strip(" "):
-            return 0.0
-        if fm.nbytes != 1 or len(dec) != len(item) - fm.ncf(item):
-            # multi-byte / ligature decodes: advance-based estimate
-            return adv - tc * sxz
-        widths, dw = fm.widths, fm.default_width
-        cf = fm._cf_arr
-        ktcw = (tc + tw) * sxz
-        ktc = tc * sxz
-        contrib = 0.0
-        pend_gap = None  # gap since the last real glyph; None = lead
-        di = 0
-        for code in item:
-            if cf is not None and cf[code]:
-                continue  # Cf: invisible, zero advance
-            ch = dec[di]
-            di += 1
-            w = widths.get(code, dw)
-            if code == 0x20 or ch == " ":
-                if pend_gap is not None:
-                    pend_gap += w * kx + ktcw
-            else:
-                if (
-                    pend_gap is not None and pend_gap != 0.0
-                    and anchored
-                ):
-                    # absorbed quiet/in-flow gap — only when a
-                    # prevTransform anchors the compare (pdf.js
-                    # early-returns on a null prev: no absorb)
-                    contrib += pend_gap
-                contrib += w * kx
-                pend_gap = ktc
-                if w:
-                    anchored = True
-        return contrib
-
-    def _tj_boundary_stale(self, tx: float | None, dev_y: float,
-                           fs: float, hs: float | None) -> float:
-        """The width register a deferred TJ-group boundary compare
-        leaves behind: 0.0 when the compare will FLUSH (the next
-        ensureTextContentItem resets the register), item_wreg + gap
-        when it absorbs, item_wreg untouched when it never runs (null
-        prevTransform / equal position). Mirrors show()'s flush
-        outcomes — used ONLY for the live mid-TJ register model, never
-        for emission."""
-        if self.force_flush or not self.line_open:
-            return 0.0
-        if self.scale_flush:
-            return 0.0  # register zeroed by updateAdvanceScale
-        gx, gy = self.last_end_x, self.glyph_y
-        if gx is None or gy is None or tx is None:
-            return self.item_wreg  # null prev: appends, no compare
-        adv = tx - gx
-        dyg = dev_y - gy
-        if adv == 0.0 and dyg == 0.0:
-            return self.item_wreg  # equal-position shortcut
-        ifs = self.item_size if self.item_size > 0 else fs
-        ihs = self.item_hsize if self.item_hsize > 0 else (
-            hs if hs is not None and hs > 0 else fs
-        )
-        if ifs <= 0.0:
-            return 0.0 if abs(dyg) > spec.Y_TOLERANCE else self.item_wreg
-        if ihs > 0.0 and abs(dyg) > 0.25 * ihs:
-            return 0.0  # vertical-shift flush
-        if self.item_wreg == 0.0:
-            return 0.0  # flush at any nonzero gap; 0 absorb keeps 0
-        if self.item_osign < 0 or self.item_wreg < 0.0:
-            return 0.0  # inverted windows: every nonzero gap flushes
-        if adv < -0.2 * ifs or adv > 0.6 * ifs:
-            return 0.0  # CR / outside-window flush
-        pend1 = self.pending_space and not self.pending_multi
-        if pend1 and 0.03 * ifs < adv <= self.GAP_FRACTION * ifs:
-            return 0.0  # shouldAddWhitepsace standalone flush
-        return self.item_wreg + adv  # absorbed (width += advanceX)
-
-    def _seg_split(self, fm: FontMap, item: bytes, dec: str, start_x: float,
-                   size: float, sxz: float, tc: float, tw: float,
-                   fs: float, prev0: float | None = None,
-                   fallback_prev: float | None = None,
-                   zw_mode: bool = False,
-                   reg0: float | None = None):
-        """Per-glyph item splitting at quadrant 0 (VERDICT r3 missing #1).
-
-        pdf.js runs compareWithLastPosition at every glyph
-        (pdf.worker.js:36614-36655), so an INTERNAL space run whose
-        advance leaves the in-flow fake-space window
-        ((0.102, 0.6] x item font size) diverges from inline emission:
-        notASpace (<= 0.03) kills the run, a single saved space within
-        trackingSpaceMin goes standalone (shouldAddWhitepsace -> flush +
-        pushWhitespace at prevTransform), and a run past spaceInFlowMax
-        flushes and pushes a standalone " " anchored at prevTransform —
-        both standalone cases move the pdf-parse anchor (last_y) to the
-        PREVIOUS GLYPH's device y, which differs from the open item's
-        anchor whenever Ts rise toggled mid-line (or sub-tolerance y
-        drift accumulated). Splitting the item at exactly those runs —
-        the run riding as the next segment's LEADING spaces — reduces
-        every case to the existing inter-item pend mechanism in show().
-
-        Returns None when every internal run is strictly in-flow under
-        BOTH candidate item sizes (the open item's stale size and this
-        item's own — whichever show() ends up using, inline emission is
-        then exact), else ``(segments, nclip, lclip)`` with segments a
-        list of ``(visible_text, first_x, prev_end_x)``.
-        1-byte aligned decodes only; callers keep the inline path for
-        multi-byte/ligature items.
-
-        Box-rejected glyphs are handled HERE (pdf.js's box test sits at
-        the TOP of compareWithLastPosition, pdf.worker.js:36529-36536 —
-        a rejected glyph returns false before ANY cascade decision, so
-        it never closes a space run, never anchors a segment, never
-        moves prevTransform, and advances by width only, no
-        charSpacing). ``nclip`` is the rejected-glyph count (the caller
-        subtracts nclip*tc from the item advance), ``lclip`` True when
-        the item's FINAL glyph was rejected (a TJ kern riding it as
-        extraSpacing drops with it). Space glyphs are exempt (their
-        branch precedes the box test).
-
-        ``prev0``: TJ callers pass the buffered run's prevTransform x
-        (tj_prev) so a LEADING space run of this element — a run that
-        started as the buffer's trailing spaces, possibly kern-adjusted
-        in between — counts as internal and can split at index 0 (the
-        empty first segment then flushes the buffered group)."""
-        n = len(item)
-        stale = self.item_size if self.item_size > 0 else fs
-        if stale == fs:
-            cands = (fs,)
-        else:
-            cands = (stale, fs)
-        widths, dw = fm.widths, fm.default_width
-        # position arithmetic mirrors the C twin's PUTCODE exactly
-        # (px = start_x + wsum*kx + (glyphs-clipped)*ktc + spaces*ktw)
-        # so split decisions stay float-identical across C and Python
-        kx = size / 1000.0 * sxz
-        ktc = tc * sxz
-        ktw = tw * sxz
-        vb = self.viewbox
-        # pdf.js's left-edge box test adds scaledDim BEFORE the
-        # textHScale multiply: raw width x fontSize only
-        kraw = size / 1000.0
-        wsum = 0.0
-        g = 0
-        c = 0
-        nsp = 0
-        nclip = 0
-        lclip = False
-        prev_end: float | None = prev0
-        cur_seg: list[str] = []
-        run_buf: list[str] = []
-        run_open = False
-        run_prev_end = 0.0
-        out: list | None = None
-        seg_first: float | None = None
-        # charSpacing below the carriage-return window (advanceX == tc
-        # < -0.2 * fontSize, pdf.worker.js:36617-36625) OR past the
-        # standalone-space window (tc > 0.6 * fontSize, spaceInFlowMax,
-        # pdf.worker.js:36641-36651) flushes between EVERY glyph pair:
-        # split at each adjacency and let show()'s cascade take the
-        # CR / standalone-" "-at-prevTransform path (an adjacency split
-        # is output-neutral whenever the cascade would NOT flush)
-        per_glyph = any(ktc < -0.2 * c_ or ktc > 0.6 * c_ for c_ in cands)
-        # reg0: the caller's live WIDTH REGISTER (pdf.js
-        # textContentItem.width) at this item's first glyph.
-        # textOrientation = sign(register) multiplies every band
-        # threshold, so while the register is <= 0 every space run and
-        # every nonzero glyph adjacency splits (show()'s zero/negative
-        # register branches decide flush / CR / standalone " "
-        # exactly). The walk evolves it like pdf.js does: appended
-        # glyph widths grow it, absorbed quiet/in-flow gaps add
-        # (possibly negative) advances, and each split re-zeroes it
-        # (the new segment re-runs ensureTextContentItem). None = a
-        # positive stand-in (callers without the live value).
-        reg_live = reg0 if reg0 is not None else (fs if fs > 0 else 1.0)
-        if reg_live <= 0.0 and prev_end is None:
-            prev_end = fallback_prev
-        if zw_mode:
-            # zero-width glyphs stall prevTransform, so every adjacency
-            # can read a stale gap: run the compare per glyph for the
-            # WHOLE item (pdf.js always does), show() re-deciding each
-            # pair exactly — the caller disables the letter-gap
-            # pre-join (those spaces emerge from the cascade instead).
-            # Cross-item staleness: seed the anchor from the caller's
-            # prevTransform mirror.
-            per_glyph = True
-            if prev_end is None:
-                prev_end = fallback_prev
-        cf = fm._cf_arr
-        di = 0  # dec index: Cf codes decode to "" and occupy no slot
-        seg_hadw = False  # current segment appended a width!=0 glyph
-        seg_wacc = 0.0  # current segment's register contribution
-        rewrote = False  # a null-anchor run was dropped (text changed)
-        pen = start_x  # accumulative pen (pdf.js translate chain)
-        for k in range(n):
-            code = item[k]
-            if cf is not None and cf[code]:
-                continue  # Cf: invisible, zero advance (worker:36684)
-            ch = dec[di]
-            di += 1
-            sp = code == 0x20 or ch == " "
-            # ACCUMULATIVE pen, in pdf.js's per-glyph add order (width
-            # translate, then charSpacing translate; spaces one summed
-            # translate) — NOT the closed-form sum: pdf.js's
-            # equal-position shortcut (lastPosX === posX) fires when
-            # tiny +/- increments round-trip at the pen's magnitude
-            # (distilled: '-1.5 Tc (del zet)' — the -1.5 and +1.5
-            # translates cancel exactly at x~211), and a closed-form
-            # px groups the terms differently, leaving ulp dust that
-            # misses the shortcut and kills the ring space.
-            px = pen
-            w = widths.get(code, dw)
-            if not sp and vb is not None and (
-                px + w * kraw < vb[0] or px > vb[2]
-            ):
-                # box-rejected: width-only advance, no cascade, run
-                # stays open, prevTransform/anchors untouched
-                nclip += 1
-                lclip = True
-                c += 1
-                wsum += w
-                g += 1
-                pen = px + w * kx
-                continue
-            # a kept glyph right after a reject: pdf.js's compare sees
-            # the skipped width as advanceX vs the unmoved prevTransform
-            # — split the adjacency and let show()'s cascade take the
-            # notASpace / in-flow " " / standalone / CR band exactly
-            # (an adjacency split is output-neutral when the cascade
-            # would do nothing)
-            prev_rej = lclip
-            lclip = False
-            if sp:
-                if not run_open and prev_end is not None:
-                    run_open = True
-                    run_prev_end = prev_end
-                if run_open:
-                    run_buf.append(ch)
-                elif cur_seg or seg_first is not None:
-                    # INTERNAL run with a NULL anchor (no prevTransform
-                    # anywhere — an all-zero-width prefix): pdf.js's
-                    # compare at the next glyph early-returns before
-                    # any band, so the run's fate is purely ring-driven
-                    # (saveLastChar, pdf.worker.js:36373-36378): ONE
-                    # whitespace glyph materializes " " at the append,
-                    # a run of 2+ leaves the ring [' ',' '] and vanishes
-                    run_open = True
-                    run_prev_end = None  # marks the null-anchor run
-                    run_buf.append(ch)
-                else:
-                    cur_seg.append(ch)
-            else:
-                if run_open and run_prev_end is None:
-                    # null-anchor internal run (see above): ring-driven
-                    # fate — exactly one saved space materializes, a
-                    # multi-glyph run leaves the ring at [' ',' ']
-                    if len(run_buf) == 1:
-                        cur_seg.append(" ")
-                    else:
-                        rewrote = True  # text changed: must return segs
-                    run_buf = []
-                    run_open = False
-                elif run_open:
-                    a = px - run_prev_end
-                    if (
-                        (
-                            # register <= 0: the in-flow window is
-                            # empty (orientation 0) or inverted
-                            # (orientation -1) — every run splits
-                            reg_live <= 0.0
-                            or not all(
-                                0.102 * c_ < a <= 0.6 * c_ for c_ in cands
-                            )
-                        )
-                        and (out is None or len(out) < self.MAX_SEG_SPLITS)
-                    ):
-                        if out is None:
-                            out = []
-                        out.append(
-                            ("".join(cur_seg), seg_first, run_prev_end,
-                             seg_hadw, seg_wacc)
-                        )
-                        cur_seg = run_buf
-                        seg_first = None
-                        seg_hadw = False
-                        seg_wacc = 0.0
-                        reg_live = 0.0  # new item: register re-zeroes
-                    else:
-                        # in-flow run: pdf.js absorbs the advance into
-                        # the width register (width += advanceX)
-                        cur_seg.extend(run_buf)
-                        reg_live += a
-                        seg_wacc += a
-                    run_buf = []
-                    run_open = False
-                elif (
-                    (
-                        per_glyph or prev_rej
-                        # register <= 0: any nonzero adjacency gap
-                        # flushes (equal positions take pdf.js's
-                        # shortcut — no decision, no split needed)
-                        or (reg_live <= 0.0 and px != prev_end)
-                    )
-                    and prev_end is not None
-                    and seg_first is not None
-                    and (out is None or len(out) < self.MAX_SEG_SPLITS)
-                ):
-                    if out is None:
-                        out = []
-                    out.append(
-                        ("".join(cur_seg), seg_first, prev_end,
-                         seg_hadw, seg_wacc)
-                    )
-                    cur_seg = []
-                    seg_first = None
-                    seg_hadw = False
-                    seg_wacc = 0.0
-                    reg_live = 0.0  # new item: register re-zeroes
-                elif (
-                    prev_end is not None and px != prev_end
-                    and seg_first is not None
-                ):
-                    # quiet INTRA-segment adjacency gap (charSpacing
-                    # within the absorb windows): pdf.js width +=
-                    # advanceX. The item-boundary compare (seg_first
-                    # None) belongs to the caller — its kern band /
-                    # show()-time cascade decides AND absorbs it.
-                    reg_live += px - prev_end
-                    seg_wacc += px - prev_end
-                if seg_first is None:
-                    seg_first = px
-                if w:
-                    # zero-width glyphs never move prevTransform
-                    prev_end = px + w * kx
-                    seg_hadw = True
-                reg_live += w * kx
-                seg_wacc += w * kx
-                cur_seg.append(ch)
-            wsum += w
-            g += 1
-            if sp:
-                nsp += 1  # Tw rides every whitespace-category glyph
-                # whitespace glyph: ONE summed translate of
-                # charSpacing + scaledDim + wordSpacing
-                # (pdf.worker.js:36695-36697)
-                pen = px + (ktc + (w * kx + ktw))
-            else:
-                # real glyph: width translate, then charSpacing
-                # translate (pdf.worker.js:36718/36733) — two adds
-                pen = (px + w * kx) + ktc
-        if out is None and not rewrote and not (
-            nclip and len(dec) != len(item)
-        ):
-            # no split and no text change — EXCEPT when glyphs were
-            # box-rejected on a Cf-bearing item: the caller's inline
-            # _clip_x fallback is gated on len(dec) == len(item), so a
-            # None return would lose the clip entirely (pdf.js rejects
-            # at the TOP of compareWithLastPosition regardless of
-            # prevTransform — an off-page tail after a zero-width run
-            # must still vanish; distilled from the all-zero-width
-            # hunt at seed 79e6+11)
-            return None
-        if out is None:
-            out = []
-        cur_seg.extend(run_buf)
-        out.append(
-            ("".join(cur_seg), seg_first, prev_end, seg_hadw, seg_wacc)
-        )
-        return out, nclip, lclip
-
-    @staticmethod
-    def _coalesce_tj(arr):
-        """pdf.js joins adjacent TJ string elements into ONE chars
-        string (showSpacedTextBuffer.join(""), pdf.worker.js:
-        36890-36909) and skips zero kerns entirely (``item !== 0``), so
-        an element boundary with no nonzero kern between is plain glyph
-        adjacency — cross-boundary space runs, fake-space windows,
-        notASpace kills and per-glyph CR splits all follow from the
-        intra-item machinery. Returns ``[(joined_bytes, kern), ...]``
-        with ``kern`` in raw TJ units (None only on the final group).
-        CONSECUTIVE kerns merge into one: pdf.js evaluates the gap once,
-        at the next group's first glyph, with the total translate —
-        and each kern processed with an EMPTY buffer runs
-        buildTextContentItem's !chars branch, which applies charSpacing
-        IN ADDITION to the kern (pdf.worker.js:36663-36675); ``n_tc``
-        counts those."""
-        groups: list = []
-        pend: list[bytes] = []
-        kern_open = False
-        for it in arr:
-            if isinstance(it, bytes):
-                pend.append(it)
-            elif (isinstance(it, (int, float))
-                  and not isinstance(it, bool) and it != 0):
-                # booleans/Names/Cmds/refs are neither string nor number
-                # to showSpacedText — skipped (pdf.worker.js:36890-36902)
-                # decide on the JOINED bytes, not the element list: a
-                # pend of only empty () elements joins to b"" and the
-                # kern runs pdf.js's !chars branch (charSpacing applies,
-                # pdf.worker.js:36663-36675) — it merges with the open
-                # kern like any other empty-buffer kern
-                joined = b"".join(pend)
-                pend = []
-                if joined:
-                    # 4th field: the first kern's value — extraSpacing
-                    # riding the joined string's LAST glyph, dropped
-                    # when that glyph is box-rejected (pdf.js's reject
-                    # path translates scaledDim only,
-                    # pdf.worker.js:36704-36711)
-                    groups.append([joined, float(it), 0, float(it)])
-                    kern_open = True
-                elif kern_open:
-                    groups[-1][1] += float(it)
-                    groups[-1][2] += 1
-                else:
-                    groups.append([b"", float(it), 1, 0.0])
-                    kern_open = True
-        groups.append([b"".join(pend), None, 0, 0.0])
-        return groups
 
     @staticmethod
     def _tj_rewrite_needed(ev, data) -> bool:
@@ -4271,8 +3141,10 @@ class _TextInterp:
 
     @staticmethod
     def _coalesce_tj_events(evl, data, chunks):
-        """Event-list twin of :meth:`_coalesce_tj`: rewrite each TJ
-        region so a run of K_TJSTR events becomes ONE synthetic event
+        """pdf.js joins adjacent TJ string elements into ONE chars
+        string (showSpacedTextBuffer.join(""), pdf.worker.js:
+        36890-36909) and skips zero kerns (``item !== 0``). Rewrite each
+        TJ region so a run of K_TJSTR events becomes ONE synthetic event
         (flag 3, ``a``/``b`` = offsets into the scratch blob
         ``b"".join(chunks)``), zero kerns vanish, CONSECUTIVE kerns
         merge into one row (f0 = summed value; the gap is evaluated
@@ -4373,9 +3245,9 @@ class _TextInterp:
     # from its parent stream (pdf.js clones the whole eval state into the
     # form run, paintXObject/stateManager — the form's shows use the
     # page's current font when it sets none of its own). _do_xobject
-    # prepends synthetic `Tc/Tw/Tz/Tf` ops under this name so both the C
-    # replay and _run_py consume the inherited state through their normal
-    # operator machinery.
+    # prepends synthetic `Tc/Tw/Tz/Tf` ops under this name so the C
+    # replay consumes the inherited state through its normal operator
+    # machinery.
     _INH_FONT = "pdfb-inherited-font"
 
     def _font_for(self, fonts_dict, name: str) -> FontMap:
@@ -4442,30 +3314,36 @@ class _TextInterp:
     def run(self, data: bytes, resources, depth: int = 0,
             seen: frozenset = frozenset(),
             lm_seed: tuple | None = None) -> None:
-        """Interpret one content stream. Dispatches to the C lexer + C
-        replay when the compiled extension is available; the pure-Python
-        interpreter ``_run_py`` is the reference implementation and the
-        fallback for every stream the C replay cannot take (equivalence
-        asserted by tests/test_ctext.py). Pages re-run after a
-        ``_CDefer`` (``no_c``) go straight to ``_run_py``, as do streams
-        that can set the font through an ExtGState (`gs` with a /Font
-        entry — pdf.js setGState -> handleSetFont): the C lexer cannot
-        resolve resources, and the pattern is rare."""
-        if cinterp.AVAILABLE and not self.no_c and not (
+        """Interpret one content stream through the C lexer + C replay.
+        Raises ``_CDefer`` when the stream needs the page to run through
+        ``kernels/jsvm.py`` instead: no compiled extension, an
+        ExtGState that can set the font (`gs` with a /Font entry —
+        pdf.js setGState -> handleSetFont; the C lexer cannot resolve
+        resources), pdf.js's operand stash engaging, a rotated or
+        skewed matrix, or a font ``_c_plan`` cannot take."""
+        if not cinterp.AVAILABLE or (
             b"gs" in data and self._has_gs_font(resources)
         ):
-            try:
-                return self._run_events(
-                    data, resources, depth, seen, lm_seed
-                )
-            except cinterp.PreprocessorEngaged:
-                # the C lexer raises BEFORE building any event (no
-                # state was touched): re-run THIS stream through the
-                # Python interpreter, which implements pdf.js's full
-                # nonProcessedArgs stash (operand over/underflow,
-                # 34-operand page stop)
-                return self._run_py(data, resources, depth, seen, lm_seed)
-        return self._run_py(data, resources, depth, seen, lm_seed)
+            raise _CDefer()
+        try:
+            ev = cinterp.interpret(data, lm_seed)
+        except cinterp.PreprocessorEngaged:
+            raise _CDefer() from None
+        if (ev["kind"] == cinterp.K_ROT).any():
+            # the flattened events carry only translate+scale: a
+            # rotated/skewed matrix needs the full-matrix compare
+            raise _CDefer()
+        doc = self.doc
+        res = doc.resolve(resources) or {}
+        fonts_dict = doc.resolve(res.get("Font")) if isinstance(res, dict) else {}
+        xobjs = doc.resolve(res.get("XObject")) if isinstance(res, dict) else {}
+        scratch = b""
+        if self._tj_rewrite_needed(ev, data):
+            ev, scratch = self._tj_rewrite(ev, data)
+        plan = self._c_plan(ev, data, fonts_dict)
+        if plan is None:
+            raise _CDefer()
+        self._replay_c(data, ev, plan, xobjs, res, depth, seen, scratch)
 
     def _has_gs_font(self, resources) -> bool:
         """True when any ExtGState entry of ``resources`` carries /Font
@@ -4490,7 +3368,7 @@ class _TextInterp:
         blob + offsets/widths per font index, and a per-event font index
         for every K_FONT event. None when any font used by the stream
         can't take the C path (multi-byte, RTL-capable, failed build) —
-        the caller then runs the stream through ``_run_py``."""
+        the page then runs through jsvm."""
         font_idx = _np.full(len(ev), -1, _np.int32)
         specs = [_ASCII_FM.cspec()]
         # FontMap per spec index (0 = the pre-Tf ASCII default -> no
@@ -4549,8 +3427,9 @@ class _TextInterp:
                   depth: int, seen: frozenset, scratch: bytes = b"") -> None:
         """Drive ``pdftext_replay`` over the event array, recursing into
         Form XObjects between C segments. Line-model state round-trips
-        through the state vector so C segments and Python recursion
-        compose (a Form may itself fall back to ``_run_py``)."""
+        through the state vector so C segments and form recursion
+        compose (a form the C path cannot take raises ``_CDefer`` for
+        the whole page)."""
         tbytes, toff, widths, cats, font_idx, fms = plan
         st = _np.zeros(32, _np.float64)
         st[3] = 1.0  # sx
@@ -4584,7 +3463,7 @@ class _TextInterp:
                 )
                 if ret == -3:
                     # width-register-sensitive construct: the page is
-                    # re-run through the exact Python model (the
+                    # re-run through jsvm (the
                     # per-page interp is discarded, so partial state
                     # and already-committed pieces don't matter)
                     raise _CDefer()
@@ -4595,9 +3474,6 @@ class _TextInterp:
                 self.pieces.append(out[:olen].tobytes().decode("utf-8"))
             self.last_y = st[8] if st[9] else None
             self.last_end_x = st[10] if st[11] else None
-            # C segments run rotation-0 only: the prev matrix is
-            # axis-aligned — None means "raw device" in the -1 compare
-            self.glyph_mat = None
             self.line_open = bool(st[12])
             lc = int(st[13])
             self.last_char = chr(lc) if lc else ""
@@ -4657,1680 +3533,6 @@ class _TextInterp:
                 )
             i = ret + 1
 
-    def _run_events(self, data: bytes, resources, depth: int,
-                    seen: frozenset,
-                    lm_seed: tuple | None = None) -> None:
-        doc = self.doc
-        res = doc.resolve(resources) or {}
-        fonts_dict = doc.resolve(res.get("Font")) if isinstance(res, dict) else {}
-        xobjs = doc.resolve(res.get("XObject")) if isinstance(res, dict) else {}
-        ev = cinterp.interpret(data, lm_seed)
-        if (ev["kind"] == cinterp.K_ROT).any():
-            # rotated/skewed matrix: the flattened events carry only
-            # translate+scale, so quadrant-faithful assembly (pdf.js's
-            # compareWithLastPosition axis swap) needs the full-matrix
-            # interpreter. Rare in practice — rotation-0 streams keep
-            # the C fast paths.
-            return self._run_py(data, resources, depth, seen, lm_seed)
-        scratch = b""
-        if self._tj_rewrite_needed(ev, data):
-            ev, scratch = self._tj_rewrite(ev, data)
-        plan = self._c_plan(ev, data, fonts_dict)
-        if plan is not None:
-            return self._replay_c(
-                data, ev, plan, xobjs, res, depth, seen, scratch
-            )
-        return self._run_py(data, resources, depth, seen, lm_seed)
-
-    def _run_py(self, data: bytes, resources, depth: int = 0,
-                seen: frozenset = frozenset(),
-                lm_seed: tuple | None = None) -> None:
-        doc = self.doc
-        res = doc.resolve(resources) or {}
-        fonts_dict = doc.resolve(res.get("Font")) if isinstance(res, dict) else {}
-        xobjs = doc.resolve(res.get("XObject")) if isinstance(res, dict) else {}
-        extg = doc.resolve(res.get("ExtGState")) if isinstance(res, dict) else {}
-        fm = _ASCII_FM
-        # no Tf yet in THIS stream: pdf.js skips every text-showing op
-        # (Tj/TJ/'/") until state.font is set — including the op's side
-        # effects (the quotes' carriage return, "'s Tw/Tc assignment)
-        # (ensureStateFont + continue, pdf.worker.js:36911-36943); the
-        # engine models fonts per stream, so the gate is stream-local
-        have_font = False
-        leading = 0.0
-        rise = 0.0  # Ts text rise (pdf.js folds it into transform[5])
-        # full text LINE MATRIX (Tm sets it, Td/TD/T* compose translations
-        # into it — offsets are unscaled text units the matrix multiplies)
-        tm_a, tm_b, tm_c, tm_d, tm_e, tm_f = 1.0, 0.0, 0.0, 1.0, 0.0, 0.0
-        # cloned LINE matrix lagging tm (a Form XObject's lm_seed —
-        # pdf.js clones textLineMatrix separately from textMatrix):
-        # the seed ARMS at the stream's first full Tm (always the
-        # synthetic cloned-tm prelude; the clone describes the state
-        # AFTER it). Once armed, it is a one-shot pending e/f the first
-        # Td/TD/T*/'/" composes against; a later full Tm/BT overwrites
-        # both matrices and drops it; q/Q snapshot it.
-        plm: tuple | None = None
-        seed_pending: tuple | None = lm_seed
-        cur_x = 0.0
-        size = 0.0
-        tc = 0.0  # Tc char spacing (text-space units, added per glyph)
-        tw = 0.0  # Tw word spacing (added per 0x20 byte, 1-byte fonts)
-        tz = 1.0  # Tz horizontal scaling MAGNITUDE (percent / 100)
-        tz_mirror = False  # negative Tz: x-mirror -> 180-quadrant frame
-        # graphics-state CTM (q/Q/cm): the working coordinates ay/ax/asx
-        # that shows see are TRANSFORMED at anchor points, mirroring the
-        # C lexer's emit-time transform — absolute positions like the
-        # reference's item.transform[5]. arise = rise pre-scaled by the
-        # CTM d coefficient at Ts time (same staleness window as C).
-        cm_a, cm_b, cm_c, cm_d, cm_e, cm_f = 1.0, 0.0, 0.0, 1.0, 0.0, 0.0
-        qstack: list[tuple] = []
-        ax = 0.0
-        ay = 0.0
-        # asx: POSITIVE advance scale along the writing axis (equals the
-        # legacy tm_a*cm_a for quadrant 0 / skew; |composed b| or
-        # |composed a| for rotated quadrants) — maintained by _requad()
-        asx = 1.0
-        arise = 0.0
-        # rotation quadrant of the composed text-line x CTM matrix and
-        # its 2x2 (pdf.js compareWithLastPosition rotate detection,
-        # pdf.worker.js:36545-36550). The pen (cur_x) walks the COMPARE
-        # FRAME's writing axis; cross_v is the anchor's cross-axis
-        # coordinate in that frame. For quadrant 0 the compare frame IS
-        # device space and everything below reduces to the legacy model.
-        quad = 0
-        cA, cB, cC, cD = 1.0, 0.0, 0.0, 1.0
-        csy = 1.0
-        matn: tuple | None = (1.0, 0.0, 0.0, 1.0)
-        cross_v = 0.0
-        stack: list = []
-        # pdf.js nonProcessedArgs (EvaluatorPreprocessor.read): operand
-        # overflow from fixed-arity ops lands here; underfilled ops pop
-        # it back. Page-scoped in pdf.js (one preprocessor per
-        # content-stream run) — matches this per-stream loop.
-        opstash: list = []
-        pos = 0
-        n = len(data)
-
-        def _swapq(dx: float, dy: float) -> tuple[float, float]:
-            # device -> compare frame under the current quadrant (an
-            # involution for quadrants, pdf.worker.js:36551-36565; for
-            # quad -1 the FORWARD normalized-matrix transform — pdf.js's
-            # applyInverseRotation — callers never invert it)
-            if quad == 90:
-                return dy, dx
-            if quad == 180:
-                return -dx, -dy
-            if quad == 270:
-                return -dy, -dx
-            if quad == -1 and matn is not None:
-                return (
-                    matn[0] * dx + matn[1] * dy,
-                    matn[2] * dx + matn[3] * dy,
-                )
-            return dx, dy
-
-        def _requad() -> None:
-            # composed 2x2 + quadrant + writing-axis advance scale.
-            # pdf.js: rotate 0/180 needs b == c == 0 (sign of a picks
-            # which — an x-mirror counts as 180); 90/270 needs
-            # a == d == 0 (sign of b); anything else (shear, arbitrary
-            # angles like de-skewed scans) is rotate -1, compared in the
-            # inverse-rotated frame of each point's own matrix
-            # (applyInverseRotation, pdf.worker.js:36521-36524).
-            nonlocal quad, cA, cB, cC, cD, asx, matn, csy, arise
-            # pdf.js folds textHScale into the X COLUMN of the composed
-            # transform (tsm = [fs*hs, 0, 0, fs, 0, rise]) — a negative
-            # Tz mirrors the writing direction and the quadrant flips.
-            # (A negative FONT SIZE scales BOTH rows by fs and flips the
-            # whole frame to rotate 180 with a MIXED-SIGN width register
-            # — negative device widths + positive frame advances — which
-            # this float model cannot mirror; such pages defer to jsvm
-            # at the Tf/gs site.)
-            s_ = -1.0 if tz_mirror else 1.0
-            cA = (tm_a * cm_a + tm_b * cm_c) * s_
-            cB = (tm_a * cm_b + tm_b * cm_d) * s_
-            cC = tm_c * cm_a + tm_d * cm_c
-            cD = tm_c * cm_b + tm_d * cm_d
-            if cB == 0.0 and cC == 0.0:
-                quad = 0 if cA >= 0.0 else 180
-            elif cB != 0.0 and cA == 0.0 and cD == 0.0:
-                quad = 90 if cB > 0.0 else 270
-            elif cA == 0.0 and cB == 0.0:
-                quad = 0  # degenerate writing axis: legacy fallback
-            else:
-                quad = -1
-            sh = math.hypot(cA, cB)
-            matn = (
-                (cA / sh, cB / sh, cC / sh, cD / sh) if sh > 0.0 else None
-            )
-            # cross-axis scale: pdf.js item height = hypot(trm[2],
-            # trm[3]) = fontSize * hypot(composed c, composed d)
-            csy = math.hypot(cC, cD)
-            if quad == 90:
-                asx = cB
-            elif quad == 180:
-                asx = -cA
-            elif quad == 270:
-                asx = -cB
-            elif quad == -1:
-                asx = sh
-            else:
-                asx = tm_a * cm_a
-            # rise is matrix-scaled: a Tm/cm/Q that changes the matrix
-            # must refresh the compare-frame offset (pdf.js applies rise
-            # through tsm at every glyph — always current-scaled; the C
-            # lexer re-emits K_STATE at the same points)
-            if quad:
-                arise = _swapq(rise * cC, rise * cD)[1]
-            else:
-                arise = rise * tm_d * cm_d
-
-        def _matstore():
-            # the matrix stored WITH a prevTransform point: pdf.js's
-            # applyInverseRotation later divides that point by
-            # hypot(prev_trm[0], prev_trm[1]) = fs*|hs|*hypot(cA, cB) —
-            # the |hs| cancels in the X row but scales the Y row by
-            # 1/|hs|, and the divisor is the POINT'S OWN Tz at store
-            # time (caught live: quad-0 'tau' under 700 Tz followed by a
-            # sheared Tm — the raw Y made |advanceY| dwarf the item
-            # height and the EOL band swallowed pdf.js's standalone
-            # space; arity hunt base 83M seed 149)
-            if matn is None:
-                return None
-            return (matn[0], matn[1],
-                    matn[2] / (tz or 1.0), matn[3] / (tz or 1.0))
-
-        def _sety() -> None:
-            # partial Td/TD/Tm (the x operand failed to convert): only
-            # the y leg lands, mirroring the C lexer's K_SETY. Quad 0
-            # keeps the pen's advanced x (legacy); rotated quads
-            # recompute both compare coords from the stale x anchor.
-            nonlocal cur_x, cross_v
-            if quad == 0:
-                cross_v = ay
-            else:
-                cur_x, cross_v = _swapq(ax, ay)
-
-        def advance(item: bytes) -> float:
-            glyphs = len(item) // fm.nbytes - fm.ncf(item)
-            spaces = fm.nsp(item)
-            return (
-                fm.advance(item) / 1000.0 * size + glyphs * tc + spaces * tw
-            ) * asx * tz
-
-        def advance_clip(item: bytes) -> float:
-            # whole item view-box-rejected: non-space glyphs advance by
-            # width only (pdf.js skips charSpacing on the reject path);
-            # space glyphs keep width+tc+tw (whitespace branch precedes
-            # the box test)
-            spaces = fm.nsp(item)
-            return (
-                fm.advance(item) / 1000.0 * size + spaces * (tc + tw)
-            ) * asx * tz
-
-        def _show_item(dec: str, prev: float | None, adv: float,
-                       fx: float | None = None,
-                       dev_w: float = 0.0,
-                       adv_clip: float | None = None,
-                       seg_w: float | None = None) -> bool:
-            # one item through the assembler: compute compare-frame +
-            # device coordinates for the CURRENT matrix mode, show,
-            # advance the pen, update prevTransform. fx = the first
-            # NON-SPACE glyph's writing-axis position (pdf.js runs the
-            # compare there; leading space glyphs only advance the pen)
-            nonlocal cur_x
-            cx = cur_x if fx is None else fx
-            if quad == -1 and matn is not None:
-                # arbitrary rotation/shear: reconstruct the device point
-                # from the pen's text-space progress along the writing
-                # direction, then compare in the inverse-rotated frame
-                # (each point under its OWN matrix — pdf.js rotate == -1)
-                au = matn[0] * ax + matn[1] * ay
-                p = (cx - au) / asx if asx else 0.0
-                ddx = ax + cA * p + rise * cC
-                ddy = ay + cB * p + rise * cD
-                # pdf.js applyInverseRotation divides BOTH components by
-                # hypot(m[0], m[1]) — and the composed matrix's first
-                # column carries fontSize * textHScale, so the Y
-                # projection scales by 1/|hs| (the X row's hs cancels).
-                # Each point projects under its OWN matrix: the divisor
-                # is the point's own |tz| (folded into the stored mat
-                # rows 2/3 for the prev side). '-100 Tz (io ) Tj 85 Tz
-                # ( bet) Tj' under shear reads 'io\nbet' — the |hs|
-                # mismatch inflates advanceY past the item height and
-                # pdf.js appendEOLs (form_combo hunt base 28,000,000).
-                # tz == 0 would divide by zero (a Python exception,
-                # unlike JS Infinity): pdf.js's own hypot(m0, m1) is 0
-                # there and its NaN cascade is the documented
-                # JS-coercion residual — clamp to keep the page alive
-                cy = (matn[2] * ddx + matn[3] * ddy) / (tz or 1.0)
-                # compare x comes from the SAME rise-bearing device
-                # point as cy and the stored prevTransform (pdf.js's
-                # current and prev transforms both carry rise) — under
-                # shear the rise offset has a writing-axis component,
-                # and a rise-free pen x against a rise-bearing prev
-                # read as a phantom per-glyph gap
-                cmp_x = matn[0] * ddx + matn[1] * ddy
-                # the stored mat carries this point's own 1/|tz| in its
-                # Y row, so show()'s re-projection of the prev device
-                # point reproduces pdf.js's own-matrix divisor exactly
-                matp = _matstore()
-                shown = self.show(
-                    dec, cy, cmp_x, size * asx,
-                    quad=-1, dev_x=ddx, dev_y=ddy, mat=matp,
-                    dev_w=dev_w, hsize=size * csy,
-                    move_prev=prev is not None,
-                    mirror=tz_mirror,
-                    seg_w=seg_w,
-                )
-                cur_x += adv if shown or adv_clip is None else adv_clip
-                if shown and prev is not None:
-                    pp = (prev - au) / asx if asx else 0.0
-                    self.last_end_x = ax + cA * pp + rise * cC
-                    self.glyph_y = ay + cB * pp + rise * cD
-                    self.glyph_mat = matp
-                return shown
-            vv = cross_v + arise
-            ddx, ddy = _swapq(cx, vv)
-            shown = self.show(
-                dec, vv, cx, size * asx,
-                quad=quad, dev_x=ddx, dev_y=ddy, mat=_matstore(),
-                # cross-axis item height: pdf.js height = fontSize *
-                # hypot(trm[2], trm[3]) — |composed d| at quad 0, which
-                # differs from the x-scale under anisotropic matrices
-                dev_w=dev_w, hsize=size * csy,
-                move_prev=prev is not None,
-                mirror=tz_mirror,
-                seg_w=seg_w,
-            )
-            cur_x += adv if shown or adv_clip is None else adv_clip
-            if shown and prev is not None:
-                if quad:
-                    self.last_end_x, self.glyph_y = _swapq(prev, vv)
-                    self.glyph_mat = _matstore()
-                else:
-                    self.last_end_x = prev
-            return shown
-
-        def _show_glyphs(item: bytes, dec: str, extra: float = 0.0) -> None:
-            # PER-GLYPH path for rotated/sheared 1-byte items: pdf.js
-            # runs compareWithLastPosition per glyph, and under rotation
-            # its mid-item flushes (letter-spacing fake spaces past
-            # spaceInFlowMax, shouldAddWhitepsace after a space glyph)
-            # create items whose device anchors differ — visible "\n"s
-            # through the pdf-parse join that the item-level
-            # approximation (exact for quad 0, where anchors share one
-            # line) cannot reproduce. Letter-spacing gaps emerge from
-            # the compare itself, so the " ".join pre-pass must NOT run
-            # before this.
-            #
-            # EXACT pdf.js arithmetic order: band decisions at exact
-            # threshold values (e.g. tc*|tz| == 0.2*fs, the tzneg
-            # register minimal) ride on last-ulp position rounding, so
-            # the pen must track pdf.js's tm[4] accumulation bit-for-
-            # bit: scale = fontMatrix[0]*fontSize, scaledDim = w*scale,
-            # and the glyph-width and charSpacing advances land as
-            # SEPARATE adds (pdf.worker.js:36718/36733) of sign-flipped
-            # device addends — negation is exact, so when the composed
-            # advance scale is 1 the compare-frame pen equals -tm[4]
-            # (or +tm[4]) exactly. `extra` is a trailing TJ kern's
-            # extraSpacing (kern * -fs/1000), folded into the LAST
-            # glyph's charSpacing like buildTextContentItem does.
-            nonlocal cur_x
-            scale = 0.001 * size
-            n_g = len(dec)
-            for i, ch in enumerate(dec):
-                code = item[i]
-                wt = fm.widths.get(code, fm.default_width) * scale
-                cs = tc + extra if i + 1 == n_g else tc
-                if ch == " ":
-                    # whitespace glyph: ONE summed translate of
-                    # charSpacing + scaledDim + wordSpacing
-                    # (pdf.worker.js:36695); the pending space arms via
-                    # show's edge-space handling
-                    _show_item(" ", None, 0.0)
-                    cur_x += ((cs + (wt + tw)) * tz) * asx
-                    continue
-                # prevTransform excludes the trailing charSpacing;
-                # dev_w = pdf.js's glyphWidth for the left-edge box
-                # test — the TEXT-SPACE scaledDim (before hscale,
-                # untransformed), added to the device posX exactly
-                # as the reference does. A box-rejected glyph
-                # advances by width only (no charSpacing). A ZERO-
-                # width glyph never moves prevTransform (pdf.js
-                # stores it only when scaledDim != 0).
-                w = (wt * tz) * asx
-                # EXACT register contribution: pdf.js appends
-                # width += scaledDim AFTER scaledDim *= textHScale
-                # (pdf.worker.js:36718-36721), so mirrored glyphs
-                # (negative Tz) push the register NEGATIVE while the
-                # rotate-180 compare frame keeps advances positive —
-                # textOrientation flips mid-item exactly where the
-                # accumulated signed widths outweigh the absorbed
-                # gaps (the tzneg 'a mm' hunt minimal). Sign = the
-                # raw Tz sign; magnitude = the device advance (our
-                # register, like our bands, lives in the asx-scaled
-                # frame — asx > 0 preserves the sign).
-                shown = _show_item(ch, (cur_x + w) if wt else None, 0.0,
-                                   dev_w=wt,
-                                   seg_w=(-w if tz_mirror else w))
-                cur_x += w
-                if shown and cs:
-                    cur_x += (cs * tz) * asx
-        # Lexer-throw cut: the Parser's two-token lookahead loses the two
-        # tokens before a throwing one — stop interpreting at the cut
-        # (recomputed after a BI stale-currentChar splice rebases data)
-        cut = _prescan_lexer_throw(data, n)
-        while pos < n:
-            pos = _skip_ws(data, pos)
-            if pos >= n:
-                break
-            if cut is not None and pos >= cut:
-                raise _PageStop()
-            c = data[pos]
-            is_operand = (
-                c in b"/(<[" or c == 0x2B or c == 0x2D or c == 0x2E
-                or 0x30 <= c <= 0x39
-            )
-            if is_operand:
-                if c == 0x5B:
-                    # full-Parser array semantics: Cmd elements kept
-                    # inert, refs fold, EOF/')' stop the page
-                    obj, pos = _parse_content_array(data, pos, n)
-                elif 0x30 <= c <= 0x39 or c == 0x2B or c == 0x2D \
-                        or c == 0x2E:
-                    # faithful getNumber tokenization (e-notation,
-                    # mid-minus, graceful 0); normally the prescan cut
-                    # stops the loop before a throwing token is reached
-                    try:
-                        obj, pos = _lex_number(data, pos, n)
-                    except _LexThrow:
-                        raise _PageStop() from None
-                    if _is_js_integer(obj):
-                        # `int int R` folds to ONE Ref operand
-                        # (worker:13432-13438) — jsvm owns its use sites
-                        folded = _peek_ref(data, pos, n, obj)
-                        if folded is not None:
-                            obj, pos = folded
-                elif c == 0x3C and data[pos:pos + 2] != b"<<":
-                    # content hex string: pairs only, dangling dropped
-                    obj, pos = _hex_content(data, pos, n)
-                else:
-                    try:
-                        obj, pos = parse_object(data, pos, refs=False)
-                    except ValueError:
-                        pos += 1
-                        continue
-                stack.append(obj)
-                if len(stack) > 33:
-                    # pdf.worker.js:38668: the 34th pending operand
-                    # throws "Too many arguments" — page stops, text
-                    # accumulated so far is kept (probed live)
-                    raise _PageStop()
-                continue
-            if not _OPERATOR.match(data, pos):
-                pos += 1
-                continue
-            # longest-known-prefix command scan (NOT a maximal alpha
-            # run): "BQ" is B then Q — the Q restores state; "ETq" is
-            # ET then q (pdf.js Lexer, pdf.worker.js:14293-14307)
-            try:
-                op, pos = _lex_op(data, pos)
-            except _LexThrow:
-                raise _PageStop() from None  # >128-char command token
-            if op == b"BI":  # inline image (worker:13387 -> makeInlineImage)
-                pos, _term = _inline_image_scan(data, pos, n)
-                # the imageStream object is ONE operand; then buf1 is a
-                # synthesized Cmd("EI") — the 1-arg endInlineImage op runs
-                # through the normal stash machinery (worker:13759-13761)
-                stack.append(_IMG_OPERAND)
-                if len(stack) > 33:
-                    raise _PageStop()
-                if _term is not None and _term not in _WS:
-                    # stale-currentChar splice: the ID terminator byte was
-                    # consumed as lexer.currentChar, so the token AFTER the
-                    # image starts with it and continues at the resume pos
-                    data = bytes((_term,)) + data[pos:]
-                    n = len(data)
-                    pos = 0
-                    cut = _prescan_lexer_throw(data, n)
-                op = b"EI"  # fall through to the arity/dispatch path
-            # true/false parse as OPERANDS (JS arithmetic coerces them
-            # to 1/0 — probed: `5 true Tc` runs Tc(true), spacing == 1);
-            # a parsed null is never pushed (read(): `if (obj !== null)`)
-            if op == b"true" or op == b"false":
-                stack.append(1.0 if op == b"true" else 0.0)
-                if len(stack) > 33:
-                    raise _PageStop()
-                continue
-            if op == b"null":
-                continue
-            spec = _OP_ARITY.get(op)
-            if spec is None:
-                # unknown command: pdf.js warns and KEEPS the pending
-                # operands for the next operator (probed: `0 -40 BQ Td`
-                # runs Td(0, -40))
-                continue
-            numargs, varargs = spec
-            if not varargs and len(stack) != numargs:
-                while len(stack) > numargs:
-                    opstash.append(stack.pop(0))
-                while len(stack) < numargs and opstash:
-                    stack.insert(0, opstash.pop())
-                if len(stack) < numargs:
-                    stack.clear()  # skip the op; the stash is KEPT
-                    continue
-            # JS value-coercion trigger: a non-numeric operand in a
-            # numeric text-state slot (or a non-Name in Tf's font slot
-            # — pdf.js args[0].name is undefined there, loadFont falls
-            # to ErrorFont and every later show renders NOTHING) needs
-            # pdf.js's raw-store + per-use-site coercion semantics —
-            # restart the page through the faithful jsvm interpreter
-            nchk = _COERCE_OPS.get(op)
-            if nchk is not None:
-                for v in stack[-nchk:]:
-                    if not isinstance(v, (int, float)):
-                        raise _JsCoerce()
-                if op == b"Tf" and not isinstance(stack[-2], Name):
-                    raise _JsCoerce()
-            elif op == b'"':
-                if not isinstance(stack[-3], (int, float)) or (
-                    not isinstance(stack[-2], (int, float))
-                ) or not isinstance(stack[-1], bytes):
-                    raise _JsCoerce()
-            elif (op == b"Tj" or op == b"'") and stack and not isinstance(
-                stack[-1], bytes
-            ):
-                # ANY non-string chars operand interacts with the
-                # per-font Font._charsCache (pdf.worker.js:29819-29846):
-                # the property lookup stringifies it, a hit SHOWS the
-                # cached string's glyphs, a miss throws for non-empty
-                # arrays (no .charCodeAt — page stop) and silently
-                # POISONS the key with [] for .length-less values
-                # (numbers/Names/dicts/bools), muting later shows of
-                # the toString-equal string. jsvm models all of it.
-                raise _JsCoerce()
-            if op == b"TJ" and stack and isinstance(stack[-1], bytes):
-                # TJ over a plain string: pdf.js iterates the string's
-                # chars — all strings, so showSpacedTextBuffer joins
-                # them into ONE buildTextContentItem with no kerns,
-                # exactly a Tj (pdf.worker.js:36890-36909)
-                op = b"Tj"
-            try:
-                if op == b"Tf" and len(stack) >= 2:
-                    have_font = True  # even when the size operand is junk
-                    nfm = self._font_for(fonts_dict, str(stack[-2]))
-                    nsize = float(stack[-1])
-                    if nsize < 0.0:
-                        # a negative size flips the compare frame to
-                        # rotate 180 (both tsm rows scale by fs) with a
-                        # MIXED-SIGN width register in pdf.js (device
-                        # widths negative, frame advances positive) —
-                        # exact only in the raw-value tier. jsvm
-                        # transcribes compareWithLastPosition verbatim,
-                        # so the whole page restarts there.
-                        raise _JsCoerce()
-                    if nfm is not fm or nsize != size:
-                        self.force_flush = True  # setFont flush
-                    fm, size = nfm, nsize
-                elif op == b"Td" and len(stack) >= 2:
-                    ty = float(stack[-1])
-                    if plm is not None:  # compose against the cloned lm
-                        tm_e, tm_f = plm
-                        plm = None
-                    # y leg first (C K_SETY): visible even if the x
-                    # operand fails to convert below
-                    tm_e += ty * tm_c
-                    tm_f += ty * tm_d
-                    ay = cm_b * tm_e + cm_d * tm_f + cm_f
-                    _sety()
-                    tx_ = float(stack[-2])
-                    tm_e += tx_ * tm_a
-                    tm_f += tx_ * tm_b
-                    ax = cm_a * tm_e + cm_c * tm_f + cm_e
-                    ay = cm_b * tm_e + cm_d * tm_f + cm_f
-                    cur_x, cross_v = _swapq(ax, ay)
-                elif op == b"TD" and len(stack) >= 2:
-                    ty = float(stack[-1])
-                    leading = -ty
-                    if plm is not None:  # compose against the cloned lm
-                        tm_e, tm_f = plm
-                        plm = None
-                    tm_e += ty * tm_c
-                    tm_f += ty * tm_d
-                    ay = cm_b * tm_e + cm_d * tm_f + cm_f
-                    _sety()
-                    tx_ = float(stack[-2])
-                    tm_e += tx_ * tm_a
-                    tm_f += tx_ * tm_b
-                    ax = cm_a * tm_e + cm_c * tm_f + cm_e
-                    ay = cm_b * tm_e + cm_d * tm_f + cm_f
-                    cur_x, cross_v = _swapq(ax, ay)
-                elif op == b"Tm" and len(stack) >= 6:
-                    tm_f = float(stack[-1])
-                    # a partial Tm (e fails below) aborts after the
-                    # lm_f == tm_f assignment: the pending clone keeps
-                    # its e but takes the new f
-                    if plm is not None:
-                        plm = (plm[0], tm_f)
-                    ay = cm_b * tm_e + cm_d * tm_f + cm_f
-                    _sety()
-                    tm_e = float(stack[-2])
-                    # full Tm sets BOTH matrices — except the first one,
-                    # the synthetic clone prelude, which ARMS the seed
-                    plm, seed_pending = seed_pending, None
-                    try:
-                        va = float(stack[-6])
-                        vb = float(stack[-5])
-                        vc = float(stack[-4])
-                        vd = float(stack[-3])
-                    except (TypeError, ValueError):
-                        pass
-                    else:
-                        tm_a = va
-                        tm_b = vb
-                        tm_c = vc
-                        tm_d = vd
-                        # degenerate-AXIS guard only (the old blanket
-                        # 'or 1.0' garbled rotation matrices, where a
-                        # or d is legitimately 0 while b/c carry the
-                        # writing direction)
-                        if tm_a == 0.0 and tm_b == 0.0:
-                            tm_a = 1.0
-                        if tm_d == 0.0 and tm_c == 0.0:
-                            tm_d = 1.0
-                    ax = cm_a * tm_e + cm_c * tm_f + cm_e
-                    ay = cm_b * tm_e + cm_d * tm_f + cm_f
-                    old_asx = asx
-                    _requad()
-                    if (
-                        asx != old_asx and self.line_open
-                        and not self.force_flush
-                    ):
-                        # updateAdvanceScale (no-op on a closed item;
-                        # pdf.js compares the hypot-based scale, which a
-                        # pure rotation change leaves untouched). The
-                        # open item's advance thresholds RESCALE: pdf.js
-                        # divides advanceX by the item's textAdvanceScale,
-                        # which updateAdvanceScale sets to the NEW scale
-                        # while the fontSize-based windows stay — our
-                        # item_size embeds the scale, so it multiplies by
-                        # the ratio (rotated 'delta' + 0.75-scale Tm +
-                        # 3-space run reads 'deltaxi\n omicron' in the
-                        # reference: 4.0/0.75 = 5.34 > 0.6*8 leaves the
-                        # in-flow window; rotstate hunt base 34,050,068).
-                        # item_hsize stays stale: advanceY is raw and the
-                        # ensure-time height is never rescaled.
-                        self.scale_flush = True
-                        self.item_wreg = 0.0
-                        if old_asx:
-                            self.item_size *= abs(asx / old_asx)
-                    cur_x, cross_v = _swapq(ax, ay)
-                elif op == b"TL" and stack:
-                    leading = float(stack[-1])
-                elif op == b"Ts" and stack:
-                    rise = float(stack[-1])
-                    if quad:
-                        # device rise offset is (rise*cC, rise*cD); its
-                        # compare-frame cross component shifts cy (the
-                        # writing-axis component is 0 for pure quadrants)
-                        arise = _swapq(rise * cC, rise * cD)[1]
-                    else:
-                        arise = rise * tm_d * cm_d
-                elif op == b"Tc" and stack:
-                    tc = float(stack[-1])
-                elif op == b"Tw" and stack:
-                    tw = float(stack[-1])
-                elif op == b"Tz" and stack:
-                    # negative Tz mirrors the writing direction:
-                    # pdf.js's composed transform gets m[0] < 0 and the
-                    # compare runs in the 180 quadrant — fold the SIGN
-                    # into the quadrant frame, keep the magnitude in
-                    # the advance math
-                    # NO zero guard: pdf.js setTextHScale keeps 0/100
-                    # == 0 — every advance times 0, so all glyphs land
-                    # on the same point and the equal-position shortcut
-                    # joins them ("0 Tz (sigma)" reads "sigma", probed
-                    # live via a stash-fed `false Tz`)
-                    tzv = float(stack[-1]) / 100.0
-                    tz = abs(tzv)
-                    if (tzv < 0.0) != tz_mirror:
-                        # the pen keeps its DEVICE position through the
-                        # flip — only the compare frame changes: unswap
-                        # under the OLD quadrant, reswap under the new
-                        if quad == -1 and matn is not None:
-                            # a pure sign flip negates matn rows 0/1
-                            # EXACTLY (cA/cB pick up s_ = -1 on the
-                            # same products; sh/cC/cD unchanged), so
-                            # the writing-axis pen negates exactly too
-                            # — the matrix-inversion round-trip left
-                            # ulp dust that kept the raw equal-position
-                            # shortcut from firing when the mirrored
-                            # pen returns to prevTransform (form_combo
-                            # hunt base 28,000,000 seed 295)
-                            tz_mirror = tzv < 0.0
-                            _requad()
-                            cur_x = -cur_x
-                        else:
-                            pdx_, pdy_ = _swapq(cur_x, cross_v)
-                            tz_mirror = tzv < 0.0
-                            _requad()
-                            cur_x, cross_v = _swapq(pdx_, pdy_)
-                elif op == b"T*":
-                    if plm is not None:  # compose against the cloned lm
-                        tm_e, tm_f = plm
-                        plm = None
-                    tm_e += -leading * tm_c
-                    tm_f += -leading * tm_d
-                    ax = cm_a * tm_e + cm_c * tm_f + cm_e
-                    ay = cm_b * tm_e + cm_d * tm_f + cm_f
-                    cur_x, cross_v = _swapq(ax, ay)
-                elif (
-                    op == b"Tj" and have_font
-                    and stack and isinstance(stack[-1], bytes)
-                ):
-                    item = stack[-1]
-                    dec = fm.decode(item)
-                    if quad and fm.nbytes == 1 and len(dec) == len(item):
-                        _show_glyphs(item, dec)
-                        stack.clear()
-                        continue
-                    vb = self.viewbox
-                    cprev: float | None = None
-                    cfvx: float | None = None
-                    clipped_item = False
-                    nclip = 0
-                    zw_item = (
-                        fm.has_zw(item)
-                        and _RTL_RUN.search(dec) is None
-                    )
-                    lg = (
-                        size > 0 and tc * tz > self.GAP_FRACTION * size
-                        and not zw_item  # zw: the cascade decides
-                    )
-                    segs = None
-                    reg0_el = self.item_wreg
-                    if (
-                        quad == 0 and fm.nbytes == 1 and size > 0
-                        and len(dec) == len(item) - fm.ncf(item)
-                        and (" " in dec[1:-1] or tc < 0.0
-                             or self._big_tc(tc, asx * tz, size * asx)
-                             or zw_item
-                             or reg0_el <= 0.0
-                             or (vb is not None and (
-                                 min(cur_x, cur_x + advance(item))
-                                 < vb[0]
-                                 or max(cur_x, cur_x + advance(item))
-                                 > vb[2])))
-                    ):
-                        r_ = self._seg_split(
-                            fm, item, dec, cur_x, size, asx * tz, tc, tw,
-                            size * asx, fallback_prev=self.last_end_x,
-                            zw_mode=zw_item,
-                            reg0=reg0_el,
-                        )
-                        if r_ is not None:
-                            segs, nclip, lclip = r_
-                    if segs is None and (
-                        vb is not None
-                        and quad == 0  # rotated: show() box-tests whole
-                        and fm.nbytes == 1
-                        and len(dec) == len(item)
-                        and (
-                            min(cur_x, cur_x + advance(item)) < vb[0]
-                            or max(cur_x, cur_x + advance(item)) > vb[2]
-                        )
-                    ):
-                        dec, cprev, nclip, lclip, cfvx = self._clip_x(
-                            fm, item, dec, cur_x, size, asx * tz, tc, tw
-                        )
-                        clipped_item = nclip > 0
-                    if segs is not None:
-                        # per-glyph item splitting at quad 0 (_seg_split)
-                        sh0 = None
-                        for sd, sfx, spv, shw, sww in segs:
-                            if lg:
-                                sd = self._lgap_join(sd)
-                            # carried prev VALUES (all-zero-width
-                            # segments) must not move prevTransform
-                            r = _show_item(sd, spv if shw else None,
-                                           0.0, fx=sfx,
-                                           seg_w=sww)
-                            if sh0 is None:
-                                sh0 = r
-                        cur_x += (
-                            advance(item) - nclip * tc * asx * tz
-                            if sh0 else advance_clip(item)
-                        )
-                        stack.clear()
-                        continue
-                    if lg:
-                        # letter-spacing fake spaces
-                        dec = self._lgap_join(dec)
-                    if clipped_item:
-                        prev = cprev
-                    elif fm.nbytes == 1:
-                        # advance(item) is the exact float _show_item
-                        # adds to cur_x (nclip == 0 on this path)
-                        prev = self._prev_x(
-                            fm, item, dec, cur_x, size, asx * tz, tc, tw,
-                            adv_full=advance(item),
-                        )
-                    else:
-                        prev = (
-                            cur_x + advance(item) - tc * asx * tz
-                            if item else None
-                        )
-                    _show_item(
-                        dec, prev, advance(item) - nclip * tc * asx * tz,
-                        fx=(
-                            cfvx if clipped_item else (
-                                self._first_x(
-                                    fm, item, dec, cur_x, size,
-                                    asx * tz, tc, tw,
-                                )
-                                if fm.nbytes == 1
-                                else None
-                            )
-                        ),
-                        adv_clip=advance_clip(item),
-                        seg_w=self._inline_wcontrib(
-                            fm, item, dec, advance(item), tc, tw,
-                            asx * tz, size / 1000.0 * asx * tz,
-                            anchored=self.last_end_x is not None,
-                        ),
-                    )
-                elif op in (b"'", b'"') and have_font:
-                    if plm is not None:  # compose against the cloned lm
-                        tm_e, tm_f = plm
-                        plm = None
-                    tm_e += -leading * tm_c
-                    tm_f += -leading * tm_d
-                    ax = cm_a * tm_e + cm_c * tm_f + cm_e
-                    ay = cm_b * tm_e + cm_d * tm_f + cm_f
-                    cur_x, cross_v = _swapq(ax, ay)
-                    if op == b'"' and len(stack) >= 3:
-                        tw = float(stack[-3])
-                        tc = float(stack[-2])
-                    if (
-                        stack and isinstance(stack[-1], bytes)
-                        and quad and fm.nbytes == 1
-                        and len(fm.decode(stack[-1])) == len(stack[-1])
-                    ):
-                        _show_glyphs(stack[-1], fm.decode(stack[-1]))
-                    elif stack and isinstance(stack[-1], bytes):
-                        item = stack[-1]
-                        dec = fm.decode(item)
-                        vb = self.viewbox
-                        cprev = None
-                        cfvx = None
-                        clipped_item = False
-                        nclip = 0
-                        zw_item = (
-                            fm.has_zw(item)
-                            and _RTL_RUN.search(dec) is None
-                        )
-                        lg = (
-                            size > 0
-                            and tc * tz > self.GAP_FRACTION * size
-                            and not zw_item  # zw: the cascade decides
-                        )
-                        segs = None
-                        reg0_el = self.item_wreg
-                        if (
-                            quad == 0 and fm.nbytes == 1 and size > 0
-                            and len(dec) == len(item) - fm.ncf(item)
-                            and (" " in dec[1:-1] or tc < 0.0
-                                 or self._big_tc(tc, asx * tz,
-                                                 size * asx)
-                                 or zw_item
-                                 or reg0_el <= 0.0
-                                 or (vb is not None and (
-                                     min(cur_x,
-                                         cur_x + advance(item))
-                                     < vb[0]
-                                     or max(cur_x,
-                                            cur_x + advance(item))
-                                     > vb[2])))
-                        ):
-                            r_ = self._seg_split(
-                                fm, item, dec, cur_x, size, asx * tz,
-                                tc, tw, size * asx,
-                                fallback_prev=self.last_end_x,
-                                zw_mode=zw_item,
-                                reg0=reg0_el,
-                            )
-                            if r_ is not None:
-                                segs, nclip, lclip = r_
-                        if segs is None and (
-                            vb is not None
-                            and quad == 0
-                            and fm.nbytes == 1
-                            and len(dec) == len(item)
-                            and (
-                                min(cur_x, cur_x + advance(item))
-                                < vb[0]
-                                or max(cur_x, cur_x + advance(item))
-                                > vb[2]
-                            )
-                        ):
-                            dec, cprev, nclip, lclip, cfvx = (
-                                self._clip_x(
-                                    fm, item, dec, cur_x, size,
-                                    asx * tz, tc, tw,
-                                )
-                            )
-                            clipped_item = nclip > 0
-                        if segs is not None:
-                            sh0 = None
-                            for sd, sfx, spv, shw, sww in segs:
-                                if lg:
-                                    sd = self._lgap_join(sd)
-                                r = _show_item(sd, spv if shw else None,
-                                               0.0, fx=sfx,
-                                               seg_w=sww)
-                                if sh0 is None:
-                                    sh0 = r
-                            cur_x += (
-                                advance(item) - nclip * tc * asx * tz
-                                if sh0 else advance_clip(item)
-                            )
-                            stack.clear()
-                            continue
-                        if lg:
-                            dec = self._lgap_join(dec)
-                        if clipped_item:
-                            prev = cprev
-                        elif fm.nbytes == 1:
-                            # advance(item) is the exact float
-                            # _show_item adds (nclip == 0 here)
-                            prev = self._prev_x(
-                                fm, item, dec, cur_x, size, asx * tz,
-                                tc, tw, adv_full=advance(item),
-                            )
-                        else:
-                            prev = (
-                                cur_x + advance(item) - tc * asx * tz
-                                if item else None
-                            )
-                        _show_item(
-                            dec, prev,
-                            advance(item) - nclip * tc * asx * tz,
-                            fx=(
-                                cfvx if clipped_item else (
-                                    self._first_x(
-                                        fm, item, dec, cur_x, size,
-                                        asx * tz, tc, tw,
-                                    )
-                                    if fm.nbytes == 1
-                                    else None
-                                )
-                            ),
-                            adv_clip=advance_clip(item),
-                            seg_w=self._inline_wcontrib(
-                                fm, item, dec, advance(item), tc, tw,
-                                asx * tz, size / 1000.0 * asx * tz,
-                                anchored=self.last_end_x is not None,
-                            ),
-                        )
-                elif (
-                    op == b"TJ" and have_font
-                    and stack and isinstance(stack[-1], list)
-                    and quad
-                ):
-                    # rotated quadrants: item anchors are VISIBLE through
-                    # the pdf-parse join (device transform[5] varies
-                    # ALONG the line), so pdf.js's mid-TJ flushes (its
-                    # per-glyph compare sees each kern as an advance)
-                    # split items the buffered quad-0 path would hide
-                    # behind one anchor. Run each element through the
-                    # per-item compare; a big kern then takes the
-                    # carriage-return / gap paths naturally.
-                    # raw showSpacedText walk (pdf.worker.js:36888-36906)
-                    # with pdf.js's exact structure: adjacent strings
-                    # JOIN in the buffer, each nonzero number flushes
-                    # the buffer with extraSpacing = kern * -fs/1000
-                    # folded into the last glyph's charSpacing, an
-                    # empty-buffer kern translates (tc + extra) * hs
-                    # (the !chars branch), and a ZERO kern is skipped
-                    # entirely (item !== 0). The riding-kern drop of
-                    # the quad-0 consumer does not apply here (the
-                    # rotated paths clip item-level via show's box
-                    # test).
-                    sf_tj = -size / 1000.0
-
-                    def _flush_rot(joined: bytes, extra: float) -> None:
-                        nonlocal cur_x
-                        dec = fm.decode(joined)
-                        if fm.nbytes == 1 and len(dec) == len(joined):
-                            _show_glyphs(joined, dec, extra=extra)
-                            return
-                        # item-level fallback (multibyte / Cf-bearing):
-                        # the historical approximation — tc applies per
-                        # glyph inside advance(), the kern lands as a
-                        # separate pen move after the item
-                        if (
-                            size > 0
-                            and tc * tz > self.GAP_FRACTION * size
-                        ):
-                            dec = self._lgap_join(dec)
-                        prev = (
-                            cur_x + advance(joined) - tc * asx * tz
-                            if joined else None
-                        )
-                        _show_item(dec, prev, advance(joined))
-                        if extra:
-                            cur_x += (extra * tz) * asx
-
-                    tjbuf = b""
-                    for el in stack[-1]:
-                        if isinstance(el, bytes):
-                            tjbuf += el
-                        elif (isinstance(el, (int, float))
-                              and not isinstance(el, bool) and el != 0):
-                            extra = el * sf_tj
-                            if tjbuf:
-                                _flush_rot(tjbuf, extra)
-                                tjbuf = b""
-                            else:
-                                # bare kern: charSpacing rides along
-                                # (tc + extra, ONE summed translate)
-                                cur_x += ((tc + extra) * tz) * asx
-                    if tjbuf:
-                        _flush_rot(tjbuf, 0.0)
-                elif (
-                    op == b"TJ" and have_font
-                    and stack and isinstance(stack[-1], list)
-                ):
-                    buf: list[str] = []
-                    start_x = cur_x
-                    tjprev: float | None = None
-                    tjfirst: float | None = None
-                    # buffered group appended a width!=0 glyph since
-                    # the last flush (see pdftext_replay)
-                    tjhadw = False
-                    # buffered register contribution (see tj_wacc)
-                    tjwacc = 0.0
-                    tjstale = 0.0
-                    tjbpend = True  # deferred boundary not evaluated
-                    tjgabs = 0.0  # cumulative kern gap absorbed
-                    # current boundary's provisional absorb inside
-                    # tjwacc (see pdftext_replay's tj_tailw)
-                    tjtailw = 0.0
-                    # real trailing space GLYPHS behind the buffer tail
-                    # (letter-gap join spaces don't count: pdf.js's
-                    # twoLastChars ring only ever saw the glyphs)
-                    tail_sp = 0
-                    # kern-killed-run carry (see pdftext_replay's tj_kill)
-                    tj_kill = False
-                    # deferred kern fake space (see pdftext_replay's tj_fake)
-                    tj_fake = False
-                    lgap = (
-                        size > 0 and tc * tz > self.GAP_FRACTION * size
-                    )
-                    for item, tj_kern, tj_ntc, tj_ride in (
-                        self._coalesce_tj(stack[-1])
-                    ):
-                        ride_lost = False
-                        if item:
-                            dec = fm.decode(item)
-                            # zw elements: the cascade decides the gaps
-                            zw_item = (
-                                fm.has_zw(item)
-                                and _RTL_RUN.search(dec) is None
-                            )
-                            lgap_el = lgap and not zw_item
-                            vb = self.viewbox
-                            cprev = None
-                            cfvx = None
-                            clipped_item = False
-                            nclip = 0
-                            segs = None
-                            if tjbpend and dec.strip(" "):
-                                fxp = (
-                                    self._first_x(
-                                        fm, item, dec, cur_x, size,
-                                        asx * tz, tc, tw,
-                                    )
-                                    if fm.nbytes == 1 else None
-                                )
-                                tjstale = self._tj_boundary_stale(
-                                    fxp if fxp is not None else cur_x,
-                                    cross_v + arise, size * asx,
-                                    size * csy if csy else None,
-                                )
-                                tjbpend = False
-                            reg0_el = (
-                                tjstale if not tjbpend
-                                else self.item_wreg
-                            ) + tjwacc
-                            if (
-                                quad == 0
-                                and fm.nbytes == 1 and size > 0
-                                and len(dec) == len(item) - fm.ncf(item)
-                                and (
-                                    " " in dec[1:-1]
-                                    or (
-                                        tjprev is not None
-                                        and dec[:1] == " "
-                                    )
-                                    or tc < 0.0
-                                    or self._big_tc(
-                                        tc, asx * tz, size * asx
-                                    )
-                                    or zw_item
-                                    or reg0_el <= 0.0
-                                    or (vb is not None and (
-                                        min(cur_x,
-                                            cur_x + advance(item))
-                                        < vb[0]
-                                        or max(cur_x,
-                                               cur_x + advance(item))
-                                        > vb[2]))
-                                )
-                            ):
-                                r_ = self._seg_split(
-                                    fm, item, dec, cur_x, size,
-                                    asx * tz, tc, tw, size * asx,
-                                    prev0=tjprev,
-                                    fallback_prev=self.last_end_x,
-                                    zw_mode=zw_item,
-                                    reg0=reg0_el,
-                                )
-                                if r_ is not None:
-                                    segs, nclip, lclip = r_
-                                    if nclip:
-                                        dec = "".join(
-                                            t for t, _f, _p, _h, _w
-                                            in segs
-                                        )
-                            if segs is None and (
-                                vb is not None
-                                and quad == 0
-                                and fm.nbytes == 1
-                                and len(dec) == len(item)
-                                and (
-                                    min(cur_x, cur_x + advance(item))
-                                    < vb[0]
-                                    or max(cur_x, cur_x + advance(item))
-                                    > vb[2]
-                                )
-                            ):
-                                dec, cprev, nclip, lclip, cfvx = (
-                                    self._clip_x(
-                                        fm, item, dec, cur_x, size,
-                                        asx * tz, tc, tw,
-                                    )
-                                )
-                                clipped_item = nclip > 0
-                            if dec and tjprev is None \
-                                    and self.last_end_x is None:
-                                # NULL-anchor ring across the buffer
-                                # join (see pdftext_replay)
-                                txt0 = (
-                                    segs[0][0] if segs is not None
-                                    else dec
-                                )
-                                lead = (
-                                    len(txt0) - len(txt0.lstrip(" "))
-                                )
-                                if (
-                                    txt0.strip(" ")
-                                    and tail_sp + lead >= 2
-                                ):
-                                    if tail_sp and buf:
-                                        buf[-1] = buf[-1].rstrip(" ")
-                                    if lead:
-                                        if segs is not None:
-                                            (t0_, f0s, p0s, h0s,
-                                             w0s) = segs[0]
-                                            segs[0] = (
-                                                t0_.lstrip(" "),
-                                                f0s, p0s, h0s, w0s,
-                                            )
-                                        else:
-                                            dec = dec.lstrip(" ")
-                                    tail_sp = 0
-                            if tj_fake and dec:
-                                if not dec.startswith(" "):
-                                    buf.append(" ")
-                                tj_fake = False
-                            clip_y = (
-                                vb is not None and fm.nbytes == 1
-                                and not (
-                                    vb[1] <= cross_v + arise <= vb[3]
-                                )
-                            )
-                            # a box-rejected FINAL glyph takes the
-                            # group's kern (its riding extraSpacing)
-                            # down with it (pdf.js's reject path
-                            # translates scaledDim only,
-                            # pdf.worker.js:36704-36711); quad-0 only
-                            # (the rotated paths clip item-level)
-                            if quad == 0 and fm.nbytes == 1 and (
-                                clip_y or (nclip > 0 and lclip)
-                            ):
-                                ride_lost = not (
-                                    item[-1] == 0x20
-                                    or fm.decode(item[-1:]) == " "
-                                )
-                            if (
-                                item and fm.nbytes == 1
-                                and fm._cf_arr is not None
-                                and fm._cf_arr[item[-1]]
-                            ):
-                                # Cf final glyph loses the riding
-                                # kern (see pdftext_replay)
-                                ride_lost = True
-                            t_run = len(dec) - len(dec.rstrip(" "))
-                            tail_sp = (
-                                t_run if dec.strip(" ")
-                                else tail_sp + dec.count(" ")
-                            )
-                            if segs is not None and len(segs) == 1:
-                                # no split point — the walk only
-                                # REWROTE the text (null-anchor run):
-                                # plain append
-                                sd0, sfx, spv, sh0w, sw0 = segs[0]
-                                buf.append(
-                                    self._lgap_join(sd0)
-                                    if lgap_el else sd0
-                                )
-                                if sd0.strip(" "):
-                                    tj_kill = False
-                                if tjfirst is None:
-                                    tjfirst = sfx
-                                cur_x += (
-                                    advance_clip(item) if clip_y
-                                    else advance(item)
-                                    - nclip * tc * asx * tz
-                                )
-                                tjwacc += sw0
-                                if sd0.strip(" "):
-                                    tjgabs = 0.0
-                                    tjtailw = 0.0
-                                if spv is not None and sh0w:
-                                    tjprev = spv
-                                    tjhadw = True
-                            elif segs is not None:
-                                # per-glyph item splitting at quad 0
-                                # mid-TJ (_seg_split): seg 0 completes
-                                # the buffered group, the last becomes
-                                # the new buffer
-                                vv = cross_v + arise
-                                sd0, sfx, spv, sh0w, sw0 = segs[0]
-                                if sd0.strip(" "):
-                                    # real glyphs precede the split:
-                                    # the ring rolled
-                                    tj_kill = False
-                                buf.append(
-                                    self._lgap_join(sd0)
-                                    if lgap_el else sd0
-                                )
-                                fx0 = (
-                                    tjfirst if tjfirst is not None
-                                    else sfx
-                                )
-                                tj_cx = (
-                                    fx0 if fx0 is not None else start_x
-                                )
-                                ddx, ddy = _swapq(tj_cx, vv)
-                                sh0 = self.show("".join(buf), vv, tj_cx,
-                                                size * asx, quad=quad,
-                                                dev_x=ddx, dev_y=ddy,
-                                                mat=_matstore(),
-                                                move_prev=(
-                                                    spv is not None
-                                                    and (tjhadw or sh0w)
-                                                ),
-                                                mirror=tz_mirror,
-                                                seg_w=tjwacc + sw0)
-                                if sh0:
-                                    self.last_end_x = spv
-                                if tj_kill:
-                                    self.pending_space = True
-                                    self.pending_multi = True
-                                    tj_kill = False
-                                for sdm, sfm, spm, shwm, swm in segs[1:-1]:
-                                    sd = (
-                                        self._lgap_join(sdm)
-                                        if lgap_el else sdm
-                                    )
-                                    ddx, ddy = _swapq(sfm, vv)
-                                    if self.show(sd, vv, sfm,
-                                                 size * asx, quad=quad,
-                                                 dev_x=ddx, dev_y=ddy,
-                                                 mat=_matstore(),
-                                                 move_prev=(
-                                                     spm is not None
-                                                     and shwm),
-                                                 mirror=tz_mirror,
-                                                 seg_w=swm):
-                                        self.last_end_x = spm
-                                sdl, sfl, spl, shwl, swl = segs[-1]
-                                buf = [
-                                    self._lgap_join(sdl)
-                                    if lgap_el else sdl
-                                ]
-                                tjfirst = sfl
-                                start_x = sfl
-                                tjprev = spl
-                                tjhadw = shwl
-                                tjwacc = swl
-                                tjgabs = 0.0
-                                tjtailw = 0.0
-                                if sdl.strip(" "):
-                                    tjstale = self._tj_boundary_stale(
-                                        sfl, cross_v + arise,
-                                        size * asx,
-                                        size * csy if csy else None,
-                                    )
-                                    tjbpend = False
-                                else:
-                                    tjbpend = True
-                                cur_x += (
-                                    advance(item) - nclip * tc * asx * tz
-                                    if sh0 else advance_clip(item)
-                                )
-                            else:
-                                if clipped_item:
-                                    prev = cprev
-                                elif fm.nbytes == 1:
-                                    # advance(item) is the exact float
-                                    # added to cur_x below (nclip == 0);
-                                    # y-clipped elements keep the
-                                    # legacy prefix form
-                                    prev = self._prev_x(
-                                        fm, item, dec, cur_x, size,
-                                        asx * tz, tc, tw,
-                                        adv_full=(
-                                            None if clip_y
-                                            else advance(item)
-                                        ),
-                                    )
-                                else:
-                                    prev = (
-                                        cur_x + advance(item)
-                                        - tc * asx * tz
-                                        if item else None
-                                    )
-                                buf.append(self._lgap_join(dec) if lgap_el else dec)
-                                if dec.strip(" "):
-                                    tj_kill = False
-                                if tjfirst is None and fm.nbytes == 1:
-                                    tjfirst = (
-                                        cfvx if clipped_item
-                                        else self._first_x(
-                                            fm, item, dec, cur_x, size,
-                                            asx * tz, tc, tw,
-                                        )
-                                    )
-                                cur_x += (
-                                    advance_clip(item) if clip_y
-                                    else advance(item)
-                                    - nclip * tc * asx * tz
-                                )
-                                tjwacc += self._inline_wcontrib(
-                                    fm, item, dec, advance(item),
-                                    tc, tw, asx * tz,
-                                    size / 1000.0 * asx * tz,
-                                    anchored=(
-                                        tjprev is not None
-                                        or self.last_end_x is not None
-                                    ),
-                                )
-                                if dec.strip(" "):
-                                    tjgabs = 0.0
-                                    tjtailw = 0.0
-                                if prev is not None:
-                                    tjprev = prev
-                                    # per-item _prev_x: non-None means
-                                    # a width!=0 glyph was emitted
-                                    tjhadw = True
-                        if tj_kern is not None:
-                            # riding component lost with a box-rejected
-                            # final glyph (see ride_lost above)
-                            keff = (
-                                tj_kern - tj_ride if ride_lost
-                                else tj_kern
-                            )
-                            cur_x -= keff / 1000.0 * size * asx * tz
-                            if tj_ntc:
-                                # tj_ntc merged kerns ran with an EMPTY
-                                # buffer: each applied charSpacing in
-                                # its translate (!chars branch,
-                                # pdf.worker.js:36663-36675)
-                                cur_x += tj_ntc * tc * asx * tz
-                            if size > 0:
-                                kern = keff / 1000.0 * size
-                                gap = (
-                                    None if tjprev is None
-                                    else cur_x - tjprev
-                                )
-                                # leading kerns: fall back to the
-                                # page-level prevTransform (see
-                                # pdftext_replay's K_TJNUM)
-                                gap2 = gap
-                                if (
-                                    gap2 is None
-                                    and self.last_end_x is not None
-                                ):
-                                    gap2 = cur_x - self.last_end_x
-                                # last-ensured item's bands while the
-                                # boundary is pending (see the event
-                                # consumer's staleness note)
-                                lim = (
-                                    self.item_size
-                                    if tjbpend and self.item_size > 0
-                                    else size * asx
-                                )
-                                # non-positive live register: any
-                                # nonzero gap flushes (see
-                                # pdftext_replay)
-                                # excluding the provisional
-                                # absorb (see pdftext_replay)
-                                reg_k = (
-                                    tjstale if not tjbpend
-                                    else self.item_wreg
-                                ) + tjwacc - tjtailw
-                                keep1 = (
-                                    buf and buf[-1].endswith(" ")
-                                    and gap2 is not None
-                                    and reg_k > 0.0
-                                    and 0.03 * lim < gap2
-                                    <= self.GAP_FRACTION * lim
-                                    and (
-                                        tail_sp if tail_sp > 0 else 1
-                                    ) == 1
-                                )
-                                if gap2 is not None and (
-                                    keep1
-                                    or (reg_k <= 0.0 and gap2 != 0.0)
-                                    or gap2 < -0.2 * lim
-                                    or gap2 > 0.6 * lim
-                                ):
-                                    # flush-window kern: split the
-                                    # buffered segment (see the event
-                                    # consumer's K_TJNUM)
-                                    vv = cross_v + arise
-                                    tj_cx = (
-                                        tjfirst if tjfirst is not None
-                                        else start_x
-                                    )
-                                    ddx, ddy = _swapq(tj_cx, vv)
-                                    if (
-                                        self.show(
-                                            "".join(buf), vv, tj_cx,
-                                            size * asx, quad=quad,
-                                            dev_x=ddx, dev_y=ddy,
-                                            mat=_matstore(),
-                                            move_prev=tjhadw,
-                                            mirror=tz_mirror,
-                                            seg_w=tjwacc - tjtailw,
-                                        )
-                                        and tjprev is not None
-                                    ):
-                                        self.last_end_x = tjprev
-                                    if tj_kill:
-                                        self.pending_space = True
-                                        self.pending_multi = True
-                                        tj_kill = False
-                                    buf = []
-                                    start_x = cur_x
-                                    tjprev = None
-                                    tjfirst = None
-                                    tjhadw = False
-                                    tjwacc = 0.0
-                                    tjbpend = True
-                                    tjgabs = 0.0
-                                    tjtailw = 0.0
-                                    tail_sp = 0
-                                    tj_fake = False
-                                elif buf and buf[-1].endswith(" "):
-                                    # run-fate bands: see the event
-                                    # consumer's K_TJNUM. With NO
-                                    # anchor (null page prevTransform)
-                                    # pdf.js's compare early-returns —
-                                    # no kill, no fake
-                                    n_real = (
-                                        tail_sp if tail_sp > 0 else 1
-                                    )
-                                    if gap2 is not None:
-                                        kill = gap2 <= 0.03 * lim or (
-                                            n_real != 1
-                                            and gap2
-                                            <= self.GAP_FRACTION * lim
-                                        )
-                                        if (
-                                            kill
-                                            or gap2
-                                            > self.GAP_FRACTION * lim
-                                        ):
-                                            # absorbed outcomes (see
-                                            # pdftext_replay)
-                                            if not tjbpend:
-                                                tjwacc += gap2 - tjgabs
-                                                tjtailw += gap2 - tjgabs
-                                            tjgabs = gap2
-                                    else:
-                                        kill = False
-                                    if kill:
-                                        buf[-1] = buf[-1].rstrip(" ")
-                                        tail_sp = 0
-                                        tj_kill = True
-                                elif (
-                                    gap2 is not None
-                                    and gap2 > self.GAP_FRACTION * lim
-                                ):
-                                    tj_fake = True
-                                    if not tjbpend:
-                                        tjwacc += gap2 - tjgabs
-                                        tjtailw += gap2 - tjgabs
-                                    tjgabs = gap2
-                                elif gap2 is not None and gap2 != 0.0:
-                                    # quiet kern gap absorbed
-                                    if not tjbpend:
-                                        tjwacc += gap2 - tjgabs
-                                        tjtailw += gap2 - tjgabs
-                                    tjgabs = gap2
-                    vv = cross_v + arise
-                    tj_cx = tjfirst if tjfirst is not None else start_x
-                    ddx, ddy = _swapq(tj_cx, vv)
-                    if (
-                        self.show(
-                            "".join(buf), vv, tj_cx, size * asx,
-                            quad=quad, dev_x=ddx, dev_y=ddy, mat=_matstore(),
-                            move_prev=tjhadw,
-                            mirror=tz_mirror,
-                            # trailing provisional absorb stays with
-                            # the boundary (see pdftext_replay)
-                            seg_w=tjwacc - tjtailw,
-                        )
-                        and tjprev is not None
-                    ):
-                        self.last_end_x = tjprev
-                    if tj_kill:
-                        self.pending_space = True
-                        self.pending_multi = True
-                elif op == b"Do":
-                    # paintXObject flushes before resolving anything
-                    # (pdf.worker.js:36946) — images, missing names and
-                    # junk operands included
-                    self.force_flush = True
-                    if not stack or depth >= self.MAX_DEPTH:
-                        stack.clear()
-                        continue
-                    # advanced text matrix in TEXT space for the clone:
-                    # un-swap the compare-frame pen back to device, then
-                    # divide the full CTM out; the linear part is the
-                    # line matrix's (shows only translate tm)
-                    itm = None
-                    if quad == -1 and matn is not None:
-                        # device pen = anchor + advance projected along
-                        # the device writing direction (matn row 0).
-                        # NOT the matn-inverse of (cur_x, cross_v): the
-                        # stored cross_v is the ANCHOR's cross
-                        # coordinate, and under a NON-ORTHOGONAL frame
-                        # (shear — cross row not perpendicular to the
-                        # writing direction) the pen's cross coordinate
-                        # moves with the advance, so the inverse
-                        # reconstruction dropped the f-advance a sheared
-                        # show makes (translateTextMatrix moves e AND f
-                        # when b != 0) — the cloned tm then lagged and a
-                        # form's `0 0 Td` rewound to the wrong line
-                        # (round-5 form-lm hunt, base 81M doc02)
-                        adv_t = cur_x - (matn[0] * ax + matn[1] * ay)
-                        pdx = ax + adv_t * matn[0]
-                        pdy = ay + adv_t * matn[1]
-                    else:
-                        pdx, pdy = _swapq(cur_x, cross_v)
-                    if pdx is not None:
-                        det = cm_a * cm_d - cm_b * cm_c
-                        if det:
-                            ptx, pty = pdx - cm_e, pdy - cm_f
-                            itm = (
-                                tm_a, tm_b, tm_c, tm_d,
-                                (ptx * cm_d - pty * cm_c) / det,
-                                (pty * cm_a - ptx * cm_b) / det,
-                            )
-                    self._do_xobject(
-                        xobjs, str(stack[-1]), res, depth, seen,
-                        cm=(cm_a, cm_b, cm_c, cm_d, cm_e, cm_f),
-                        inherit=(
-                            fm if have_font else None,
-                            size, tc, tw,
-                            -tz if tz_mirror else tz,
-                            leading, rise, itm,
-                            plm if plm is not None else (tm_e, tm_f),
-                        ),
-                    )
-                elif op in (b"BMC", b"BDC", b"EMC"):
-                    # marked-content ops flush the open item
-                    # unconditionally (pdf.worker.js:37075,37085,37100)
-                    self.force_flush = True
-                elif op == b"BT":
-                    tm_a, tm_b, tm_c = 1.0, 0.0, 0.0
-                    tm_d, tm_e, tm_f = 1.0, 0.0, 0.0
-                    plm = seed_pending = None  # BT resets BOTH matrices
-                    ax = cm_e
-                    ay = cm_f
-                    _requad()
-                    # leading/Tc/Tw/Tz AND rise are TEXT STATE (persist
-                    # across BT — pdf.js beginText resets only the
-                    # matrices; verified vs live node): refresh the
-                    # matrix-scaled rise offset under the reset tm
-                    if quad:
-                        arise = _swapq(rise * cC, rise * cD)[1]
-                    else:
-                        arise = rise * tm_d * cm_d
-                    cur_x, cross_v = _swapq(ax, ay)
-                elif op == b"cm" and len(stack) >= 6:
-                    vals = [float(stack[i]) for i in range(-6, 0)]
-                    ma, mb, mc, md, me, mf = vals
-                    (cm_a, cm_b, cm_c, cm_d, cm_e, cm_f) = (
-                        ma * cm_a + mb * cm_c,
-                        ma * cm_b + mb * cm_d,
-                        mc * cm_a + md * cm_c,
-                        mc * cm_b + md * cm_d,
-                        me * cm_a + mf * cm_c + cm_e,
-                        me * cm_b + mf * cm_d + cm_f,
-                    )
-                    # the PEN follows the new matrix; prevTransform keeps
-                    # its old device point (never retransformed). The
-                    # pen's progress along the writing axis rescales by
-                    # the advance-scale ratio (exact for translate+scale;
-                    # quadrant changes re-anchor in the new frame)
-                    progress = cur_x - _swapq(ax, ay)[0]
-                    old_asx = asx
-                    ax = cm_a * tm_e + cm_c * tm_f + cm_e
-                    ay = cm_b * tm_e + cm_d * tm_f + cm_f
-                    _requad()
-                    cur_x, cross_v = _swapq(ax, ay)
-                    cur_x += progress * (asx / old_asx if old_asx else 1.0)
-                elif op == b"gs" and stack:
-                    gsd = (
-                        doc.resolve(extg.get(str(stack[-1])))
-                        if isinstance(extg, dict) else None
-                    )
-                    if isinstance(gsd, dict):
-                        gf = doc.resolve(gsd.get("Font"))
-                        if _js_truthy_obj(gf) and not (
-                            isinstance(gf, list) and len(gf) >= 2
-                        ):
-                            # `if (!gStateFont)` skips FALSY values
-                            # only: a truthy non-array / short array
-                            # still flushes and sets the font with
-                            # fontSize = gStateFont[1] == undefined —
-                            # NaN at every use site. jsvm models it.
-                            raise _JsCoerce()
-                        if isinstance(gf, list) and len(gf) >= 2:
-                            raw_sz = doc.resolve(gf[1])
-                            if isinstance(raw_sz, (int, float)) and (
-                                not isinstance(raw_sz, bool)
-                            ):
-                                nsize = float(raw_sz)
-                            else:
-                                # setGState stores gStateFont[1] RAW
-                                # (pdf.worker.js:37061) — a non-numeric
-                                # size still sets the font; NaN advances
-                                # are falsy so prevTransform never
-                                # updates and every glyph joins; string
-                                # sizes coerce per JS ToNumber (Python
-                                # float() is looser, e.g. "1_0").
-                                # Restart through jsvm.
-                                raise _JsCoerce()
-                            if nsize is not None:
-                                if nsize < 0.0:
-                                    # negative size: 180-flipped frame
-                                    # with a mixed-sign register — jsvm
-                                    # page (same as the Tf site)
-                                    raise _JsCoerce()
-                                # setGState with /Font flushes
-                                # UNCONDITIONALLY and sets the font by
-                                # REF (pdf.worker.js:37053-37062)
-                                self.force_flush = True
-                                fm = self._font_for_ref(gf[0])
-                                size = nsize
-                                have_font = True
-                elif op == b"q":
-                    # q/Q snapshot the WHOLE TextState (pdf.js
-                    # StateManager: ctm, text/line matrices, font,
-                    # Tc/Tw/Tz/TL/Ts — TextState.clone); the pen rewinds
-                    # with the restored matrices (verified vs live node:
-                    # `(a) Tj q ... Tm (b) Tj Q (c) Tj` puts c back on
-                    # a's line)
-                    if len(qstack) < 64:
-                        qstack.append((
-                            cm_a, cm_b, cm_c, cm_d, cm_e, cm_f,
-                            tm_a, tm_b, tm_c, tm_d, tm_e, tm_f,
-                            tc, tw, tz, leading, rise, arise,
-                            tz_mirror,
-                            fm, size, have_font,
-                            ax, ay, cur_x, cross_v,
-                            plm,
-                        ))
-                elif op == b"Q":
-                    if qstack:
-                        (cm_a, cm_b, cm_c, cm_d, cm_e, cm_f,
-                         tm_a, tm_b, tm_c, tm_d, tm_e, tm_f,
-                         tc, tw, tz, leading, rise, arise,
-                         tz_mirror,
-                         sfm, ssize, have_font,
-                         ax, ay, cur_x, cross_v,
-                         plm) = qstack.pop()
-                        # restore flushes ONLY on a font/size change
-                        # (pdf.worker.js:37112); no updateAdvanceScale
-                        # runs at restore, so no scale_flush arming
-                        if sfm is not fm or ssize != size:
-                            self.force_flush = True
-                        fm, size = sfm, ssize
-                        _requad()
-                # other operators (re, colors, paths...) are no-ops
-                # for text extraction
-            except (TypeError, ValueError):
-                pass
-            stack.clear()
-
     def _do_xobject(self, xobjs, name: str, parent_res, depth: int,
                     seen: frozenset,
                     cm: tuple | None = None,
@@ -6350,8 +3552,7 @@ class _TextInterp:
             return
         # the form's /Matrix maps form space onto the parent space: seed
         # the nested interpreter's CTM by prepending the equivalent cm
-        # (both the C lexer and the Python fallback consume it the same
-        # way; fixed-point formatting because the content-stream number
+        # (fixed-point formatting because the content-stream number
         # grammar has no exponents)
         mat = doc.resolve(xo.dict.get("Matrix"))
         if isinstance(mat, list) and len(mat) == 6:
@@ -6424,7 +3625,7 @@ class _TextInterp:
         # form, the page's own closure resumes with its pre-Do glyph
         # state (prevTransform/twoLastChars persist across next()).
         # pdf.js recurses with a FRESH getTextContent closure: the form
-        # gets its own prevTransform (glyph_y/last_end_x/glyph_mat),
+        # gets its own prevTransform (glyph_y/last_end_x),
         # twoLastChars ring (last_char + pending run memory) and
         # textContentItem staleness (item_size/item_hsize/scale_flush);
         # only the SINK (pieces/last_y/line_open) is shared. Save the
@@ -6433,7 +3634,6 @@ class _TextInterp:
         # page's ring (a post-form tracking-space decision reads the
         # pre-Do glyphs) nor leave its stale item scale behind.
         prev_gy, prev_x = self.glyph_y, self.last_end_x
-        prev_mat = self.glyph_mat
         prev_pending = self.pending_space
         prev_multi = self.pending_multi
         prev_lc = self.last_char
@@ -6443,7 +3643,6 @@ class _TextInterp:
         self.force_flush = True
         self.glyph_y = None
         self.last_end_x = None
-        self.glyph_mat = None
         self.pending_space = False
         self.pending_multi = False
         self.last_char = ""
@@ -6458,18 +3657,10 @@ class _TextInterp:
                 seen | ({key} if key is not None else set()),
                 lm_seed=lm_seed,
             )
-        except _PageStop:
-            # the form frame's OWN ignoreErrors catch resolves with its
-            # partial text (pdf.worker.js:37129-37140) — the outer page
-            # continues after the Do (the force_flush below closes the
-            # form's open item at the next boundary, the same flush the
-            # normal form-end path takes). _JsCoerce/_CDefer propagate:
-            # those restart the WHOLE page in another tier.
-            pass
         finally:
+            # a _CDefer propagates: the WHOLE page re-runs in jsvm
             self._inh_fm = inh_prev
         self.glyph_y, self.last_end_x = prev_gy, prev_x
-        self.glyph_mat = prev_mat
         self.pending_space = prev_pending
         self.pending_multi = prev_multi
         self.last_char = prev_lc
@@ -6558,25 +3749,26 @@ class _JsCtx:
     """Document-run-scoped JS font state. pdf.js's per-font
     ``Font._charsCache`` lives on DOCUMENT-cached translated fonts
     (pdf.worker.js:28064), so a junk show on page P can hit or poison
-    string keys shown on pages < P. The fast tiers neither consult nor
-    populate the cache (plain-string pages are cache-transparent —
-    lookup and store return the same glyphs charsToGlyphs would build),
-    so on the FIRST jsvm deferral the PRECEDING pages replay through
-    the jsvm tier population-only (text discarded, cache accrued in
-    the reference's sequential page order). Page-range (chunked) parses
-    populate from page 0 as well, so any range that defers at least
-    once reproduces the DEFAULT sequential engine's output exactly.
-    The one range-mode residual: a chunk with NO jsvm deferral of its
-    own never learns about prefix poison (a bare '5 Tj' on an earlier
-    page muting this chunk's plain '(5) Tj') — which is precisely the
-    reference's OWN child-strategy semantics (each pdf-child re-opens
-    the document and accrues caches only from the pages it renders,
-    lib/pdf-child.js:56-97), pinned in
+    string keys shown on pages < P. The C path and cache-free jsvm
+    pages neither consult nor populate the cache (plain-string pages
+    are cache-transparent — lookup and store return the same glyphs
+    charsToGlyphs would build), so on the FIRST page that needs the
+    cache (a JS-coercion page, see ``_js_page_text``) the PRECEDING
+    pages replay through jsvm population-only (text discarded, cache
+    accrued in the reference's sequential page order). Page-range
+    (chunked) parses populate from page 0 as well, so any range with
+    at least one coercion page reproduces the DEFAULT sequential
+    engine's output exactly. The one range-mode residual: a chunk with
+    no coercion page of its own never learns about prefix poison (a
+    bare '5 Tj' on an earlier page muting this chunk's plain '(5) Tj')
+    — which is precisely the reference's OWN child-strategy semantics
+    (each pdf-child re-opens the document and accrues caches only from
+    the pages it renders, lib/pdf-child.js:56-97), pinned in
     test_chunked_poison_matches_reference_child_semantics.
 
     Poisoned keys (a .length-less junk show stored [] under its
     stringified key) MUTE later plain shows of the equal string on the
-    same font — including on LATER PAGES that the fast tiers would
+    same font — including on LATER PAGES that the C path would
     otherwise keep. Once any poisoned key exists, every subsequent
     page routes through jsvm (``poisoned`` flag), which consults the
     cache; population-only keys are transparent to plain shows (the
@@ -6635,55 +3827,48 @@ class _JsCtx:
 
 def _page_text(doc: Document, page: dict, resources,
                jsctx: "_JsCtx | None" = None, page_idx: int = 0) -> str:
+    """One page's text: the C path when it can take every stream of
+    the page, else kernels/jsvm.py for the whole page. After an earlier
+    jsvm page poisoned a charsCache key, plain shows of the equal string
+    on that font must be MUTED, which only the cache-consulting jsvm
+    tier renders exactly."""
     data = _page_data(doc, page)
     if not data:
         return ""
-    if jsctx is not None and jsctx.poisoned:
-        # an earlier jsvm page poisoned a charsCache key: plain shows
-        # of the equal string on that font must be MUTED — only the
-        # cache-consulting jsvm tier can render this page exactly
-        return _js_page_text(doc, page, data, resources, jsctx, page_idx)
-    interp = _TextInterp(doc, viewbox=_page_view_box(doc, page))
-    try:
-        interp.run(data, resources)
-    except _CDefer:
-        # the C replay flagged a width-register-sensitive construct:
-        # re-run the whole page through the exact Python model (the
-        # interp is per-page, so discarding it is a clean rollback)
+    if jsctx is None or not jsctx.poisoned:
         interp = _TextInterp(doc, viewbox=_page_view_box(doc, page))
-        interp.no_c = True
         try:
             interp.run(data, resources)
-        except _PageStop:
+            return interp.text()
+        except _CDefer:
             pass
-        except _JsCoerce:
-            return _js_page_text(doc, page, data, resources,
-                                 jsctx, page_idx)
-    except _PageStop:
-        # pdf.js getTextContent caught a FormatError with ignoreErrors:
-        # the page's PARTIAL text (everything emitted before the bad
-        # construct) is the result — not an error row
-        pass
-    except _JsCoerce:
-        return _js_page_text(doc, page, data, resources, jsctx, page_idx)
-    return interp.text()
+    return _js_page_text(doc, page, data, resources, jsctx, page_idx)
 
 
 def _js_page_text(doc: Document, page: dict, data: bytes, resources,
                   jsctx: "_JsCtx | None" = None, page_idx: int = 0) -> str:
-    """Page restart through the faithful JS-semantics interpreter
-    (kernels/jsvm.py) — a non-numeric operand reached a numeric
-    text-state slot, which the float pipeline cannot model (raw-store +
-    use-site coercion + NaN position cascades + charsCache hits)."""
+    """Render one page through kernels/jsvm.py. The document charsCache
+    (``jsctx``) is used only where it can change the output: after a
+    poisoned key, or on a page with an operand that needs JS coercion
+    (``jsvm.NeedsCharsCache``). Every other page runs with a page-local
+    cache, which string shows see as transparent, so a rotated or Type0
+    page late in a range never replays the pages before it."""
     from . import jsvm
 
-    caches = None
+    viewbox = _page_view_box(doc, page)
+    if jsctx is None or not jsctx.poisoned:
+        vm = jsvm.JsVM(_TextInterp(doc, viewbox=viewbox))
+        try:
+            vm.run_page(data, resources)
+            return vm.text()
+        except jsvm.NeedsCharsCache:
+            pass
+    caches: dict = {}
     if jsctx is not None:
         jsctx.populate_to(page_idx)  # prior pages' charsCache accrual
         jsctx.refresh_poisoned()  # prefix junk demotes LATER range pages
         caches = jsctx.caches
-    interp = _TextInterp(doc, viewbox=_page_view_box(doc, page))
-    vm = jsvm.JsVM(interp, chars_caches=caches)
+    vm = jsvm.JsVM(_TextInterp(doc, viewbox=viewbox), chars_caches=caches)
     vm.run_page(data, resources)
     if jsctx is not None:
         jsctx.pop_upto = max(jsctx.pop_upto, page_idx + 1)

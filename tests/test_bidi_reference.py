@@ -56,7 +56,11 @@ def test_c_replay_gate_covers_activation():
 def test_hebrew_through_real_pdf_end_to_end():
     """A 1-byte font whose ToUnicode maps to Hebrew: the extracted page
     text must be the reference-reordered string (the C path hands the
-    RTL-capable font's stream to ``_run_py``)."""
+    RTL-capable font's page to jsvm). The glyphs need real /Widths: the
+    standard Helvetica metrics have no Hebrew glyph, and zero-width
+    glyphs never move prevTransform, so pdf.js's zero-width cascade
+    (pinned live by test_zero_width_cascade in
+    tests/test_node_differential.py) would space every letter."""
     from tests.test_real_pdf import _page_scaffold
 
     import zlib as z
@@ -75,7 +79,8 @@ def test_hebrew_through_real_pdf_end_to_end():
     comp = z.compress(cmap)
     font_objs = {
         5: b"<< /Type /Font /Subtype /Type1 /BaseFont /Heb "
-           b"/ToUnicode 6 0 R >>",
+           b"/FirstChar 32 /LastChar 127 /Widths [%s] "
+           b"/ToUnicode 6 0 R >>" % b" ".join([b"500"] * 96),
         6: b"<< /Length %d /Filter /FlateDecode >>\nstream\n%s\nendstream"
            % (len(comp), comp),
     }

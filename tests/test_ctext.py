@@ -1,8 +1,10 @@
-"""C lexer path vs pure-Python interpreter: byte-identical output.
+"""C lexer + C replay vs the jsvm tier: byte-identical output.
 
-The compiled ``_ctext.c`` event machine is a performance port of
-``_TextInterp._run_py``; the Python interpreter remains the reference.
-Every document here is parsed through BOTH paths and the extracted text,
+The compiled ``_ctext.c`` event machine renders every page it can take;
+``kernels/jsvm.py``, a direct transcription of pdf.js getTextContent,
+renders the rest, and every page when ``cinterp.AVAILABLE`` is False.
+Every document here is parsed both ways (C first, then with the C path
+switched off so every page runs through jsvm) and the extracted text,
 spans, info and error fields must match exactly.
 """
 
@@ -44,19 +46,19 @@ def _both(raw: bytes) -> tuple[dict, dict]:
     c = pdfb.parse_pdf_bytes(raw)
     cinterp.AVAILABLE = False
     try:
-        py = pdfb.parse_pdf_bytes(raw)
+        js = pdfb.parse_pdf_bytes(raw)
     finally:
         cinterp.AVAILABLE = True
-    return c, py
+    return c, js
 
 
 def _assert_same(raw: bytes) -> None:
-    c, py = _both(raw)
-    assert c["text"] == py["text"]
-    assert c["page_spans"] == py["page_spans"]
-    assert c["info"] == py["info"]
-    assert c["error"] == py["error"]
-    assert c["n_pages"] == py["n_pages"]
+    c, js = _both(raw)
+    assert c["text"] == js["text"]
+    assert c["page_spans"] == js["page_spans"]
+    assert c["info"] == js["info"]
+    assert c["error"] == js["error"]
+    assert c["n_pages"] == js["n_pages"]
 
 
 @pytest.mark.requires_reference
@@ -181,9 +183,9 @@ def test_trailing_space_before_form_xobject_paths_identical(x2):
            b"BT /F1 10 Tf 1 0 0 1 %.2f 700 Tm (cd) Tj ET" % x2)
     objs[4] = b"<< /Length %d >>\nstream\n%s\nendstream" % (len(ops), ops)
     raw = _assemble(objs)
-    c, py = _both(raw)
-    assert c["text"] == py["text"]
-    assert py["text"].endswith("abzz cd")
+    c, js = _both(raw)
+    assert c["text"] == js["text"]
+    assert js["text"].endswith("abzz cd")
 
 
 def test_encrypted_fixture_paths_identical():
@@ -268,8 +270,8 @@ def test_random_token_soup_paths_identical():
     for trial in range(60):
         ops = " ".join(rng.choice(toks) for _ in range(rng.randint(5, 60)))
         doc = _scaffold(ops.encode("latin-1"))
-        c, py = _both(doc)
-        assert c["text"] == py["text"], (trial, ops)
+        c, js = _both(doc)
+        assert c["text"] == js["text"], (trial, ops)
 
 
 def test_coalesce_tj_c_twin_identical_to_python():
@@ -308,8 +310,8 @@ def test_coalesce_tj_c_twin_identical_to_python():
 
 # ---------------------------------------------------------------------------
 # Path identity over the differential generators and their pinned
-# reproducers: every stream takes the C lexer + C replay where it can
-# and ``_run_py`` otherwise, and must match ``_run_py`` on every stream.
+# reproducers: every page takes the C lexer + C replay where it can and
+# jsvm otherwise, and must match an all-jsvm run on every page.
 # ---------------------------------------------------------------------------
 
 def test_tj_coalesce_path_identity():
@@ -432,8 +434,8 @@ def test_form_lm_path_identity():
 
 
 def test_register_path_identity():
-    """The C replay (with its defer-to-``_run_py`` escape hatch) agrees
-    with ``_run_py`` on both register generators."""
+    """The C replay (with its defer-to-jsvm escape hatch) agrees with
+    jsvm on both register generators."""
     import random
 
     docs = [_gen_zwreg_stream(random.Random(9000 + s)) for s in range(12)]
@@ -458,9 +460,9 @@ def test_closed_form_prev_path_identity():
 
 
 def test_coerce_c_defer_path_identity():
-    """The C lexer must DEFER coercion streams (return -2 -> exact
-    Python page -> _JsCoerce -> jsvm), so C-enabled and C-disabled runs
-    are identical on every pinned + swept stream."""
+    """The C lexer must DEFER coercion streams (return -2 -> a jsvm
+    page with the document charsCache), so C-enabled and C-disabled
+    runs are identical on every pinned + swept stream."""
     import random
 
     streams = list(_COERCE_PINNED) + list(_CHARSCACHE_PINNED) + [
@@ -485,6 +487,6 @@ def test_generator_sweep_paths_identical():
             doc = gen(random.Random(3_200_000 + i * 10_000 + s))
             if name in plain:
                 doc = _nd_assemble(doc)
-            c, py = _both(doc)
+            c, js = _both(doc)
             for key in ("text", "page_spans", "error"):
-                assert c[key] == py[key], (name, s, key)
+                assert c[key] == js[key], (name, s, key)

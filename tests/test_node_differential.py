@@ -245,8 +245,8 @@ def test_flush_scale_streams_byte_equal_vs_live_reference(tmp_path):
 
 def _gen_rise_space_stream(rng: random.Random) -> bytes:
     """Per-glyph item splitting at quadrant 0 (the round-3 VERDICT's
-    last known divergence class, now closed by pdfb._seg_split and the
-    C twin's SegRec machinery): mid-line Ts toggles x multi-space /
+    last known divergence class, now closed by the C replay's SegRec
+    machinery; jsvm compares per glyph): mid-line Ts toggles x multi-space /
     letter-spaced / negative-Tc/Tw items x TJ runs crossing element
     boundaries. Out-of-window internal space runs must split the item —
     notASpace kills the run, shouldAddWhitepsace and spaceInFlowMax
@@ -2308,9 +2308,8 @@ def _gen_allzw_stream(rng: random.Random) -> bytes:
     march it off the right page edge where pdf.js's box test — at the
     TOP of compareWithLastPosition, BEFORE the null-prevTransform
     early-return — silently swallows the tail. The round-5 hunt caught
-    the engine keeping those tails on Cf-bearing items (_seg_split
-    returned None on a reject-only walk and the inline _clip_x
-    fallback is gated on len(dec) == len(item))."""
+    the engine keeping those tails on Cf-bearing items (the former
+    Python tier's item splitter returned None on a reject-only walk)."""
     letters = "abcdefgh"
 
     def longword():
@@ -2443,10 +2442,9 @@ def test_lgap_trailing_space_and_clip_anchor_byte_equal_vs_live_reference(
        never runs at a space glyph, so no fake space lands between the
        last real glyph and a trailing space — a joined 2-run made the
        pend machinery vanish a space the reference keeps
-       (pdfb._lgap_join / the C pendj_ withhold).
+       (the C pendj_ withhold).
     2. leading box-rejected glyphs advance width-only with NO compare:
-       the item anchors at its first VISIBLE glyph (_clip_x first_vis_x)
-       — anchoring at the clipped item start flipped a +7.51 fake-space
+       the item anchors at its first VISIBLE glyph — anchoring at the clipped item start flipped a +7.51 fake-space
        advance into a -3.61 carriage return.
     """
     mins = [
@@ -3046,16 +3044,16 @@ def test_closed_form_prev_equal_position_byte_equal_vs_live_reference(
     tmp_path,
 ):
     """Closed-form prevTransform/first-x in the C inline path (combo
-    hunt base 22,000,000 seed 17): the Python consumers derive
+    hunt base 22,000,000 seed 17): the former Python tier derived
     last_end_x and the first-glyph compare x from the CLOSED-FORM
-    prefix advance (pdfb._prev_x/_first_x), and the equal-position
+    prefix advance, and the equal-position
     shortcut (adv == 0.0 exactly) only fires when tx (the closed-form
     cur_x chain) and last_end_x share that arithmetic. The C replay's
     accumulative walk left ulp dust (lastx 227.98400000000001 vs tx
     227.98399999999998) and glued 'zetkap' where the reference emits
     'zet kap'. rp_decode now exports the closed-form twins for clean
-    inline items (split/clipped/zw paths keep the accumulative values,
-    matching _seg_split/_clip_x)."""
+    inline items (split/clipped/zw paths keep the accumulative
+    values)."""
     docs = [_assemble(s) for s in _CLOSED_PREV_STREAMS] + [
         _assemble(_gen_combo_stream(random.Random(22_000_017)))
     ]
@@ -3064,11 +3062,11 @@ def test_closed_form_prev_equal_position_byte_equal_vs_live_reference(
 
 # ---- JS value-coercion tier (kernels/jsvm.py) ----------------------------
 # A non-numeric operand in a numeric text-state slot routes the page to the
-# faithful JS-semantics interpreter (pdfb._JsCoerce -> jsvm.JsVM): raw slot
-# stores, per-use-site ToNumber/ToString coercion, "5"+0 == "50" concat in
-# charSpacing + extraSpacing, NaN position cascades through addFakeSpaces.
-# Pinned probes (scripts/probe_coerce.py, all live-node verified) + a
-# seeded sweep.
+# faithful JS-semantics interpreter (jsvm.JsVM with the document
+# charsCache): raw slot stores, per-use-site ToNumber/ToString coercion,
+# "5"+0 == "50" concat in charSpacing + extraSpacing, NaN position
+# cascades through addFakeSpaces. Pinned probes (live-node verified, the
+# cm rows added since) + a seeded sweep.
 
 _COERCE_PINNED = [
     b"BT /F1 10 Tf 1 0 0 1 72 700 Tm (5) Tc (gamma) Tj ET",
@@ -3099,6 +3097,17 @@ _COERCE_PINNED = [
     b"BT /F1 10 Tf 1 0 0 1 72 700 Tm [] Tc (gamma) Tj ET",
     b"BT /F1 10 Tf 1 0 0 1 72 700 Tm ( 5 ) Tc (gamma) Tj ET",
     b"BT /F1 10 Tf 1 0 0 1 72 700 Tm (-3) Tc (gamma) Tj ET",
+    # non-numeric cm operands: Util.transform coerces them like the
+    # text-state slots
+    b"q (xy) 0 0 1 0 0 cm BT /F1 10 Tf 1 0 0 1 72 700 Tm (gamma) Tj ET Q",
+    b"q 1 0 0 1 (5) 0 cm BT /F1 10 Tf 1 0 0 1 72 700 Tm (gamma) Tj"
+    b" (beta) Tj ET Q",
+    b"q [2] 0 0 1 0 0 cm BT /F1 10 Tf 1 0 0 1 72 700 Tm (gamma) Tj ET Q",
+    b"q 1 0 0 1 0 /Five cm BT /F1 10 Tf 1 0 0 1 72 700 Tm (gamma) Tj"
+    b" (beta) Tj ET Q",
+    b"q true 0 0 1 0 0 cm BT /F1 10 Tf 1 0 0 1 72 700 Tm (gamma) Tj ET Q",
+    b"q 1 0 0 1 (xy) 20 cm BT /F1 10 Tf 1 0 0 1 72 700 Tm (al be) Tj"
+    b" 0 -20 Td (ga de) Tj ET Q",
 ]
 
 # operand universe for numeric slots: strings that ToNumber to numbers
@@ -3210,9 +3219,9 @@ def test_coerce_through_forms_byte_equal_vs_live_reference(tmp_path):
     form's sub-state, junk confined INSIDE the form (outer text after Do
     must be unpoisoned — the stateManager clone isolates), a junk form
     /Matrix cell (lookupMatrix -> null, matrix skipped), junk cm around
-    the Do, and junk leading consumed by T* inside the form. A _JsCoerce
-    raised inside a nested form run restarts the WHOLE page through
-    jsvm, which recurses into forms itself."""
+    the Do, and junk leading consumed by T* inside the form. A form the
+    C path cannot take sends the WHOLE page through jsvm, which recurses
+    into forms itself."""
     _run_differential(
         tmp_path,
         [
@@ -4030,36 +4039,6 @@ def test_font_chaos_sweep_byte_equal_vs_live_reference(tmp_path):
     )
 
 
-def test_chunked_poison_matches_reference_child_semantics():
-    """Page-range parses and charsCache poison: a range that defers at
-    least once populates from page 0 (whole-doc-exact); a range with NO
-    deferral of its own keeps the fast tiers and never sees prefix
-    poison — exactly the reference's child-process semantics (each
-    pdf-child re-opens the document and accrues font caches only from
-    the pages it renders, lib/pdf-child.js:56-97; the reference's OWN
-    chunked strategies diverge from its sequential default on such
-    docs)."""
-    doc = _assemble_two_pages(
-        b"BT /F1 10 Tf 1 0 0 1 72 700 Tm (x) Tj 5 Tj ET",
-        b"BT /F1 10 Tf 1 0 0 1 72 700 Tm (5) Tj (post) Tj ET")
-    whole = pdfb.parse_pdf_bytes(doc)
-    assert whole["text"] == "\n\nx\n\npost"  # live-verified: (5) muted
-    # chunk [1,2) alone: no deferral in range -> fast tiers -> the
-    # child-semantics output (the (5) shows)
-    c1 = pdfb.parse_pdf_bytes(doc, page_range=(1, 2))
-    assert c1["text"] == "\n\n5post"
-    # a range CONTAINING junk populates from page 0: [0,2) == whole
-    c01 = pdfb.parse_pdf_bytes(doc, page_range=(0, 2))
-    assert c01["text"] == whole["text"]
-    # deferral in a later range: prefix populate + poison refresh mute
-    # the plain show on the NEXT page of the same range
-    doc3 = _assemble_two_pages(
-        b"BT /F1 10 Tf 1 0 0 1 72 700 Tm (x) Tj 5 Tj ET",
-        b"BT /F1 10 Tf (xy) Tc 1 0 0 1 72 650 Tm (q) Tj ET")
-    r = pdfb.parse_pdf_bytes(doc3, page_range=(1, 2))
-    assert "q" in r["text"]
-
-
 def _gen_inline_image_stream(rng: random.Random) -> bytes:
     """Inline images (BI ... ID <data> EI): pdf.js ends the data with
     findDefaultInlineStreamEnd (pdf.worker.js:13449-13538) — E,I
@@ -4161,8 +4140,7 @@ def _gen_inline_image_stream(rng: random.Random) -> bytes:
 
 def test_inline_image_probes_byte_equal_vs_live_reference(tmp_path):
     """Distilled BI/ID/EI probes, each verified against the live node
-    reference during the round-5 build (scripts/probe_inline.py keeps
-    the ad-hoc harness): default end-finder accept/reject paths (ws
+    reference during the round-5 build: default end-finder accept/reject paths (ws
     rules, 15-byte window, NUL pair, arity walk, EOF recovery),
     filter-specific EOD scanners + skip-to-EI-anywhere, non-Name dict
     keys (page stop, partial text kept), junk values (fine), pending
@@ -4274,8 +4252,7 @@ def _gen_ref_stream(rng: random.Random) -> bytes:
 
 def test_content_ref_probes_byte_equal_vs_live_reference(tmp_path):
     """Distilled `int int R` probes, each verified against the live node
-    reference during the round-5 build (scripts/probe_refs.py and
-    probe_refs2.py keep the ad-hoc harnesses): trio folding at top level
+    reference during the round-5 build: trio folding at top level
     (underflow skips, stash slides, NaN cascades from Ref-valued slots,
     charsCache poisoning under the "5R"/"5R2" stringified key), trio
     folding inside TJ arrays (the Ref eats both kerns), inert Cmd
@@ -4387,8 +4364,7 @@ def _gen_numlex_stream(rng: random.Random) -> bytes:
 
 def test_numlex_probes_byte_equal_vs_live_reference(tmp_path):
     """Distilled getNumber / lexer-throw probes, each verified against
-    the live node reference during the round-5 build
-    (scripts/probe_numlex.py keeps the ad-hoc harness)."""
+    the live node reference during the round-5 build."""
     H = b"BT /F1 12 Tf 100 700 Td "
     A = H + b"(ab) Tj "
     _run_differential(

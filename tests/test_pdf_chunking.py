@@ -34,6 +34,91 @@ def test_page_range_kernel_slices_exactly(big_pdf):
     assert [p for p, _, _ in part["page_spans"]] == list(range(101, 151))
 
 
+def _assemble_pages(contents: list[bytes]) -> bytes:
+    """One page per content stream, all sharing one Helvetica /F1 (the
+    cross-page charsCache axis: pdf.js translated fonts are
+    DOCUMENT-cached)."""
+    n = len(contents)
+    kids = b" ".join(b"%d 0 R" % (4 + i) for i in range(n))
+    objs = [
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /Kids [%s] /Count %d >>" % (kids, n),
+        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
+    ] + [
+        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+        b"/Resources << /Font << /F1 3 0 R >> >> /Contents %d 0 R >>"
+        % (4 + n + i)
+        for i in range(n)
+    ] + [
+        b"<< /Length %d >>\nstream\n%s\nendstream" % (len(c), c)
+        for c in contents
+    ]
+    out = bytearray(b"%PDF-1.4\n")
+    offs = []
+    for i, o in enumerate(objs, 1):
+        offs.append(len(out))
+        out += b"%d 0 obj\n%s\nendobj\n" % (i, o)
+    xref = len(out)
+    out += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objs) + 1)
+    for off in offs:
+        out += b"%010d 00000 n \n" % off
+    out += b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n" % (
+        len(objs) + 1, xref)
+    return bytes(out)
+
+
+def test_chunked_poison_matches_reference_child_semantics():
+    """Page-range parses and charsCache poison: a range with at least
+    one coercion page populates from page 0 (whole-doc-exact); a range
+    with NO coercion page of its own renders without the document cache
+    and never sees prefix poison — exactly the reference's
+    child-process semantics (each pdf-child re-opens the document and
+    accrues font caches only from the pages it renders,
+    lib/pdf-child.js:56-97; the reference's OWN chunked strategies
+    diverge from its sequential default on such docs)."""
+    doc = _assemble_pages([
+        b"BT /F1 10 Tf 1 0 0 1 72 700 Tm (x) Tj 5 Tj ET",
+        b"BT /F1 10 Tf 1 0 0 1 72 700 Tm (5) Tj (post) Tj ET"])
+    whole = pdfb.parse_pdf_bytes(doc)
+    assert whole["text"] == "\n\nx\n\npost"  # live-verified: (5) muted
+    # chunk [1,2) alone: no coercion page in range -> no document
+    # cache -> the child-semantics output (the (5) shows)
+    c1 = pdfb.parse_pdf_bytes(doc, page_range=(1, 2))
+    assert c1["text"] == "\n\n5post"
+    # a range CONTAINING junk populates from page 0: [0,2) == whole
+    c01 = pdfb.parse_pdf_bytes(doc, page_range=(0, 2))
+    assert c01["text"] == whole["text"]
+    # a coercion page in a later range: prefix populate + poison
+    # refresh mute the plain show on the NEXT page of the same range
+    doc3 = _assemble_pages([
+        b"BT /F1 10 Tf 1 0 0 1 72 700 Tm (x) Tj 5 Tj ET",
+        b"BT /F1 10 Tf (xy) Tc 1 0 0 1 72 650 Tm (q) Tj ET"])
+    r = pdfb.parse_pdf_bytes(doc3, page_range=(1, 2))
+    assert "q" in r["text"]
+
+
+def test_range_jsvm_page_replays_no_prefix(monkeypatch):
+    """A rotated page needs jsvm but not the document charsCache: a
+    range parse of the last page of a 500-page document renders exactly
+    that one page through jsvm, with no replay of the 499 before it."""
+    from pdf_parse_new_spark.kernels import jsvm
+
+    plain = b"BT /F1 10 Tf 1 0 0 1 72 700 Tm (page) Tj ET"
+    rotated = b"BT /F1 10 Tf 0 1 -1 0 300 300 Tm (turned) Tj ET"
+    doc = _assemble_pages([plain] * 499 + [rotated])
+    calls = []
+    run_page = jsvm.JsVM.run_page
+
+    def counting(self, data, resources):
+        calls.append(data)
+        return run_page(self, data, resources)
+
+    monkeypatch.setattr(jsvm.JsVM, "run_page", counting)
+    r = pdfb.parse_pdf_bytes(doc, page_range=(499, 500))
+    assert r["text"] == "\n\nturned" and r["page_spans"] == [(500, 2, 8)]
+    assert calls == [rotated]
+
+
 def _rows_by_id(df):
     return {r.doc_id: r for r in df.collect()}
 

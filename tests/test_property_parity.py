@@ -167,16 +167,29 @@ def test_bidi_in_binary_dialect_show_path():
     heuristic picks an RTL base, so the LTR words land in reversed visual
     order too."""
     from pdf_parse_new_spark.kernels import pdfb
+    from tests.test_real_pdf import _page_scaffold
 
-    interp = pdfb._TextInterp.__new__(pdfb._TextInterp)
-    interp.pieces, interp.line_open, interp.last_char = [], False, ""
-    interp.last_y, interp.last_end_x = None, None
-    interp.pending_space = False
-    interp.glyph_y, interp.force_flush = None, False
-    interp.scale_flush, interp.item_size = False, 0.0
-    interp.item_hsize, interp.glyph_mat = 0.0, None
-    interp.pending_multi = False
-    interp.viewbox = None
-    interp._it_start = None
-    interp.show("hello שלום עולם world", 0.0)
-    assert interp.text() == "world " + "שלום עולם"[::-1] + " hello"
+    # uppercase codes -> Hebrew letters, lowercase and space -> themselves
+    heb = dict(zip(b"SLOMAV", "שלוםעו"))
+    pairs = {c: chr(c) for c in b" dehlorw"} | heb
+    bf = "".join(
+        f"<{c:02X}> <{ord(u):04X}>\n" for c, u in sorted(pairs.items())
+    ).encode()
+    cmap = (
+        b"begincmap\n1 begincodespacerange <00> <FF> endcodespacerange\n"
+        b"%d beginbfchar\n%sendbfchar\nendcmap" % (len(pairs), bf)
+    )
+    ops = b"BT /F1 12 Tf 1 0 0 1 72 700 Tm (hello SLOM AVLM world) Tj ET"
+    doc = _page_scaffold(
+        b"<< /Length %d >>\nstream\n%s\nendstream" % (len(ops), ops),
+        {
+            5: b"<< /Type /Font /Subtype /Type1 /BaseFont /Heb "
+               b"/FirstChar 32 /LastChar 127 /Widths [%s] "
+               b"/ToUnicode 6 0 R >>" % b" ".join([b"500"] * 96),
+            6: b"<< /Length %d >>\nstream\n%s\nendstream"
+               % (len(cmap), cmap),
+        },
+        font_ref=5,
+    )
+    text = pdfb.parse_pdf_bytes(doc)["text"]
+    assert text == "\n\nworld " + "שלום עולם"[::-1] + " hello"

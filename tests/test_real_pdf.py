@@ -763,51 +763,37 @@ def test_pending_space_model():
     Runs collapse to one space; trailing/leading spaces never survive at
     line edges (node-verified: the reference's output for the whole
     corpus contains zero double spaces, zero trailing spaces, and zero
-    post-newline leading spaces)."""
-    def mk():
-        it = pdfb._TextInterp.__new__(pdfb._TextInterp)
-        it.pieces, it.line_open, it.last_char = [], False, ""
-        it.last_y, it.last_end_x, it.pending_space = None, None, False
-        it.glyph_y, it.force_flush = None, False
-        it.scale_flush, it.item_size = False, 0.0
-        it.item_hsize, it.glyph_mat = 0.0, None
-        it.pending_multi = False
-        it._it_start = None
-        it.viewbox = None
-        return it
+    post-newline leading spaces). Both tiers, the C replay and jsvm,
+    render every case."""
+    from pdf_parse_new_spark.kernels import cinterp
+    from tests.test_node_differential import _assemble as _nd_assemble
+
+    def both(shows: bytes) -> set[str]:
+        raw = _nd_assemble(
+            b"BT /F1 10 Tf 1 0 0 1 72 700 Tm " + shows + b" ET"
+        )
+        avail = cinterp.AVAILABLE
+        out = {pdfb.parse_pdf_bytes(raw)["text"]}
+        cinterp.AVAILABLE = False
+        try:
+            out.add(pdfb.parse_pdf_bytes(raw)["text"])
+        finally:
+            cinterp.AVAILABLE = avail
+        return out
 
     # interior runs collapse
-    it = mk()
-    it.show("a  b   c", 0.0)
-    assert it.text() == "a b c"
-
+    assert both(b"(a  b   c) Tj") == {"\n\na b c"}
     # a trailing space stays pending: materializes before the next
     # same-line item, not at end-of-text
-    it = mk()
-    it.show("word ", 0.0)
-    assert it.text() == "word"
-    it.show("next", 0.0)
-    assert it.text() == "word next"
-
+    assert both(b"(word ) Tj") == {"\n\nword"}
+    assert both(b"(word ) Tj (next) Tj") == {"\n\nword next"}
     # pending space dies at a line break (no trailing space before \n,
     # no leading space after it)
-    it = mk()
-    it.show("tail ", 0.0)
-    it.show(" head", 10.0)
-    assert it.text() == "tail\nhead"
-
+    assert both(b"(tail ) Tj 0 -20 Td ( head) Tj") == {"\n\ntail\nhead"}
     # an all-whitespace item holds a pending space across items
-    it = mk()
-    it.show("x", 0.0)
-    it.show("   ", 0.0)
-    it.show("y", 0.0)
-    assert it.text() == "x y"
-
+    assert both(b"(x) Tj (   ) Tj (y) Tj") == {"\n\nx y"}
     # but an all-whitespace item at line start produces nothing
-    it = mk()
-    it.show(" ", 0.0)
-    it.show("z", 0.0)
-    assert it.text() == "z"
+    assert both(b"( ) Tj (z) Tj") == {"\n\nz"}
 
 
 @pytest.mark.requires_reference
