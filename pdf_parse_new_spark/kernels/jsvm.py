@@ -161,10 +161,10 @@ def to_number(v) -> float:
 def js_add(a, b):
     """JS ``+``: string-concat when either ToPrimitive is a string
     (strings, arrays, dicts, Names), else numeric. Returns float or str."""
-    a_str = isinstance(a, (bytes, str, list, dict, Ref)) \
-        and not isinstance(a, bool)
     if type(a) is float and type(b) is float:
         return a + b
+    a_str = isinstance(a, (bytes, str, list, dict, Ref)) \
+        and not isinstance(a, bool)
     b_str = isinstance(b, (bytes, str, list, dict, Ref)) \
         and not isinstance(b, bool)
     if a_str or b_str:

@@ -3228,14 +3228,13 @@ class _TextInterp:
         """Rewrite the event array for TJ coalescing; returns
         ``(ev2, scratch)`` with ``ev2`` in the same record dtype and
         ``scratch`` the joined-bytes blob flag-3 rows index into.
-        Dispatches to the C twin (``pdftext_coalesce_tj``) when the
-        extension is loaded — the row-at-a-time pass below is the
-        reference implementation and the fallback; (events, scratch)
-        identity between the two is pinned in test_ctext.py."""
-        if cinterp.AVAILABLE:
-            res = cinterp.coalesce_tj(data, ev)
-            if res is not None:
-                return res
+        Runs the C twin (``pdftext_coalesce_tj``) — the row-at-a-time
+        pass below is the reference implementation and the fallback if
+        the C pass bails; (events, scratch) identity between the two is
+        pinned in test_ctext.py."""
+        res = cinterp.coalesce_tj(data, ev)
+        if res is not None:
+            return res
         chunks: list[bytes] = []
         rows = self._coalesce_tj_events(ev.tolist(), data, chunks)
         ev2 = _np.array([tuple(r) for r in rows], dtype=ev.dtype)
@@ -3914,6 +3913,10 @@ def parse_pdf_bytes(
     ``page_spans`` keep GLOBAL page numbers, and offsets are relative to
     this chunk's text so the reassembly can shift them by the cumulative
     length of preceding chunks.
+    When the count-guided walk finds the whole range, ``n_pages`` is the
+    root ``/Count``, which a lying count can make differ from the pages a
+    full walk finds; callers that need the full-walk count take it from a
+    ``(0, 0)`` probe, as the chunked operators do.
 
     ``page_spans``: per rendered page, the [start, end) offsets of that
     page's text inside the returned ``text`` (the north rule's "extracted
