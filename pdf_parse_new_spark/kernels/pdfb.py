@@ -3281,7 +3281,12 @@ class _TextInterp:
         doc = self.doc
         fm = doc.font_map_cache.get(ref.num)
         if fm is None:
-            rv = doc.resolve(ref)
+            try:
+                rv = doc.resolve(ref)
+            except ValueError:
+                # an unparseable font object reads as missing, as every
+                # later resolve does (the object cache holds None)
+                rv = None
             if not isinstance(rv, dict) or isinstance(rv, Stream):
                 # a ref resolving to a non-dict: pdf.js falls to the
                 # SHARED fallbackFontDict font (same object as every
