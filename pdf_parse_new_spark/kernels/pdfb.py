@@ -1628,6 +1628,9 @@ def build_font_map(doc: Document, font_obj) -> FontMap:
     diffs = None
     cid_ranges: list[tuple[int, int, int]] = []
     var_ranges: list[tuple[int, int, int]] = []
+    # per code: the glyph names the standard-font metric fallback looks
+    # up, /Differences first, then the default encoding
+    metric_names: list[tuple[str | None, str]] = []
     if isinstance(enc, Name):
         base_name = str(enc)
     elif isinstance(enc, Stream):
@@ -1708,6 +1711,7 @@ def build_font_map(doc: Document, font_obj) -> FontMap:
                         diffs_names[int(code)] = str(item)
                     code += 1.0
         has_encoding = bool(bname) or bool(diffs_names)
+        metric_names = [(diffs_names.get(c), enc_names[c]) for c in range(256)]
         if non_embedded and subtype in ("Type1", "MMType1"):
             # missing-file Type1 (pdf.js Font._charToGlyph,
             # pdf.worker.js:29779-29786): a charcode whose effective
@@ -1888,17 +1892,20 @@ def build_font_map(doc: Document, font_obj) -> FontMap:
         if isinstance(std, float):
             default_width = std  # monospace family: one scalar width
         elif isinstance(std, dict):
-            for code, uni in list(table.items()):
-                w = std.get(uni)
-                if w is None and uni:
-                    # the metric tables key ligatures by their EXPANDED
-                    # form ("fi"), while table entries here may still
-                    # carry the codepoint (expansion runs later)
-                    w = std.get(
-                        "".join(_LIGATURES.get(c, c) for c in uni)
-                    )
-                if w is not None:
-                    widths[code] = w
+            # keyed by the code's GLYPH NAME, not by its /ToUnicode
+            # mapping (buildCharCodeToWidth, pdf.worker.js:37565): a
+            # /Differences name with a metric wins, else the default
+            # encoding's name. The tables key by the name's unicode,
+            # ligatures in their expanded form ("fi").
+            for code, names in enumerate(metric_names):
+                for gname in names:
+                    cp = _encdata.GLYPHS_UNICODE.get(gname)
+                    if cp is None:
+                        continue
+                    w = std.get(_LIGATURES.get(chr(cp), chr(cp)))
+                    if w:
+                        widths[code] = w
+                        break
             if widths:
                 default_width = 0.0  # pdf.js defaultWidth for table fonts
     if t1_space_codes:

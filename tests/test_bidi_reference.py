@@ -53,14 +53,18 @@ def test_c_replay_gate_covers_activation():
             assert _RTL_RUN.search(c) is not None, repr(c)
 
 
-def test_hebrew_through_real_pdf_end_to_end():
-    """A 1-byte font whose ToUnicode maps to Hebrew: the extracted page
-    text must be the reference-reordered string (the C path hands the
-    RTL-capable font's page to jsvm). The glyphs need real /Widths: the
-    standard Helvetica metrics have no Hebrew glyph, and zero-width
-    glyphs never move prevTransform, so pdf.js's zero-width cascade
-    (pinned live by test_zero_width_cascade in
-    tests/test_node_differential.py) would space every letter."""
+# the Hebrew font's /Widths: none (the non-embedded font takes the
+# Helvetica metrics of its StandardEncoding glyph names A..E, whatever
+# /ToUnicode maps them to), or one explicit 500-unit run
+HEBREW_WIDTHS = [
+    b"",
+    b"/FirstChar 32 /LastChar 127 /Widths [%s] " % b" ".join([b"500"] * 96),
+]
+
+
+def hebrew_doc(widths: bytes) -> bytes:
+    """One page whose 1-byte font maps codes A..E to Hebrew letters
+    through /ToUnicode; its one show decodes to "hi שלום עש"."""
     from tests.test_real_pdf import _page_scaffold
 
     import zlib as z
@@ -79,20 +83,25 @@ def test_hebrew_through_real_pdf_end_to_end():
     comp = z.compress(cmap)
     font_objs = {
         5: b"<< /Type /Font /Subtype /Type1 /BaseFont /Heb "
-           b"/FirstChar 32 /LastChar 127 /Widths [%s] "
-           b"/ToUnicode 6 0 R >>" % b" ".join([b"500"] * 96),
+           + widths + b"/ToUnicode 6 0 R >>",
         6: b"<< /Length %d /Filter /FlateDecode >>\nstream\n%s\nendstream"
            % (len(comp), comp),
     }
-    # shows decode to "hi שלום עש" (one item): reference-reordered
     ops = b"BT /F1 12 Tf 1 0 0 1 72 700 Tm (ab ABCD EA) Tj ET"
     content = b"<< /Length %d >>\nstream\n%s\nendstream" % (len(ops), ops)
-    doc = _page_scaffold(content, font_objs, font_ref=5)
-    r_full = pdfb.parse_pdf_bytes(doc)
+    return _page_scaffold(content, font_objs, font_ref=5)
+
+
+def test_hebrew_through_real_pdf_end_to_end():
+    """A 1-byte font whose ToUnicode maps to Hebrew: the extracted page
+    text must be the reference-reordered string (the C path hands the
+    RTL-capable font's page to jsvm), with and without /Widths."""
     logical = "hi שלום עש"
-    assert r_full["text"].strip() == bidi.visual(logical).strip()
-    # sanity: the reorder actually did something (RTL-heavy -> RTL base)
-    assert r_full["text"].strip() != logical
+    for widths in HEBREW_WIDTHS:
+        r_full = pdfb.parse_pdf_bytes(hebrew_doc(widths))
+        assert r_full["text"].strip() == bidi.visual(logical).strip(), widths
+        # sanity: the reorder actually did something (RTL-heavy -> RTL base)
+        assert r_full["text"].strip() != logical
 
 
 @pytest.mark.skipif(not cinterp.AVAILABLE, reason="no C compiler")

@@ -1504,10 +1504,10 @@ def test_do_always_flushes_byte_equal_vs_live_reference(tmp_path):
 # --------------------------------------------------------------------
 
 def _assemble_with_tounicode(content: bytes, pairs, widths=None,
-                             first=32, pages=1) -> bytes:
-    """Helvetica with a /ToUnicode bfchar CMap (code, utf16-hex) and an
-    optional /Widths run starting at ``first``; ``pages`` pages all show
-    ``content``."""
+                             first=32, pages=1, encoding=b"") -> bytes:
+    """Helvetica with a /ToUnicode bfchar CMap (code, utf16-hex), an
+    optional /Widths run starting at ``first`` and an optional /Encoding
+    value; ``pages`` pages all show ``content``."""
     body = b"\n".join(b"<%02x> <%s>" % (c, u) for c, u in pairs)
     tu = (
         b"/CIDInit /ProcSet findresource begin 12 dict begin begincmap"
@@ -1521,6 +1521,8 @@ def _assemble_with_tounicode(content: bytes, pairs, widths=None,
             first, first + len(widths) - 1,
             b" ".join(str(w).encode() for w in widths),
         )
+    if encoding:
+        fdict += b" /Encoding " + encoding
     fdict += b" /ToUnicode 5 0 R >>"
     page = (b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
             b"/Resources << /Font << /F1 4 0 R >> >> /Contents 6 0 R >>")
@@ -1641,6 +1643,39 @@ def test_zero_width_cascade_byte_equal_vs_live_reference(tmp_path):
                 [(0x41, b"200D"), (0x42, b"00A0"), (0x43, b"0020"),
                  (0x44, b"00AD"), (0x45, b"00AD")], w,
             ),
+        ],
+    )
+
+
+def test_standard_metrics_by_glyph_name_byte_equal_vs_live_reference(
+    tmp_path,
+):
+    """A non-embedded font without /Widths takes its standard-14 widths
+    by each code's GLYPH NAME — the /Differences name, else the default
+    encoding's (buildCharCodeToWidth, pdf.worker.js:37565) — not by what
+    /ToUnicode maps the code to. Glyph A (667 units) shown as 'i' (222)
+    advances the pen 4 x 8.004 pt, so the next show at that pen joins;
+    the Hebrew pages map A..E to letters that have no standard metric.
+    Added without a live run: the expectations follow the pdf.js
+    source."""
+    from tests.test_bidi_reference import HEBREW_WIDTHS, hebrew_doc
+
+    _run_differential(
+        tmp_path,
+        [
+            _assemble_with_tounicode(
+                b"BT /F1 12 Tf 1 0 0 1 72 700 Tm (AAAA) Tj"
+                b" 1 0 0 1 104.02 700 Tm (b) Tj ET",
+                [(0x41, b"0069")],
+            ),
+            # /Differences /W (944) over A: the pen lands at 117.31
+            _assemble_with_tounicode(
+                b"BT /F1 12 Tf 1 0 0 1 72 700 Tm (AAAA) Tj"
+                b" 1 0 0 1 117.32 700 Tm (b) Tj ET",
+                [(0x41, b"0069")],
+                encoding=b"<< /Differences [65 /W] >>",
+            ),
+            *map(hebrew_doc, HEBREW_WIDTHS),
         ],
     )
 

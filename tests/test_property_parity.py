@@ -180,16 +180,19 @@ def test_bidi_in_binary_dialect_show_path():
         b"%d beginbfchar\n%sendbfchar\nendcmap" % (len(pairs), bf)
     )
     ops = b"BT /F1 12 Tf 1 0 0 1 72 700 Tm (hello SLOM AVLM world) Tj ET"
-    doc = _page_scaffold(
-        b"<< /Length %d >>\nstream\n%s\nendstream" % (len(ops), ops),
-        {
-            5: b"<< /Type /Font /Subtype /Type1 /BaseFont /Heb "
-               b"/FirstChar 32 /LastChar 127 /Widths [%s] "
-               b"/ToUnicode 6 0 R >>" % b" ".join([b"500"] * 96),
-            6: b"<< /Length %d >>\nstream\n%s\nendstream"
-               % (len(cmap), cmap),
-        },
-        font_ref=5,
-    )
-    text = pdfb.parse_pdf_bytes(doc)["text"]
-    assert text == "\n\nworld " + "שלום עולם"[::-1] + " hello"
+    # without /Widths the non-embedded font takes the Helvetica metrics
+    # of its StandardEncoding glyph names; the same text either way
+    for widths in (b"", b"/FirstChar 32 /LastChar 127 /Widths [%s] "
+                   % b" ".join([b"500"] * 96)):
+        doc = _page_scaffold(
+            b"<< /Length %d >>\nstream\n%s\nendstream" % (len(ops), ops),
+            {
+                5: b"<< /Type /Font /Subtype /Type1 /BaseFont /Heb "
+                   + widths + b"/ToUnicode 6 0 R >>",
+                6: b"<< /Length %d >>\nstream\n%s\nendstream"
+                   % (len(cmap), cmap),
+            },
+            font_ref=5,
+        )
+        text = pdfb.parse_pdf_bytes(doc)["text"]
+        assert text == "\n\nworld " + "שלום עולם"[::-1] + " hello", widths
