@@ -466,7 +466,7 @@ class JsVM:
         if cached is not None:
             return cached  # JS `if (glyphs)`: even [] is truthy
         if isinstance(chars, bytes):
-            codes = fm._codes(chars)
+            codes = fm.codes(chars)
         elif isinstance(chars, list) and len(chars) > 0:
             raise JsStop()  # chars.charCodeAt is not a function
         else:

@@ -1272,7 +1272,7 @@ class FontMap:
 
     __slots__ = (
         "table", "nbytes", "widths", "default_width", "identity",
-        "cid_ranges", "var_ranges", "_trans", "_warr", "_cspec",
+        "cid_ranges", "var_ranges", "_simple", "_cspec",
         "cf_codes", "error",
     )
 
@@ -1304,31 +1304,18 @@ class FontMap:
         self.var_ranges = var_ranges or []
         # Cf-category codes (invisible format marks — soft hyphen,
         # ZWSP, directional marks): pdf.js `continue`s before ANY
-        # advance (pdf.worker.js:36684) — zero their widths so every
-        # aggregate advance path excludes them for free; tc exclusion
-        # rides on ncf()
+        # advance (pdf.worker.js:36684) — zero their widths
         self.cf_codes = frozenset(cf_codes or ())
         for c in self.cf_codes:
             self.widths[c] = 0.0
-        # 1-byte fast path: one C-speed str.translate per show string
-        # (None deletes — same as the per-byte t.get(c, "") fallback)
-        self._trans = (
-            {i: (table.get(i) or None) for i in range(256)}
-            if nbytes == 1 and not identity and not self.var_ranges
-            else None
-        )
-        # 1-byte advance fast path: sum(map(list.__getitem__, bytes)) runs
-        # the whole per-glyph width lookup in C
-        self._warr = (
-            [self.widths.get(i, default_width) for i in range(256)]
-            if self._trans is not None
-            else None
-        )
+        # a 1-byte code-indexed font: unmapped codes decode to ""
+        self._simple = nbytes == 1 and not identity and not self.var_ranges
         self._cspec: tuple | None | bool = False  # False = not built yet
 
     def cspec(self) -> tuple | None:
         """Tables for the full-C replay (``pdftext_replay``):
-        ``(trans_utf8_blob, offsets int32[257], widths float64[256])``, or
+        ``(trans_utf8_blob, offsets int32[257], widths float64[256],
+        categories uint8[256])``, or
         None when this font can't take the C path — multi-byte/identity/
         variable-codespace fonts, or a table entry containing an RTL
         character (``bidi.visual`` would reorder the shown string; the C replay
@@ -1336,9 +1323,10 @@ class FontMap:
         sp = self._cspec
         if sp is False:
             sp = None
-            if self._trans is not None:
+            if self._simple:
                 entries = [self.table.get(i) or "" for i in range(256)]
                 if _RTL_RUN.search("".join(entries)) is None:
+                    warr = [self.width(i) for i in range(256)]
                     blobs = [e.encode("utf-8") for e in entries]
                     off = _np.zeros(257, _np.int32)
                     _np.cumsum([len(x) for x in blobs], out=off[1:])
@@ -1351,14 +1339,14 @@ class FontMap:
                     for i in range(256):
                         if i in self.cf_codes:
                             cat_arr[i] = 2
-                        elif self._warr[i] == 0.0 and not (
+                        elif warr[i] == 0.0 and not (
                             i == 0x20 or entries[i] == " "
                         ):
                             cat_arr[i] = 3
                     sp = (
                         b"".join(blobs),
                         off,
-                        _np.array(self._warr, _np.float64),
+                        _np.array(warr, _np.float64),
                         cat_arr,
                     )
             self._cspec = sp
@@ -1393,7 +1381,9 @@ class FontMap:
             return u
         return self._fallback_char(code)
 
-    def _codes(self, s: bytes) -> list[int]:
+    def codes(self, s: bytes) -> list[int]:
+        """Split a show string into char codes (2-byte, variable-width
+        codespace, or one per byte)."""
         if self.var_ranges:
             out = []
             i, n = 0, len(s)
@@ -1424,7 +1414,7 @@ class FontMap:
         """glyph.unicode of one char code (the table is already
         ligature-expanded and category-normalized); an unmapped
         multi-byte code falls back to its CID's char."""
-        if self._trans is not None:
+        if self._simple:
             return self.table.get(code) or ""
         if self.nbytes == 2 or self.identity or self.var_ranges:
             return self._one(code)
@@ -1436,17 +1426,6 @@ class FontMap:
         if self.identity or self.var_ranges:
             code = self._cid(code)
         return self.widths.get(code, self.default_width)
-
-    def decode(self, s: bytes) -> str:
-        if self._trans is not None:
-            return s.decode("latin-1").translate(self._trans)
-        return "".join(map(self.unicode, self._codes(s)))
-
-    def advance(self, s: bytes) -> float:
-        """Total glyph width of the string in 1/1000 em."""
-        if self._warr is not None:
-            return sum(map(self._warr.__getitem__, s))
-        return sum(map(self.width, self._codes(s)))
 
 
 def _js_truthy_obj(v) -> bool:

@@ -659,10 +659,11 @@ def test_cid_descendant_widths_drive_gap_model():
     raw = _page_scaffold(content, font_objs, font_ref=5)
     doc = Document(raw)
     fm = build_font_map(doc, doc.get_object(5))
-    assert fm.advance(b"\x00\x48") == 744.0          # /W list form: CID 72
-    assert fm.advance(b"\x00\x65") == 500.0          # range form: CID 101
-    assert fm.advance(b"\x01\x00") == 600.0          # /DW default
-    assert fm.decode(b"\x00\x48") == "H"             # identity fallback
+    assert fm.codes(b"\x00\x48\x00\x65\x01\x00") == [0x48, 0x65, 0x100]
+    assert fm.width(0x48) == 744.0                   # /W list form: CID 72
+    assert fm.width(0x65) == 500.0                   # range form: CID 101
+    assert fm.width(0x100) == 600.0                  # /DW default
+    assert fm.unicode(0x48) == "H"                   # identity fallback
 
 
 def test_embedded_cmap_ranged_codespace():
