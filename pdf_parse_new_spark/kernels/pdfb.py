@@ -3743,7 +3743,7 @@ class _JsCtx:
     pages neither consult nor populate the cache (plain-string pages
     are cache-transparent — lookup and store return the same glyphs
     charsToGlyphs would build), so on the FIRST page that needs the
-    cache (a JS-coercion page, see ``_js_page_text``) the PRECEDING
+    cache (a JS-coercion page, see ``_page_text``) the PRECEDING
     pages replay through jsvm population-only (text discarded, cache
     accrued in the reference's sequential page order). Page-range
     (chunked) parses populate from page 0 as well, so any range with
@@ -3818,35 +3818,27 @@ class _JsCtx:
 def _page_text(doc: Document, page: dict, resources,
                jsctx: "_JsCtx | None" = None, page_idx: int = 0) -> str:
     """One page's text: the C path when it can take every stream of
-    the page, else kernels/jsvm.py for the whole page. After an earlier
-    jsvm page poisoned a charsCache key, plain shows of the equal string
-    on that font must be MUTED, which only the cache-consulting jsvm
-    tier renders exactly."""
+    the page, else kernels/jsvm.py for the whole page. jsvm uses the
+    document charsCache (``jsctx``) only where it can change the output:
+    after an earlier page poisoned a key (plain shows of the equal
+    string on that font are then MUTED), or on a page with an operand
+    that needs JS coercion (``jsvm.NeedsCharsCache``). Every other page
+    runs with a page-local cache, which string shows see as transparent,
+    so a rotated or Type0 page late in a range never replays the pages
+    before it."""
+    from . import jsvm
+
     data = _page_data(doc, page)
     if not data:
         return ""
+    viewbox = _page_view_box(doc, page)
     if jsctx is None or not jsctx.poisoned:
-        interp = _TextInterp(doc, viewbox=_page_view_box(doc, page))
+        interp = _TextInterp(doc, viewbox=viewbox)
         try:
             interp.run(data, resources)
             return interp.text()
         except _CDefer:
             pass
-    return _js_page_text(doc, page, data, resources, jsctx, page_idx)
-
-
-def _js_page_text(doc: Document, page: dict, data: bytes, resources,
-                  jsctx: "_JsCtx | None" = None, page_idx: int = 0) -> str:
-    """Render one page through kernels/jsvm.py. The document charsCache
-    (``jsctx``) is used only where it can change the output: after a
-    poisoned key, or on a page with an operand that needs JS coercion
-    (``jsvm.NeedsCharsCache``). Every other page runs with a page-local
-    cache, which string shows see as transparent, so a rotated or Type0
-    page late in a range never replays the pages before it."""
-    from . import jsvm
-
-    viewbox = _page_view_box(doc, page)
-    if jsctx is None or not jsctx.poisoned:
         vm = jsvm.JsVM(_TextInterp(doc, viewbox=viewbox))
         try:
             vm.run_page(data, resources)
