@@ -54,8 +54,8 @@ enum {
     K_QRESTORE = 15, /* Q : the replay pops (flushing only when the
                      * font or size changed, pdf.worker.js:37112) */
     K_INH = 13,   /* f0=leading f1=rise(RAW, unscaled) : emitted
-                   * immediately before every K_XOBJ so the Python
-                   * orchestrator can hand the lexer-internal text state
+                   * immediately before every K_XOBJ so
+                   * pdfb._TextInterp can hand the lexer-internal text state
                    * to the nested Form run (pdf.js clones the whole
                    * eval state into paintXObject; leading/rise never
                    * cross the other events un-scaled) */
@@ -79,7 +79,7 @@ typedef struct {
     int flag;     /* for OP_STR: 1 = hex, 2 = complex literal */
     int64_t a, b; /* span */
     double v;
-    int conv;     /* float(operand) succeeds in the fallback */
+    int conv;     /* converts to a float: numbers, true/false, names */
     double cv;    /* its value when conv */
 } Operand;
 
@@ -110,7 +110,8 @@ static long skip_ws(const unsigned char *d, long pos, long n)
 }
 
 /* literal string: pos at '(' -> end after matching ')'. *complex is set
- * when the body has escapes or nested parens (Python must re-parse it;
+ * when the body has escapes or nested parens (the decoders run the full
+ * unescape, pdfb._parse_literal_string's grammar;
  * a clean body is just the slice between the delimiters). */
 static long scan_literal(const unsigned char *d, long pos, long n,
                          int *complex)
@@ -137,7 +138,7 @@ static long scan_literal(const unsigned char *d, long pos, long n,
     }
     /* unterminated: getString is EOF-graceful ("Unterminated string"
      * warn, value = chars so far) — signalled as a NEGATIVE length so
-     * content callers can defer to the exact Python model */
+     * content callers can defer the page to jsvm */
     return -(n + 1);
 }
 
@@ -199,9 +200,9 @@ static const double P10[] = {
 };
 
 /* returns end position, or `pos` unchanged when no digit was present
- * (bare +/-/. is not a number). Mirrors the fallback's _NUMBER regex
- * [+-]?(\d+\.?\d*|\.\d+) exactly — including stopping at a SECOND dot,
- * so "1.2.3" lexes as 1.2 then .3 on both paths.
+ * (bare +/-/. is not a number). Mirrors parse_object's number grammar,
+ * pdfb._NUMBER = [+-]?(\d+\.?\d*|\.\d+), exactly — including stopping
+ * at a SECOND dot, so "1.2.3" lexes as 1.2 then .3.
  *
  * Conversion uses the Clinger exact fast path (mantissa <= 2^53 and
  * <= 22 fraction digits: (double)m / 10^k — both operands exact, IEEE
@@ -257,7 +258,7 @@ static long scan_number(const unsigned char *d, long pos, long n, double *out)
     /* slow path: buffer sized so any numeral with a finite double value
      * fits (a >380-digit integer is inf either way); tokens longer than
      * the buffer are still CONSUMED in full so the token boundary
-     * matches the fallback regex exactly — only excess digits stop
+     * matches pdfb._NUMBER exactly — only excess digits stop
      * being significant, same as IEEE rounding there */
     {
         char buf[384];
@@ -274,10 +275,10 @@ static long scan_number(const unsigned char *d, long pos, long n, double *out)
     return pos;
 }
 
-/* does the fallback's float(str(Name)) succeed? strtod over the raw span
- * (full consumption required) — covers plain/signed/exponent/inf/nan
- * forms; exotic Python-only spellings (underscores, #xx-escaped digits)
- * are documented misses. */
+/* a numeric Name's conv value: strtod over the raw span (full
+ * consumption required) — covers plain/signed/exponent/inf/nan forms;
+ * #xx-escaped digits are documented misses. Every numeric text-state
+ * slot defers a Name operand to jsvm (pdf.js coerces it to NaN). */
 static int name_float(const unsigned char *d, long a, long b, double *out)
 {
     char buf[384];
@@ -294,12 +295,12 @@ static int name_float(const unsigned char *d, long a, long b, double *out)
     return 1;
 }
 
-/* Recursive validation mirroring the fallback's parse_object grammar: an
- * object that would raise ValueError there returns -1 here, so both paths
- * salvage malformed input from the SAME byte (one past the failed start).
- * Depth-capped — past the cap we treat the object as invalid, which maps
- * to the fallback's RecursionError -> page-error behavior closely enough
- * for garbage input (documented approximation). */
+/* Recursive validation mirroring pdfb.parse_object's grammar, which
+ * jsvm's operand loop runs: an object that raises ValueError there returns
+ * -1 here, so both tiers salvage malformed input from the SAME byte (one
+ * past the failed start). Depth-capped — past the cap we treat the object
+ * as invalid, which maps to parse_object's RecursionError -> page-error
+ * behavior closely enough for garbage input (documented approximation). */
 static long validate_object(const unsigned char *d, long pos, long n,
                             int depth)
 {
@@ -335,7 +336,7 @@ static long validate_object(const unsigned char *d, long pos, long n,
         }
         long end = scan_hex(d, pos, n);
         if (end >= n && (n == 0 || d[n - 1] != '>'))
-            return -1; /* unterminated hex string raises in the fallback */
+            return -1; /* unterminated hex string raises in parse_object */
         return end;
     }
     if (c == '[') {
@@ -447,9 +448,9 @@ static long scan_op(const unsigned char *d, long pos, long n)
  * returns 1 and fills numargs/varargs for known operators. The
  * preprocessor (read(), worker:38608-38672) skips fixed-arity ops whose
  * operand count mismatches, with a nonProcessedArgs stash; this lexer
- * handles only the exact-count fast path and DEFERS the page to the
- * exact Python model (return -2) the moment the stash would engage.
- * Mirrors _OP_ARITY in pdfb.py. */
+ * handles only the exact-count fast path and DEFERS the page to jsvm
+ * (return -2) the moment the stash would engage. Mirrors _OP_ARITY in
+ * pdfb.py, jsvm's arity table. */
 static int op_arity(const unsigned char *op, long len, int *na, int *va)
 {
     *va = 0;
@@ -527,7 +528,7 @@ static int op_arity(const unsigned char *op, long len, int *na, int *va)
  * and retries); -2 = pdf.js's preprocessor machinery engaged (operand
  * over/underflow stash, 34-operand FormatError, true/false operand in a
  * slot this lexer cannot thread) — the caller re-runs the whole page
- * through the exact Python model. */
+ * through jsvm. */
 long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
                        const double *lmseed)
 {
@@ -618,7 +619,7 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
     /* last-two-token integrality for pdf.js's `int int R` -> Ref folding
      * (Parser.getObj, worker:13432-13438): when an unknown command
      * lexing as exactly "R" follows two integral NUMBER tokens, the trio
-     * is ONE Ref operand — defer to the exact Python model. JS
+     * is ONE Ref operand — defer the page to jsvm. JS
      * Number.isInteger(0.0) is true, so "0.0" qualifies. */
     int tk1_int = 0, tk2_int = 0;
 #define TKSHIFT(I)                                                           \
@@ -638,8 +639,8 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
                 st[nst].kind = OP_NAME;
                 st[nst].a = pos + 1;
                 st[nst].b = end;
-                /* the fallback's float(str(Name)) can SUCCEED for numeric
-                 * names — "/12 /34 Td" moves the pen there; mirror it */
+                /* numeric names convert (name_float); the coercion
+                 * check below still defers them in numeric slots */
                 st[nst].conv = name_float(d, pos + 1, end, &st[nst].cv);
                 nst++;
                 if (nst > 33)
@@ -653,8 +654,8 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
             int cx;
             long end = scan_literal(d, pos, n, &cx);
             if (end < 0)
-                return -2; /* unterminated: graceful-to-EOF operand in
-                            * the exact Python model */
+                return -2; /* unterminated: graceful-to-EOF operand,
+                            * jsvm page */
             if (nst < MAXOPS) {
                 st[nst].kind = OP_STR;
                 st[nst].flag = cx ? 2 : 0; /* 2 = needs full re-parse */
@@ -673,7 +674,7 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
             if (pos + 1 < n && d[pos + 1] == '<') {
                 long end = validate_object(d, pos, n, 0);
                 if (end < 0) {
-                    /* malformed dict: the fallback's parse raises and
+                    /* malformed dict: jsvm's parse_object raises and
                      * re-lexes from the next byte — mirror it */
                     TKSHIFT(0);
                     pos++;
@@ -692,8 +693,8 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
             }
             long end = scan_hex(d, pos, n);
             if (end >= n && (n == 0 || d[n - 1] != '>'))
-                return -2; /* unterminated hex: graceful-to-EOF operand
-                            * in the exact Python model */
+                return -2; /* unterminated hex: graceful-to-EOF operand,
+                            * jsvm page */
             if (nst < MAXOPS) {
                 st[nst].kind = OP_STR;
                 st[nst].flag = 1;
@@ -713,8 +714,8 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
              * pdf.js parses every element with the FULL Parser.getObj
              * (worker:13389-13401): command tokens become inert Cmd
              * elements (showSpacedText drops them), `int int R` folds
-             * to a Ref element (eating both ints — DEFER: the Python
-             * model folds exactly), ')' throws, EOF inside the array
+             * to a Ref element (eating both ints — DEFER: jsvm's
+             * _parse_content_array folds exactly), ')' throws, EOF inside the array
              * is a ParserEOFException — both page stops (DEFER). */
             if (tj_start >= 0)
                 nev = tj_start; /* a newer array supersedes the old one */
@@ -840,7 +841,7 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
             long end = scan_number(d, pos, n, &v);
             if (end == pos)
                 return -2; /* sign/dot lead-in: getNumber's graceful-0
-                            * or FormatError — exact Python model */
+                            * or FormatError — jsvm page */
             if (end < n &&
                 (d[end] == 'e' || d[end] == 'E' || d[end] == '-'))
                 return -2; /* e-notation / mid-token minus continue the
@@ -974,16 +975,14 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
                 nev = tj_start; /* array wasn't a TJ operand: discard */
 
             if (oplen == 2 && op[0] == 'T') {
-                /* Partial-application mirroring: the fallback converts
-                 * operands with float() IN ORDER and a failure aborts the
-                 * op mid-way, KEEPING earlier assignments. `conv`/`cv`
-                 * model float()'s behavior (numbers and numeric names
-                 * convert; strings/dicts/arrays raise). */
+                /* Partial application: operands convert IN ORDER and
+                 * a failure aborts the op mid-way, KEEPING earlier
+                 * assignments (`conv`/`cv`). */
                 switch (op[1]) {
-                case 'f': /* name size Tf : the fallback sets the font from
-                           * str(operand) BEFORE converting the size, so
-                           * the font updates even when the size operand is
-                           * junk (flag=1 -> replay keeps the old size) */
+                case 'f': /* name size Tf : the font is set from the
+                           * name BEFORE the size converts, so the font
+                           * updates even when the size operand is junk
+                           * (flag=1 -> replay keeps the old size) */
                     if (nst >= 2) {
                         long na = 0, nb = 0;
                         if (st[nst - 2].kind == OP_NAME) {
@@ -995,8 +994,7 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
                                 return -2; /* negative size flips the
                                               compare frame by 180
                                               (both tsm rows scale by
-                                              fs) — full-matrix Python
-                                              page */
+                                              fs) — jsvm page */
                             EMIT(K_FONT, 0, na, nb, st[nst - 1].cv, 0, 0, 0);
                         } else
                             EMIT(K_FONT, 1, na, nb, 0, 0, 0, 0);
@@ -1034,8 +1032,7 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
                         if (!st[nst - 2].conv) {
                             /* partial Tm aborted after the lm_f == tm_f
                              * assignment: the pending clone keeps its e
-                             * but takes the new f (one-matrix fallback
-                             * semantics) */
+                             * but takes the new f) */
                             if (have_plm)
                                 plm_f = tm_f;
                             EMIT(K_SETY, 0, 0, 0, TX_Y(tm_e, tm_f), 0, 0, 0);
@@ -1145,8 +1142,8 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
                 LM_TRANSLATE(0.0, -leading);
                 EMIT(K_ANCHOR, 0, 0, 0, TX_X(tm_e, tm_f), TX_Y(tm_e, tm_f), tm_a * cm_a, tm_d * cm_d);
                 if (op[0] == '"' && nst >= 3) {
-                    /* fallback order: tw converts first (kept on partial
-                     * failure of tc), a failure skips the show */
+                    /* tw converts first (kept on partial failure of
+                     * tc), a failure skips the show */
                     if (st[nst - 3].conv) {
                         tw = st[nst - 3].cv;
                         if (st[nst - 2].conv) {
@@ -1268,8 +1265,8 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
                 /* inline image: pdf.js's makeInlineImage end-finding
                  * (filter-specific scanners, 15-byte window mini-lexer,
                  * stale-currentChar splice — worker:13449-13762) lives
-                 * in the exact Python model; zero hits on the real
-                 * corpus, so DEFER the page rather than twin it here */
+                 * in jsvm (pdfb._inline_image_scan); zero hits on the
+                 * real corpus, so DEFER the page rather than port it */
                 return -2;
             } else if (oplen == 3 && op[2] == 'C' &&
                        ((op[0] == 'B' && (op[1] == 'M' || op[1] == 'D'))
@@ -1288,8 +1285,9 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
         }
         if (c == ')')
             return -2; /* Lexer "Illegal character": page stop there,
-                        * two-token-early via the Python prescan cut */
-        /* unexpected byte (e.g. ']' '}' '{' '>'): skip, like the fallback */
+                        * two-token-early via jsvm's prescan cut
+                        * (pdfb._prescan_lexer_throw) */
+        /* unexpected byte (e.g. ']' '}' '{' '>'): skip, like jsvm */
         TKSHIFT(0);
         pos++;
     }
@@ -1311,22 +1309,23 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
  * per-font byte->UTF-8 translate tables, x-advance accumulation
  * (widths + Tc/Tw/Tz), and the show()/line-fold model (y-tolerance
  * breaks, gap-fraction word spaces), writing final UTF-8 text into
- * `out`. Returns at K_XOBJ events (index returned; the caller recurses
- * into the Form XObject in Python, then resumes at index+1) — by
+ * `out`. Returns at K_XOBJ events (index returned; pdfb._TextInterp
+ * recurses into the Form XObject, then resumes at index+1) — by
  * construction no K_XOBJ can occur between K_TJSTART and K_TJEND, so
  * no TJ scratch crosses a segment boundary. Fonts must all be simple
- * (1-byte, non-identity, no RTL-capable table entries); the Python
- * caller prescans K_FONT events and runs the page through jsvm
- * otherwise.
+ * (1-byte, non-identity, no RTL-capable table entries); the caller
+ * (pdfb._TextInterp._c_plan) prescans K_FONT events and runs the page
+ * through jsvm otherwise.
  *
- * state: 32 doubles, in-out (written back only on success):
+ * state: 32 doubles, in-out (written back only on success; slot
+ * groups named in pdfb as _ST_TEXT / _ST_CLOSURE):
  *   0 y  1 cur_x  2 size  3 sx  4 tc  5 tw  6 tz  7 rise
  *   8 last_y  9 have_last_y  10 last_end_x  11 have_last_end_x
  *   12 line_open  13 last_char(byte)  14 cur_font  15 pending_space
  *   16 glyph_y  17 have_glyph_y  18 force_flush  19 scale_flush
  *   20 item_size  21-24 view box  25 have_vb  26 pending_multi
  *   27 line_ox  28 line_oy  29 sy  30 item_hsize  31 wreg
- * Returns: nev when done, the K_XOBJ event index to hand to Python,
+ * Returns: nev when done, the K_XOBJ event index to hand to the caller,
  * or -1 when `out` is full (caller grows and retries; state intact).
  */
 
@@ -1343,22 +1342,64 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
 
 typedef struct {
     double y, cur_x, size, sx, sy, line_ox, line_oy, tc, tw, tz, rise;
-    /* wreg: pdf.js textContentItem.width — the WIDTH REGISTER.
-     * Tracked EXACTLY (appended glyph widths + absorbed compare
-     * advances); the C replay keeps the historical decision bands and
-     * DEFERS the page to the Python model (return -3) whenever a
-     * decision would read a register <= 0, where the new zero/negative
-     * orientation semantics apply. */
+    /* wreg: the WIDTH REGISTER — pdf.js's textContentItem.width. It
+     * starts at 0 (ensureTextContentItem) and grows by each appended
+     * glyph's scaledDim plus every ABSORBED compare advance (the
+     * tracking-band else and the in-flow fake-space paths run
+     * width += advanceX, which can be negative: a tightened kern
+     * absorbed over a zero-width run drives the register negative).
+     * textOrientation = Math.sign(width) multiplies every cascade
+     * threshold, so register == 0 degenerates every band (any
+     * positive advance falls outside addFakeSpaces' empty in-flow
+     * window: flush + standalone " " at prevTransform; any negative
+     * advance takes the carriage-return band) and register < 0
+     * inverts them (the negative-Tz orientation). Like item_size, the
+     * register is STALE across flushes (flushTextContentItem never
+     * resets width; only the next ensureTextContentItem does). The
+     * replay tracks it exactly but DEFERS the page to jsvm (return -3)
+     * whenever a decision would read a register <= 0. */
     double wreg;
+    /* two y trackers, mirroring the reference's two-stage assembly:
+     * pdf.js decides flush/EOL/space per glyph against the PREVIOUS
+     * GLYPH position (textContentItem.prevTransform,
+     * pdf.worker.js:36614-36615), while pdf-parse emits "\n" by
+     * comparing successive ITEM anchor y's (item.transform[5] set at
+     * ensureTextContentItem) against Y_TOLERANCE (lib/pdf-parse.js:30).
+     * last_y == the current item's anchor y; glyph_y == the previous
+     * glyph's y (last_end_x its pen x). force_flush mirrors
+     * flushTextContentItem on font change / Do / stream end
+     * (pdf.worker.js:36841,36950).
+     * item_size: the compare uses the ITEM-STALE font scale
+     * (thresholds captured at ensureTextContentItem; textAdvanceScale
+     * from the last update) — not the scale of the incoming glyph.
+     * item_hsize: the item's CROSS-AXIS height — pdf.js's
+     * textContentItem.height = hypot(trm[2], trm[3]), captured at
+     * ensureTextContentItem and used for the EOL / 0.25
+     * vertical-shift thresholds. Differs from item_size under
+     * non-uniform scales. */
     double last_y, last_end_x, glyph_y, item_size, item_hsize;
     double vb0, vb1, vb2, vb3; /* page view box (pdf.js viewBox clip) */
     int have_last_y, have_last_end_x, have_glyph_y, have_vb;
+    /* eager line model: breaks and word-gap spaces are emitted inline
+     * into `out`; line_open tracks "anything on the current line" and
+     * last_char is the last emitted char of that line. pending_multi:
+     * the pending whitespace run had >= 2 glyphs. pdf.js's
+     * shouldAddWhitepsace consults the last TWO saved glyphs
+     * (twoLastChars, pdf.worker.js:36373-36385): a run of two-plus
+     * spaces makes it FALSE, so in the sub-trackingSpaceMin window the
+     * space never materializes ("nu   " then "  eta" at a near-zero
+     * gap reads "nueta" in the reference). scale_flush: a Tm scale
+     * change ran updateAdvanceScale on an open item, zeroing its
+     * width — textOrientation becomes Math.sign(0) == 0 at the next
+     * glyph's compare, forcing the carriage-return flush (advanceX <
+     * 0) or the standalone-space + flush path (advanceX > 0). */
     int line_open, pending_space, pending_multi, force_flush, scale_flush;
     unsigned char last_char;
     long cur_font;
 } RState;
 
-/* per-glyph item splitting at quadrant 0 (mirrors pdfb._seg_split):
+/* per-glyph item splitting at quadrant 0 (jsvm's per-glyph
+ * compare_with_last_position, pdf.worker.js:36526-36660):
  * one record per INTERNAL space run whose advance leaves the in-flow
  * fake-space window ((0.102, 0.6] x item font size) under BOTH
  * candidate item sizes — the item splits there, the run riding as the
@@ -1366,8 +1407,7 @@ typedef struct {
  * first space lands (segment boundary); seg_first = first non-space
  * px of the segment ENDING at this run; prev_end = pen after that
  * segment's last non-space glyph (pdf.js prevTransform). Splits past
- * RP_MAX_RUNS are treated as in-flow — pdfb.MAX_SEG_SPLITS caps the
- * Python paths identically. */
+ * RP_MAX_RUNS are treated as in-flow. */
 #define RP_MAX_RUNS 64
 typedef struct {
     long off;
@@ -1402,8 +1442,8 @@ static int rp_decode(const unsigned char *d, long n, int flag, long a,
     /* quad-0 split collection (SegRec): run state machine over glyph
      * positions; prev0 = the TJ buffer's prevTransform so a LEADING
      * run of this element counts as internal (split at off == start).
-     * runs_ok drops to 0 on any multi-char decode (the Python paths
-     * gate on len(dec) == len(item)) — the caller then discards. */
+     * runs_ok drops to 0 on any multi-char decode (one glyph must
+     * decode to one char) — the caller then discards. */
     int runopen_ = 0, hrpe_ = 0, hsegfx_ = 0, perglyph_ = 0;
     double runprev_ = 0.0, rpe_ = 0.0, segfx_ = 0.0;
     long runoff_ = 0;
@@ -1411,7 +1451,7 @@ static int rp_decode(const unsigned char *d, long n, int flag, long a,
     /* live WIDTH REGISTER through the walk (reg0 = the caller's value
      * at this item's first glyph) and the current segment's
      * contribution; a compare reading a register <= 0 DEFERS the page
-     * (the zero/negative orientation bands live in Python only) */
+     * (the zero/negative orientation bands live in jsvm only) */
     double wlive_ = reg0, segw_ = 0.0;
     int hadw_ = 0;
     int runnull_ = 0;
@@ -1428,20 +1468,19 @@ static int rp_decode(const unsigned char *d, long n, int flag, long a,
      * BOUNDARY compare, whose advance spans the space's translate —
      * a joined leading 2-run reads as ring [' ',' '] and vanishes
      * the boundary space pdf.js keeps in the tracking band
-     * (distilled: '6.5 Tc [(i) 1500] TJ ( i) Tj' reads 'i i').
-     * Twin of pdfb._lgap_join. */
+     * (distilled: '6.5 Tc [(i) 1500] TJ ( i) Tj' reads 'i i'). */
     long pendj_ = 0;
     long seenreal_ = 0;
-    /* ACCUMULATIVE pen in pdf.js's per-glyph add order (twin of the
-     * Python walk): width translate then charSpacing translate for
+    /* ACCUMULATIVE pen in pdf.js's per-glyph add order (jsvm's
+     * build_item, pdf.worker.js:36658-36740): width translate then charSpacing translate for
      * real glyphs, ONE summed translate for whitespace, width-only
      * for box-rejected — the equal-position shortcut depends on the
      * tiny +/- increments round-tripping at the pen's magnitude. */
     double pen_ = start_x;
     int clipsp_ = 0; /* reject<->space interleave seen; defers only if
                         a kept real glyph later resolves it */
-    /* TAIL-ANCHORED prevTransform + closed-form first-x (twins of
-     * pdfb._prev_x(adv_full=...) / _first_x): pdf.js's prevTransform
+    /* TAIL-ANCHORED prevTransform + closed-form first-x: pdf.js's
+     * prevTransform
      * and the next show's posX are the SAME accumulated translate
      * chain, so the pen returns to prevTransform EXACTLY whenever the
      * tail translates cancel analytically — the equal-position
@@ -1449,7 +1488,7 @@ static int rp_decode(const unsigned char *d, long n, int flag, long a,
      * that as prev = (start + closed-form item advance) - tail, where
      * tail_ is the last kept glyph's own charSpacing plus each
      * trailing glyph's translate in the walk's add order. fxc_ walks
-     * Python's _first_x add order over the leading space run. */
+     * the leading space run in the same add order. */
     double tail_ = 0.0, fxc_ = start_x;
     int phave_ = 0, fdone_ = 0;
     if (defer)
@@ -1501,10 +1540,10 @@ static int rp_decode(const unsigned char *d, long n, int flag, long a,
     double kx = 0.0, ktc = 0.0, ktw = 0.0, kraw = 0.0;
     double sxzc_ = 0.0, kxc_ = 0.0, ktcc_ = 0.0, ktwc_ = 0.0;
     if (rst != NULL) {
-        /* the _prev_x/_first_x twins receive sxz = sx*tz as ONE
-         * product (pdfb passes asx * tz), unlike kx/ktc/ktw below
-         * which multiply sequentially — the groupings must match the
-         * Python functions bit-for-bit */
+        /* the closed-form prevTransform / first-x use sxz = sx*tz as
+         * ONE product, unlike kx/ktc/ktw below which multiply
+         * sequentially — each grouping is fixed: the goldens pin the
+         * results bit-for-bit */
         sxzc_ = rst->sx * rst->tz;
         kxc_ = rst->size / 1000.0 * sxzc_;
         ktcc_ = rst->tc * sxzc_;
@@ -1550,8 +1589,8 @@ static int rp_decode(const unsigned char *d, long n, int flag, long a,
             *have_first = 1;                                                 \
         }                                                                    \
         if (runs) {                                                          \
-            /* decode-alignment check covers CLIPPED glyphs too (the    */   \
-            /* Python gate is len(dec) == len(item) on the full item)   */   \
+            /* decode-alignment check covers CLIPPED glyphs too (one    */   \
+            /* char per glyph over the full item)                       */   \
             long nch_ = 0;                                                   \
             for (long bj_ = 0; bj_ < tl_; bj_++)                             \
                 if ((tb[ta_ + bj_] & 0xC0) != 0x80)                          \
@@ -1597,7 +1636,7 @@ static int rp_decode(const unsigned char *d, long n, int flag, long a,
             } else {                                                         \
                 if (clipsp_ && defer)                                        \
                     *defer = 1; /* kept glyph resolves a reject<->space */  \
-                                /* interleave — Python owns the exact   */  \
+                                /* interleave — jsvm owns the exact     */  \
                                 /* cascade (seeds 24,100,162/235)       */  \
                 if (runopen_ && runnull_) {                                  \
                     if (runcnt_ >= 2 && defer)                               \
@@ -1773,7 +1812,7 @@ static int rp_decode(const unsigned char *d, long n, int flag, long a,
         }
         /* dangling first digit DROPPED: getHexString emits complete
          * pairs only (pdf.worker.js:14205-14214; probed: <414> is "A") */
-    } else { /* complex literal: full unescape (_parse_literal_string) */
+    } else { /* complex literal: full unescape (pdfb._parse_literal_string) */
         long pos = a + 1, depth = 1;
         while (pos < n) {
             unsigned char c = d[pos];
@@ -1837,17 +1876,17 @@ static int rp_decode(const unsigned char *d, long n, int flag, long a,
 #undef PUTCODE
     if (rst != NULL && !zw_item && *clipped == 0 &&
         (runs == NULL || *nruns == 0)) {
-        /* CLEAN INLINE ITEM: the Python consumers anchor prevTransform
-         * to their OWN closed-form advance — prev = (start + adv) -
-         * tail (pdfb._prev_x with adv_full) — so the next compare's
+        /* CLEAN INLINE ITEM: prevTransform anchors to the item's
+         * closed-form advance — prev = (start + adv) - tail — so the
+         * next compare's
          * adv = tx - prev round-trips the analytic tail EXACTLY
          * (pdf.js's posX/lastPosX share one accumulated chain and its
          * equal-position shortcut fires across items: combo hunt base
          * 22,000,000 seed 17, '-3 Tc (  zet ) Tj (kap) Tj' must read
          * 'zet kap'). advc_ mirrors the K_TEXT consumer's adv
          * expression bit-for-bit (clipped == 0 here). first-x takes
-         * Python's _first_x add order. Split/clipped/zw paths keep
-         * the accumulative walk values (their twins do). */
+         * fxc_'s add order. Split/clipped/zw paths keep the
+         * accumulative walk values. */
         if (*have_prev && phave_) {
             double advc_ = (*wsum / 1000.0 * rst->size +
                             (double)*glyphs * rst->tc +
@@ -1877,9 +1916,10 @@ static int rp_decode(const unsigned char *d, long n, int flag, long a,
 /* the width register a deferred TJ-group boundary compare leaves
  * behind: 0 when the compare will FLUSH (the next ensure resets the
  * register), wreg + gap when it absorbs, wreg untouched when it never
- * runs (null prevTransform / equal position). Mirrors
- * _TextInterp._tj_boundary_stale — used for the live mid-TJ register
- * model only, never for emission. */
+ * runs (null prevTransform / equal position): jsvm's
+ * compare_with_last_position (pdf.worker.js:36526-36660) on the
+ * register — used for the live mid-TJ register model only, never for
+ * emission. */
 static double rp_boundary_stale(const RState *st, double tx, double dev_y,
                                 double fs, double hs)
 {
@@ -1910,9 +1950,10 @@ static double rp_boundary_stale(const RState *st, double tx, double dev_y,
     return st->wreg + adv; /* absorbed: width += advanceX */
 }
 
-/* the show() assembly over the staged region [mark, *olen): the
- * faithful two-stage pdf.js model (mirrors _TextInterp.show in
- * pdfb.py). Flush/EOL/space decisions compare against the previous
+/* the item assembly over the staged region [mark, *olen): the
+ * faithful two-stage pdf.js model — compareWithLastPosition
+ * (pdf.worker.js:36526-36660) then pdf-parse's render_page join
+ * (lib/pdf-parse.js:16-46), as jsvm runs them. Flush/EOL/space decisions compare against the previous
  * GLYPH (glyph_y / last_end_x = prevTransform) with ITEM-STALE
  * thresholds (item_size); "\n" emission is the pdf-parse anchor join
  * (last_y = the open item's anchor y). */
@@ -2016,7 +2057,7 @@ static int rp_show(RState *st, unsigned char *out, long *olen, long ocap,
          * sign(0) == 0 — CR-flush (adv<0), standalone-space + flush
          * (adv>0), EOL (|dy| > height); adv EXACTLY 0 falls through
          * the zeroed thresholds with width += 0 and the item
-         * CONTINUES (mirrors _TextInterp.show) */
+         * CONTINUES (jsvm's compare_with_last_position) */
         st->scale_flush = 0;
         st->pending_space = 0;
         st->pending_multi = 0;
@@ -2040,8 +2081,8 @@ static int rp_show(RState *st, unsigned char *out, long *olen, long ocap,
          * still applies — but only when the ring holds a prior saved
          * glyph (shouldAddWhitepsace reads twoLastChars; a FRESH
          * closure's ring — a form's first item — is empty, so a
-         * leading space pend does not materialize; twin of
-         * _TextInterp.show, form_combo hunt base 27,000,000). */
+         * leading space pend does not materialize; jsvm's
+         * should_add_whitespace, form_combo hunt base 27,000,000). */
         space = st->pending_space && !st->pending_multi &&
                 st->last_char != 0;
         st->pending_space = 0;
@@ -2050,8 +2091,8 @@ static int rp_show(RState *st, unsigned char *out, long *olen, long ocap,
         double ady = fabs(dyg);
         if (st->wreg <= 0.0 && adv != 0.0)
             return -3; /* zero/negative width register: the degenerate
-                          orientation bands live in the Python model —
-                          DEFER the page */
+                          orientation bands live in jsvm — DEFER the
+                          page */
         if (adv < -0.2 * ifs) {
             /* carriage return (NEGATIVE_SPACE_FACTOR) */
             st->pending_space = 0;
@@ -2223,8 +2264,8 @@ long pdftext_replay(const unsigned char *d, long n, const Ev *ev, long nev,
      * materializes only when the next group starts with a real glyph;
      * otherwise the leading-run machinery owns the decision. */
     int tj_fake = 0;
-    /* live WIDTH-REGISTER model for the buffered group (mirrors the
-     * Python consumers): tj_wacc = contribution since the last flush,
+    /* live WIDTH-REGISTER model for the buffered group (pdf.js
+     * textContentItem.width, jsvm's _Item.width): tj_wacc = contribution since the last flush,
      * tj_stale = what the deferred group-boundary compare leaves of
      * st.wreg (rp_boundary_stale), tj_gabs = cumulative kern gap
      * already absorbed (gap2 is measured from a fixed anchor, so
@@ -2235,7 +2276,7 @@ long pdftext_replay(const unsigned char *d, long n, const Ev *ev, long nev,
      * glyph's compare, so a show that hands the buffer off (TJ end /
      * mid-TJ kern flush) excludes it; the next show's own boundary
      * compare re-derives the gap from positions. Reset when a real
-     * glyph consumes the boundary (mirrors the Python consumers). */
+     * glyph consumes the boundary (pdf.js compares at that glyph). */
     double tj_tailw = 0.0;
     int tj_bpend = 1;
     long ret = nev;
@@ -2300,7 +2341,7 @@ long pdftext_replay(const unsigned char *d, long n, const Ev *ev, long nev,
                     /* zero-width non-space glyph: the width register
                      * stays 0 through it and the whole zero/negative
                      * orientation model applies — DEFER the page to
-                     * the exact Python implementation */
+                     * jsvm */
                     (void)olen0;
                     (void)tsp0;
                     (void)zw_mode;
@@ -2390,8 +2431,8 @@ long pdftext_replay(const unsigned char *d, long n, const Ev *ev, long nev,
             if (e->kind == K_TJSTR)
                 tj_last_clip = (glyphs > 0 && !last_sp &&
                                 (last_reject || clip_y)) ? 1 : 0;
-            /* discard quad-0 splits exactly where the Python paths
-             * keep the inline path: size 0 or multi-char decodes
+            /* discard quad-0 splits where the inline path is exact:
+             * size 0 or multi-char decodes
              * (box-rejected glyphs are handled INSIDE the per-glyph
              * walk now, mirroring pdf.js's test at the top of
              * compareWithLastPosition) */
@@ -2404,7 +2445,7 @@ long pdftext_replay(const unsigned char *d, long n, const Ev *ev, long nev,
                               decision anchors at the PRE-walk
                               prevTransform, which the split emission
                               below re-anchors — the exact cascade
-                              lives in the Python model (hunt seed
+                              lives in jsvm (hunt seed
                               20,100,542: 'io kap \\nap') */
             if (e->kind == K_TJSTR && nruns > 0) {
                 /* mid-TJ per-glyph splits: segment 0 completes the
@@ -2612,8 +2653,8 @@ long pdftext_replay(const unsigned char *d, long n, const Ev *ev, long nev,
                 /* last-ENSURED item's bands while the boundary compare
                  * is pending (tj_bpend): a font-change flush does not
                  * refresh the thresholds until the buffer's first real
-                 * glyph re-ensures the item (twin of the Python
-                 * consumer) */
+                 * glyph re-ensures the item, ensureTextContentItem
+                 * in jsvm's ensure_item) */
                 double lim = (tj_bpend && st.item_size > 0.0)
                                  ? st.item_size
                                  : st.size * st.sx;
@@ -2634,7 +2675,7 @@ long pdftext_replay(const unsigned char *d, long n, const Ev *ev, long nev,
                             g2 <= RP_GAP_FRACTION * lim && nreal0 == 1;
                 if (have_g2 && reg_k <= 0.0 && g2 != 0.0)
                     return -3; /* zero/negative register kern compare:
-                                  the degenerate bands live in Python */
+                                  the degenerate bands live in jsvm */
                 if (have_g2 &&
                     (keep1 || g2 < -0.2 * lim || g2 > 0.6 * lim)) {
                     /* the kern leaves the in-flow window: pdf.js
@@ -2754,8 +2795,8 @@ long pdftext_replay(const unsigned char *d, long n, const Ev *ev, long nev,
                                   next append re-opens the item */
                 if (st.sx != 0.0) /* the open item's advance thresholds
                                      rescale: pdf.js divides advanceX by
-                                     the NEW textAdvanceScale (twin of
-                                     the Python consumers) */
+                                     the NEW textAdvanceScale, jsvm's
+                                     update_advance_scale) */
                     st.item_size *= fabs(e->f2 / st.sx);
             }
             st.cur_x = e->f0;

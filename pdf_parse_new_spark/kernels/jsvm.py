@@ -415,9 +415,10 @@ VERTICAL_SHIFT_RATIO = 0.25
 
 
 class JsVM:
-    """One page's getTextContent run. ``interp`` is the page's
-    _TextInterp (font resolution + doc access are shared with the C
-    path so both tiers see identical FontMaps).
+    """One page's getTextContent run over ``doc``, clipped to the page
+    ``viewbox`` (None: no clipping). Fonts resolve through the
+    ``Document``, as on the C path, so both tiers see identical
+    FontMaps.
 
     ``chars_caches`` is the document's per-font charsCache. Without it
     the run keeps a page-local cache, which plain string shows see as
@@ -426,10 +427,10 @@ class JsVM:
 
     MAX_DEPTH = 8
 
-    def __init__(self, interp, chars_caches: dict | None = None) -> None:
-        self.interp = interp
-        self.doc = interp.doc
-        self.viewbox = interp.viewbox
+    def __init__(self, doc, viewbox: list[float] | None = None,
+                 chars_caches: dict | None = None) -> None:
+        self.doc = doc
+        self.viewbox = viewbox
         self.items: list[tuple[str, float]] = []  # (str, transform[5])
         # per-font Font._charsCache twins (pdf.worker.js:28064): keyed
         # by the FontMap OBJECT (pdf.js caches translated fonts per
@@ -744,12 +745,11 @@ class JsVM:
             # name missing from /Font resolves no ref, and with
             # ignoreErrors (pdf-parse's default getDocument options)
             # loadFont falls back to PartialEvaluator.fallbackFontDict
-            # (pdf.worker.js:35575) — the same default map the main
-            # engine's _font_for produces, NOT ErrorFont
-            if ref is not None:
-                state.font = self.interp._font_for_ref(ref)
-                return
-            state.font = self.interp._font_for(fonts_dict, name_arg)
+            # (pdf.worker.js:35575) — the same default map
+            # Document.font_for_ref gives the C path, NOT ErrorFont
+            if ref is None:
+                ref = (fonts_dict or {}).get(name_arg)
+            state.font = self.doc.font_for_ref(ref)
 
         def do_xobject(arg) -> None:
             # paintXObject (pdf.worker.js:36946-37025): the flush runs

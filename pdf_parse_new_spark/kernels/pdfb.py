@@ -445,6 +445,17 @@ class PdfError(Exception):
         self.code = code
 
 
+class _Unparseable:
+    """Object-cache entry for an object whose parse raised: the
+    exception's class and args, not the exception itself, whose
+    traceback would tie the Document into a reference cycle."""
+
+    __slots__ = ("cls", "args")
+
+    def __init__(self, exc: Exception) -> None:
+        self.cls, self.args = type(exc), exc.args
+
+
 class Document:
     """Random-access object store over one PDF byte buffer."""
 
@@ -759,16 +770,26 @@ class Document:
 
     def get_object(self, num: int):
         if num in self.cache:
-            return self.cache[num]
+            obj = self.cache[num]
+            if isinstance(obj, _Unparseable):
+                raise obj.cls(*obj.args)
+            return obj
         self.cache[num] = None  # cycle guard
         entry = self.index.get(num)
         obj = None
-        if entry is None:
-            pass
-        elif entry[0] == "n":
-            obj, _ = self._parse_indirect_at(entry[1], expect=num)
-        elif entry[0] == "c":
-            obj = self._fetch_compressed(entry[1], entry[2], num)
+        try:
+            if entry is None:
+                pass
+            elif entry[0] == "n":
+                obj, _ = self._parse_indirect_at(entry[1], expect=num)
+            elif entry[0] == "c":
+                obj = self._fetch_compressed(entry[1], entry[2], num)
+        except Exception as exc:
+            # pdf.js XRef.fetch throws on EVERY fetch of an object it
+            # cannot produce: later resolves raise too, not read the
+            # cycle guard's None
+            self.cache[num] = _Unparseable(exc)
+            raise
         self.cache[num] = obj
         return obj
 
@@ -894,6 +915,67 @@ class Document:
         if isinstance(s, Stream):
             return self._decode_stream(s)
         return b""
+
+    # -- fonts ----------------------------------------------------------------
+
+    def _fallback_fm(self) -> "FontMap":
+        fm = self.fallback_font_map
+        if fm is None:
+            fm = self.fallback_font_map = build_font_map(self, None)
+        return fm
+
+    def font_for_ref(self, ref) -> "FontMap":
+        """FontMap for a font reference, shared by both page tiers — the
+        Tf path resolves resource names here; ExtGState /Font entries
+        (the `gs` operator, pdf.js handleSetFont(null, gStateFont[0]))
+        carry the ref directly."""
+        if not isinstance(ref, Ref):
+            if ref is not None:
+                rv = self.resolve(ref)
+                if isinstance(rv, dict) and not isinstance(rv, Stream):
+                    # inline font dict: id() keys are not stable across
+                    # gc — no cache
+                    return build_font_map(self, rv)
+            # missing name / junk value: ONE shared fallback per
+            # document (pdf.js static fallbackFontDict + cacheKey
+            # short-circuit, pdf.worker.js:35575-35580) — identity
+            # matters for the per-font charsCache, not just the widths
+            return self._fallback_fm()
+        fm = self.font_map_cache.get(ref.num)
+        if fm is None:
+            try:
+                rv = self.resolve(ref)
+            except ValueError:
+                # an unparseable font object reads as a missing one:
+                # the shared fallback below
+                rv = None
+            if not isinstance(rv, dict) or isinstance(rv, Stream):
+                # a ref resolving to a non-dict: pdf.js falls to the
+                # SHARED fallbackFontDict font (same object as every
+                # other missing/junk font of this document)
+                fm = self._fallback_fm()
+                self.font_map_cache[ref.num] = fm
+                return fm
+            # second level: (document content digest, object number) —
+            # FontMap is immutable, so identical bytes parsed again (the
+            # chunk operator's per-range tasks, retries, replicated or
+            # templated corpora — enterprise PDFs are mostly a handful of
+            # generators re-emitting the same fonts) reuse the built map
+            # instead of re-parsing ToUnicode/Differences/widths. Keyed
+            # on the FULL payload hash: no false sharing possible.
+            gkey = (self.content_key(), ref.num, ref.gen)
+            fm = _FONT_MAP_LRU.get(gkey)
+            if fm is None:
+                fm = build_font_map(self, ref)
+                # giant CID tables (bfrange up to 64k entries, ~MBs each)
+                # stay document-scoped only — the worker-global cache is
+                # bounded by entry count AND per-entry size
+                if len(fm.table) <= 20_000:
+                    _FONT_MAP_LRU[gkey] = fm
+                    while len(_FONT_MAP_LRU) > 256:
+                        _FONT_MAP_LRU.pop(next(iter(_FONT_MAP_LRU)))
+            self.font_map_cache[ref.num] = fm
+        return fm
 
 
 # --------------------------------------------------------------------------
@@ -2992,138 +3074,48 @@ class _CDefer(Exception):
     mid-page."""
 
 
+# Slot groups of the C replay's float64 state vector (layout: the
+# comment above pdftext_replay in _ctext.c). _ST_TEXT is a stream's own
+# text state — y, x, size, sx, tc, tw, tz, rise, font, line origin, sy —
+# reset to _ST_TEXT_INIT at each stream start. _ST_CLOSURE is pdf.js's
+# per-run glyph closure: prevTransform (last_end_x, glyph_y), the
+# pending run and last char of twoLastChars, the stale item sizes and
+# scale_flush. The other slots flow through every stream and form: the
+# shared sink (last_y, line_open, the width register), force_flush and
+# the page view box.
+_ST_TEXT = _np.array([0, 1, 2, 3, 4, 5, 6, 7, 14, 27, 28, 29])
+_ST_TEXT_INIT = _np.array([0, 0, 0, 1, 0, 0, 1, 0, 0, 0, 0, 0], _np.float64)
+_ST_CLOSURE = _np.array([10, 11, 13, 15, 16, 17, 19, 20, 26, 30])
+_ST_FORCE_FLUSH = 18
+
+
 class _TextInterp:
-    """Content-stream text interpreter over the C lexer + C replay.
-    Recurses into Form XObjects on ``Do`` (figure labels live there;
-    pdf.js PartialEvaluator does the same), with a depth cap and a
-    seen-set against self-referential forms. A page the C path cannot
-    take raises ``_CDefer`` and runs through kernels/jsvm.py, which
-    shares this object's font resolution."""
+    """One page through the C lexer + C replay. Recurses into Form
+    XObjects on ``Do`` (figure labels live there; pdf.js
+    PartialEvaluator does the same), with a depth cap and a seen-set
+    against self-referential forms. A page the C path cannot take
+    raises ``_CDefer`` and runs through kernels/jsvm.py instead."""
 
     MAX_DEPTH = 8
 
     def __init__(self, doc: Document, viewbox: list[float] | None = None) -> None:
         self.doc = doc
+        # the page's output text, one piece per replay segment
+        self.pieces: list[str] = []
+        # the page's ONE replay state vector (slot groups above)
+        self.st = _np.zeros(32, _np.float64)
         # pdf.js drops glyphs OUTSIDE the page view box before any
         # assembly state changes (compareWithLastPosition,
         # pdf.worker.js:36531-36536): crop marks and off-page text never
         # reach the output. None disables clipping (unit-level callers).
-        self.viewbox = viewbox
-        # eager line model: breaks and word-gap spaces are emitted inline
-        # into `pieces` ("\n".join(lines) == "".join(pieces) — the same
-        # output as the old out/cur_line form, and the representation the
-        # C replay appends to directly). line_open tracks "anything on the
-        # current line"; last_char is the last emitted char of that line.
-        self.pieces: list[str] = []
-        self.line_open = False
-        self.last_char = ""
-        self.pending_space = False
-        # pending_multi: the pending whitespace run had >= 2 glyphs.
-        # pdf.js's shouldAddWhitepsace consults the last TWO saved
-        # glyphs (twoLastChars, pdf.worker.js:36373-36385): a run of
-        # two-plus spaces makes it FALSE, so in the sub-trackingSpaceMin
-        # window the space never materializes ("nu   " then "  eta" at
-        # a near-zero gap reads "nueta" in the reference).
-        self.pending_multi = False
-        # two y trackers, mirroring the reference's two-stage assembly:
-        # pdf.js decides flush/EOL/space per glyph against the PREVIOUS
-        # GLYPH position (textContentItem.prevTransform,
-        # pdf.worker.js:36614-36615), while pdf-parse emits "\n" by
-        # comparing successive ITEM anchor y's (item.transform[5] set at
-        # ensureTextContentItem) against Y_TOLERANCE (lib/pdf-parse.js:30).
-        # last_y == the current item's anchor y; glyph_y == the previous
-        # glyph's y. force_flush mirrors flushTextContentItem on font
-        # change / Do / stream end (pdf.worker.js:36841,36950).
-        self.last_y: float | None = None
-        self.glyph_y: float | None = None
-        self.last_end_x: float | None = None
-        self.force_flush = False
-        # scale_flush: a Tm scale change ran updateAdvanceScale on an
-        # open item, zeroing its width — textOrientation becomes
-        # Math.sign(0) == 0 at the next glyph's compare, forcing the
-        # carriage-return flush (advanceX < 0) or the standalone-space
-        # + flush path (advanceX > 0). item_size: the compare uses the
-        # ITEM-STALE font scale (thresholds captured at
-        # ensureTextContentItem; textAdvanceScale from the last update)
-        # — not the scale of the incoming glyph.
-        self.scale_flush = False
-        self.item_size = 0.0
-        # item_wreg: the WIDTH REGISTER — pdf.js's
-        # textContentItem.width. It starts at 0 (ensureTextContentItem)
-        # and grows by each appended glyph's scaledDim plus every
-        # ABSORBED compare advance (the tracking-band else and the
-        # in-flow fake-space paths run width += advanceX, which can be
-        # negative: a tightened kern absorbed over a zero-width run
-        # drives the register negative). textOrientation =
-        # Math.sign(width) multiplies every cascade threshold, so
-        # register == 0 degenerates every band (any positive advance
-        # falls outside addFakeSpaces' empty in-flow window: flush +
-        # standalone " " at prevTransform; any negative advance takes
-        # the carriage-return band) and register < 0 inverts them (the
-        # negative-Tz orientation). Like item_size, the register is
-        # STALE across flushes (flushTextContentItem never resets
-        # width; only the next ensureTextContentItem does).
-        self.item_wreg = 0.0
+        if viewbox is not None:
+            self.st[21:25] = viewbox
+            self.st[25] = 1.0
         # FontMap a form inherits from its parent stream (see _INH_FONT)
         self._inh_fm: FontMap | None = None
-        # item_hsize: the item's CROSS-AXIS height — pdf.js's
-        # textContentItem.height = hypot(trm[2], trm[3]), captured at
-        # ensureTextContentItem and used for the EOL / 0.25
-        # vertical-shift thresholds. Differs from item_size under
-        # non-uniform scales.
-        self.item_hsize = 0.0
 
     def text(self) -> str:
         return "".join(self.pieces)
-
-    @staticmethod
-    def _tj_rewrite_needed(ev, data) -> bool:
-        """True when a stream's TJ arrays need the coalescing rewrite
-        (:meth:`_coalesce_tj_events`): adjacent string elements,
-        consecutive kerns, a leading kern, a zero kern, or an
-        empty-decoding string element. Everything else — the common
-        ``[(str) num (str) num ...]`` justified-text shape — is already
-        exact under per-element processing, so the fast paths skip the
-        rewrite cost entirely."""
-        k = ev["kind"]
-        if not (k == 5).any():
-            # no K_TJSTART => no TJ regions at all (kinds 6/7/8 only occur
-            # inside one): ONE vector compare instead of the full battery
-            # — most streams carry no TJ and this gate is per page
-            return False
-        if len(k) > 1:
-            a2, b2 = k[:-1], k[1:]
-            if (
-                ((a2 == 6) & (b2 == 6))
-                | ((a2 == 7) & (b2 == 7))
-                | ((a2 == 5) & (b2 == 7))
-            ).any():
-                return True
-        m7 = k == 7
-        if m7.any() and (ev["f0"][m7] == 0.0).any():
-            return True
-        m6 = k == 6
-        if not m6.any():
-            return False
-        fl = ev["flag"][m6]
-        if (((ev["b"][m6] - ev["a"][m6]) <= 2) & (fl == 0)).any():
-            return True
-        esc = fl != 0
-        if esc.any():
-            # hex / escape-bearing elements: exact emptiness needs the
-            # unescape (``<  >`` or a bare line continuation decode to
-            # b"") — cheap, runs only over those few rows
-            for a, flg in zip(
-                ev["a"][m6][esc].tolist(), fl[esc].tolist()
-            ):
-                raw = (
-                    _hex_span(data, a)[0]
-                    if flg == 1
-                    else _parse_literal_string(data, a)[0]
-                )
-                if not raw:
-                    return True
-        return False
 
     @staticmethod
     def _coalesce_tj_events(evl, data, chunks):
@@ -3238,68 +3230,7 @@ class _TextInterp:
     def _font_for(self, fonts_dict, name: str) -> FontMap:
         if name == self._INH_FONT and self._inh_fm is not None:
             return self._inh_fm
-        return self._font_for_ref((fonts_dict or {}).get(name))
-
-    def _fallback_fm(self) -> FontMap:
-        fm = self.doc.fallback_font_map
-        if fm is None:
-            fm = build_font_map(self.doc, None)
-            self.doc.fallback_font_map = fm
-        return fm
-
-    def _font_for_ref(self, ref) -> FontMap:
-        """FontMap for a direct font reference — the Tf path resolves
-        resource names here; ExtGState /Font entries (the `gs` operator,
-        pdf.js handleSetFont(null, gStateFont[0])) carry the ref
-        directly."""
-        if not isinstance(ref, Ref):
-            if ref is not None:
-                rv = self.doc.resolve(ref)
-                if isinstance(rv, dict) and not isinstance(rv, Stream):
-                    # inline font dict: id() keys are not stable across
-                    # gc — no cache
-                    return build_font_map(self.doc, rv)
-            # missing name / junk value: ONE shared fallback per
-            # document (pdf.js static fallbackFontDict + cacheKey
-            # short-circuit, pdf.worker.js:35575-35580) — identity
-            # matters for the per-font charsCache, not just the widths
-            return self._fallback_fm()
-        doc = self.doc
-        fm = doc.font_map_cache.get(ref.num)
-        if fm is None:
-            try:
-                rv = doc.resolve(ref)
-            except ValueError:
-                # an unparseable font object reads as missing, as every
-                # later resolve does (the object cache holds None)
-                rv = None
-            if not isinstance(rv, dict) or isinstance(rv, Stream):
-                # a ref resolving to a non-dict: pdf.js falls to the
-                # SHARED fallbackFontDict font (same object as every
-                # other missing/junk font of this document)
-                fm = self._fallback_fm()
-                doc.font_map_cache[ref.num] = fm
-                return fm
-            # second level: (document content digest, object number) —
-            # FontMap is immutable, so identical bytes parsed again (the
-            # chunk operator's per-range tasks, retries, replicated or
-            # templated corpora — enterprise PDFs are mostly a handful of
-            # generators re-emitting the same fonts) reuse the built map
-            # instead of re-parsing ToUnicode/Differences/widths. Keyed
-            # on the FULL payload hash: no false sharing possible.
-            gkey = (doc.content_key(), ref.num, ref.gen)
-            fm = _FONT_MAP_LRU.get(gkey)
-            if fm is None:
-                fm = build_font_map(doc, ref)
-                # giant CID tables (bfrange up to 64k entries, ~MBs each)
-                # stay document-scoped only — the worker-global cache is
-                # bounded by entry count AND per-entry size
-                if len(fm.table) <= 20_000:
-                    _FONT_MAP_LRU[gkey] = fm
-                    while len(_FONT_MAP_LRU) > 256:
-                        _FONT_MAP_LRU.pop(next(iter(_FONT_MAP_LRU)))
-            doc.font_map_cache[ref.num] = fm
-        return fm
+        return self.doc.font_for_ref((fonts_dict or {}).get(name))
 
     def run(self, data: bytes, resources, depth: int = 0,
             seen: frozenset = frozenset(),
@@ -3328,7 +3259,7 @@ class _TextInterp:
         fonts_dict = doc.resolve(res.get("Font")) if isinstance(res, dict) else {}
         xobjs = doc.resolve(res.get("XObject")) if isinstance(res, dict) else {}
         scratch = b""
-        if self._tj_rewrite_needed(ev, data):
+        if (ev["kind"] == cinterp.K_TJSTART).any():
             ev, scratch = self._tj_rewrite(ev, data)
         plan = self._c_plan(ev, data, fonts_dict)
         if plan is None:
@@ -3416,36 +3347,17 @@ class _TextInterp:
     def _replay_c(self, data: bytes, ev, plan, xobjs, resources,
                   depth: int, seen: frozenset, scratch: bytes = b"") -> None:
         """Drive ``pdftext_replay`` over the event array, recursing into
-        Form XObjects between C segments. Line-model state round-trips
-        through the state vector so C segments and form recursion
-        compose (a form the C path cannot take raises ``_CDefer`` for
-        the whole page)."""
+        Form XObjects between C segments. The stream's text state starts
+        fresh in the page's state vector; the line state carries on
+        from the previous stream (a form the C path cannot take raises
+        ``_CDefer`` for the whole page)."""
         tbytes, toff, widths, cats, font_idx, fms = plan
-        st = _np.zeros(32, _np.float64)
-        st[3] = 1.0  # sx
-        st[6] = 1.0  # tz
-        if self.viewbox is not None:
-            st[21:25] = self.viewbox
-            st[25] = 1.0
+        st = self.st
+        st[_ST_TEXT] = _ST_TEXT_INIT
         out = _np.empty(max(1024, 4 * len(data)), _np.uint8)
         qst = _np.zeros(1 + 64 * 12, _np.float64)  # q/Q TextState stack
         i, nev = 0, len(ev)
         while True:
-            st[8] = 0.0 if self.last_y is None else self.last_y
-            st[9] = 0.0 if self.last_y is None else 1.0
-            st[10] = 0.0 if self.last_end_x is None else self.last_end_x
-            st[11] = 0.0 if self.last_end_x is None else 1.0
-            st[12] = 1.0 if self.line_open else 0.0
-            st[13] = float(ord(self.last_char)) if self.last_char else 0.0
-            st[15] = 1.0 if self.pending_space else 0.0
-            st[26] = 1.0 if self.pending_multi else 0.0
-            st[16] = 0.0 if self.glyph_y is None else self.glyph_y
-            st[17] = 0.0 if self.glyph_y is None else 1.0
-            st[18] = 1.0 if self.force_flush else 0.0
-            st[19] = 1.0 if self.scale_flush else 0.0
-            st[20] = self.item_size
-            st[30] = self.item_hsize
-            st[31] = self.item_wreg
             while True:
                 ret, olen = cinterp.replay(
                     data, ev, i, font_idx, tbytes, toff, widths, st, out,
@@ -3453,33 +3365,20 @@ class _TextInterp:
                 )
                 if ret == -3:
                     # width-register-sensitive construct: the page is
-                    # re-run through jsvm (the
-                    # per-page interp is discarded, so partial state
-                    # and already-committed pieces don't matter)
+                    # re-run through jsvm (the per-page interp is
+                    # discarded, so partial state and already-committed
+                    # pieces don't matter)
                     raise _CDefer()
                 if ret >= 0:
                     break
                 out = _np.empty(len(out) * 2, _np.uint8)
             if olen:
                 self.pieces.append(out[:olen].tobytes().decode("utf-8"))
-            self.last_y = st[8] if st[9] else None
-            self.last_end_x = st[10] if st[11] else None
-            self.line_open = bool(st[12])
-            lc = int(st[13])
-            self.last_char = chr(lc) if lc else ""
-            self.pending_space = bool(st[15])
-            self.pending_multi = bool(st[26])
-            self.glyph_y = st[16] if st[17] else None
-            self.force_flush = bool(st[18])
-            self.scale_flush = bool(st[19])
-            self.item_size = float(st[20])
-            self.item_hsize = float(st[30])
-            self.item_wreg = float(st[31])
             if ret >= nev:
                 return
             # paintXObject flushes before resolving anything (images,
             # missing names, junk operands — pdf.worker.js:36946)
-            self.force_flush = True
+            st[_ST_FORCE_FLUSH] = 1.0
             if depth < self.MAX_DEPTH:
                 cf = int(st[14])
                 # the K_INH rider immediately ahead of every K_XOBJ
@@ -3609,36 +3508,21 @@ class _TextInterp:
         # recurses with a FRESH textContentItem closure: the form's first
         # glyph sees prevTransform == null (no CR/gap vs page text), and
         # its items join the same sink — pdf-parse's lastY then follows
-        # emission order, so self.last_y (the anchor tracker) needs no
+        # emission order, so last_y (the anchor tracker) needs no
         # special handling: a form that emits nothing leaves it alone,
-        # one that does advances it to its last item's anchor. After the
-        # form, the page's own closure resumes with its pre-Do glyph
-        # state (prevTransform/twoLastChars persist across next()).
-        # pdf.js recurses with a FRESH getTextContent closure: the form
-        # gets its own prevTransform (glyph_y/last_end_x),
-        # twoLastChars ring (last_char + pending run memory) and
-        # textContentItem staleness (item_size/item_hsize/scale_flush);
-        # only the SINK (pieces/last_y/line_open) is shared. Save the
-        # page closure, run the form from closure-init state, restore —
-        # verified vs live node: a form's glyphs must not roll the
-        # page's ring (a post-form tracking-space decision reads the
-        # pre-Do glyphs) nor leave its stale item scale behind.
-        prev_gy, prev_x = self.glyph_y, self.last_end_x
-        prev_pending = self.pending_space
-        prev_multi = self.pending_multi
-        prev_lc = self.last_char
-        prev_isz = self.item_size
-        prev_ihs = self.item_hsize
-        prev_sf = self.scale_flush
-        self.force_flush = True
-        self.glyph_y = None
-        self.last_end_x = None
-        self.pending_space = False
-        self.pending_multi = False
-        self.last_char = ""
-        self.item_size = 0.0
-        self.item_hsize = 0.0
-        self.scale_flush = False
+        # one that does advances it to its last item's anchor. The form
+        # gets its own prevTransform (glyph_y/last_end_x), twoLastChars
+        # ring (last_char + pending run memory) and textContentItem
+        # staleness (item_size/item_hsize/scale_flush); only the SINK
+        # (pieces/last_y/line_open/width register) is shared. Save the
+        # vector, run the form from closure-init state, then restore the
+        # page's text state and closure — verified vs live node: a
+        # form's glyphs must not roll the page's ring (a post-form
+        # tracking-space decision reads the pre-Do glyphs) nor leave
+        # its stale item scale behind.
+        st = self.st
+        saved = st.copy()
+        st[_ST_CLOSURE] = 0.0
         try:
             self.run(
                 body,
@@ -3650,14 +3534,9 @@ class _TextInterp:
         finally:
             # a _CDefer propagates: the WHOLE page re-runs in jsvm
             self._inh_fm = inh_prev
-        self.glyph_y, self.last_end_x = prev_gy, prev_x
-        self.pending_space = prev_pending
-        self.pending_multi = prev_multi
-        self.last_char = prev_lc
-        self.item_size = prev_isz
-        self.item_hsize = prev_ihs
-        self.scale_flush = prev_sf
-        self.force_flush = True  # form stream end flush (getTextContent tail)
+        st[_ST_TEXT] = saved[_ST_TEXT]
+        st[_ST_CLOSURE] = saved[_ST_CLOSURE]
+        st[_ST_FORCE_FLUSH] = 1.0  # form stream end flush (getTextContent tail)
 
 
 def _page_view_box(doc: Document, page: dict, hops: int = 0) -> list[float]:
@@ -3805,10 +3684,9 @@ class _JsCtx:
             try:
                 data = _page_data(self.doc, pg)
                 if data:
-                    interp = _TextInterp(
-                        self.doc, viewbox=_page_view_box(self.doc, pg)
+                    vm = jsvm.JsVM(
+                        self.doc, _page_view_box(self.doc, pg), self.caches
                     )
-                    vm = jsvm.JsVM(interp, chars_caches=self.caches)
                     vm.run_page(data, res)  # JsStop truncates accrual
             except Exception:
                 pass  # population is best-effort; render already done
@@ -3839,7 +3717,7 @@ def _page_text(doc: Document, page: dict, resources,
             return interp.text()
         except _CDefer:
             pass
-        vm = jsvm.JsVM(_TextInterp(doc, viewbox=viewbox))
+        vm = jsvm.JsVM(doc, viewbox)
         try:
             vm.run_page(data, resources)
             return vm.text()
@@ -3850,7 +3728,7 @@ def _page_text(doc: Document, page: dict, resources,
         jsctx.populate_to(page_idx)  # prior pages' charsCache accrual
         jsctx.refresh_poisoned()  # prefix junk demotes LATER range pages
         caches = jsctx.caches
-    vm = jsvm.JsVM(_TextInterp(doc, viewbox=viewbox), chars_caches=caches)
+    vm = jsvm.JsVM(doc, viewbox, caches)
     vm.run_page(data, resources)
     if jsctx is not None:
         jsctx.pop_upto = max(jsctx.pop_upto, page_idx + 1)

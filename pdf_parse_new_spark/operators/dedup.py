@@ -137,7 +137,13 @@ def minhash_signatures_df(
     One shingle-construction pass, then k min-aggregations over the exploded
     (id, shingle) rows — map-side partial aggregation keeps the shuffle at
     one row per (id); this is the plan that survives 100 TB, unlike k
-    re-evaluations of the shingle expression per row."""
+    re-evaluations of the shingle expression per row.
+
+    The signature values changed in round 6: the k permutation hashes
+    now derive from one 8-byte base hash per shingle. The emitted pair
+    sets were verified identical to the previous family only at the
+    fixture scales sf0.001, sf0.01 and sf0.1; on other corpora the LSH
+    candidate sets, and so the pairs, can differ slightly."""
     sh = df.select(
         F.col(id_col).alias("id"),
         F.explode(shingles(F.col(text_col), shingle_n)).alias("s"),

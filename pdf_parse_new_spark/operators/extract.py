@@ -84,7 +84,6 @@ def extract_turns(
     lib/pdf-parse-processes.js:41,170-180: bound the damage of one
     pathological input, never fail the job).
     """
-    kernel_ref = kernel if isinstance(kernel, (str, type(None))) else kernel
     cols = df.select("conv_id", "turn_idx", "role", "text", *passthrough)
     if partitions:
         cols = cols.repartition(partitions, "conv_id", "turn_idx")
@@ -95,7 +94,7 @@ def extract_turns(
         schema += f", {name} {by_name[name].dataType.simpleString()}"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fn = resolve_kernel(kernel_ref)
+        fn = resolve_kernel(kernel)
         for batch_seq, pdf in enumerate(batches):
             t0 = time.perf_counter()
             texts = pdf["text"]

@@ -2128,6 +2128,11 @@ SQL_CHECKED = {
     k: v for k, v in SQL_CHECKED_ALL.items() if k not in DRIVER_RETIRED
 }
 
+# the reference project's own test corpus (01-valid.pdf ... and their
+# .pdf.txt goldens); tests marked ``requires_reference`` open it too
+REFERENCE_DATA = "/root/reference/test/data"
+
+
 def q_real_pdf_corpus(spark, sf_dir):
     """Real-dialect binary PDF parsing over the reference's own test corpus
     (rows-only: the golden outputs come from the reference's pdf.js build —
@@ -2139,7 +2144,7 @@ def q_real_pdf_corpus(spark, sf_dir):
     df = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.pdf")
-        .load("/root/reference/test/data")
+        .load(REFERENCE_DATA)
     )
     out = ex.extract_pdf_documents(df)
     return out.select(
@@ -2164,7 +2169,7 @@ def q_real_pdf_files(spark, sf_dir):
     df = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.pdf")
-        .load("/root/reference/test/data")
+        .load(REFERENCE_DATA)
         .select("path")
     )
     out = ex.extract_pdf_files(df)
@@ -2215,3 +2220,6 @@ ROWS_ONLY = {
     "embedding_dups": q_embedding_dups,
     "multimodal_features": q_multimodal_features,
 }
+# rows-only entries that read REFERENCE_DATA: scripts/check_oracle.py
+# skips them on a host without it
+NEEDS_REFERENCE = ("real_pdf_corpus", "real_pdf_files")

@@ -128,97 +128,3 @@ def batch_progress(extracted: DataFrame) -> DataFrame:
         F.count("error").alias("n_errors"),
         F.max("turn_idx").alias("max_turn"),
     )
-
-
-# --------------------------------------------------------------------------
-# Spark 4 state-v2 twin: transformWithStateInPandas
-# --------------------------------------------------------------------------
-
-try:  # pyspark >= 4.0
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class ProgressProcessor(StatefulProcessor):
-        """State-v2 implementation of the per-conversation progress operator
-        (same semantics as ``conversation_progress_stream``): typed
-        ValueState in RocksDB instead of the applyInPandasWithState tuple
-        blob — the forward path now that state v2 is GA in Spark 4."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("progress", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            (conv_id,) = key
-            if self._state.exists():
-                n_turns, n_errors, max_turn, hash_hex = self._state.get()
-                acc = int(hash_hex, 16)
-            else:
-                n_turns = n_errors = 0
-                max_turn = -1
-                acc = 0
-            for pdf in rows:
-                n_turns += len(pdf)
-                n_errors += int(pdf["error"].notna().sum())
-                if len(pdf):
-                    max_turn = max(max_turn, int(pdf["turn_idx"].max()))
-                for t, txt in zip(pdf["turn_idx"], pdf["extracted_text"]):
-                    acc ^= turn_digest(conv_id, int(t), txt or "")
-            self._state.update((n_turns, n_errors, max_turn, f"{acc:032x}"))
-            yield pd.DataFrame(
-                {
-                    "conv_id": [conv_id],
-                    "n_turns": [n_turns],
-                    "n_errors": [n_errors],
-                    "max_turn": [max_turn],
-                    "content_hash": [f"{acc:032x}"],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    def state_v2_available() -> bool:
-        """transformWithState's driver<->python state protocol rides
-        protobuf; environments without ``google.protobuf`` (this sandbox)
-        can't run it — the v1 applyInPandasWithState operator is the
-        supported path there."""
-        try:
-            import google.protobuf  # noqa: F401
-
-            return True
-        except ImportError:
-            return False
-
-    def conversation_progress_stream_v2(extracted_stream: DataFrame) -> DataFrame:
-        """State-v2 progress stream. Requires the RocksDB state store
-        (``spark.sql.streaming.stateStore.providerClass`` =
-        RocksDBStateStoreProvider) — transformWithState's only supported
-        backend — and the protobuf package (see ``state_v2_available``)."""
-        if not state_v2_available():
-            raise NotImplementedError(
-                "transformWithStateInPandas needs google.protobuf, absent "
-                "in this environment — use conversation_progress_stream"
-            )
-        return (
-            extracted_stream.select(
-                "conv_id", "turn_idx", "extracted_text", "error"
-            )
-            .groupBy("conv_id")
-            .transformWithStateInPandas(
-                statefulProcessor=ProgressProcessor(),
-                outputStructType=OUTPUT_SCHEMA,
-                outputMode="Update",
-                timeMode="None",
-            )
-        )
-
-except ImportError:  # pragma: no cover - pyspark 3.x fallback
-    ProgressProcessor = None
-
-    def state_v2_available() -> bool:
-        return False
-
-    def conversation_progress_stream_v2(extracted_stream: DataFrame) -> DataFrame:
-        raise NotImplementedError("transformWithStateInPandas needs pyspark>=4")

@@ -1,10 +1,15 @@
 """Local replica of the driver's correctness gate: run every queries() entry
 on Spark and its oracle_sql() on DuckDB at sf0.01, compare row count, column
 names, and order-insensitive values. Usage: python scripts/check_oracle.py
-[sf_dir] [query ...]"""
+[sf_dir] [query ...]
+
+The rows-only entries that read the reference corpus
+(queries.NEEDS_REFERENCE) print SKIP when queries.REFERENCE_DATA is
+absent; every other entry is run."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
@@ -47,6 +52,11 @@ def main() -> int:
     failures = 0
     for name, fn in qs.items():
         if only and name not in only:
+            continue
+        if name in qmod.NEEDS_REFERENCE and not os.path.isdir(
+            qmod.REFERENCE_DATA
+        ):
+            print(f"SKIP {name}: reference corpus absent")
             continue
         try:
             got = fn(spark, sf_dir).toPandas()

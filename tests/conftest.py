@@ -4,11 +4,8 @@ import os
 
 import pytest
 
+from pdf_parse_new_spark.queries import REFERENCE_DATA
 from pdf_parse_new_spark.session import get_spark
-
-# the reference project's own test corpus (01-valid.pdf ... and their
-# .pdf.txt goldens); tests marked ``requires_reference`` open it
-REFERENCE_DATA = "/root/reference/test/data"
 
 
 def pytest_configure(config):

@@ -2430,7 +2430,7 @@ def test_negative_register_streams_byte_equal_vs_live_reference(tmp_path):
 
 def test_register_minimals_byte_equal_vs_live_reference(tmp_path):
     """Distilled minimal reproducers from the register hunts — one per
-    closed divergence class (see pdfb._TextInterp.item_wreg)."""
+    closed divergence class (see RState.wreg in kernels/_ctext.c)."""
     mins = [
         # boundary flush via the page-level prevTransform fallback
         b"[(k)] TJ 0 -15 Td (C) Tj [(jB) -400 (j)] TJ",

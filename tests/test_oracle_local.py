@@ -54,6 +54,12 @@ def test_driver_retired_is_consistent():
     assert len(q.SQL_CHECKED) == 50
 
 
+def test_needs_reference_are_rows_only():
+    # scripts/check_oracle.py skips these without the reference corpus:
+    # none of them may be an SQL-checked entry
+    assert set(q.NEEDS_REFERENCE) <= set(q.ROWS_ONLY) - set(q.SQL_CHECKED_ALL)
+
+
 @pytest.mark.parametrize("name", PINNED)
 def test_exact_oracle_match(spark, oracle_con, name):
     fn, sql = q.SQL_CHECKED_ALL[name]

@@ -666,6 +666,22 @@ def test_cid_descendant_widths_drive_gap_model():
     assert fm.unicode(0x48) == "H"                   # identity fallback
 
 
+def test_unparseable_object_raises_on_every_resolve():
+    """An object whose parse raises gives the same answer on every
+    resolve: it raises each time, as pdf.js's XRef.fetch throws on every
+    fetch of an object it cannot produce. The object cache's cycle guard
+    (None) must not answer the second resolve."""
+    raw = _assemble({1: b"<< /Type /Catalog >>", 2: b"[500 1e3]"})
+    doc = pdfb.Document(raw)
+    outcomes = []
+    for _ in range(2):
+        try:
+            outcomes.append(("value", doc.resolve(pdfb.Ref(2, 0))))
+        except ValueError as exc:
+            outcomes.append(("raised", type(exc)))
+    assert outcomes == [("raised", ValueError)] * 2
+
+
 def test_embedded_cmap_ranged_codespace():
     """Embedded /Encoding CMap with a MIXED-width codespace (1-byte and
     2-byte ranges) plus cidrange mapping: the decoder must walk codes at

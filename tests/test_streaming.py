@@ -139,64 +139,6 @@ def test_stateful_idle_timeout_evicts_state():
     assert r.content_hash == f"{42:032x}"
 
 
-def test_stateful_progress_v2_transform_with_state(spark, tmp_path):
-    # Spark 4 state-v2 path: same accumulate-across-batches semantics as the
-    # applyInPandasWithState operator, RocksDB state store
-    import pytest as _pytest
-
-    if stateful.ProgressProcessor is None:
-        _pytest.skip("pyspark < 4")
-    if not stateful.state_v2_available():
-        _pytest.skip(
-            "transformWithState needs google.protobuf (absent in sandbox); "
-            "operator is implemented and gated, v1 path covers semantics"
-        )
-    old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        src = str(tmp_path / "st2")
-        full = fixtures.make_transcripts_df(spark, n_convs=5, median_turns=4)
-        full.filter("turn_idx < 2").coalesce(1).write.parquet(src + "/b1")
-        full.filter("turn_idx >= 2").coalesce(1).write.parquet(src + "/b2")
-        stream1 = (
-            spark.readStream.schema(full.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src + "/*")
-        )
-        extracted = sx.streaming_extract_turns(stream1)
-        q = (
-            stateful.conversation_progress_stream_v2(extracted)
-            .writeStream.format("memory")
-            .queryName("prog_v2")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt2"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        updates = spark.sql("select * from prog_v2").collect()
-        latest = {}
-        for r in updates:
-            if r.conv_id not in latest or r.n_turns > latest[r.conv_id].n_turns:
-                latest[r.conv_id] = r
-        want = {
-            r.conv_id: r
-            for r in stateful.batch_progress(extract.extract_turns(full)).collect()
-        }
-        assert set(latest) == set(want)
-        for cid, w in want.items():
-            assert latest[cid].n_turns == w.n_turns
-            assert latest[cid].max_turn == w.max_turn
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", old)
-
-
 def test_dedup_stream_drops_rearrivals(spark, tmp_path):
     """Streaming exact-dedup within the watermark: identical document text
     arriving twice (same or later micro-batch) emits once; distinct texts
