@@ -40,7 +40,6 @@ enum {
     K_TJNUM = 7,  /* f0 = kern value */
     K_TJEND = 8,
     K_XOBJ = 9,   /* a,b = /Name span (without slash) : Do operator */
-    K_SETY = 10,  /* f0 = y : partial Td/TD/Tm (later operand failed) */
     K_CM = 11,    /* f0,f1 = line origin under the NEW ctm, f2 = sx,
                    * f3 = sy : cm / Q changed the matrix mid-text — the
                    * replay refreshes the PEN (pdf.js recomputes the
@@ -78,9 +77,7 @@ typedef struct {
     int kind;
     int flag;     /* for OP_STR: 1 = hex, 2 = complex literal */
     int64_t a, b; /* span */
-    double v;
-    int conv;     /* converts to a float: numbers, true/false, names */
-    double cv;    /* its value when conv */
+    double v;     /* for OP_NUM: the value (true/false: 1/0) */
 } Operand;
 
 #define MAXOPS 64
@@ -273,26 +270,6 @@ static long scan_number(const unsigned char *d, long pos, long n, double *out)
         *out = atof(buf);
     }
     return pos;
-}
-
-/* a numeric Name's conv value: strtod over the raw span (full
- * consumption required) — covers plain/signed/exponent/inf/nan forms;
- * #xx-escaped digits are documented misses. Every numeric text-state
- * slot defers a Name operand to jsvm (pdf.js coerces it to NaN). */
-static int name_float(const unsigned char *d, long a, long b, double *out)
-{
-    char buf[384];
-    long len = b - a;
-    if (len <= 0 || len > (long)sizeof(buf) - 2)
-        return 0;
-    memcpy(buf, d + a, len);
-    buf[len] = 0;
-    char *endp = NULL;
-    double v = strtod(buf, &endp);
-    if (endp != buf + len)
-        return 0;
-    *out = v;
-    return 1;
 }
 
 /* Recursive validation mirroring pdfb.parse_object's grammar, which
@@ -639,9 +616,6 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
                 st[nst].kind = OP_NAME;
                 st[nst].a = pos + 1;
                 st[nst].b = end;
-                /* numeric names convert (name_float); the coercion
-                 * check below still defers them in numeric slots */
-                st[nst].conv = name_float(d, pos + 1, end, &st[nst].cv);
                 nst++;
                 if (nst > 33)
                     return -2; /* 34th operand: FormatError there */
@@ -661,7 +635,6 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
                 st[nst].flag = cx ? 2 : 0; /* 2 = needs full re-parse */
                 st[nst].a = pos;
                 st[nst].b = end;
-                st[nst].conv = 0;
                 nst++;
                 if (nst > 33)
                     return -2;
@@ -682,7 +655,6 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
                 }
                 if (nst < MAXOPS) {
                     st[nst].kind = OP_OTHER;
-                    st[nst].conv = 0;
                     nst++;
                     if (nst > 33)
                         return -2;
@@ -700,7 +672,6 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
                 st[nst].flag = 1;
                 st[nst].a = pos;
                 st[nst].b = end;
-                st[nst].conv = 0;
                 nst++;
                 if (nst > 33)
                     return -2;
@@ -828,7 +799,6 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
             EMIT(K_TJEND, 0, 0, 0, 0, 0, 0, 0);
             if (nst < MAXOPS) {
                 st[nst].kind = OP_OTHER;
-                st[nst].conv = 0;
                 nst++;
                 if (nst > 33)
                     return -2;
@@ -849,8 +819,6 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
             if (nst < MAXOPS) {
                 st[nst].kind = OP_NUM;
                 st[nst].v = v;
-                st[nst].conv = 1;
-                st[nst].cv = v;
                 nst++;
                 if (nst > 33)
                     return -2;
@@ -882,8 +850,6 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
                 if (nst < MAXOPS) {
                     st[nst].kind = OP_NUM;
                     st[nst].v = 1.0;
-                    st[nst].conv = 1;
-                    st[nst].cv = 1.0;
                     nst++;
                     if (nst > 33)
                         return -2; /* 34th operand: FormatError there */
@@ -894,8 +860,6 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
                 if (nst < MAXOPS) {
                     st[nst].kind = OP_NUM;
                     st[nst].v = 0.0;
-                    st[nst].conv = 1;
-                    st[nst].cv = 0.0;
                     nst++;
                     if (nst > 33)
                         return -2;
@@ -975,129 +939,100 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
                 nev = tj_start; /* array wasn't a TJ operand: discard */
 
             if (oplen == 2 && op[0] == 'T') {
-                /* Partial application: operands convert IN ORDER and
-                 * a failure aborts the op mid-way, KEEPING earlier
-                 * assignments (`conv`/`cv`). */
+                /* every numeric operand here is an OP_NUM: the
+                 * coercion check above sends any other to jsvm */
                 switch (op[1]) {
-                case 'f': /* name size Tf : the font is set from the
-                           * name BEFORE the size converts, so the font
-                           * updates even when the size operand is junk
-                           * (flag=1 -> replay keeps the old size) */
+                case 'f': /* name size Tf */
                     if (nst >= 2) {
                         long na = 0, nb = 0;
                         if (st[nst - 2].kind == OP_NAME) {
                             na = st[nst - 2].a;
                             nb = st[nst - 2].b;
                         }
-                        if (st[nst - 1].conv) {
-                            if (st[nst - 1].cv < 0.0)
-                                return -2; /* negative size flips the
-                                              compare frame by 180
-                                              (both tsm rows scale by
-                                              fs) — jsvm page */
-                            EMIT(K_FONT, 0, na, nb, st[nst - 1].cv, 0, 0, 0);
-                        } else
-                            EMIT(K_FONT, 1, na, nb, 0, 0, 0, 0);
+                        if (st[nst - 1].v < 0.0)
+                            return -2; /* negative size flips the
+                                          compare frame by 180 (both
+                                          tsm rows scale by fs) — jsvm
+                                          page */
+                        EMIT(K_FONT, 0, na, nb, st[nst - 1].v, 0, 0, 0);
                         seen_tf = 1;
                     }
                     break;
-                case 'd': /* tx ty Td : y converts first, then x */
-                    if (nst >= 2 && st[nst - 1].conv) {
+                case 'd': /* tx ty Td */
+                    if (nst >= 2) {
                         CONSUME_PLM();
-                        LM_TRANSLATE(0.0, st[nst - 1].cv);
-                        if (st[nst - 2].conv) {
-                            LM_TRANSLATE(st[nst - 2].cv, 0.0);
-                            EMIT(K_ANCHOR, 0, 0, 0, TX_X(tm_e, tm_f), TX_Y(tm_e, tm_f), tm_a * cm_a, tm_d * cm_d);
-                        } else {
-                            EMIT(K_SETY, 0, 0, 0, TX_Y(tm_e, tm_f), 0, 0, 0);
-                        }
+                        LM_TRANSLATE(0.0, st[nst - 1].v);
+                        LM_TRANSLATE(st[nst - 2].v, 0.0);
+                        EMIT(K_ANCHOR, 0, 0, 0, TX_X(tm_e, tm_f), TX_Y(tm_e, tm_f), tm_a * cm_a, tm_d * cm_d);
                     }
                     break;
-                case 'D': /* tx ty TD : leading+y first, then x */
-                    if (nst >= 2 && st[nst - 1].conv) {
-                        leading = -st[nst - 1].cv;
+                case 'D': /* tx ty TD : sets the leading too */
+                    if (nst >= 2) {
+                        leading = -st[nst - 1].v;
                         CONSUME_PLM();
-                        LM_TRANSLATE(0.0, st[nst - 1].cv);
-                        if (st[nst - 2].conv) {
-                            LM_TRANSLATE(st[nst - 2].cv, 0.0);
-                            EMIT(K_ANCHOR, 0, 0, 0, TX_X(tm_e, tm_f), TX_Y(tm_e, tm_f), tm_a * cm_a, tm_d * cm_d);
-                        } else {
-                            EMIT(K_SETY, 0, 0, 0, TX_Y(tm_e, tm_f), 0, 0, 0);
-                        }
+                        LM_TRANSLATE(0.0, st[nst - 1].v);
+                        LM_TRANSLATE(st[nst - 2].v, 0.0);
+                        EMIT(K_ANCHOR, 0, 0, 0, TX_X(tm_e, tm_f), TX_Y(tm_e, tm_f), tm_a * cm_a, tm_d * cm_d);
                     }
                     break;
-                case 'm': /* a b c d e f Tm : f, then e, then a-d */
-                    if (nst >= 6 && st[nst - 1].conv) {
-                        tm_f = st[nst - 1].cv;
-                        if (!st[nst - 2].conv) {
-                            /* partial Tm aborted after the lm_f == tm_f
-                             * assignment: the pending clone keeps its e
-                             * but takes the new f) */
-                            if (have_plm)
-                                plm_f = tm_f;
-                            EMIT(K_SETY, 0, 0, 0, TX_Y(tm_e, tm_f), 0, 0, 0);
+                case 'm': /* a b c d e f Tm */
+                    if (nst >= 6) {
+                        tm_f = st[nst - 1].v;
+                        if (seed_pending) { /* arm the lm clone */
+                            plm_e = seed_e;
+                            plm_f = seed_f;
+                            have_plm = 1;
+                            seed_pending = 0;
                         } else {
-                            if (seed_pending) { /* arm the lm clone */
-                                plm_e = seed_e;
-                                plm_f = seed_f;
-                                have_plm = 1;
-                                seed_pending = 0;
-                            } else {
-                                have_plm = 0;
-                            }
-                            tm_e = st[nst - 2].cv;
-                            if (st[nst - 6].conv && st[nst - 5].conv &&
-                                st[nst - 4].conv && st[nst - 3].conv) {
-                                tm_a = st[nst - 6].cv != 0.0
-                                           ? st[nst - 6].cv : 1.0;
-                                tm_b = st[nst - 5].cv;
-                                tm_c = st[nst - 4].cv;
-                                tm_d = st[nst - 3].cv != 0.0
-                                           ? st[nst - 3].cv : 1.0;
-                            }
-                            CHECK_ROT();
-                            /* flag=1: Tm anchor — the only op that runs
-                             * updateAdvanceScale (pdf.worker.js:36871),
-                             * so only it can zero an open item's width
-                             * (the textOrientation==0 flush) */
-                            EMIT(K_ANCHOR, 1, 0, 0, TX_X(tm_e, tm_f), TX_Y(tm_e, tm_f), tm_a * cm_a, tm_d * cm_d);
-                            /* rise is emitted PRE-SCALED by the matrix
-                             * d; a Tm that changes d must refresh it
-                             * (pdf.js applies rise through tsm at every
-                             * glyph — always current-matrix-scaled) */
-                            if (rise != 0.0)
-                                EMIT(K_STATE, 0, 0, 0, tc, tw, tz,
-                                     rise * tm_d * cm_d);
+                            have_plm = 0;
                         }
+                        tm_e = st[nst - 2].v;
+                        tm_a = st[nst - 6].v != 0.0 ? st[nst - 6].v : 1.0;
+                        tm_b = st[nst - 5].v;
+                        tm_c = st[nst - 4].v;
+                        tm_d = st[nst - 3].v != 0.0 ? st[nst - 3].v : 1.0;
+                        CHECK_ROT();
+                        /* flag=1: Tm anchor — the only op that runs
+                         * updateAdvanceScale (pdf.worker.js:36871), so
+                         * only it can zero an open item's width (the
+                         * textOrientation==0 flush) */
+                        EMIT(K_ANCHOR, 1, 0, 0, TX_X(tm_e, tm_f), TX_Y(tm_e, tm_f), tm_a * cm_a, tm_d * cm_d);
+                        /* rise is emitted PRE-SCALED by the matrix d; a
+                         * Tm that changes d must refresh it (pdf.js
+                         * applies rise through tsm at every glyph —
+                         * always current-matrix-scaled) */
+                        if (rise != 0.0)
+                            EMIT(K_STATE, 0, 0, 0, tc, tw, tz,
+                                 rise * tm_d * cm_d);
                     }
                     break;
                 case 'L':
-                    if (nst >= 1 && st[nst - 1].conv)
-                        leading = st[nst - 1].cv;
+                    if (nst >= 1)
+                        leading = st[nst - 1].v;
                     break;
                 case 's':
-                    if (nst >= 1 && st[nst - 1].conv) {
-                        rise = st[nst - 1].cv;
+                    if (nst >= 1) {
+                        rise = st[nst - 1].v;
                         EMIT(K_STATE, 0, 0, 0, tc, tw, tz, rise * tm_d * cm_d);
                     }
                     break;
                 case 'c':
-                    if (nst >= 1 && st[nst - 1].conv) {
-                        tc = st[nst - 1].cv;
+                    if (nst >= 1) {
+                        tc = st[nst - 1].v;
                         EMIT(K_STATE, 0, 0, 0, tc, tw, tz, rise * tm_d * cm_d);
                     }
                     break;
                 case 'w':
-                    if (nst >= 1 && st[nst - 1].conv) {
-                        tw = st[nst - 1].cv;
+                    if (nst >= 1) {
+                        tw = st[nst - 1].v;
                         EMIT(K_STATE, 0, 0, 0, tc, tw, tz, rise * tm_d * cm_d);
                     }
                     break;
                 case 'z':
-                    if (nst >= 1 && st[nst - 1].conv) {
+                    if (nst >= 1) {
                         /* no zero guard: pdf.js keeps hscale 0 (all
                          * advances x0, equal-position joins) */
-                        tz = st[nst - 1].cv / 100.0;
+                        tz = st[nst - 1].v / 100.0;
                         if (tz < 0.0 && !rot_emitted) {
                             /* negative Tz mirrors the writing
                              * direction (pdf.js rotate == 180 via the
@@ -1137,26 +1072,15 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
                 }
             } else if (oplen == 1 && (op[0] == '\'' || op[0] == '"') &&
                        seen_tf) {
-                int abort_show = 0;
                 CONSUME_PLM();
                 LM_TRANSLATE(0.0, -leading);
                 EMIT(K_ANCHOR, 0, 0, 0, TX_X(tm_e, tm_f), TX_Y(tm_e, tm_f), tm_a * cm_a, tm_d * cm_d);
-                if (op[0] == '"' && nst >= 3) {
-                    /* tw converts first (kept on partial failure of
-                     * tc), a failure skips the show */
-                    if (st[nst - 3].conv) {
-                        tw = st[nst - 3].cv;
-                        if (st[nst - 2].conv) {
-                            tc = st[nst - 2].cv;
-                        } else {
-                            abort_show = 1;
-                        }
-                        EMIT(K_STATE, 0, 0, 0, tc, tw, tz, rise * tm_d * cm_d);
-                    } else {
-                        abort_show = 1;
-                    }
+                if (op[0] == '"' && nst >= 3) { /* aw ac string " */
+                    tw = st[nst - 3].v;
+                    tc = st[nst - 2].v;
+                    EMIT(K_STATE, 0, 0, 0, tc, tw, tz, rise * tm_d * cm_d);
                 }
-                if (!abort_show && nst >= 1 && st[nst - 1].kind == OP_STR)
+                if (nst >= 1 && st[nst - 1].kind == OP_STR)
                     EMIT(K_STR, st[nst - 1].flag, st[nst - 1].a,
                          st[nst - 1].b, 0, 0, 0, 0);
             } else if (oplen == 2 && op[0] == 'D' && op[1] == 'o') {
@@ -1219,14 +1143,11 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
                     EMIT(K_QRESTORE, 0, 0, 0, 0, 0, 0, 0);
                 }
             } else if (oplen == 2 && op[0] == 'c' && op[1] == 'm') {
-                /* CTM' = m x CTM; applied only when all six operands
-                 * convert */
-                if (nst >= 6 && st[nst - 6].conv && st[nst - 5].conv &&
-                    st[nst - 4].conv && st[nst - 3].conv &&
-                    st[nst - 2].conv && st[nst - 1].conv) {
-                    double ma = st[nst - 6].cv, mb = st[nst - 5].cv;
-                    double mc = st[nst - 4].cv, md = st[nst - 3].cv;
-                    double me = st[nst - 2].cv, mf = st[nst - 1].cv;
+                /* CTM' = m x CTM */
+                if (nst >= 6) {
+                    double ma = st[nst - 6].v, mb = st[nst - 5].v;
+                    double mc = st[nst - 4].v, md = st[nst - 3].v;
+                    double me = st[nst - 2].v, mf = st[nst - 1].v;
                     double na = ma * cm_a + mb * cm_c;
                     double nb = ma * cm_b + mb * cm_d;
                     double nc = mc * cm_a + md * cm_c;
@@ -2861,7 +2782,7 @@ long pdftext_replay(const unsigned char *d, long n, const Ev *ev, long nev,
         }
         case K_FONT: {
             long nf = font_idx[i];
-            double nsize = e->flag == 0 ? e->f0 : st.size;
+            double nsize = e->f0;
             if (nf != st.cur_font || nsize != st.size)
                 st.force_flush = 1; /* setFont flush */
             st.cur_font = nf;
@@ -2876,10 +2797,6 @@ long pdftext_replay(const unsigned char *d, long n, const Ev *ev, long nev,
             break;
         case K_MCFLUSH:
             st.force_flush = 1; /* BMC/BDC/EMC unconditional flush */
-            break;
-        case K_SETY:
-            st.y = e->f0;
-            st.line_oy = e->f0;
             break;
         case K_QSAVE: {
             long qd = (long)qst[0];

@@ -27,7 +27,7 @@ EV_DTYPE = np.dtype(
 )
 
 K_ANCHOR, K_FONT, K_STATE, K_STR = 1, 2, 3, 4
-K_TJSTART, K_TJSTR, K_TJNUM, K_TJEND, K_XOBJ, K_SETY = 5, 6, 7, 8, 9, 10
+K_TJSTART, K_TJSTR, K_TJNUM, K_TJEND, K_XOBJ = 5, 6, 7, 8, 9
 # K_CM = 11 is consumed C-side only; K_ROT marks a rotated/skewed matrix
 # (the flattened events drop the 2x2 — callers re-run the page through
 # the full-matrix jsvm tier)

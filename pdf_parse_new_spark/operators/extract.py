@@ -261,17 +261,9 @@ def extract_pdf_documents(
     )
     if partitions:
         cols = cols.repartition(partitions, "doc_id")
-
-    def run(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        for batch in batches:
-            payloads = batch.column(1)
-            yield _pdf_record_batch(batch.column(0).to_pylist(), [
-                _parse_unit(_scalar_bytes, payloads[i], max_pages,
-                            max_payload_bytes=max_payload_bytes)
-                for i in range(len(payloads))
-            ])
-
-    return cols.mapInArrow(run, PDF_DOC_SCHEMA)
+    return _parse_stage(df.sparkSession, [], [], cols, None,
+                        lambda: (None, _scalar_bytes), max_pages,
+                        max_payload_bytes)
 
 
 def extract_pdf_files(
@@ -301,54 +293,13 @@ def extract_pdf_files(
     )
     if partitions:
         cols = cols.repartition(partitions, "doc_id")
-
-    def run(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        fetch = _make_fetcher()
-        for batch in batches:
-            yield _pdf_record_batch(batch.column(0).to_pylist(), [
-                _parse_unit(fetch, p, max_pages,
-                            max_payload_bytes=max_payload_bytes)
-                for p in batch.column(1).to_pylist()
-            ])
-
-    return cols.mapInArrow(run, PDF_DOC_SCHEMA)
+    return _parse_stage(df.sparkSession, [], [], cols, None, _file_readers,
+                        max_pages, max_payload_bytes)
 
 
 # --------------------------------------------------------------------------
 # intra-document parallelism: page-range chunking for huge PDFs
 # --------------------------------------------------------------------------
-
-# payload broadcasts are content-addressed and reused across operator calls:
-# first use pays the per-executor distribution cost once; steady-state reruns
-# (and best-of-N benches) hit the already-distributed copy. Bounded LRU —
-# evicted entries are unpersisted so executors drop the blocks.
-_BC_CACHE: dict = {}
-_BC_CACHE_MAX = 4
-# driver-side structure probes, content-addressed: sha1(payload) -> result
-_PROBE_CACHE: dict = {}
-
-
-def _broadcast_cached(sc, payloads: dict):
-    import hashlib
-
-    h = hashlib.sha1()
-    for doc_id in sorted(payloads):
-        h.update(doc_id.encode())
-        h.update(payloads[doc_id])
-    key = (sc.applicationId, h.hexdigest())
-    bc = _BC_CACHE.get(key)
-    if bc is None:
-        bc = sc.broadcast(payloads)
-        _BC_CACHE[key] = bc
-        while len(_BC_CACHE) > _BC_CACHE_MAX:
-            old_key = next(iter(_BC_CACHE))
-            old = _BC_CACHE.pop(old_key)
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-    return bc
-
 
 # payload bytes per driver collect: the broadcast budget (2 GiB by default)
 # can exceed what one Arrow binary column addresses (int32 offsets)
@@ -361,11 +312,11 @@ def _collect_payloads(
     """``(doc_id, payload)`` of the ``ids`` rows of ``big_df``, collected
     as Arrow: a Row collect pickles every payload in the JVM (a 25 MB
     document: ~0.9 s, vs ~0.25 s as Arrow). One collect per group of at
-    most ``_COLLECT_GROUP_BYTES``."""
-    groups: list[list[str]] = [[]]
+    most ``_COLLECT_GROUP_BYTES``; none for no ``ids``."""
+    groups: list[list[str]] = []
     total = 0
     for doc_id in ids:
-        if groups[-1] and total + sizes[doc_id] > _COLLECT_GROUP_BYTES:
+        if not groups or total + sizes[doc_id] > _COLLECT_GROUP_BYTES:
             groups.append([])
             total = 0
         groups[-1].append(doc_id)
@@ -515,7 +466,7 @@ def _merge_units(batches: "Iterator[pa.RecordBatch]"):
             yield batch.slice(start).select(_PDF_COLUMNS)
 
 
-def _fan_out_chunks(
+def _parse_stage(
     spark,
     ranges: list[_Unit],
     held: list[tuple[str | None, object, int, bool]],
@@ -523,12 +474,13 @@ def _fan_out_chunks(
     rest_big,
     readers: Callable[[], tuple[Callable, Callable]],
     max_pages: int,
+    max_payload_bytes: int | None = 512 << 20,
 ) -> DataFrame:
-    """The reference's process strategy, shared by both chunked operators:
-    the page ranges of big documents parse in separate tasks
-    (lib/pdf-parse-processes.js:92-99, lib/pdf-child.js:83-97) and
-    reassemble into one row per document, in ONE parse stage and ONE merge
-    stage.
+    """The one parse stage behind all four PDF operators. In the
+    reference's process strategy the parent plans page ranges and children
+    render them (lib/pdf-parse-processes.js:92-99, lib/pdf-child.js:83-97);
+    a whole document is the one-range case, so plain and chunked calls
+    parse in the same ``mapInArrow``.
 
     Units the driver holds — ``ranges`` (from :func:`_chunk_ranges`) and
     one whole-document unit per ``held`` row ``(doc_id, key, size, big)``
@@ -541,13 +493,15 @@ def _fan_out_chunks(
     chunked id (``big``, or ``rest_big`` for ``rest``): a chunked id is
     unique among big rows, so every other row — small, replicated or NULL
     id, unprobed, probe error, zero pages — parses whole, and the output
-    is row-identical to the operator's per-document path.
+    is row-identical to the plain operators'.
 
-    Every output row then crosses one hash exchange on ``doc_id`` into the
-    streaming :func:`_merge_units`; the exchange carries extracted text,
-    never payload bytes. The parse output is not split into a pass-through
-    and a grouped branch: a filter pushes down through the exchange, so
-    the parse would run twice."""
+    With no range the parse output is the result: no exchange, and with
+    ``rest`` alone the plan is scan -> ``mapInArrow``. Otherwise every
+    output row crosses one hash exchange on ``doc_id`` into the streaming
+    :func:`_merge_units`; the exchange carries extracted text, never
+    payload bytes. The parse output is not split into a pass-through and a
+    grouped branch: a filter pushes down through the exchange, so the
+    parse would run twice."""
     chunked = {u.doc_id for u in ranges}
     units = ranges + [
         _Unit(doc_id, key, max(size, 0))
@@ -555,27 +509,36 @@ def _fan_out_chunks(
         if not (big and doc_id in chunked)
     ]
     buckets = _pack_units(units, spark.sparkContext.defaultParallelism)
-    src = spark.range(len(buckets), numPartitions=len(buckets)).toDF("bucket")
+    src = None
+    if buckets or rest is None:  # no unit and no ``rest``: empty output
+        src = spark.range(len(buckets), numPartitions=len(buckets)) \
+            .toDF("bucket")
     if rest is not None:
-        # NULL doc_id: isin() is NULL, and the row stays
-        keep = ~F.coalesce(F.col("doc_id").isin(list(chunked)) & rest_big,
-                           F.lit(False))
-        src = src.unionByName(rest.filter(keep).toDF("doc_id", "key"),
-                              allowMissingColumns=True)
+        if chunked:
+            # NULL doc_id: isin() is NULL, and the row stays
+            rest = rest.filter(~F.coalesce(
+                F.col("doc_id").isin(list(chunked)) & rest_big, F.lit(False)
+            ))
+        src = rest if src is None else src.unionByName(
+            rest.toDF("doc_id", "key"), allowMissingColumns=True)
+    # the ``rest`` rows' per-document column is the last one
+    with_buckets, key_col = "bucket" in src.columns, src.columns[-1]
 
     def parse(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
         read_held, read_rest = readers()
 
         def unit_rows(batch):
-            for i, b in enumerate(batch.column("bucket").to_pylist()):
+            bucket = batch.column("bucket").to_pylist() if with_buckets \
+                else itertools.repeat(None, batch.num_rows)
+            for i, b in enumerate(bucket):
                 if b is None:  # a ``rest`` row: one whole document
                     yield (batch.column("doc_id")[i].as_py(), (0, 1),
-                           _parse_unit(read_rest, batch.column("key")[i],
-                                       max_pages))
+                           _parse_unit(read_rest, batch.column(key_col)[i],
+                                       max_pages, None, max_payload_bytes))
                     continue
                 for u in buckets[b]:
                     row = _parse_unit(read_held, u.key, max_pages,
-                                      u.page_range)
+                                      u.page_range, max_payload_bytes)
                     if u.n_pages is not None:
                         row = (row[0], u.n_pages, *row[2:])
                     yield u.doc_id, (u.idx, u.n_units), row
@@ -583,14 +546,14 @@ def _fan_out_chunks(
         for batch in batches:
             it = unit_rows(batch)
             while part := list(itertools.islice(it, _UNITS_PER_BATCH)):
-                ids, units, rows = zip(*part)
-                yield _pdf_record_batch(list(ids), list(rows), list(units))
+                ids, idx, rows = zip(*part)
+                yield _pdf_record_batch(list(ids), list(rows),
+                                        list(idx) if ranges else None)
 
-    return (
-        src.mapInArrow(parse, _UNIT_SCHEMA)
-        .repartition("doc_id")
-        .mapInArrow(_merge_units, PDF_DOC_SCHEMA)
-    )
+    parsed = src.mapInArrow(parse, _UNIT_SCHEMA if ranges else PDF_DOC_SCHEMA)
+    if not ranges:
+        return parsed
+    return parsed.repartition("doc_id").mapInArrow(_merge_units, PDF_DOC_SCHEMA)
 
 
 def extract_pdf_documents_chunked(
@@ -618,19 +581,17 @@ def extract_pdf_documents_chunked(
       decode), and BROADCAST — one copy per executor, not per chunk row
       and no payload shuffle;
     - their page ranges, packed into per-slot buckets, and every other row
-      parse in one ``mapInArrow``, as in :func:`_fan_out_chunks`.
+      parse in one ``mapInArrow`` (:func:`_parse_stage`).
 
     Once any document is chunked, every output row crosses one hash
     exchange on ``doc_id`` into the merge that reassembles the chunked
     documents in order; the exchange carries extracted text, never payload
-    bytes. With no chunked document the operator is
-    ``extract_pdf_documents``: one ``mapInArrow``, no exchange.
+    bytes. With no chunked document the plan is
+    ``extract_pdf_documents``'s: one ``mapInArrow``, no exchange.
 
     Output is byte-identical to ``extract_pdf_documents`` (asserted by the
     U3-style equivalence test in tests/test_pdf_chunking.py)."""
-    import hashlib
-
-    sc = df.sparkSession.sparkContext
+    spark = df.sparkSession
     rest = df.select(
         F.col(id_col).cast("string").alias("doc_id"),
         F.col(payload_col).alias("payload"),
@@ -645,42 +606,24 @@ def extract_pdf_documents_chunked(
         for r in big_df.select("doc_id", F.length("payload").alias("sz"))
         .collect()
     ]
-
-    def plain(d: DataFrame) -> DataFrame:
-        return extract_pdf_documents(
-            d, payload_col="payload", id_col="doc_id", max_pages=max_pages
-        )
-
-    ids = _unique_big_ids(sizes)
-    if not ids:
-        return plain(rest)
     size_of = dict(sizes)
     chosen: list[str] = []
     budget = max_broadcast_bytes
-    for doc_id in ids:  # over budget: the per-document path owns it
+    for doc_id in _unique_big_ids(sizes):
+        # over budget: the per-document path owns it
         if size_of[doc_id] <= budget:
             chosen.append(doc_id)
             budget -= size_of[doc_id]
     plans, payloads = [], {}
     for doc_id, raw in _collect_payloads(big_df, chosen, size_of):
-        # content-addressed: re-running the operator on the same document
-        # (benches, retries) skips the re-probe
-        key = (hashlib.sha1(raw).hexdigest(), max_pages)
-        probe = _PROBE_CACHE.get(key)
-        if probe is None:
-            probe = _PROBE_CACHE[key] = _probe_pages(raw, max_pages)
-            while len(_PROBE_CACHE) > 64:
-                _PROBE_CACHE.pop(next(iter(_PROBE_CACHE)))
-        plans.append((doc_id, doc_id, len(raw), *probe))
+        plans.append((doc_id, doc_id, len(raw), *_probe_pages(raw, max_pages)))
         payloads[doc_id] = raw
     ranges = _chunk_ranges(plans, pages_per_chunk, max_pages)
-    if not ranges:
-        return plain(rest)
-    bc = _broadcast_cached(sc, {u.doc_id: payloads[u.doc_id] for u in ranges})
-    return _fan_out_chunks(
-        df.sparkSession, ranges, [], rest, big,
-        lambda: (bc.value.__getitem__, _scalar_bytes), max_pages,
-    )
+    bc = spark.sparkContext.broadcast(
+        {u.doc_id: payloads[u.doc_id] for u in ranges}) if ranges else None
+    return _parse_stage(spark, ranges, [], rest, big,
+                        lambda: (lambda k: bc.value[k], _scalar_bytes),
+                        max_pages)
 
 
 def _reassemble_arrow(parts: list) -> "pa.RecordBatch":
@@ -767,6 +710,13 @@ def _make_fetcher():
     return fetch
 
 
+def _file_readers() -> tuple[Callable, Callable]:
+    """The files operators' task-side reads: a held unit's key and a
+    ``rest`` row's Arrow value are both a path."""
+    fetch = _make_fetcher()
+    return fetch, lambda v: fetch(v.as_py())
+
+
 def _file_size(path: str | None, fsspec=None) -> int:
     """Bytes in the file at ``path`` (``fsspec`` for URL schemes when
     given); -1 when NULL or unreadable, which the per-file path turns into
@@ -807,14 +757,15 @@ def extract_pdf_files_chunked(
     driver collect + broadcast, costs that scale with document size), here
     NOTHING but path strings and tiny range rows ever moves: the files are
     stat-ed, the big ones structure-probed, and every task reads its files
-    itself (page cache / object store). Each call is one parse stage, as in
-    :func:`_fan_out_chunks`: page ranges and whole files packed into
-    per-slot buckets, plus, on big corpora, the rows the driver did not
-    collect. Once any file is chunked, every output row crosses one hash
-    exchange on ``doc_id`` into the merge that reassembles the chunked
-    files in order; the exchange carries extracted text only. With no
-    chunked file the operator is :func:`extract_pdf_files`: one
-    ``mapInArrow``, no exchange. Driver memory is bounded by 10,000 path
+    itself (page cache / object store). Each call is one
+    :func:`_parse_stage`: page ranges and whole files packed into per-slot
+    buckets, plus, on big corpora, the rows the driver did not collect.
+    Once any file is chunked, every output row crosses one hash exchange
+    on ``doc_id`` into the merge that reassembles the chunked files in
+    order; the exchange carries extracted text only. With no chunked file
+    there is no exchange: one ``mapInArrow`` over the packed buckets
+    (driver-planned) or over the path rows (the plan of
+    :func:`extract_pdf_files`). Driver memory is bounded by 10,000 path
     rows plus the big files' stat rows, regardless of file size or corpus
     size. Output is row-identical to ``extract_pdf_files``."""
     spark = df.sparkSession
@@ -841,15 +792,6 @@ def extract_pdf_files_chunked(
                 n_pages=[n for n, _ in probes], err=[e for _, e in probes]
             )
 
-    def plain(d: DataFrame) -> DataFrame:
-        return extract_pdf_files(
-            d, path_col="path", id_col="doc_id", max_pages=max_pages
-        )
-
-    def readers():
-        fetch = _make_fetcher()
-        return fetch, lambda v: fetch(v.as_py())
-
     # Path A (small local corpora): stat + probe on the driver — the
     # distributed pass costs a full Python-runner job (~0.5 s of fixed
     # latency) that dwarfs a handful of os.stat calls and up to 8
@@ -859,7 +801,7 @@ def extract_pdf_files_chunked(
     # one-job distributed stat+probe pass, which returns only big rows; the
     # others stay in ``cols``.
     rows = cols.limit(10_001).collect()
-    held = None
+    held, rest, rest_big = [], cols, None
     if len(rows) <= 10_000 and all(
         r.path is None or "://" not in r.path for r in rows
     ):
@@ -872,34 +814,17 @@ def extract_pdf_files_chunked(
                 for doc_id, path, sz in big
             ]
             held = [(d, p, sz, sz > big_file_bytes) for d, p, sz in sized]
-    if held is None:
+            rest = None
+    if rest is not None:
         stats = [tuple(r) for r in cols.mapInPandas(
             stat_probe,
             "doc_id string, path string, sz long, n_pages int, err string",
         ).collect()]
+        # a chunked id has one big row, so its big path picks that row out
+        rest_big = F.col("path").isin([s[1] for s in stats])
     by_id = {s[0]: s for s in stats}
     plans = [by_id[d] for d in _unique_big_ids([(s[0], s[2]) for s in stats])]
-    ranges = _chunk_ranges(plans, pages_per_chunk, max_pages)
-    if held is None:
-        if not ranges:
-            return plain(cols)
-        # a chunked id has one big row, so its big path picks that row out
-        big_path = F.col("path").isin([s[1] for s in stats])
-        return _fan_out_chunks(spark, ranges, [], cols, big_path, readers,
-                               max_pages)
-    if not ranges:
-        # the plain path re-reads its input on every action: an Arrow-built
-        # relation is a LocalTableScan, while the python-pickled-RDD scan
-        # behind a list-based createDataFrame costs ~0.3 s of worker
-        # round-trip per action
-        import pyarrow as pa
-
-        return plain(spark.createDataFrame(
-            pa.table({
-                "doc_id": pa.array([r[0] for r in held], pa.string()),
-                "path": pa.array([r[1] for r in held], pa.string()),
-            }),
-            "doc_id string, path string",
-        ))
-    return _fan_out_chunks(spark, ranges, held, None, None, readers,
-                           max_pages)
+    return _parse_stage(
+        spark, _chunk_ranges(plans, pages_per_chunk, max_pages), held, rest,
+        rest_big, _file_readers, max_pages,
+    )

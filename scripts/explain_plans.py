@@ -173,14 +173,23 @@ def sections(spark, sf_dir: str) -> list:
         )),
     ))
 
-    def files_df():
+    def files_df(*docs):
         d = tempfile.mkdtemp(prefix="plans_pdf_")
         paths = []
-        for name, raw in (("huge", big_doc), ("small", small_doc)):
+        for name, raw in docs:
             paths.append(os.path.join(d, f"{name}.pdf"))
             with open(paths[-1], "wb") as f:
                 f.write(raw)
         return spark.createDataFrame([(p,) for p in paths], "path string")
+
+    out.append((
+        "extract_pdf_files",
+        "path strings through ONE MapInArrow (tasks read the files "
+        "themselves), no Exchange — the same parse stage as the payload "
+        "operator",
+        lambda: formatted_plan(extract.extract_pdf_files(
+            files_df(("small", small_doc)))),
+    ))
 
     out.append((
         "extract_pdf_files_chunked",
@@ -195,7 +204,19 @@ def sections(spark, sf_dir: str) -> list:
         "then join the parse stage through a Union), regardless of file "
         "size",
         lambda: formatted_plan(extract.extract_pdf_files_chunked(
-            files_df(), pages_per_chunk=50, big_file_bytes=10_000
+            files_df(("huge", big_doc), ("small", small_doc)),
+            pages_per_chunk=50, big_file_bytes=10_000,
+        )),
+    ))
+    out.append((
+        "extract_pdf_files_chunked (no big file)",
+        "the driver-planned call with nothing over the size bar: every "
+        "file is a whole-document unit packed into per-slot buckets read "
+        "as Range rows, ONE MapInArrow parses them, and with no chunked "
+        "file there is no Exchange and no merge",
+        lambda: formatted_plan(extract.extract_pdf_files_chunked(
+            files_df(("small", small_doc), ("small2", small_doc)),
+            pages_per_chunk=50, big_file_bytes=10_000,
         )),
     ))
     return out
@@ -225,7 +246,10 @@ def main() -> None:
         with open("PLANS.md") as f:
             blocks = [b.rstrip("\n")
                       for b in re.split(r"(?m)^(?=## )", f.read())]
-        blocks = [built.get(b[3:].split("\n", 1)[0], b) for b in blocks]
+        names = [b[3:].split("\n", 1)[0] for b in blocks]
+        blocks = [built.get(n, b) for n, b in zip(names, blocks)]
+        # sections PLANS.md does not have yet
+        blocks += [b for n, b in built.items() if n not in names]
     else:
         blocks = ["# PLANS — physical-plan evidence (generated by "
                   "scripts/explain_plans.py)", *built.values()]

@@ -453,6 +453,54 @@ def test_chunked_mixed_size_duplicate_id_keeps_every_row(spark, big_pdf):
     _assert_same_rows(ex.extract_pdf_documents(df).collect(), chunked)
 
 
+def test_no_range_calls_equal_plain(spark, tmp_path):
+    """Every call that chunks nothing: the four operators on an empty
+    input, and both chunked operators on generated inputs with nothing
+    over the size bar (the files operator plans those on the driver and
+    packs every file into buckets). Each gives the plain operator's rows
+    with no Exchange in its plan. Then the payload operator twice on the
+    same big payload: both calls chunk, and both give the plain rows."""
+    from pdf_parse_new_spark.plans.inspect import formatted_plan
+
+    docs = [(f"d{i}", fixtures.build_big_binary_pdf(3 + i, seed=i))
+            for i in range(3)] + [("bad", b"not a pdf"), ("null", None)]
+    paths = []
+    for doc_id, raw in docs:
+        paths.append(str(tmp_path / f"{doc_id}.pdf"))
+        if raw is not None:
+            (tmp_path / f"{doc_id}.pdf").write_bytes(raw)
+    paths.append(None)
+    payload_schema = "path string, content binary"
+    cases = [
+        (spark.createDataFrame([], payload_schema),
+         ex.extract_pdf_documents, ex.extract_pdf_documents_chunked),
+        (spark.createDataFrame([], "path string"),
+         ex.extract_pdf_files, ex.extract_pdf_files_chunked),
+        (spark.createDataFrame(docs, payload_schema),
+         ex.extract_pdf_documents, ex.extract_pdf_documents_chunked),
+        (spark.createDataFrame([(p,) for p in paths], "path string"),
+         ex.extract_pdf_files, ex.extract_pdf_files_chunked),
+    ]
+    for df, plain_op, chunked_op in cases:
+        plain, chunked = plain_op(df), chunked_op(df)
+        for out in (plain, chunked):
+            assert "Exchange" not in formatted_plan(out), chunked_op.__name__
+        single = plain.collect()
+        assert len(single) == df.count()
+        _assert_same_rows(single, chunked.collect())
+
+    big = fixtures.build_big_binary_pdf(300, seed=3)
+    df = spark.createDataFrame(
+        [("big", bytearray(big)), ("d0", bytearray(docs[0][1]))],
+        payload_schema)
+    single = ex.extract_pdf_documents(df).collect()
+    for _ in range(2):
+        out = ex.extract_pdf_documents_chunked(
+            df, pages_per_chunk=100, big_doc_bytes=20_000)
+        assert "Exchange" in formatted_plan(out)
+        _assert_same_rows(single, out.collect())
+
+
 def _units(n_ranges: int, costs: list[float]) -> list:
     doc = [ex._Unit("big", "big", 8.0 / max(n_ranges, 1), i, n_ranges,
                     (10 * i, 10 * i + 10), 10 * n_ranges)
