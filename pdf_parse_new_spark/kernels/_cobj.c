@@ -86,7 +86,7 @@ static int hexval(unsigned char c)
 }
 
 /* build (or fetch) the Name/str pair for the raw span [a, b); returns
- * borrowed-from-cache pointers through *name/*str (caller must INCREF
+ * borrowed-from-cache pointers through *name and *str (caller must INCREF
  * whichever it keeps), or -1 with an exception set. */
 static int name_pair(const unsigned char *d, Py_ssize_t a, Py_ssize_t b,
                      PyObject **name, PyObject **str)
@@ -148,7 +148,7 @@ static int name_pair(const unsigned char *d, Py_ssize_t a, Py_ssize_t b,
     }
     /* allocation failed: skip caching, hand ownership to a dead slot...
      * simplest correct path: return uncached strong refs via statics is
-     * messy — treat as transient entries by storing into *name/*str and
+     * messy — treat as transient entries by storing into *name and *str and
      * flagging with NULL slot; caller INCREFs, so balance with DECREF
      * after. To keep the contract uniform, leak-free: */
     *name = nm;

@@ -14,8 +14,13 @@
  *
  * Event records are 48 bytes, written into a caller-allocated buffer:
  *   int32 kind; int32 flag; int64 a; int64 b; double f0,f1,f2,f3;
- * Returns the event count, or -1 when the buffer is too small (caller
- * grows and retries).
+ * A TJ array's strings are joined as the array is read (pdf.js
+ * showSpacedTextBuffer.join(""), pdf.worker.js:36890-36909): their
+ * decoded bytes go into a caller-allocated scratch blob that the flag-3
+ * K_TJSTR rows index, so the replay consumes the lexer's output as is.
+ * Returns the event count, -1 when the buffer is too small (caller
+ * grows and retries), or -2 when the page must run through jsvm (see
+ * pdftext_interpret).
  */
 
 #include <stdint.h>
@@ -36,8 +41,14 @@ enum {
     K_STATE = 3,  /* f0=tc f1=tw f2=tz f3=rise */
     K_STR = 4,    /* a,b = string span incl delimiters; flag=1 hex : show */
     K_TJSTART = 5,
-    K_TJSTR = 6,  /* like K_STR, element of a TJ array */
-    K_TJNUM = 7,  /* f0 = kern value */
+    K_TJSTR = 6,  /* flag 3: a run of TJ strings joined into the
+                   * scratch blob, a,b = its [start, end) there */
+    K_TJNUM = 7,  /* f0 = summed value of a run of nonzero kerns; flag =
+                   * how many of them ran with an EMPTY buffer (each
+                   * applies charSpacing, pdf.worker.js:36663-36675);
+                   * f1 = the first kern's value when it follows a
+                   * string (extraSpacing riding that string's last
+                   * glyph), else 0 */
     K_TJEND = 8,
     K_XOBJ = 9,   /* a,b = /Name span (without slash) : Do operator */
     K_CM = 11,    /* f0,f1 = line origin under the NEW ctm, f2 = sx,
@@ -58,16 +69,9 @@ enum {
                    * to the nested Form run (pdf.js clones the whole
                    * eval state into paintXObject; leading/rise never
                    * cross the other events un-scaled) */
-    K_MCFLUSH = 16, /* BMC/BDC/EMC: getTextContent flushes the open
+    K_MCFLUSH = 16  /* BMC/BDC/EMC: getTextContent flushes the open
                      * item unconditionally at every marked-content op
                      * (pdf.worker.js:37075,37085,37100) */
-    K_ROT = 12    /* emitted ONCE when the composed text x CTM matrix
-                   * picks up rotation/skew (any of tm_b, tm_c, cm_b,
-                   * cm_c nonzero): the event stream flattens the matrix
-                   * to translate+scale, so the caller must re-run the
-                   * page through the full-matrix jsvm tier
-                   * (pdf.js swaps compare axes per rotation quadrant,
-                   * compareWithLastPosition pdf.worker.js:36545-36568) */
 };
 
 /* operand kinds on the small typed stack */
@@ -146,34 +150,6 @@ static long scan_hex(const unsigned char *d, long pos, long n)
     while (pos < n && d[pos] != '>')
         pos++;
     return pos < n ? pos + 1 : n;
-}
-
-/* dict: pos at "<<" -> end after matching ">>" (string-aware) */
-static long scan_dict(const unsigned char *d, long pos, long n)
-{
-    long depth = 0;
-    while (pos < n) {
-        unsigned char c = d[pos];
-        if (c == '<' && pos + 1 < n && d[pos + 1] == '<') {
-            depth++;
-            pos += 2;
-        } else if (c == '>' && pos + 1 < n && d[pos + 1] == '>') {
-            depth--;
-            pos += 2;
-            if (depth == 0)
-                return pos;
-        } else if (c == '(') {
-            int cx;
-            pos = scan_literal(d, pos, n, &cx);
-            if (pos < 0)
-                pos = n;
-        } else if (c == '<') {
-            pos = scan_hex(d, pos, n);
-        } else {
-            pos++;
-        }
-    }
-    return n;
 }
 
 static long scan_name(const unsigned char *d, long pos, long n)
@@ -495,19 +471,135 @@ static int op_arity(const unsigned char *op, long len, int *na, int *va)
     return 0;
 }
 
+/* one TJ string element -> raw bytes at out+o; returns the new offset
+ * or -1 on overflow (cannot happen at cap >= n: every decode shrinks or
+ * preserves its source span). Mirrors _parse_hex_string (odd final digit
+ * pads with 0) and _parse_literal_string (octal 1-3 digits, line
+ * continuations, unknown escape stands for itself). */
+static long cz_decode(const unsigned char *d, long n, int flag,
+                      long a, long b, unsigned char *out, long cap,
+                      long o)
+{
+#define PUTB(C)                                                              \
+    do {                                                                     \
+        if (o >= cap)                                                        \
+            return -1;                                                       \
+        out[o++] = (unsigned char)(C);                                       \
+    } while (0)
+    if (flag == 0) { /* escape-free literal: raw slice between delims */
+        long len = b - a - 2;
+        if (len > 0) {
+            if (o + len > cap)
+                return -1;
+            memcpy(out + o, d + a + 1, len);
+            o += len;
+        }
+    } else if (flag == 1) { /* hex string */
+        int hi = -1;
+        for (long i = a + 1; i < b - 1; i++) {
+            unsigned char c = d[i];
+            int v;
+            if (c >= '0' && c <= '9')
+                v = c - '0';
+            else if (c >= 'A' && c <= 'F')
+                v = c - 'A' + 10;
+            else if (c >= 'a' && c <= 'f')
+                v = c - 'a' + 10;
+            else
+                continue;
+            if (hi < 0) {
+                hi = v;
+            } else {
+                PUTB((hi << 4) | v);
+                hi = -1;
+            }
+        }
+        if (hi >= 0)
+            PUTB(hi << 4);
+    } else { /* complex literal: full unescape */
+        long pos = a + 1, depth = 1;
+        while (pos < n) {
+            unsigned char c = d[pos];
+            if (c == '\\') {
+                pos++;
+                if (pos >= n)
+                    break;
+                unsigned char e = d[pos];
+                if (e == 'n') {
+                    PUTB('\n');
+                    pos++;
+                } else if (e == 'r') {
+                    PUTB('\r');
+                    pos++;
+                } else if (e == 't') {
+                    PUTB('\t');
+                    pos++;
+                } else if (e == 'b') {
+                    PUTB('\b');
+                    pos++;
+                } else if (e == 'f') {
+                    PUTB('\f');
+                    pos++;
+                } else if (e == '(' || e == ')' || e == '\\') {
+                    PUTB(e);
+                    pos++;
+                } else if (e >= '0' && e <= '7') {
+                    int v = e - '0', k = 1;
+                    pos++;
+                    while (pos < n && k < 3 && d[pos] >= '0' &&
+                           d[pos] <= '7') {
+                        v = v * 8 + (d[pos] - '0');
+                        k++;
+                        pos++;
+                    }
+                    PUTB(v & 0xFF);
+                } else if (e == '\r' || e == '\n') {
+                    pos++;
+                    if (e == '\r' && pos < n && d[pos] == '\n')
+                        pos++;
+                } else {
+                    PUTB(e);
+                    pos++;
+                }
+            } else if (c == '(') {
+                depth++;
+                PUTB(c);
+                pos++;
+            } else if (c == ')') {
+                depth--;
+                if (depth == 0)
+                    break;
+                PUTB(c);
+                pos++;
+            } else {
+                PUTB(c);
+                pos++;
+            }
+        }
+    }
+#undef PUTB
+    return o;
+}
+
 /* lmseed: NULL, or 2 doubles — the parent stream's LINE-matrix e/f at a
  * Form XObject Do (pdf.js clones textMatrix AND textLineMatrix; the
  * synthetic Tm prelude can only seed both together). One-shot pending
  * value: the first Td, TD, T-star, ' or " before any full Tm/BT composes
  * against it instead of tm_e/f; q/Q snapshot it with the TextState.
  *
+ * scratch: the blob flag-3 K_TJSTR rows index (scap >= n suffices);
+ * *scratch_len receives its used length.
+ *
  * Returns: event count >= 0; -1 = event buffer too small (caller grows
- * and retries); -2 = pdf.js's preprocessor machinery engaged (operand
- * over/underflow stash, 34-operand FormatError, true/false operand in a
- * slot this lexer cannot thread) — the caller re-runs the whole page
- * through jsvm. */
+ * and retries); -2 = the page must run through jsvm: pdf.js's
+ * preprocessor machinery engaged (operand over/underflow stash,
+ * 34-operand FormatError, true/false operand in a slot this lexer cannot
+ * thread), or the text x CTM matrix picked up rotation, skew or a mirror
+ * (a rotated/skewed Tm or cm, a negative Tz), which the flattened
+ * translate+scale events cannot carry. */
 long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
-                       const double *lmseed)
+                       const double *lmseed, unsigned char *scratch,
+                       long scap, long *scratch_len)
 {
     long nev = 0;
     Operand st[MAXOPS];
@@ -515,6 +607,8 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
     /* buffered TJ array (emitted into out optimistically, rewound if the
      * following operator is not TJ — dash arrays "[2 4] 0 d" etc.) */
     long tj_start = -1; /* index into out of the K_TJSTART placeholder */
+    long slen = 0;      /* scratch write offset */
+    long tj_slen = 0;   /* ... at the buffered array's start */
     /* no Tf yet in THIS stream: pdf.js skips every text-showing op
      * (Tj/TJ/'/") until state.font is set — including the op's side
      * effects (the quotes' carriage return, "'s Tw/Tc assignment)
@@ -554,19 +648,15 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
         tm_f += (TXV) * tm_b + (TYV) * tm_d;                                 \
     } while (0)
     double tc = 0.0, tw = 0.0, tz = 1.0;
-    int rot_emitted = 0;
-/* one-shot rotation marker: the flattened events cannot carry the 2x2,
- * so the first rotated/skewed matrix routes the page to the full-matrix
- * jsvm tier (position of the marker within the stream does not
- * matter) */
-#define CHECK_ROT()                                                          \
+/* the flattened events cannot carry the 2x2, so a rotated/skewed matrix
+ * routes the page to the full-matrix jsvm tier (pdf.js swaps compare
+ * axes per rotation quadrant, compareWithLastPosition
+ * pdf.worker.js:36545-36568) */
+#define DEFER_IF_ROTATED()                                                   \
     do {                                                                     \
-        if (!rot_emitted &&                                                  \
-            (tm_b != 0.0 || tm_c != 0.0 || cm_b != 0.0 || cm_c != 0.0 ||     \
-             tm_a * cm_a < 0.0)) { /* x-mirror: pdf.js rotate == 180 */      \
-            EMIT(K_ROT, 0, 0, 0, 0, 0, 0, 0);                                \
-            rot_emitted = 1;                                                 \
-        }                                                                    \
+        if (tm_b != 0.0 || tm_c != 0.0 || cm_b != 0.0 || cm_c != 0.0 ||      \
+            tm_a * cm_a < 0.0) /* x-mirror: pdf.js rotate == 180 */          \
+            return -2;                                                       \
     } while (0)
     /* graphics-state CTM (q/Q/cm): positions, x-scale and rise are
      * emitted TRANSFORMED, so the replay's line model compares absolute
@@ -688,13 +778,36 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
              * to a Ref element (eating both ints — DEFER: jsvm's
              * _parse_content_array folds exactly), ')' throws, EOF inside the array
              * is a ParserEOFException — both page stops (DEFER). */
-            if (tj_start >= 0)
-                nev = tj_start; /* a newer array supersedes the old one */
+            if (tj_start >= 0) { /* a newer array supersedes the old one */
+                nev = tj_start;
+                slen = tj_slen;
+            }
             tj_start = nev;
+            tj_slen = slen;
             EMIT(K_TJSTART, 0, 0, 0, 0, 0, 0, 0);
             pos++;
             /* in-array `int int R` trio tracking (element tokens) */
             int aj1_int = 0, aj2_int = 0;
+            /* coalescing as elements arrive: a run of strings decodes
+             * into ONE flag-3 K_TJSTR row over the scratch blob, zero
+             * kerns are skipped (`item !== 0`), and a nonzero kern
+             * either flushes a non-empty run (flag 0, f1 = its value)
+             * or, after an empty run or none, merges into the array's
+             * open kern row (a leading kern opens one: flag 1, f1 = 0) */
+            int pend_open = 0;   /* an unflushed string run exists */
+            long pend_start = 0; /* its scratch start */
+            long kern_idx = -1;  /* the open kern row */
+/* decode the string element at pos..END onto the open run */
+#define TJ_APPEND(FLAG, END)                                                 \
+    do {                                                                     \
+        if (!pend_open) {                                                    \
+            pend_open = 1;                                                   \
+            pend_start = slen;                                               \
+        }                                                                    \
+        slen = cz_decode(d, n, (FLAG), pos, (END), scratch, scap, slen);     \
+        if (slen < 0)                                                        \
+            return -1;                                                       \
+    } while (0)
             for (;;) {
                 pos = skip_ws(d, pos, n);
                 if (pos >= n)
@@ -707,7 +820,7 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
                     long end = scan_literal(d, pos, n, &cx);
                     if (end < 0)
                         return -2; /* unterminated string */
-                    EMIT(K_TJSTR, cx ? 2 : 0, pos, end, 0, 0, 0, 0);
+                    TJ_APPEND(cx ? 2 : 0, end);
                     pos = end;
                     aj2_int = aj1_int; aj1_int = 0;
                 } else if (e == '<' && pos + 1 < n && d[pos + 1] == '<') {
@@ -720,7 +833,7 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
                     long end = scan_hex(d, pos, n);
                     if (end >= n && (n == 0 || d[n - 1] != '>'))
                         return -2; /* unterminated hex: page stop there */
-                    EMIT(K_TJSTR, 1, pos, end, 0, 0, 0, 0);
+                    TJ_APPEND(1, end);
                     pos = end;
                     aj2_int = aj1_int; aj1_int = 0;
                 } else if (e == '/') {
@@ -741,15 +854,30 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
                                      d[nend] == '-'))
                         return -2; /* getNumber continues the token */
                     pos = nend;
-                    /* f1 = the kern's own value: unrewritten kern rows
-                     * always directly follow a non-empty K_TJSTR (any
-                     * other shape triggers the coalescing rewrite,
-                     * which re-derives f1) — it is the extraSpacing
-                     * riding that string's LAST glyph, dropped when
-                     * the glyph is box-rejected (pdf.js translates the
-                     * reject path by scaledDim only,
-                     * pdf.worker.js:36704-36711) */
-                    EMIT(K_TJNUM, 0, 0, 0, v, v, 0, 0);
+                    if (v == 0.0) {
+                        ; /* zero kern: skipped */
+                    } else if (pend_open && slen > pend_start) {
+                        EMIT(K_TJSTR, 3, pend_start, slen, 0, 0, 0, 0);
+                        pend_open = 0;
+                        /* f1: the extraSpacing riding the run's LAST
+                         * glyph, dropped when that glyph is box-rejected
+                         * (pdf.js translates the reject path by
+                         * scaledDim only, pdf.worker.js:36704-36711) */
+                        kern_idx = nev;
+                        EMIT(K_TJNUM, 0, 0, 0, v, v, 0, 0);
+                    } else {
+                        if (pend_open) { /* the run joined to "" */
+                            slen = pend_start;
+                            pend_open = 0;
+                        }
+                        if (kern_idx >= 0) {
+                            out[kern_idx].f0 += v;
+                            out[kern_idx].flag += 1;
+                        } else {
+                            kern_idx = nev;
+                            EMIT(K_TJNUM, 1, 0, 0, v, 0, 0, 0);
+                        }
+                    }
                     aj2_int = aj1_int;
                     aj1_int = (v == (double)(long long)v &&
                                v >= -9.007199254740992e15 &&
@@ -796,6 +924,8 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
                 }
             }
             pos++; /* ']' */
+            if (pend_open)
+                EMIT(K_TJSTR, 3, pend_start, slen, 0, 0, 0, 0);
             EMIT(K_TJEND, 0, 0, 0, 0, 0, 0, 0);
             if (nst < MAXOPS) {
                 st[nst].kind = OP_OTHER;
@@ -935,8 +1065,10 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
 
             int is_tj_array_op =
                 (oplen == 2 && op[0] == 'T' && op[1] == 'J');
-            if (tj_start >= 0 && !is_tj_array_op)
+            if (tj_start >= 0 && !is_tj_array_op) {
                 nev = tj_start; /* array wasn't a TJ operand: discard */
+                slen = tj_slen;
+            }
 
             if (oplen == 2 && op[0] == 'T') {
                 /* every numeric operand here is an OP_NUM: the
@@ -944,17 +1076,13 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
                 switch (op[1]) {
                 case 'f': /* name size Tf */
                     if (nst >= 2) {
-                        long na = 0, nb = 0;
-                        if (st[nst - 2].kind == OP_NAME) {
-                            na = st[nst - 2].a;
-                            nb = st[nst - 2].b;
-                        }
                         if (st[nst - 1].v < 0.0)
                             return -2; /* negative size flips the
                                           compare frame by 180 (both
                                           tsm rows scale by fs) — jsvm
                                           page */
-                        EMIT(K_FONT, 0, na, nb, st[nst - 1].v, 0, 0, 0);
+                        EMIT(K_FONT, 0, st[nst - 2].a, st[nst - 2].b,
+                             st[nst - 1].v, 0, 0, 0);
                         seen_tf = 1;
                     }
                     break;
@@ -991,7 +1119,7 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
                         tm_b = st[nst - 5].v;
                         tm_c = st[nst - 4].v;
                         tm_d = st[nst - 3].v != 0.0 ? st[nst - 3].v : 1.0;
-                        CHECK_ROT();
+                        DEFER_IF_ROTATED();
                         /* flag=1: Tm anchor — the only op that runs
                          * updateAdvanceScale (pdf.worker.js:36871), so
                          * only it can zero an open item's width (the
@@ -1033,15 +1161,12 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
                         /* no zero guard: pdf.js keeps hscale 0 (all
                          * advances x0, equal-position joins) */
                         tz = st[nst - 1].v / 100.0;
-                        if (tz < 0.0 && !rot_emitted) {
+                        if (tz < 0.0)
                             /* negative Tz mirrors the writing
                              * direction (pdf.js rotate == 180 via the
                              * textHScale sign): the flattened events
-                             * can't carry it — delegate the page to
-                             * the full-matrix jsvm tier */
-                            EMIT(K_ROT, 0, 0, 0, 0, 0, 0, 0);
-                            rot_emitted = 1;
-                        }
+                             * can't carry it — jsvm page */
+                            return -2;
                         EMIT(K_STATE, 0, 0, 0, tc, tw, tz, rise * tm_d * cm_d);
                     }
                     break;
@@ -1056,9 +1181,10 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
                              st[nst - 1].b, 0, 0, 0, 0);
                     break;
                 case 'J': /* TJ: keep the buffered array events */
-                    if (!seen_tf && tj_start >= 0)
+                    if (!seen_tf && tj_start >= 0) {
                         nev = tj_start; /* pre-Tf: drop the whole array */
-                    else if (tj_start < 0 && seen_tf && nst >= 1 &&
+                        slen = tj_slen;
+                    } else if (tj_start < 0 && seen_tf && nst >= 1 &&
                              st[nst - 1].kind == OP_STR)
                         /* TJ over a PLAIN STRING iterates its chars —
                          * all strings, one buffered flush == Tj
@@ -1160,7 +1286,7 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
                     cm_d = nd;
                     cm_e = ne;
                     cm_f = nf;
-                    CHECK_ROT();
+                    DEFER_IF_ROTATED();
                     EMIT(K_CM, 0, 0, 0, TX_X(tm_e, tm_f), TX_Y(tm_e, tm_f),
                          tm_a * cm_a, tm_d * cm_d);
                     if (rise != 0.0) /* refresh matrix-scaled rise */
@@ -1213,13 +1339,18 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
         pos++;
     }
     /* trailing unconsumed TJ buffer: drop it */
-    if (tj_start >= 0)
+    if (tj_start >= 0) {
         nev = tj_start;
+        slen = tj_slen;
+    }
+    *scratch_len = slen;
     return nev;
 #undef TX_X
 #undef TX_Y
 #undef LM_TRANSLATE
 #undef CONSUME_PLM
+#undef DEFER_IF_ROTATED
+#undef TJ_APPEND
 }
 
 /* ------------------------------------------------------------------ *
@@ -1359,7 +1490,6 @@ static int rp_decode(const unsigned char *d, long n, int flag, long a,
                      int *defer, int *last_cf, double *premin)
 {
     long o = *olen;
-    long start_ = o; /* letter-gap spaces only between this item's chars */
     /* quad-0 split collection (SegRec): run state machine over glyph
      * positions; prev0 = the TJ buffer's prevTransform so a LEADING
      * run of this element counts as internal (split at off == start).
@@ -2547,9 +2677,9 @@ long pdftext_replay(const unsigned char *d, long n, const Ev *ev, long nev,
         }
         case K_TJNUM: {
             /* the kern rides charSpacing through translateTextMatrix
-             * (x textHScale) — pdf.worker.js:36687,36735. After the
-             * coalescing rewrite, flag = count of merged kerns that ran
-             * with an EMPTY buffer: each applied charSpacing in its
+             * (x textHScale) — pdf.worker.js:36687,36735. flag =
+             * count of merged kerns that ran with an EMPTY buffer
+             * (the lexer's TJ coalescing): each applied charSpacing in its
              * translate (the !chars branch, pdf.worker.js:36663-36675).
              * f1 = the component riding the preceding string's LAST
              * glyph as extraSpacing — LOST when that glyph was
@@ -2865,208 +2995,6 @@ done:
     state[28] = st.line_oy;
     *out_len = olen;
     return ret;
-}
-
-/* ------------------------------------------------------------------ *
- * pdftext_coalesce_tj — C twin of _TextInterp._coalesce_tj_events
- * (pdfb.py): rewrite a TJ region's events so a run of K_TJSTR rows
- * becomes ONE flag-3 row spanning the scratch blob, zero kerns
- * vanish, CONSECUTIVE kerns merge (f0 summed, flag = count of kerns
- * that ran with an EMPTY buffer — each applies charSpacing via the
- * !chars branch, pdf.worker.js:36663-36675), and a kern row's f1
- * carries the FIRST kern's value (extraSpacing riding the flushed
- * string's last glyph). The Python implementation remains the
- * reference; byte-identity of (events, scratch) is pinned by
- * test_ctext.py. Returns the output row count (<= nev; the caller
- * sizes out at nev) or -1 when scratch overflows (cannot happen at
- * scap >= n: every decode shrinks or preserves its source span).
- * ------------------------------------------------------------------ */
-
-static long cz_decode(const unsigned char *d, long n, int flag,
-                      long a, long b, unsigned char *out, long cap,
-                      long o)
-{
-    /* one TJ string element -> raw bytes at out+o; returns the new
-     * offset or -1 on overflow. Mirrors _parse_hex_string (odd final
-     * digit pads with 0) and _parse_literal_string (octal 1-3 digits,
-     * line continuations, unknown escape stands for itself). */
-#define PUTB(C)                                                              \
-    do {                                                                     \
-        if (o >= cap)                                                        \
-            return -1;                                                       \
-        out[o++] = (unsigned char)(C);                                       \
-    } while (0)
-    if (flag == 0) { /* escape-free literal: raw slice between delims */
-        long len = b - a - 2;
-        if (len > 0) {
-            if (o + len > cap)
-                return -1;
-            memcpy(out + o, d + a + 1, len);
-            o += len;
-        }
-    } else if (flag == 1) { /* hex string */
-        int hi = -1;
-        for (long i = a + 1; i < b - 1; i++) {
-            unsigned char c = d[i];
-            int v;
-            if (c >= '0' && c <= '9')
-                v = c - '0';
-            else if (c >= 'A' && c <= 'F')
-                v = c - 'A' + 10;
-            else if (c >= 'a' && c <= 'f')
-                v = c - 'a' + 10;
-            else
-                continue;
-            if (hi < 0) {
-                hi = v;
-            } else {
-                PUTB((hi << 4) | v);
-                hi = -1;
-            }
-        }
-        if (hi >= 0)
-            PUTB(hi << 4);
-    } else { /* complex literal: full unescape */
-        long pos = a + 1, depth = 1;
-        while (pos < n) {
-            unsigned char c = d[pos];
-            if (c == '\\') {
-                pos++;
-                if (pos >= n)
-                    break;
-                unsigned char e = d[pos];
-                if (e == 'n') {
-                    PUTB('\n');
-                    pos++;
-                } else if (e == 'r') {
-                    PUTB('\r');
-                    pos++;
-                } else if (e == 't') {
-                    PUTB('\t');
-                    pos++;
-                } else if (e == 'b') {
-                    PUTB('\b');
-                    pos++;
-                } else if (e == 'f') {
-                    PUTB('\f');
-                    pos++;
-                } else if (e == '(' || e == ')' || e == '\\') {
-                    PUTB(e);
-                    pos++;
-                } else if (e >= '0' && e <= '7') {
-                    int v = e - '0', k = 1;
-                    pos++;
-                    while (pos < n && k < 3 && d[pos] >= '0' &&
-                           d[pos] <= '7') {
-                        v = v * 8 + (d[pos] - '0');
-                        k++;
-                        pos++;
-                    }
-                    PUTB(v & 0xFF);
-                } else if (e == '\r' || e == '\n') {
-                    pos++;
-                    if (e == '\r' && pos < n && d[pos] == '\n')
-                        pos++;
-                } else {
-                    PUTB(e);
-                    pos++;
-                }
-            } else if (c == '(') {
-                depth++;
-                PUTB(c);
-                pos++;
-            } else if (c == ')') {
-                depth--;
-                if (depth == 0)
-                    break;
-                PUTB(c);
-                pos++;
-            } else {
-                PUTB(c);
-                pos++;
-            }
-        }
-    }
-#undef PUTB
-    return o;
-}
-
-long pdftext_coalesce_tj(const unsigned char *d, long n,
-                         const Ev *ev, long nev,
-                         Ev *out, unsigned char *scratch, long scap,
-                         long *scratch_len)
-{
-    long c = 0;          /* output rows */
-    long cur = 0;        /* scratch write offset */
-    int pend_open = 0;   /* an unflushed K_TJSTR run exists */
-    long pend_start = 0; /* its scratch start (rollback point) */
-    long pend_row = -1;  /* its FIRST input row (f0..f3 template) */
-    long kern_idx = -1;  /* last emitted kern row (merge target) */
-    for (long i = 0; i < nev; i++) {
-        const Ev *e = &ev[i];
-        if (e->kind == K_TJSTR) {
-            if (!pend_open) {
-                pend_open = 1;
-                pend_start = cur;
-                pend_row = i;
-            }
-            cur = cz_decode(d, n, e->flag, e->a, e->b, scratch, scap, cur);
-            if (cur < 0)
-                return -1;
-            /* kern_idx NOT reset: an all-empty pend joins to "" at the
-             * next kern, which then merges with the open kern chain */
-            continue;
-        }
-        if (e->kind == K_TJNUM) {
-            if (e->f0 == 0.0)
-                continue; /* zero kern skipped (item !== 0) */
-            if (pend_open && cur > pend_start) {
-                out[c] = ev[pend_row];
-                out[c].flag = 3;
-                out[c].a = pend_start;
-                out[c].b = cur;
-                c++;
-                pend_open = 0;
-                out[c] = *e;
-                out[c].flag = 0;
-                out[c].f1 = e->f0; /* extraSpacing on the last glyph */
-                kern_idx = c;
-                c++;
-            } else if (kern_idx >= 0) {
-                /* empty-join pend (or none): the kern ran with an
-                 * EMPTY buffer — merge into the open chain */
-                if (pend_open) {
-                    cur = pend_start; /* discard the empty decode */
-                    pend_open = 0;
-                }
-                out[kern_idx].f0 += e->f0;
-                out[kern_idx].flag += 1;
-            } else {
-                if (pend_open) {
-                    cur = pend_start;
-                    pend_open = 0;
-                }
-                out[c] = *e;
-                out[c].flag = 1;  /* ran with an empty buffer */
-                out[c].f1 = 0.0;  /* leading kern: nothing to ride */
-                kern_idx = c;
-                c++;
-            }
-            continue;
-        }
-        if (e->kind == K_TJEND && pend_open) {
-            out[c] = ev[pend_row];
-            out[c].flag = 3;
-            out[c].a = pend_start;
-            out[c].b = cur;
-            c++;
-            pend_open = 0;
-        }
-        kern_idx = -1;
-        out[c++] = *e;
-    }
-    *scratch_len = cur;
-    return c;
 }
 
 /* ------------------------------------------------------------------ *

@@ -28,10 +28,7 @@ EV_DTYPE = np.dtype(
 
 K_ANCHOR, K_FONT, K_STATE, K_STR = 1, 2, 3, 4
 K_TJSTART, K_TJSTR, K_TJNUM, K_TJEND, K_XOBJ = 5, 6, 7, 8, 9
-# K_CM = 11 is consumed C-side only; K_ROT marks a rotated/skewed matrix
-# (the flattened events drop the 2x2 — callers re-run the page through
-# the full-matrix jsvm tier)
-K_ROT = 12
+# K_CM = 11 is consumed C-side only
 # K_INH precedes every K_XOBJ: f0 = leading, f1 = RAW rise — the text
 # state a Form XObject inherits that is otherwise lexer-internal
 # (leading) or matrix-pre-scaled in K_STATE (rise)
@@ -57,6 +54,8 @@ def _load() -> ctypes.CDLL:
     lib.pdftext_interpret.argtypes = [
         ctypes.c_char_p, ctypes.c_long, ctypes.c_void_p, ctypes.c_long,
         ctypes.c_void_p,  # lmseed: NULL or double[2] (cloned lm e/f)
+        ctypes.c_void_p, ctypes.c_long,  # TJ scratch blob, its capacity
+        ctypes.POINTER(ctypes.c_long),   # scratch_len out
     ]
     lib.pdftext_replay.restype = ctypes.c_long
     lib.pdftext_replay.argtypes = [
@@ -71,14 +70,6 @@ def _load() -> ctypes.CDLL:
         ctypes.c_char_p,                             # TJ scratch blob
         ctypes.c_void_p,                             # q/Q stack double[1+64*12]
         ctypes.c_void_p,                             # glyph cats uint8[256*nfonts]
-    ]
-    lib.pdftext_coalesce_tj.restype = ctypes.c_long
-    lib.pdftext_coalesce_tj.argtypes = [
-        ctypes.c_char_p, ctypes.c_long,              # data, n
-        ctypes.c_void_p, ctypes.c_long,              # ev, nev
-        ctypes.c_void_p,                             # out Ev[nev]
-        ctypes.c_void_p, ctypes.c_long,              # scratch, scap
-        ctypes.POINTER(ctypes.c_long),               # scratch_len out
     ]
     lib.pdfs_tokenize.restype = ctypes.c_long
     lib.pdfs_tokenize.argtypes = [
@@ -101,23 +92,29 @@ except Exception:
 
 
 class PreprocessorEngaged(Exception):
-    """The C lexer hit a stream where pdf.js's EvaluatorPreprocessor
-    machinery engages (operand over/underflow stash, the 34-operand
-    FormatError — pdf.worker.js:38608-38672): the event stream cannot
-    be built by the exact-count fast path, so the caller re-runs the
-    page through kernels/jsvm.py, which implements the full stash
-    semantics."""
+    """The C lexer hit a stream it cannot turn into events: pdf.js's
+    EvaluatorPreprocessor machinery engages (operand over/underflow
+    stash, the 34-operand FormatError — pdf.worker.js:38608-38672), or
+    the text x CTM matrix picks up rotation, skew or a mirror (a
+    rotated/skewed Tm or cm, a negative Tz) that the flattened
+    translate+scale events cannot carry. The caller re-runs the page
+    through kernels/jsvm.py, which implements the full stash semantics
+    and the full-matrix compare."""
 
 
-def interpret(data: bytes, lm_seed: tuple | None = None) -> np.ndarray:
-    """Run the C lexer/state machine; returns the event record array.
+def interpret(
+    data: bytes, lm_seed: tuple | None = None
+) -> tuple[np.ndarray, bytes]:
+    """Run the C lexer/state machine; returns ``(events, scratch)``:
+    the event record array :func:`replay` consumes and the blob its
+    flag-3 K_TJSTR rows (a TJ array's joined strings) index into.
     ``lm_seed`` carries a Form XObject's cloned line-matrix e/f (pdf.js
     clones textLineMatrix separately from textMatrix; the synthetic Tm
     prelude can only set both) — one-shot, consumed by the stream's
     first Td/TD/T*/'/" before any full Tm/BT.
 
-    Raises :class:`PreprocessorEngaged` when the stream needs pdf.js's
-    nonProcessedArgs stash (malformed operand counts)."""
+    Raises :class:`PreprocessorEngaged` when the page must run through
+    jsvm instead."""
     seed_ptr = None
     if lm_seed is not None:
         seed_arr = np.array(
@@ -125,13 +122,17 @@ def interpret(data: bytes, lm_seed: tuple | None = None) -> np.ndarray:
         )
         seed_ptr = seed_arr.ctypes.data
     cap = max(256, len(data) // 2 + 64)
+    # a decode never grows its source span, so the joined strings fit
+    scratch = np.empty(len(data) + 16, np.uint8)
+    slen = ctypes.c_long(0)
     while True:
         buf = np.empty(cap, dtype=EV_DTYPE)
         n = _lib.pdftext_interpret(
-            data, len(data), buf.ctypes.data, cap, seed_ptr
+            data, len(data), buf.ctypes.data, cap, seed_ptr,
+            scratch.ctypes.data, len(scratch), ctypes.byref(slen),
         )
         if n >= 0:
-            return buf[:n]
+            return buf[:n], scratch[: slen.value].tobytes()
         if n == -2:
             raise PreprocessorEngaged()
         cap *= 2
@@ -177,26 +178,6 @@ def replay(
         cats.ctypes.data,
     )
     return int(ret), out_len.value
-
-
-def coalesce_tj(data: bytes, ev: np.ndarray):
-    """C twin of ``_TextInterp._coalesce_tj_events`` — returns the
-    rewritten ``(events, scratch_blob)`` or None when the C pass bails
-    (scratch overflow; cannot happen at cap >= len(data), kept as a
-    defensive fallback trigger). The Python implementation in pdfb.py
-    stays the reference; (events, scratch) identity is pinned in
-    test_ctext.py."""
-    out = np.empty(max(1, len(ev)), dtype=EV_DTYPE)
-    scratch = np.empty(len(data) + 16, np.uint8)
-    slen = ctypes.c_long(0)
-    cnt = _lib.pdftext_coalesce_tj(
-        data, len(data), ev.ctypes.data, len(ev),
-        out.ctypes.data, scratch.ctypes.data, len(scratch),
-        ctypes.byref(slen),
-    )
-    if cnt < 0:
-        return None
-    return out[:cnt], scratch[: slen.value].tobytes()
 
 
 # reused scratch for pdfs_tokenize (grow-on-demand): Spark Python

@@ -483,23 +483,12 @@ class Document:
         # inherited view boxes keyed by parent object number (sibling
         # pages share the whole chain; see _page_view_box)
         self.viewbox_cache: dict[int, list] = {}
-        self._ckey: bytes | None = None
         self.handler: crypt.StandardSecurityHandler | None = None
         self._encrypt_num = -1
         self._load_index()
         enc_ref = self.trailer.get("Encrypt")
         if enc_ref is not None:
             self._install_decryption(enc_ref)
-
-    def content_key(self) -> bytes:
-        """sha1 of the full payload, computed once per Document — the
-        cross-document font-map cache key component."""
-        k = self._ckey
-        if k is None:
-            import hashlib
-
-            k = self._ckey = hashlib.sha1(self.raw).digest()
-        return k
 
     def _install_decryption(self, enc_ref) -> None:
         """Try the EMPTY user password the way the reference does (pdf.js
@@ -956,24 +945,7 @@ class Document:
                 fm = self._fallback_fm()
                 self.font_map_cache[ref.num] = fm
                 return fm
-            # second level: (document content digest, object number) —
-            # FontMap is immutable, so identical bytes parsed again (the
-            # chunk operator's per-range tasks, retries, replicated or
-            # templated corpora — enterprise PDFs are mostly a handful of
-            # generators re-emitting the same fonts) reuse the built map
-            # instead of re-parsing ToUnicode/Differences/widths. Keyed
-            # on the FULL payload hash: no false sharing possible.
-            gkey = (self.content_key(), ref.num, ref.gen)
-            fm = _FONT_MAP_LRU.get(gkey)
-            if fm is None:
-                fm = build_font_map(self, ref)
-                # giant CID tables (bfrange up to 64k entries, ~MBs each)
-                # stay document-scoped only — the worker-global cache is
-                # bounded by entry count AND per-entry size
-                if len(fm.table) <= 20_000:
-                    _FONT_MAP_LRU[gkey] = fm
-                    while len(_FONT_MAP_LRU) > 256:
-                        _FONT_MAP_LRU.pop(next(iter(_FONT_MAP_LRU)))
+            fm = build_font_map(self, ref)
             self.font_map_cache[ref.num] = fm
         return fm
 
@@ -2873,13 +2845,6 @@ def _hex_content(data: bytes, pos: int, n: int):
     return bytes(out), i
 
 
-def _hex_span(data: bytes, pos: int):
-    """Content hex-string decode at a C-event span start (drop-dangling
-    getHexString semantics); signature-compatible with the
-    _parse_literal_string call sites in the TJ event rewrite."""
-    return _hex_content(data, pos, len(data))
-
-
 def _peek_ref(data: bytes, pos: int, n: int, num):
     """After an integral numeric token: lookahead for `int R` completing
     pdf.js's three-token Ref formation. Returns (Ref, next_pos) or
@@ -3044,11 +3009,6 @@ def _parse_content_array_inner(data: bytes, pos: int, n: int):
         out.append(_CMD_ELEM)
 
 
-# cross-document font-map cache: (payload sha1, obj num, gen) -> FontMap.
-# Insertion-ordered dict as LRU-ish (overwrite-evict oldest); per Python
-# worker process, so chunk tasks / replicated corpora reuse built maps.
-_FONT_MAP_LRU: dict = {}
-
 # shared fallback font map (immutable — FontMap never mutates its table)
 _ASCII_FM = FontMap(
     {i: chr(i) if 32 <= i < 127 else "" for i in range(256)}, 1
@@ -3117,107 +3077,6 @@ class _TextInterp:
     def text(self) -> str:
         return "".join(self.pieces)
 
-    @staticmethod
-    def _coalesce_tj_events(evl, data, chunks):
-        """pdf.js joins adjacent TJ string elements into ONE chars
-        string (showSpacedTextBuffer.join(""), pdf.worker.js:
-        36890-36909) and skips zero kerns (``item !== 0``). Rewrite each
-        TJ region so a run of K_TJSTR events becomes ONE synthetic event
-        (flag 3, ``a``/``b`` = offsets into the scratch blob
-        ``b"".join(chunks)``), zero kerns vanish, CONSECUTIVE kerns
-        merge into one row (f0 = summed value; the gap is evaluated
-        once, at the next group's first glyph), and a kern row's flag
-        carries the count of merged kerns that ran with an EMPTY buffer
-        — each applied charSpacing in addition to its kern (the !chars
-        branch, pdf.worker.js:36663-36675)."""
-        out = []
-        pend: list[bytes] | None = None
-        pend_row = None
-        kern_row = None
-        total = 0
-
-        def _flush_pend():
-            nonlocal pend, total
-            raw = b"".join(pend)
-            nr = list(pend_row)
-            nr[1] = 3
-            nr[2] = total
-            nr[3] = total + len(raw)
-            chunks.append(raw)
-            total += len(raw)
-            out.append(nr)
-            pend = None
-
-        for row in evl:
-            kind = row[0]
-            if kind == 6:
-                flag, a, b = row[1], row[2], row[3]
-                if flag == 0:
-                    raw = data[a + 1 : b - 1]
-                elif flag == 1:
-                    raw = _hex_span(data, a)[0]
-                else:
-                    raw = _parse_literal_string(data, a)[0]
-                if pend is None:
-                    pend = [raw]
-                    pend_row = row
-                else:
-                    pend.append(raw)
-                # kern_row is NOT reset here: an all-empty pend joins to
-                # b"" at the next kern, which then merges with the open
-                # kern chain (pdf.js never sees the empty () elements)
-                continue
-            if kind == 7:
-                if row[4] == 0.0:
-                    continue  # zero kern: skipped (``item !== 0``)
-                if pend is not None and b"".join(pend):
-                    _flush_pend()
-                    kern_row = list(row)
-                    kern_row[1] = 0
-                    # f1 = this first kern's value: it is extraSpacing
-                    # on the flushed string's LAST glyph — dropped by
-                    # the consumers when that glyph was box-rejected
-                    # (pdf.js's reject path translates scaledDim only,
-                    # pdf.worker.js:36704-36711). Later merged kerns
-                    # run the !chars branch and always apply.
-                    kern_row[5] = row[4]
-                    out.append(kern_row)
-                elif kern_row is not None:
-                    # empty-join pend (or none): the kern ran with an
-                    # EMPTY buffer — pdf.js's !chars branch applies
-                    # charSpacing (pdf.worker.js:36663-36675)
-                    pend = None
-                    kern_row[4] += row[4]
-                    kern_row[1] += 1
-                else:
-                    pend = None
-                    kern_row = list(row)
-                    kern_row[1] = 1
-                    kern_row[5] = 0.0  # leading kern: nothing to ride
-                    out.append(kern_row)
-                continue
-            if kind == 8 and pend is not None:
-                _flush_pend()
-            kern_row = None
-            out.append(row)
-        return out
-
-    def _tj_rewrite(self, ev, data):
-        """Rewrite the event array for TJ coalescing; returns
-        ``(ev2, scratch)`` with ``ev2`` in the same record dtype and
-        ``scratch`` the joined-bytes blob flag-3 rows index into.
-        Runs the C twin (``pdftext_coalesce_tj``) — the row-at-a-time
-        pass below is the reference implementation and the fallback if
-        the C pass bails; (events, scratch) identity between the two is
-        pinned in test_ctext.py."""
-        res = cinterp.coalesce_tj(data, ev)
-        if res is not None:
-            return res
-        chunks: list[bytes] = []
-        rows = self._coalesce_tj_events(ev.tolist(), data, chunks)
-        ev2 = _np.array([tuple(r) for r in rows], dtype=ev.dtype)
-        return ev2, b"".join(chunks)
-
     # reserved resource name for the text state a Form XObject inherits
     # from its parent stream (pdf.js clones the whole eval state into the
     # form run, paintXObject/stateManager — the form's shows use the
@@ -3247,20 +3106,13 @@ class _TextInterp:
         ):
             raise _CDefer()
         try:
-            ev = cinterp.interpret(data, lm_seed)
+            ev, scratch = cinterp.interpret(data, lm_seed)
         except cinterp.PreprocessorEngaged:
             raise _CDefer() from None
-        if (ev["kind"] == cinterp.K_ROT).any():
-            # the flattened events carry only translate+scale: a
-            # rotated/skewed matrix needs the full-matrix compare
-            raise _CDefer()
         doc = self.doc
         res = doc.resolve(resources) or {}
         fonts_dict = doc.resolve(res.get("Font")) if isinstance(res, dict) else {}
         xobjs = doc.resolve(res.get("XObject")) if isinstance(res, dict) else {}
-        scratch = b""
-        if (ev["kind"] == cinterp.K_TJSTART).any():
-            ev, scratch = self._tj_rewrite(ev, data)
         plan = self._c_plan(ev, data, fonts_dict)
         if plan is None:
             raise _CDefer()

@@ -274,16 +274,14 @@ def test_random_token_soup_paths_identical():
         assert c["text"] == js["text"], (trial, ops)
 
 
-def test_coalesce_tj_c_twin_identical_to_python():
-    """pdftext_coalesce_tj must produce the EXACT (events, scratch)
-    the pure-Python _coalesce_tj_events builds — the event rewrite
-    feeds the C replay, so a single differing field (merged kern
-    sums, empty-buffer counts, blob spans, the odd-digit hex pad)
-    would silently fork the engines. 300 seeded streams over the TJ
-    decision space + operator soup."""
+def test_lexer_emits_final_tj_events():
+    """pdftext_interpret joins each TJ array's strings as it reads them:
+    every K_TJSTR row is a flag-3 span of the scratch blob, kerns never
+    sit back to back (zero kerns are skipped, a run of kerns merges into
+    one row), and a rotated or mirrored matrix defers the page instead
+    of reaching the replay. 300 seeded streams over the TJ decision
+    space + operator soup."""
     import random
-
-    import numpy as np
 
     for s in range(300):
         rng = random.Random(31337 + s)
@@ -292,20 +290,24 @@ def test_coalesce_tj_c_twin_identical_to_python():
             if s % 2 == 0
             else _gen_stream(rng)
         )
-        ev = cinterp.interpret(content)
-        chunks: list[bytes] = []
-        rows = pdfb._TextInterp._coalesce_tj_events(
-            ev.tolist(), content, chunks
-        )
-        pyev = np.array([tuple(r) for r in rows], dtype=ev.dtype)
-        pysc = b"".join(chunks)
-        res = cinterp.coalesce_tj(content, ev)
-        assert res is not None
-        cev, csc = res
-        assert len(cev) == len(pyev), s
-        if len(pyev):
-            assert (cev == pyev).all(), s
-        assert csc == pysc, s
+        try:
+            ev, scratch = cinterp.interpret(content)
+        except cinterp.PreprocessorEngaged:
+            continue
+        kinds = ev["kind"]
+        tjs = ev[kinds == cinterp.K_TJSTR]
+        assert (tjs["flag"] == 3).all(), s
+        assert ((tjs["a"] >= 0) & (tjs["a"] <= tjs["b"])).all(), s
+        assert (tjs["b"] <= len(scratch)).all(), s
+        num = kinds == cinterp.K_TJNUM
+        assert not (num[1:] & num[:-1]).any(), s
+    for ops in (
+        b"BT /F1 10 Tf 0 1 -1 0 72 700 Tm (a) Tj ET",
+        b"0 1 -1 0 0 0 cm BT /F1 10 Tf (a) Tj ET",
+        b"BT /F1 10 Tf -100 Tz (a) Tj ET",
+    ):
+        with pytest.raises(cinterp.PreprocessorEngaged):
+            cinterp.interpret(ops)
 
 
 # ---------------------------------------------------------------------------

@@ -591,9 +591,9 @@ def test_wide_sweep_byte_equal_vs_live_reference(tmp_path):
 def test_rotation_through_forms_byte_equal_vs_live_reference(tmp_path):
     """Rotation entering through the Form-XObject /Matrix, an outer
     rotated cm around Do, and a 45-degree (rotate == -1) q/Q mid-text
-    block — exercises the K_ROT delegation through the nested
+    block — exercises the rotation defer through the nested
     interpreter runs (the form /Matrix and outer CTM arrive as a
-    prepended cm, so the marker fires inside the nested stream)."""
+    prepended cm, so the defer fires inside the nested stream)."""
     _run_differential(
         tmp_path,
         [
