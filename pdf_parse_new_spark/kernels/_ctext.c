@@ -24,6 +24,7 @@
  */
 
 #include <stdint.h>
+#include <stdio.h>
 #include <stdlib.h>
 #include <string.h>
 
@@ -172,23 +173,83 @@ static const double P10[] = {
     1e22,
 };
 
+/* code point of the UTF-8 sequence at d[p], its byte length in *len;
+ * a continuation byte or a cut-off sequence reads as U+FFFD, which no
+ * token class holds */
+static unsigned utf8_cp(const unsigned char *d, long p, long n, int *len)
+{
+    unsigned c = d[p];
+    int k = c >= 0xF0 ? 3 : c >= 0xE0 ? 2 : c >= 0xC0 ? 1 : 0;
+    *len = 1;
+    if ((c >= 0x80 && !k) || p + k >= n)
+        return 0xFFFDu;
+    *len = k + 1;
+    if (k)
+        c &= 0x3Fu >> k;
+    for (int i = 1; i <= k; i++)
+        c = (c << 6) | (d[p + i] & 0x3Fu);
+    return c;
+}
+
+/* the zero of every non-ASCII block of ten str-mode \d digits (Python
+ * 3.11 `re`, Unicode 14) */
+static const unsigned UNI_ZEROS[] = {
+    0x660, 0x6F0, 0x7C0, 0x966, 0x9E6, 0xA66, 0xAE6, 0xB66, 0xBE6, 0xC66,
+    0xCE6, 0xD66, 0xDE6, 0xE50, 0xED0, 0xF20, 0x1040, 0x1090, 0x17E0,
+    0x1810, 0x1946, 0x19D0, 0x1A80, 0x1A90, 0x1B50, 0x1BB0, 0x1C40, 0x1C50,
+    0xA620, 0xA8D0, 0xA900, 0xA9D0, 0xA9F0, 0xAA50, 0xABF0, 0xFF10, 0x104A0,
+    0x10D30, 0x11066, 0x110F0, 0x11136, 0x111D0, 0x112F0, 0x11450, 0x114D0,
+    0x11650, 0x116C0, 0x11730, 0x118E0, 0x11950, 0x11C50, 0x11D50, 0x11DA0,
+    0x16A60, 0x16AC0, 0x16B50, 0x1D7CE, 0x1D7D8, 0x1D7E2, 0x1D7EC, 0x1D7F6,
+    0x1E140, 0x1E2F0, 0x1E950, 0x1FBF0,
+};
+
+/* decimal digit at d[p] -> its value (byte length in *len), or -1:
+ * ASCII only, or with `uni` UTF-8 input and the str-mode \d class */
+static inline int digit_at(const unsigned char *d, long p, long n, int uni,
+                           int *len)
+{
+    unsigned c = d[p];
+    *len = 1;
+    if (c - '0' < 10u)
+        return (int)(c - '0');
+    if (!uni || c < 0xC0)
+        return -1;
+    c = utf8_cp(d, p, n, len);
+    for (size_t i = 0; i < sizeof UNI_ZEROS / sizeof UNI_ZEROS[0]; i++) {
+        if (c < UNI_ZEROS[i])
+            break;
+        if (c < UNI_ZEROS[i] + 10)
+            return (int)(c - UNI_ZEROS[i]);
+    }
+    return -1;
+}
+
+#define NUM_SIG 800
+
 /* returns end position, or `pos` unchanged when no digit was present
  * (bare +/-/. is not a number). Mirrors parse_object's number grammar,
  * pdfb._NUMBER = [+-]?(\d+\.?\d*|\.\d+), exactly — including stopping
- * at a SECOND dot, so "1.2.3" lexes as 1.2 then .3.
+ * at a SECOND dot, so "1.2.3" lexes as 1.2 then .3. `uni` reads UTF-8
+ * with Python's str-mode \d (pdfs_tokenize); digits of any script count
+ * by their value, as float() reads them.
  *
  * Conversion uses the Clinger exact fast path (mantissa <= 2^53 and
  * <= 22 fraction digits: (double)m / 10^k — both operands exact, IEEE
  * division correctly rounds the true quotient, so the result is
  * bit-identical to strtod / Python float()). Anything outside that
- * provable window falls back to atof over the raw span; content
+ * provable window goes to strtod over the first NUM_SIG significant
+ * digits in ASCII, a sticky 1 when a later digit is nonzero, and the
+ * exponent: every midpoint between two doubles has fewer significant
+ * digits, so that rounds as float() over the whole token does. Content
  * streams are overwhelmingly short decimals, so the hot path skips the
  * per-digit buffer copy AND the libc parse. */
-static long scan_number(const unsigned char *d, long pos, long n, double *out)
+static long scan_number(const unsigned char *d, long pos, long n,
+                        double *out, int uni)
 {
     long start = pos;
-    int neg = 0;
-    if (d[pos] == '+' || d[pos] == '-') {
+    int neg = 0, len, v;
+    if (pos < n && (d[pos] == '+' || d[pos] == '-')) {
         neg = (d[pos] == '-');
         pos++;
     }
@@ -196,54 +257,64 @@ static long scan_number(const unsigned char *d, long pos, long n, double *out)
     int nd = 0;               /* mantissa digits accumulated */
     int inexact = 0;          /* digits dropped past the 19-digit cap */
     long frac = 0, digits = 0, dots = 0;
-    while (pos < n) {
-        unsigned char c = d[pos];
-        if (c >= '0' && c <= '9') {
+    for (; pos < n; pos += len) {
+        v = digit_at(d, pos, n, uni, &len);
+        if (v >= 0) {
             digits++;
             if (dots)
                 frac++;
-            if (m == 0 && c == '0') {
+            if (m == 0 && v == 0) {
                 ; /* leading zero: no mantissa contribution */
             } else if (nd < 19) {
-                m = m * 10 + (unsigned long long)(c - '0');
+                m = m * 10 + (unsigned long long)v;
                 nd++;
             } else {
                 inexact = 1;
             }
-        } else if (c == '.') {
-            if (dots)
-                break;
-            /* a dot AFTER digits ends the token unless digits follow is
-             * fine either way for the regex; a second dot always stops */
-            dots++;
+        } else if (d[pos] == '.' && !dots) {
+            dots++; /* a second dot always ends the token */
         } else {
             break;
         }
-        pos++;
     }
     if (!digits)
         return start;
     if (!inexact && m <= 9007199254740992ULL && frac <= 22) {
-        double v = (frac == 0) ? (double)m : (double)m / P10[frac];
-        *out = neg ? -v : v;
+        double x = (frac == 0) ? (double)m : (double)m / P10[frac];
+        *out = neg ? -x : x;
         return pos;
     }
-    /* slow path: buffer sized so any numeral with a finite double value
-     * fits (a >380-digit integer is inf either way); tokens longer than
-     * the buffer are still CONSUMED in full so the token boundary
-     * matches pdfb._NUMBER exactly — only excess digits stop
-     * being significant, same as IEEE rounding there */
+    /* slow path: "<kept digits>[1]e<exp>", where the value is the kept
+     * digits times 10^(integer digits - leading zeros - kept) */
     {
-        char buf[384];
-        long i = 0, p = start;
-        if (d[p] == '+' || d[p] == '-')
-            buf[i++] = d[p++];
-        for (; p < pos; p++) {
-            if (i < (long)sizeof(buf) - 2)
-                buf[i++] = d[p];
+        char buf[NUM_SIG + 32];
+        int k = 0, sticky = 0, dot = 0;
+        long ip = 0, lz = 0, kept = 0;
+        if (neg)
+            buf[k++] = '-';
+        for (long i = start + (d[start] == '+' || d[start] == '-'); i < pos;
+             i += len) {
+            v = digit_at(d, i, n, uni, &len);
+            if (v < 0) {
+                dot = 1;
+                continue;
+            }
+            ip += !dot;
+            if (kept == 0 && v == 0) {
+                lz++;
+            } else if (kept < NUM_SIG) {
+                buf[k++] = (char)('0' + v);
+                kept++;
+            } else {
+                sticky |= v != 0;
+            }
         }
-        buf[i] = 0;
-        *out = atof(buf);
+        if (kept == 0) /* all zeros: "0e.." keeps the sign */
+            buf[k++] = '0';
+        if (sticky)
+            buf[k++] = '1';
+        snprintf(buf + k, sizeof buf - k, "e%ld", ip - lz - kept - sticky);
+        *out = strtod(buf, NULL);
     }
     return pos;
 }
@@ -313,7 +384,7 @@ static long validate_object(const unsigned char *d, long pos, long n,
         return pos + 4;
     if (is_num_start(c)) {
         double v;
-        long end = scan_number(d, pos, n, &v);
+        long end = scan_number(d, pos, n, &v, 0);
         return end == pos ? -1 : end;
     }
     return -1;
@@ -847,7 +918,7 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
                     aj2_int = aj1_int; aj1_int = 0;
                 } else if (is_num_start(e)) {
                     double v;
-                    long nend = scan_number(d, pos, n, &v);
+                    long nend = scan_number(d, pos, n, &v, 0);
                     if (nend == pos)
                         return -2; /* sign/dot lead-in: exact model */
                     if (nend < n && (d[nend] == 'e' || d[nend] == 'E' ||
@@ -938,7 +1009,7 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
         }
         if (is_num_start(c)) {
             double v;
-            long end = scan_number(d, pos, n, &v);
+            long end = scan_number(d, pos, n, &v, 0);
             if (end == pos)
                 return -2; /* sign/dot lead-in: getNumber's graceful-0
                             * or FormatError — jsvm page */
@@ -2998,32 +3069,60 @@ done:
 }
 
 /* ------------------------------------------------------------------ *
- * pdfs_tokenize — C twin of the SYNTHETIC-dialect clause tokenizer
- * (kernels/pdfk.py _tokenize + _CLAUSE). One scan over the UTF-8
- * bytes of a mini-PDF content stream, reproducing the leftmost-first
- * alternation of the Python regex exactly for byte dispatch, clause
- * order (tj, arr, Td/TD, Tm, TL, Ts, T*, ', ", Tf, BT, then atomic
- * skips), the \s+ separators (Python str \s over ASCII incl.
- * \x1c-\x1f), and the _unescape/_bidi-free decode (bidi is applied
- * by the Python wrapper only when the blob is non-ASCII, matching
- * _bidi's own isascii fast path). Decoded item text goes into `blob`
- * (UTF-8; octal/hex bytes 0x80-0xFF re-encode as the 2-byte latin-1
- * codepoints Python's chr()/latin-1 decode produces); `offs[i]` is
- * item i's END offset, `ys`/`scales` the baseline and Tf scale.
+ * pdfs_tokenize — the SYNTHETIC-dialect content-stream tokenizer
+ * (kernels/pdfk.py _tokenize). One scan over the UTF-8 bytes of a
+ * mini-PDF content stream finds the clauses that Python's `re`
+ * finditer would find, leftmost first, for the grammar
  *
- * Conservative bails (return -3 -> caller runs the Python reference):
- * a byte >= 0x80 at operator level (Python \s matches U+00A0 etc.,
- * byte-wise scanning would diverge) and any '[' whose full
- * `arr \s+ TJ` clause does not match greedily (failed clauses enter
- * regex-backtracking territory where the Python engine may find an
- * exotic shorter match). Well-formed generator output never bails.
- * Returns the item count, or -1/-2 on blob/item overflow.
+ *   STR \s+ Tj | \[(?:\\.|LIT|[^\]])*\] \s+ TJ | NUM \s+ NUM \s+ T[dD]
+ *   | NUM (\s+ NUM){5} \s+ Tm | NUM \s+ TL | NUM \s+ Ts | T\*
+ *   | STR \s+ ' | NUM \s+ NUM \s+ STR \s+ " | /NAME \s+ NUM \s+ Tf | BT
+ *   | STR | NUM | /NAME | [A-Za-z'"*]+                  (skipped)
+ *
+ * with LIT = \((?:\\.|[^\\()])*\) (no nesting), HEX =
+ * <[0-9A-Fa-f \t\r\n]*>, STR = LIT|HEX, NAME = [A-Za-z0-9]+, NUM =
+ * [-+]?(?:\d+\.?\d*|\.\d+), '.' matching newlines, and \s, \d the
+ * str-mode classes of Python 3.11 `re`: 29 whitespace code points and
+ * the 66 blocks of ten Unicode 14 decimal digits. A number's value is
+ * float() of its text. A TJ array is read left to right over its own
+ * span: a string adds its text, a number below neg_thresh one space.
+ *
+ * Only the array clause backtracks. At the stream's first '[',
+ * sk_arr_memo replays the regex's depth-first search for every later
+ * position in one right-to-left pass, so the whole scan stays linear.
+ *
+ * Decoded item text goes into `blob` (UTF-8; octal/hex bytes 0x80-0xFF
+ * re-encode as the 2-byte code points chr() gives); `offs[i]` is item
+ * i's END offset, `ys`/`scales` its baseline and Tf scale. Bidi is the
+ * Python wrapper's. A string's text is never longer than its source span
+ * (delimiters included) and an item takes at least 4 input bytes
+ * ("()\s'"), so bcap >= n and icap > n / 4 always suffice; `memo`
+ * holds n + 1 entries. Returns the item count, or -1 when a capacity
+ * was short anyway (an assertion, not a fallback).
  * ------------------------------------------------------------------ */
 
-static int sws(unsigned char c)
+/* str-mode \s at d[p]: the char's byte length, or 0 */
+static inline int sk_ws(const unsigned char *d, long p, long n)
 {
-    /* Python str-mode \s restricted to ASCII: space, \t-\r, \x1c-\x1f */
-    return c == ' ' || (c >= 0x09 && c <= 0x0d) || (c >= 0x1c && c <= 0x1f);
+    int len;
+    unsigned c = d[p];
+    if (c < 0x80) /* space, \t-\r, \x1c-\x1f */
+        return c == ' ' || (c >= 0x09 && c <= 0x0d) ||
+               (c >= 0x1c && c <= 0x1f);
+    c = utf8_cp(d, p, n, &len);
+    return (c == 0x85 || c == 0xA0 || c == 0x1680 ||
+            (c >= 0x2000 && c <= 0x200A) || c == 0x2028 || c == 0x2029 ||
+            c == 0x202F || c == 0x205F || c == 0x3000)
+               ? len
+               : 0;
+}
+
+static inline long sk_skipws(const unsigned char *d, long q, long n)
+{
+    int len;
+    while (q < n && (len = sk_ws(d, q, n)) > 0)
+        q += len;
+    return q;
 }
 
 static long sk_lit(const unsigned char *d, long p, long n)
@@ -3072,40 +3171,83 @@ static long sk_str(const unsigned char *d, long p, long n)
     return -1;
 }
 
+/* the ']' at b followed by \s+TJ -> the index of that TJ, else -1 */
+static long sk_closes(const unsigned char *d, long b, long n)
+{
+    long t = sk_skipws(d, b + 1, n);
+    return (t > b + 1 && t + 1 < n && d[t] == 'T' && d[t + 1] == 'J') ? t
+                                                                      : -1;
+}
+
+/* memo[b] for lo <= b <= n: the ']' at which the regex closes an array
+ * whose body resumes at b, or -1. In the regex's order that is the
+ * answer after the first of \\. , a literal, one char other than ']'
+ * that has one, else b itself when it closes. The answer does not
+ * depend on the '[' that reached b, so one right-to-left pass serves
+ * every array of the stream. lit1/lit2: where a literal's body that
+ * starts at b + 1 / b + 2 ends (after its ')'), or -1. */
+static void sk_arr_memo(const unsigned char *d, long n, long lo, long *memo)
+{
+    long lit1 = -1, lit2 = -1;
+    memo[n] = -1;
+    for (long b = n - 1; b >= lo; b--) {
+        unsigned char c = d[b];
+        long r = -1, lit0;
+        if (c == '\\' && b + 1 < n)
+            r = memo[b + 2];
+        if (r < 0 && c == '(' && lit1 >= 0)
+            r = memo[lit1];
+        if (r < 0 && c != ']')
+            r = memo[b + 1];
+        if (r < 0 && c == ']' && sk_closes(d, b, n) >= 0)
+            r = b;
+        memo[b] = r;
+        if (c == ')')
+            lit0 = b + 1;
+        else if (c == '(')
+            lit0 = -1;
+        else if (c == '\\')
+            lit0 = b + 1 < n ? lit2 : -1;
+        else
+            lit0 = lit1;
+        lit2 = lit1;
+        lit1 = lit0;
+    }
+}
+
 /* emit one codepoint 0-255 as UTF-8 (chr(v) / latin-1 decode twin) */
 #define SK_PUTCP(V)                                                          \
     do {                                                                     \
         unsigned int v_ = (V);                                               \
         if (v_ < 0x80) {                                                     \
-            if (w >= bcap)                                                   \
-                return -1;                                                   \
             blob[w++] = (unsigned char)v_;                                   \
         } else {                                                             \
-            if (w + 2 > bcap)                                                \
-                return -1;                                                   \
             blob[w++] = (unsigned char)(0xC0 | (v_ >> 6));                   \
             blob[w++] = (unsigned char)(0x80 | (v_ & 0x3F));                 \
         }                                                                    \
     } while (0)
 
-long pdfs_tokenize(const unsigned char *d, long n,
-                   unsigned char *blob, long bcap, long *blen,
-                   long *offs, double *ys, double *scales, long icap,
-                   double neg_thresh)
+long pdfs_tokenize(const unsigned char *d, long n, unsigned char *blob,
+                   long bcap, long *offs, double *ys, double *scales,
+                   long icap, long *memo, double neg_thresh, long *blen)
 {
     double y = 0.0, leading = 0.0, scale = 0.0, rise = 0.0;
     long it = 0;
     long w = 0;
     long p = 0;
+    int memo_built = 0;
 
-    /* decode a string span [a, b) incl. delimiters into blob; returns 0
-     * or -1 on overflow. Mirrors _unescape: hex pairs (odd pads 0) via
-     * latin-1; literal octal \1-3 digits & 0xFF, \CR/\LF/\CRLF vanish,
-     * n/r/t map, every other escaped char stands for itself (the
-     * synthetic _ESC has no b/f!), multi-byte chars copied whole. */
+    /* decode a string span [a, b) incl. delimiters into blob (its text
+     * is never longer than the span) as oracle._unescape does: hex
+     * pairs (odd pads 0) via latin-1; literal octal \1-3 digits & 0xFF,
+     * \CR/\LF/\CRLF vanish, n/r/t map, every other escaped char stands
+     * for itself (the synthetic _ESC has no b/f!), multi-byte chars
+     * copied whole. */
 #define SK_EMIT_STR(A, B)                                                    \
     do {                                                                     \
         long a_ = (A), b_ = (B);                                             \
+        if (w + (b_ - a_) > bcap)                                            \
+            return -1;                                                       \
         if (d[a_] == '<') {                                                  \
             int hi_ = -1;                                                    \
             for (long i_ = a_ + 1; i_ < b_ - 1; i_++) {                      \
@@ -3135,8 +3277,6 @@ long pdfs_tokenize(const unsigned char *d, long n,
                 if (sc_ != '\\') {                                           \
                     /* non-escape byte: verbatim (source is UTF-8, so    \
                      * multi-byte chars pass through unchanged) */           \
-                    if (w >= bcap)                                           \
-                        return -1;                                           \
                     blob[w++] = sc_;                                         \
                     q_++;                                                    \
                     continue;                                                \
@@ -3177,16 +3317,11 @@ long pdfs_tokenize(const unsigned char *d, long n,
                 } else {                                                     \
                     /* self-escape or unknown: the char stands for       \
                      * itself; copy a full UTF-8 sequence */                 \
-                    if (w >= bcap)                                           \
-                        return -1;                                           \
                     blob[w++] = ec_;                                         \
                     q_++;                                                    \
                     if (ec_ >= 0x80)                                         \
-                        while (q_ < e_ && (d[q_] & 0xC0) == 0x80) {          \
-                            if (w >= bcap)                                   \
-                                return -1;                                   \
+                        while (q_ < e_ && (d[q_] & 0xC0) == 0x80)            \
                             blob[w++] = d[q_++];                             \
-                        }                                                    \
                 }                                                            \
             }                                                                \
         }                                                                    \
@@ -3195,7 +3330,7 @@ long pdfs_tokenize(const unsigned char *d, long n,
 #define SK_ITEM()                                                            \
     do {                                                                     \
         if (it >= icap)                                                      \
-            return -2;                                                       \
+            return -1;                                                       \
         offs[it] = w;                                                        \
         ys[it] = y + rise;                                                   \
         scales[it] = scale;                                                  \
@@ -3204,21 +3339,17 @@ long pdfs_tokenize(const unsigned char *d, long n,
 
     while (p < n) {
         unsigned char c = d[p];
-        if (sws(c)) {
+        if (c == ' ' || c == '\n') {
             p++;
             continue;
         }
-        if (c >= 0x80)
-            return -3; /* Unicode \s / char classes: Python fallback */
         if (c == '(' || c == '<') {
             long e = sk_str(d, p, n);
             if (e < 0) {
                 p++;
                 continue;
             }
-            long q = e;
-            while (q < n && sws(d[q]))
-                q++;
+            long q = sk_skipws(d, e, n);
             if (q > e && q + 1 < n && d[q] == 'T' && d[q + 1] == 'j') {
                 SK_EMIT_STR(p, e);
                 SK_ITEM();
@@ -3236,90 +3367,61 @@ long pdfs_tokenize(const unsigned char *d, long n,
             continue;
         }
         if (c == '[') {
-            /* arr clause: \[(?:\\.|LIT|[^\]])*\] \s+ TJ — greedy walk;
-             * any failure is regex-backtracking territory -> bail */
-            long q = p + 1;
-            long close = -1;
-            while (q < n) {
-                unsigned char ac = d[q];
-                if (ac == '\\') {
-                    q += 2;
-                } else if (ac == ']') {
-                    close = q;
-                    break;
-                } else if (ac == '(') {
-                    long le = sk_lit(d, q, n);
-                    q = (le > 0) ? le : q + 1; /* failed LIT: [^\]] */
-                } else {
-                    q++;
-                }
+            /* arr clause: \[(?:\\.|LIT|[^\]])*\] \s+ TJ */
+            if (!memo_built) {
+                sk_arr_memo(d, n, p + 1, memo);
+                memo_built = 1;
             }
-            if (close < 0)
-                return -3;
-            long r = close + 1;
-            while (r < n && sws(d[r]))
-                r++;
-            if (!(r > close + 1 && r + 1 < n && d[r] == 'T' &&
-                  d[r + 1] == 'J'))
-                return -3;
-            /* elements: _ARR_TOK over the inner span — STR (lit OR hex)
-             * unescapes into the item; NUM < -TJ_SPACE_THRESHOLD adds
-             * one space; anything else advances one byte */
-            {
-                long i2 = p + 1;
-                while (i2 < close) {
-                    unsigned char ec = d[i2];
-                    if (ec == '(' || ec == '<') {
-                        long se = sk_str(d, i2, n);
-                        if (se > 0 && se <= close) {
-                            SK_EMIT_STR(i2, se);
-                            i2 = se;
-                            continue;
-                        }
-                        /* a string span crossing ] cannot happen: the
-                         * greedy walk above consumed it whole, so close
-                         * sits outside every LIT — hex is unnested */
-                        if (se > close)
-                            return -3;
-                        i2++;
-                        continue;
-                    }
-                    if (ec == '-' || ec == '+' || ec == '.' ||
-                        (ec >= '0' && ec <= '9')) {
-                        double nv;
-                        long ne = scan_number(d, i2, close, &nv);
-                        if (ne > i2) {
-                            if (nv < neg_thresh)
-                                SK_PUTCP(' ');
-                            i2 = ne;
-                            continue;
-                        }
-                    }
-                    i2++;
-                }
-            }
-            SK_ITEM();
-            p = r + 2;
-            continue;
-        }
-        if (c == '-' || c == '+' || c == '.' || (c >= '0' && c <= '9')) {
-            double v1;
-            long e1 = scan_number(d, p, n, &v1);
-            if (e1 == p) {
-                p++; /* bare sign/dot: no alternative matches */
+            long close = memo[p + 1];
+            if (close < 0) {
+                p++; /* no alternative matches at '[' */
                 continue;
             }
-            long q = e1;
-            while (q < n && sws(d[q]))
-                q++;
+            /* elements, left to right over the array's own span: STR
+             * (lit OR hex) unescapes into the item; NUM below neg_thresh
+             * adds one space; anything else advances one byte */
+            for (long i2 = p + 1; i2 < close;) {
+                unsigned char ec = d[i2];
+                if (ec == '(' || ec == '<') {
+                    long se = sk_str(d, i2, close);
+                    if (se > 0) {
+                        SK_EMIT_STR(i2, se);
+                        i2 = se;
+                        continue;
+                    }
+                } else if (is_num_start(ec) || ec >= 0xC0) {
+                    double nv;
+                    long ne = scan_number(d, i2, close, &nv, 1);
+                    if (ne > i2) {
+                        if (nv < neg_thresh) {
+                            if (w >= bcap)
+                                return -1;
+                            SK_PUTCP(' ');
+                        }
+                        i2 = ne;
+                        continue;
+                    }
+                }
+                i2++;
+            }
+            SK_ITEM();
+            p = sk_closes(d, close, n) + 2;
+            continue;
+        }
+        if (is_num_start(c) || c >= 0xC0) { /* \d may be non-ASCII */
+            double v1;
+            long e1 = scan_number(d, p, n, &v1, 1);
+            if (e1 == p) {
+                p++; /* bare sign/dot, or a non-digit char */
+                continue;
+            }
+            long q = sk_skipws(d, e1, n);
             if (q > e1) {
                 double v2;
-                long e2 = scan_number(d, q, n, &v2);
+                long e2 = scan_number(d, q, n, &v2, 1);
                 if (e2 > q) {
                     /* 1) NUM NUM T[dD] */
-                    long r = e2;
-                    while (r < n && sws(d[r]))
-                        r++;
+                    long r = sk_skipws(d, e2, n);
                     if (r > e2 && r + 1 < n && d[r] == 'T' &&
                         (d[r + 1] == 'd' || d[r + 1] == 'D')) {
                         if (d[r + 1] == 'D')
@@ -3334,15 +3436,13 @@ long pdfs_tokenize(const unsigned char *d, long n,
                         double v6 = v2;
                         int k, okm = 1;
                         for (k = 2; k < 6; k++) {
-                            long ws = t;
-                            while (ws < n && sws(d[ws]))
-                                ws++;
+                            long ws = sk_skipws(d, t, n);
                             if (ws == t) {
                                 okm = 0;
                                 break;
                             }
                             double vk;
-                            long ek = scan_number(d, ws, n, &vk);
+                            long ek = scan_number(d, ws, n, &vk, 1);
                             if (ek == ws) {
                                 okm = 0;
                                 break;
@@ -3351,9 +3451,7 @@ long pdfs_tokenize(const unsigned char *d, long n,
                             t = ek;
                         }
                         if (okm) {
-                            long ws = t;
-                            while (ws < n && sws(d[ws]))
-                                ws++;
+                            long ws = sk_skipws(d, t, n);
                             if (ws > t && ws + 1 < n && d[ws] == 'T' &&
                                 d[ws + 1] == 'm') {
                                 y = v6;
@@ -3366,9 +3464,7 @@ long pdfs_tokenize(const unsigned char *d, long n,
                     if (r > e2 && r < n && (d[r] == '(' || d[r] == '<')) {
                         long se = sk_str(d, r, n);
                         if (se > 0) {
-                            long u = se;
-                            while (u < n && sws(d[u]))
-                                u++;
+                            long u = sk_skipws(d, se, n);
                             if (u > se && u < n && d[u] == '"') {
                                 y -= leading;
                                 SK_EMIT_STR(r, se);
@@ -3405,16 +3501,12 @@ long pdfs_tokenize(const unsigned char *d, long n,
                 p++; /* bare slash matches nothing */
                 continue;
             }
-            long r = q;
-            while (r < n && sws(d[r]))
-                r++;
+            long r = sk_skipws(d, q, n);
             if (r > q) {
                 double fv;
-                long e2 = scan_number(d, r, n, &fv);
+                long e2 = scan_number(d, r, n, &fv, 1);
                 if (e2 > r) {
-                    long t = e2;
-                    while (t < n && sws(d[t]))
-                        t++;
+                    long t = sk_skipws(d, e2, n);
                     if (t > e2 && t + 1 < n && d[t] == 'T' &&
                         d[t + 1] == 'f') {
                         scale = fv;

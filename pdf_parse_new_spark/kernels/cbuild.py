@@ -12,23 +12,32 @@ from __future__ import annotations
 
 import hashlib
 import os
+import pkgutil
 import subprocess
 import tempfile
 
 
 def build(src: str, name: str, flags: tuple[str, ...] = ()) -> str:
-    """Path of ``pdf_parse_<name>_<hash>.so`` compiled from ``src`` with
-    ``flags``; compiles on first use. Raises when no compiler (or header)
-    is available — callers then keep their pure-Python path."""
-    with open(src, "rb") as f:
-        h = hashlib.sha1(f.read()).hexdigest()[:16]
+    """Path of ``pdf_parse_<name>_<hash>.so`` compiled from ``src``, a
+    file of this package, with ``flags``; compiles on first use. The
+    source is read through the package's loader, so a ``--py-files`` zip
+    works like a directory. Raises when no compiler (or header) is
+    available; each caller documents what it does without the part."""
+    code = pkgutil.get_data(__package__, src)
+    h = hashlib.sha1(code).hexdigest()[:16]
     cache = os.environ.get("PDF_PARSE_CTEXT_CACHE", tempfile.gettempdir())
     so = os.path.join(cache, f"pdf_parse_{name}_{h}.so")
     if not os.path.exists(so):
         tmp = f"{so}.tmp.{os.getpid()}"
-        subprocess.run(
-            ["cc", "-O2", "-shared", "-fPIC", *flags, "-o", tmp, src],
-            check=True, capture_output=True, timeout=120,
-        )
+        with open(f"{tmp}.c", "wb") as f:
+            f.write(code)
+        try:
+            subprocess.run(
+                ["cc", "-O2", "-shared", "-fPIC", *flags, "-o", tmp,
+                 f"{tmp}.c"],
+                check=True, capture_output=True, timeout=120,
+            )
+        finally:
+            os.remove(f"{tmp}.c")
         os.replace(tmp, so)
     return so

@@ -3,19 +3,18 @@
 The C source ships with the package; :func:`cbuild.build` compiles it
 once per machine into a content-hash-keyed shared object, loaded here via
 ctypes. When no compiler is available ``AVAILABLE`` is False and every
-page runs through the Python tier, ``kernels/jsvm.py``.
+binary-PDF page runs through the Python tier, ``kernels/jsvm.py``; the
+synthetic dialect has no Python tokenizer, so :func:`pdfs_tokenize` then
+raises with the build failure.
 """
 
 from __future__ import annotations
 
 import ctypes
-import os
 
 import numpy as np
 
 from pdf_parse_new_spark.kernels import cbuild
-
-_SRC = os.path.join(os.path.dirname(__file__), "_ctext.c")
 
 # mirrors struct Ev in _ctext.c (48 bytes)
 EV_DTYPE = np.dtype(
@@ -45,11 +44,12 @@ K_QRESTORE = 15
 K_MCFLUSH = 16
 
 _lib = None
+_BUILD_ERROR: Exception | None = None
 AVAILABLE = False
 
 
 def _load() -> ctypes.CDLL:
-    lib = ctypes.CDLL(cbuild.build(_SRC, "ctext"))
+    lib = ctypes.CDLL(cbuild.build("_ctext.c", "ctext"))
     lib.pdftext_interpret.restype = ctypes.c_long
     lib.pdftext_interpret.argtypes = [
         ctypes.c_char_p, ctypes.c_long, ctypes.c_void_p, ctypes.c_long,
@@ -75,11 +75,12 @@ def _load() -> ctypes.CDLL:
     lib.pdfs_tokenize.argtypes = [
         ctypes.c_char_p, ctypes.c_long,              # data, n
         ctypes.c_void_p, ctypes.c_long,              # blob, bcap
-        ctypes.POINTER(ctypes.c_long),               # blen out
         ctypes.c_void_p,                             # offs int64[icap]
         ctypes.c_void_p, ctypes.c_void_p,            # ys, scales
         ctypes.c_long,                               # icap
+        ctypes.c_void_p,                             # memo int64[n + 1]
         ctypes.c_double,                             # -TJ_SPACE_THRESHOLD
+        ctypes.POINTER(ctypes.c_long),               # blen out
     ]
     return lib
 
@@ -87,8 +88,8 @@ def _load() -> ctypes.CDLL:
 try:
     _lib = _load()
     AVAILABLE = True
-except Exception:
-    AVAILABLE = False
+except Exception as exc:
+    _BUILD_ERROR = exc
 
 
 class PreprocessorEngaged(Exception):
@@ -180,48 +181,48 @@ def replay(
     return int(ret), out_len.value
 
 
-# reused scratch for pdfs_tokenize (grow-on-demand): Spark Python
+# reused scratch for pdfs_tokenize, grown on demand: Spark Python
 # workers are single-threaded processes, and the caller consumes the
-# returned VIEWS before its next call (documented contract below)
-_TK_BLOB = np.empty(1 << 16, np.uint8)
-_TK_OFFS = np.empty(1 << 12, np.int64)
-_TK_YS = np.empty(1 << 12, np.float64)
-_TK_SC = np.empty(1 << 12, np.float64)
+# returned VIEWS before its next call (documented contract below).
+# (input bytes it fits, arrays, their addresses and capacities)
+_TK: tuple = (-1, (), ())
 
 
 def pdfs_tokenize(data: bytes, neg_thresh: float):
-    """C twin of the synthetic-dialect clause tokenizer
-    (``pdfk._tokenize``). Returns ``(blob_bytes, end_offsets, ys,
-    scales)`` — the caller slices/decodes items and applies bidi — or
-    None when the C scan bails (non-ASCII at operator level, a
-    malformed TJ array, or a capacity miss): the Python tokenizer is
-    the reference and the fallback; item-level identity is pinned in
-    test_kernels.py.
+    """The synthetic-dialect tokenizer behind ``pdfk._tokenize``: one
+    linear scan that finds the clauses Python's ``re`` would find for
+    the grammar in the ``_ctext.c`` header. Returns ``(blob_bytes,
+    end_offsets, ys, scales)``; the caller slices/decodes items and
+    applies bidi. Raises RuntimeError naming the build failure when
+    ``_ctext.c`` did not compile; ``AVAILABLE``, pdfb's jsvm-only
+    switch, does not apply here.
 
     The three numeric returns are VIEWS into module-level scratch —
     valid only until the next call (the sole caller copies them out
     immediately)."""
-    global _TK_BLOB, _TK_OFFS, _TK_YS, _TK_SC
+    global _TK
+    if _lib is None:
+        raise RuntimeError(
+            "pdfstream extraction needs the compiled kernels/_ctext.c, "
+            f"which failed to build: {_BUILD_ERROR!r}"
+        ) from _BUILD_ERROR
     n = len(data)
-    if n + 16 > len(_TK_BLOB):
-        _TK_BLOB = np.empty(n + 16, np.uint8)
-    icap = n // 4 + 8
-    if icap > len(_TK_OFFS):
-        _TK_OFFS = np.empty(icap, np.int64)
-        _TK_YS = np.empty(icap, np.float64)
-        _TK_SC = np.empty(icap, np.float64)
+    if n > _TK[0]:
+        # the capacities _ctext.c states: blob n, items n/4 + 1, memo n + 1
+        cap = max(n, 1 << 16)
+        items = cap // 4 + 8
+        blob, offs, ys, scales, memo = arrs = (
+            np.empty(cap + 16, np.uint8), np.empty(items, np.int64),
+            np.empty(items, np.float64), np.empty(items, np.float64),
+            np.empty(cap + 16, np.int64),
+        )
+        _TK = (cap, arrs, (
+            blob.ctypes.data, len(blob), offs.ctypes.data, ys.ctypes.data,
+            scales.ctypes.data, items, memo.ctypes.data,
+        ))
+    blob, offs, ys, scales, _ = _TK[1]
     blen = ctypes.c_long(0)
-    ret = _lib.pdfs_tokenize(
-        data, n, _TK_BLOB.ctypes.data, len(_TK_BLOB), ctypes.byref(blen),
-        _TK_OFFS.ctypes.data, _TK_YS.ctypes.data, _TK_SC.ctypes.data,
-        len(_TK_OFFS),
-        ctypes.c_double(neg_thresh),
-    )
+    ret = _lib.pdfs_tokenize(data, n, *_TK[2], neg_thresh, ctypes.byref(blen))
     if ret < 0:
-        return None
-    return (
-        _TK_BLOB[: blen.value].tobytes(),
-        _TK_OFFS[:ret],
-        _TK_YS[:ret],
-        _TK_SC[:ret],
-    )
+        raise AssertionError("pdfs_tokenize outgrew the capacities it states")
+    return blob[: blen.value].tobytes(), offs[:ret], ys[:ret], scales[:ret]

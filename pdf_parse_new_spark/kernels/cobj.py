@@ -12,14 +12,12 @@ equivalence asserted by tests/test_cobj.py)."""
 
 from __future__ import annotations
 
-import os
 import sysconfig
 from importlib.machinery import ExtensionFileLoader
 from importlib.util import module_from_spec, spec_from_loader
 
 from pdf_parse_new_spark.kernels import cbuild
 
-_SRC = os.path.join(os.path.dirname(__file__), "_cobj.c")
 _MODNAME = "_pdf_parse_cobj"
 
 _mod = None
@@ -28,7 +26,7 @@ AVAILABLE = False
 
 def _load():
     so = cbuild.build(
-        _SRC, "cobj", (f"-I{sysconfig.get_paths()['include']}",)
+        "_cobj.c", "cobj", (f"-I{sysconfig.get_paths()['include']}",)
     )
     loader = ExtensionFileLoader(_MODNAME, so)
     spec = spec_from_loader(_MODNAME, loader)

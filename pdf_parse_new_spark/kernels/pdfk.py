@@ -8,10 +8,13 @@ header check, pdf.worker.js:8610-8640) -> content-stream tokenization
 (Td/TD/Tm/TL/T*/Tj/TJ/'/\" — reference pdf.worker.js:36856-36945) -> numpy
 Y-tolerance line fold (reference lib/pdf-parse.js:25-39).
 
-Loops iterate over regex matches and pages only; zlib/base64/regex run in C,
-the fold is numpy. Per-page failures mask to "" and record the first error
-code (reference lib/pdf-parse.js:116-119); structural failures produce an
-error row, never an exception (test/03-invalid-default.js contract).
+Content streams are tokenized by ``pdfs_tokenize`` in the compiled
+``_ctext.c``, which pdfk requires: it raises at first use when the build
+failed. The other loops iterate over regex matches and pages only;
+zlib/base64/regex run in C, the fold is numpy. Per-page failures mask to ""
+and record the first error code (reference lib/pdf-parse.js:116-119);
+structural failures produce an error row, never an exception
+(test/03-invalid-default.js contract).
 """
 
 from __future__ import annotations
@@ -34,7 +37,6 @@ _STARTXREF = re.compile(r"startxref\s+(\d+)\s*%%EOF\s*$")
 _XREF_ROW = re.compile(r"^(\d{10}) (\d{5}) ([nf]) ?$")
 _ESC = {"\\": "\\", "(": "(", ")": ")", "n": "\n", "r": "\r", "t": "\t"}
 _ESC_RE = re.compile(r"\\([0-7]{1,3})|\\(?:\r\n|\r|\n)|\\(.)", re.S)
-_HEX_WS = re.compile(r"[^0-9A-Fa-f]")
 
 
 def _esc_sub(m: re.Match) -> str:
@@ -46,11 +48,7 @@ def _esc_sub(m: re.Match) -> str:
 
 
 def _unescape(lit: str) -> str:
-    if lit[0] == "<":  # hex string: whitespace ignored, odd digit pads 0
-        hexs = _HEX_WS.sub("", lit[1:-1])
-        if len(hexs) % 2:
-            hexs += "0"
-        return bytes.fromhex(hexs).decode("latin-1")
+    """Literal string (Info fields) -> text."""
     body = lit[1:-1]
     if "\\" not in body:
         return body
@@ -78,46 +76,6 @@ def _bidi(s: str) -> str:
     )
 
 
-# Clause-level scanner: one regex match per *well-formed operator clause*
-# (operands + operator together), instead of one per token. Strings/arrays/
-# numbers that belong to no recognized clause are consumed atomically by the
-# skip alternatives, so tokenization boundaries stay identical to the
-# oracle's token scanner for any stream the generator can emit.
-_NUM = r"[-+]?(?:\d+\.?\d*|\.\d+)"
-# literal string (octal escapes / line continuations resolved by _unescape)
-# or hex string <4865...> (reference Lexer.getHexString, pdf.worker.js:13943)
-_LIT = r"\((?:\\.|[^\\()])*\)"
-_HEX = r"<[0-9A-Fa-f \t\r\n]*>"
-_STR = rf"(?:{_LIT}|{_HEX})"
-_CLAUSE = re.compile(
-    rf"""
-      (?P<tj>{_STR})\s+Tj
-    | (?P<arr>\[(?:\\.|{_LIT}|[^\]])*\])\s+TJ
-    | (?P<tdx>{_NUM})\s+(?P<tdy>{_NUM})\s+(?P<tdop>T[dD])
-    | {_NUM}\s+{_NUM}\s+{_NUM}\s+{_NUM}\s+{_NUM}\s+(?P<tmy>{_NUM})\s+Tm
-    | (?P<tlv>{_NUM})\s+TL
-    | (?P<tsv>{_NUM})\s+Ts
-    | (?P<tstar>T\*)
-    | (?P<q1>{_STR})\s+'
-    | {_NUM}\s+{_NUM}\s+(?P<q2>{_STR})\s+"
-    | /[A-Za-z0-9]+\s+(?P<tfs>{_NUM})\s+Tf
-    | (?P<bt>BT)
-    | {_STR} | {_NUM} | /[A-Za-z0-9]+ | [A-Za-z'"*]+
-    """,
-    re.X | re.S,
-)
-_ARR_TOK = re.compile(rf"(?P<str>{_STR})|(?P<num>{_NUM})", re.S)
-
-# group indices for the integer lastindex dispatch in _tokenize
-_GI = _CLAUSE.groupindex
-_I_TJ, _I_ARR = _GI["tj"], _GI["arr"]
-_I_TDX, _I_TDY, _I_TDOP = _GI["tdx"], _GI["tdy"], _GI["tdop"]
-_I_TMY, _I_TLV, _I_TSTAR = _GI["tmy"], _GI["tlv"], _GI["tstar"]
-_I_TSV = _GI["tsv"]
-_I_Q1, _I_Q2, _I_TFS, _I_BT = _GI["q1"], _GI["q2"], _GI["tfs"], _GI["bt"]
-_I_ASTR = _ARR_TOK.groupindex["str"]
-
-
 def _tokenize(stream: str) -> tuple[list[str], list[float], list[float]]:
     """-> parallel arrays (item strings, item Y coords, item font scales).
 
@@ -125,94 +83,25 @@ def _tokenize(stream: str) -> tuple[list[str], list[float], list[float]]:
     ``transform[0]``, consumed by the title-only custom render example,
     test/examples/09-custom-render.js:62-79).
 
-    Dispatches to the C twin (``pdfs_tokenize`` in ``_ctext.c``) when
-    the extension is loaded; the clause loop below is the reference
-    implementation and the fallback (the C scan bails back here on
-    non-ASCII operator-level bytes and malformed TJ arrays). Item-level
-    identity is pinned in test_kernels.py."""
-    if _cinterp.AVAILABLE:
-        try:
-            data = stream.encode("utf-8")
-        except UnicodeEncodeError:  # lone surrogates: reference path
-            data = None
-        if data is not None:
-            res = _cinterp.pdfs_tokenize(data, -spec.TJ_SPACE_THRESHOLD)
-            if res is not None:
-                blob, offs, ys_a, scales_a = res
-                out: list[str] = []
-                prev = 0
-                if blob.isascii():
-                    # one decode, then char==byte offsets slice the str
-                    s = blob.decode("ascii")
-                    for end in offs.tolist():
-                        out.append(s[prev:end])
-                        prev = end
-                else:
-                    # bidi exactly as the clause loop applies it per
-                    # item (_bidi itself fast-paths ASCII items)
-                    for end in offs.tolist():
-                        out.append(_bidi(blob[prev:end].decode("utf-8")))
-                        prev = end
-                return out, ys_a.tolist(), scales_a.tolist()
-    strs: list[str] = []
-    ys: list[float] = []
-    scales: list[float] = []
-    y = leading = 0.0
-    scale = 0.0
-    rise = 0.0  # Ts text rise: shifts the item baseline (pdf.js applies it
-    # into transform[5], so super/subscripts land on their own fold-line)
-    thresh = -spec.TJ_SPACE_THRESHOLD
-    # integer lastindex dispatch (ordered by clause frequency) + local
-    # bindings: ~20% less per-match Python overhead than the lastgroup
-    # string-compare chain this replaces
-    app_s, app_y, app_sc = strs.append, ys.append, scales.append
-    group = None
-    for m in _CLAUSE.finditer(stream):
-        li = m.lastindex
-        group = m.group
-        if li == _I_TJ:
-            app_s(_bidi(_unescape(group(_I_TJ))))
-            app_y(y + rise)
-            app_sc(scale)
-        elif li == _I_ARR:
-            buf = []
-            for am in _ARR_TOK.finditer(group(_I_ARR)[1:-1]):
-                if am.lastindex == _I_ASTR:
-                    buf.append(_unescape(am.group()))
-                elif float(am.group()) < thresh:
-                    buf.append(" ")
-            app_s(_bidi("".join(buf)))
-            app_y(y + rise)
-            app_sc(scale)
-        elif li == _I_TDOP:
-            dy = float(group(_I_TDY))
-            if group(_I_TDOP) == "TD":
-                leading = -dy
-            y += dy
-        elif li == _I_TMY:
-            y = float(group(_I_TMY))
-        elif li == _I_TSTAR:
-            y -= leading
-        elif li == _I_Q1:
-            y -= leading
-            app_s(_bidi(_unescape(group(_I_Q1))))
-            app_y(y + rise)
-            app_sc(scale)
-        elif li == _I_Q2:
-            y -= leading
-            app_s(_bidi(_unescape(group(_I_Q2))))
-            app_y(y + rise)
-            app_sc(scale)
-        elif li == _I_TLV:
-            leading = float(group(_I_TLV))
-        elif li == _I_TSV:
-            rise = float(group(_I_TSV))
-        elif li == _I_TFS:
-            scale = float(group(_I_TFS))
-        elif li == _I_BT:
-            y = 0.0
-            rise = 0.0
-    return strs, ys, scales
+    The scan is ``pdfs_tokenize`` in ``_ctext.c`` (its header holds the
+    clause grammar); this wrapper slices the items out of its blob and
+    applies bidi per item. Pinned cases are in test_kernels.py."""
+    blob, offs, ys_a, scales_a = _cinterp.pdfs_tokenize(
+        stream.encode("utf-8", "surrogatepass"), -spec.TJ_SPACE_THRESHOLD
+    )
+    out: list[str] = []
+    prev = 0
+    if blob.isascii():
+        # one decode, then char==byte offsets slice the str
+        s = blob.decode("ascii")
+        for end in offs.tolist():
+            out.append(s[prev:end])
+            prev = end
+    else:
+        for end in offs.tolist():
+            out.append(_bidi(blob[prev:end].decode("utf-8", "surrogatepass")))
+            prev = end
+    return out, ys_a.tolist(), scales_a.tolist()
 
 
 def _fold(strs: list[str], ys: list[float]) -> str:
@@ -285,8 +174,8 @@ def _read_xref_stream(
         return {}, {}
     w = [int(x) for x in wm.groups()]
     rowlen = sum(w)
-    n = len(packed) // rowlen
-    if n == 0:
+    n = len(packed) // rowlen if rowlen else 0
+    if n == 0:  # also /W [0 0 0]: no rows, so the recovery scan runs
         return {}, {}
     arr = np.frombuffer(packed[: n * rowlen], dtype=np.uint8).reshape(n, rowlen)
     typ = (

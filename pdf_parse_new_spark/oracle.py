@@ -309,6 +309,8 @@ def _read_xref_stream(
     except Exception:
         return {}, {}
     rowlen = sum(w)
+    if rowlen == 0:  # /W [0 0 0]: no rows, so the recovery scan runs
+        return {}, {}
     offsets: dict[int, int] = {}
     compressed: dict[int, tuple[int, int]] = {}
     for num in range(len(packed) // rowlen):
