@@ -107,7 +107,7 @@ def interpret(
     data: bytes, lm_seed: tuple | None = None
 ) -> tuple[np.ndarray, bytes]:
     """Run the C lexer/state machine; returns ``(events, scratch)``:
-    the event record array :func:`replay` consumes and the blob its
+    the event record array :class:`Replay` consumes and the blob its
     flag-3 K_TJSTR rows (a TJ array's joined strings) index into.
     ``lm_seed`` carries a Form XObject's cloned line-matrix e/f (pdf.js
     clones textLineMatrix separately from textMatrix; the synthetic Tm
@@ -126,11 +126,11 @@ def interpret(
     # a decode never grows its source span, so the joined strings fit
     scratch = np.empty(len(data) + 16, np.uint8)
     slen = ctypes.c_long(0)
+    sargs = (scratch.ctypes.data, len(scratch), ctypes.byref(slen))
     while True:
         buf = np.empty(cap, dtype=EV_DTYPE)
         n = _lib.pdftext_interpret(
-            data, len(data), buf.ctypes.data, cap, seed_ptr,
-            scratch.ctypes.data, len(scratch), ctypes.byref(slen),
+            data, len(data), buf.ctypes.data, cap, seed_ptr, *sargs
         )
         if n >= 0:
             return buf[:n], scratch[: slen.value].tobytes()
@@ -139,46 +139,62 @@ def interpret(
         cap *= 2
 
 
-def replay(
-    data: bytes,
-    ev: np.ndarray,
-    start: int,
-    font_idx: np.ndarray,
-    tbytes: bytes,
-    toff: np.ndarray,
-    widths: np.ndarray,
-    state: np.ndarray,
-    out: np.ndarray,
-    scratch: bytes = b"",
-    qstate: np.ndarray | None = None,
-    cats: np.ndarray | None = None,
-) -> tuple[int, int]:
-    """One replay segment. Returns (next_event_index, out_len); the index
-    is len(ev) when the stream is done, the K_XOBJ event index when the
-    caller must recurse, or -1 when ``out`` was too small (state and
-    qstate are untouched — grow and retry). ``qstate`` is the q/Q
-    TextState stack (float64[1 + 64*12], [0] = depth), round-tripped
-    across segments like ``state``."""
-    if qstate is None:
+class Tables:
+    """A replay plan's font tables: the concatenated UTF-8 translate
+    blob ``tbytes`` and, per font slot, offsets int32[257], widths
+    float64[256] and glyph categories uint8[256] (0 normal, 2 = Cf,
+    3 = zero-width non-space). Addresses are read here, once per plan:
+    each ``ndarray.ctypes.data`` read costs microseconds."""
+
+    __slots__ = ("arrays", "args", "cats")
+
+    def __init__(self, tbytes: bytes, toff: np.ndarray, widths: np.ndarray,
+                 cats: np.ndarray) -> None:
+        self.arrays = (toff, widths, cats)  # alive as long as the addresses
+        self.args = (tbytes, toff.ctypes.data, widths.ctypes.data)
+        self.cats = cats.ctypes.data
+
+
+class Replay:
+    """``pdftext_replay`` over one stream's events, one segment per
+    :meth:`segment` call. Each array's address is read once per stream;
+    only ``out`` is read again, when it grows. ``state`` is the page's
+    state vector (double[32]); the q/Q TextState stack
+    (float64[1 + 64*12], [0] = depth) is the stream's own and carries
+    across its segments like ``state``."""
+
+    __slots__ = ("_keep", "_olen", "_head", "_mid", "_tail", "_out", "_oargs")
+
+    def __init__(self, data: bytes, ev: np.ndarray, font_idx: np.ndarray,
+                 tables: Tables, state: np.ndarray,
+                 scratch: bytes = b"") -> None:
         qstate = np.zeros(1 + 64 * 12, np.float64)
-    if cats is None:
-        # glyph categories per font slot (0 normal, 2 = Cf/invisible);
-        # sized for the widths table passed in
-        cats = np.zeros(len(widths) // 256 * 256 or 256, np.uint8)
-    out_len = ctypes.c_long(0)
-    ret = _lib.pdftext_replay(
-        data, len(data),
-        ev.ctypes.data, len(ev), start,
-        font_idx.ctypes.data,
-        tbytes, toff.ctypes.data, widths.ctypes.data,
-        state.ctypes.data,
-        out.ctypes.data, len(out),
-        ctypes.byref(out_len),
-        scratch,
-        qstate.ctypes.data,
-        cats.ctypes.data,
-    )
-    return int(ret), out_len.value
+        self._keep = (ev, font_idx, tables, state, qstate)
+        self._olen = ctypes.c_long(0)
+        self._head = (data, len(data), ev.ctypes.data, len(ev))
+        self._mid = (font_idx.ctypes.data, *tables.args, state.ctypes.data)
+        self._tail = (ctypes.byref(self._olen), scratch, qstate.ctypes.data,
+                      tables.cats)
+        self._grow(max(1024, 4 * len(data)))
+
+    def _grow(self, cap: int) -> None:
+        self._out = np.empty(cap, np.uint8)
+        self._oargs = (self._out.ctypes.data, cap)
+
+    def segment(self, start: int) -> tuple[int, bytes]:
+        """Replay from event ``start``. Returns ``(next, text)``: ``next``
+        is len(ev) when the stream is done, the K_XOBJ event index when
+        the caller must recurse, or -3 when a width-register-sensitive
+        construct needs the page to run through jsvm; ``text`` is the
+        segment's UTF-8 output."""
+        while True:
+            ret = _lib.pdftext_replay(
+                *self._head, start, *self._mid, *self._oargs, *self._tail
+            )
+            if ret != -1:
+                return ret, self._out[: self._olen.value].tobytes()
+            # out was too small; state and qstate are untouched
+            self._grow(2 * len(self._out))
 
 
 # reused scratch for pdfs_tokenize, grown on demand: Spark Python

@@ -42,6 +42,7 @@ import math
 import re
 import unicodedata
 import zlib
+from types import MappingProxyType
 
 from pdf_parse_new_spark import spec
 from pdf_parse_new_spark.kernels import cinterp, cobj, crypt
@@ -1366,6 +1367,27 @@ class FontMap:
         self._simple = nbytes == 1 and not identity and not self.var_ranges
         self._cspec: tuple | None | bool = False  # False = not built yet
 
+    def _freeze(self) -> "FontMap":
+        """Make this map's tables read-only and build its ``cspec()``,
+        so that FontMaps from ``_share`` can use them in any document."""
+        self.table = MappingProxyType(self.table)
+        self.widths = MappingProxyType(self.widths)
+        self.cid_ranges = tuple(self.cid_ranges)
+        self.var_ranges = tuple(self.var_ranges)
+        sp = self.cspec()
+        if sp is not None:
+            for arr in sp[1:]:
+                arr.flags.writeable = False
+        return self
+
+    def _share(self) -> "FontMap":
+        """A new FontMap over this frozen map's tables. Identity still
+        matters per document: jsvm keys its charsCache by FontMap."""
+        fm = FontMap.__new__(FontMap)
+        for name in FontMap.__slots__:
+            setattr(fm, name, getattr(self, name))
+        return fm
+
     def cspec(self) -> tuple | None:
         """Tables for the full-C replay (``pdftext_replay``):
         ``(trans_utf8_blob, offsets int32[257], widths float64[256],
@@ -1589,8 +1611,115 @@ def _font_load_error(doc: Document, font: dict) -> bool:
 
 _ERROR_FONT_CF = frozenset(range(256))
 
+# font content key -> frozen FontMap whose tables every FontMap built
+# from that content shares (see build_font_map). Spark's reused Python
+# workers (single-threaded processes) keep it warm across tasks; least
+# recently used entries go first once it holds _FONT_MEMO_CAP.
+_FONT_MEMO: dict[tuple, FontMap] = {}
+_FONT_MEMO_CAP = 128
+# bounds of the key walk: nesting depth and nodes visited (shared
+# indirect objects would otherwise make it exponential in the input)
+_FONT_KEY_DEPTH = 8
+_FONT_KEY_NODES = 8192
+# tables larger than this (a CID font's /W) are not kept: it bounds the
+# memo's memory at the cap
+_FONT_MEMO_MAX_CODES = 1024
+
+
+class _NoFontKey(Exception):
+    """The font object has no content key (see _font_key)."""
+
+
+def _font_key(doc: Document, font_obj) -> tuple:
+    """The resolved font object as a canonical, type-tagged tuple: refs
+    resolved (and tagged, since the builder reads a few values
+    unresolved), dict items in insertion order, Names apart from
+    strings, and int, float and bool apart from each other. Raises
+    ``_NoFontKey`` when a Stream is reachable, a resolve raises, or the
+    walk passes its bounds."""
+    budget = _FONT_KEY_NODES
+
+    def resolve(ref):
+        try:
+            o = doc.resolve(ref)
+        except Exception:  # whatever the parse raised: no key
+            raise _NoFontKey() from None
+        if type(o) is Ref or type(o) is Stream:
+            raise _NoFontKey()
+        return o
+
+    def walk(o, depth: int) -> tuple:
+        nonlocal budget
+        budget -= 1
+        if budget < 0 or depth > _FONT_KEY_DEPTH:
+            raise _NoFontKey()
+        t = type(o)
+        if t is Ref:
+            return ("r", walk(resolve(o), depth))
+        if t is dict:
+            # streams sit one level down (/ToUnicode, /Encoding, the
+            # descriptor's /FontFile*): look before keying any subtree
+            for v in o.values():
+                if type(v) is Ref:
+                    resolve(v)
+                elif type(v) is Stream:
+                    raise _NoFontKey()
+            return ("d", tuple([(k, walk(v, depth + 1))
+                                for k, v in o.items()]))
+        if t is list:
+            return ("a", tuple([walk(v, depth + 1) for v in o]))
+        if t is Name:
+            return ("n", str(o))
+        if t is bytes:
+            return ("s", o)
+        if t is int:
+            return ("i", o)
+        if t is float:
+            return ("f", repr(o))  # repr keeps -0.0 apart from 0.0
+        if t is bool:
+            return ("b", o)
+        if o is None:
+            return ("z",)
+        raise _NoFontKey()  # a Stream, or a type the parser never makes
+
+    return walk(font_obj, 0)
+
 
 def build_font_map(doc: Document, font_obj) -> FontMap:
+    """The FontMap of ``font_obj`` (a Ref, an inline font dict, or None
+    for pdf.js's fallback font) in ``doc``.
+
+    Tables are built once per worker for each font content, not once
+    per document. The key is the whole resolved font object
+    (``_font_key``), so equal content in any document shares one set
+    of read-only tables (code->text table, widths with the Cf codes
+    zeroed, ranges, ``cf_codes``, ``error`` and the ``cspec()`` arrays).
+    The FontMap itself is new on every call: jsvm's charsCache is keyed
+    by FontMap identity, and ``Document`` keeps one map per font ref and
+    one shared fallback.
+
+    The font is built for this document alone, exactly as without the
+    memo, when a Stream is reachable from it (/ToUnicode, /FontFile*, an
+    embedded /Encoding CMap), a resolve raises, the key walk passes its
+    depth or node bound, or the tables hold more than
+    ``_FONT_MEMO_MAX_CODES`` codes."""
+    try:
+        key = _font_key(doc, font_obj)
+    except _NoFontKey:
+        return _build_font_map(doc, font_obj)
+    proto = _FONT_MEMO.pop(key, None)
+    if proto is None:
+        proto = _build_font_map(doc, font_obj)
+        if len(proto.table) + len(proto.widths) > _FONT_MEMO_MAX_CODES:
+            return proto
+        proto._freeze()
+        if len(_FONT_MEMO) >= _FONT_MEMO_CAP:
+            del _FONT_MEMO[next(iter(_FONT_MEMO))]
+    _FONT_MEMO[key] = proto
+    return proto._share()
+
+
+def _build_font_map(doc: Document, font_obj) -> FontMap:
     """ToUnicode CMap first (pdf.js PartialEvaluator.readToUnicode), then
     /Encoding /Differences glyph names over a base encoding table."""
     font = doc.resolve(font_obj)
@@ -3009,10 +3138,10 @@ def _parse_content_array_inner(data: bytes, pos: int, n: int):
         out.append(_CMD_ELEM)
 
 
-# shared fallback font map (immutable — FontMap never mutates its table)
+# the C plan's pre-Tf default font, shared by every document
 _ASCII_FM = FontMap(
     {i: chr(i) if 32 <= i < 127 else "" for i in range(256)}, 1
-)
+)._freeze()
 
 
 def _span_name(data: bytes, a: int, b: int) -> str:
@@ -3137,11 +3266,13 @@ class _TextInterp:
         return False
 
     def _c_plan(self, ev, data: bytes, fonts_dict):
-        """Per-stream tables for the full-C replay: a global translate
-        blob + offsets/widths per font index, and a per-event font index
-        for every K_FONT event. None when any font used by the stream
-        can't take the C path (multi-byte, RTL-capable, failed build) —
-        the page then runs through jsvm."""
+        """Per-stream plan for the full-C replay: ``(tables, font_idx,
+        fms)`` — the font tables (``cinterp.Tables``, one translate blob
+        + offsets/widths/categories per font slot), a per-event font
+        index for every K_FONT event, and the FontMap per slot. None
+        when any font used by the stream can't take the C path
+        (multi-byte, RTL-capable, failed build) — the page then runs
+        through jsvm."""
         font_idx = _np.full(len(ev), -1, _np.int32)
         specs = [_ASCII_FM.cspec()]
         # FontMap per spec index (0 = the pre-Tf ASCII default -> no
@@ -3171,14 +3302,14 @@ class _TextInterp:
                 font_idx[i] = idx
         # the assembled tables depend only on the spec sequence — pages
         # of one document overwhelmingly repeat the same font sets, so
-        # the concatenated blobs are cached document-scoped. FontMaps
-        # are immutable and doc-cached, so identity keys are stable for
-        # the document's lifetime; font_idx stays per-stream.
+        # the concatenated blobs are cached document-scoped. The spec
+        # tuples are immutable (memoized fonts share theirs across
+        # documents), so identity keys are stable for the document's
+        # lifetime; font_idx stays per-stream.
         key = tuple(id(sp) for sp in specs)
         cached = self.doc.c_plan_cache.get(key)
         if cached is not None:
-            _, tbytes, toff, widths, cats = cached
-            return tbytes, toff, widths, cats, font_idx, fms
+            return cached[1], font_idx, fms
         tbytes = b"".join(sp[0] for sp in specs)
         toff = _np.empty(257 * len(specs), _np.int32)
         widths = _np.empty(256 * len(specs), _np.float64)
@@ -3193,8 +3324,9 @@ class _TextInterp:
         # the entry holds the spec tuples so their ids stay reserved for
         # the cache's (document) lifetime — id reuse after gc would
         # otherwise alias the key
-        self.doc.c_plan_cache[key] = (specs, tbytes, toff, widths, cats)
-        return tbytes, toff, widths, cats, font_idx, fms
+        tables = cinterp.Tables(tbytes, toff, widths, cats)
+        self.doc.c_plan_cache[key] = (specs, tables)
+        return tables, font_idx, fms
 
     def _replay_c(self, data: bytes, ev, plan, xobjs, resources,
                   depth: int, seen: frozenset, scratch: bytes = b"") -> None:
@@ -3203,29 +3335,21 @@ class _TextInterp:
         fresh in the page's state vector; the line state carries on
         from the previous stream (a form the C path cannot take raises
         ``_CDefer`` for the whole page)."""
-        tbytes, toff, widths, cats, font_idx, fms = plan
+        tables, font_idx, fms = plan
         st = self.st
         st[_ST_TEXT] = _ST_TEXT_INIT
-        out = _np.empty(max(1024, 4 * len(data)), _np.uint8)
-        qst = _np.zeros(1 + 64 * 12, _np.float64)  # q/Q TextState stack
+        rp = cinterp.Replay(data, ev, font_idx, tables, st, scratch)
         i, nev = 0, len(ev)
         while True:
-            while True:
-                ret, olen = cinterp.replay(
-                    data, ev, i, font_idx, tbytes, toff, widths, st, out,
-                    scratch, qst, cats,
-                )
-                if ret == -3:
-                    # width-register-sensitive construct: the page is
-                    # re-run through jsvm (the per-page interp is
-                    # discarded, so partial state and already-committed
-                    # pieces don't matter)
-                    raise _CDefer()
-                if ret >= 0:
-                    break
-                out = _np.empty(len(out) * 2, _np.uint8)
-            if olen:
-                self.pieces.append(out[:olen].tobytes().decode("utf-8"))
+            ret, piece = rp.segment(i)
+            if ret == -3:
+                # width-register-sensitive construct: the page is re-run
+                # through jsvm (the per-page interp is discarded, so
+                # partial state and already-committed pieces don't
+                # matter)
+                raise _CDefer()
+            if piece:
+                self.pieces.append(piece.decode("utf-8"))
             if ret >= nev:
                 return
             # paintXObject flushes before resolving anything (images,
