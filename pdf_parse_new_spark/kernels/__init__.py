@@ -1,66 +1,49 @@
-"""Vectorized extraction kernels — pure pandas/numpy, no Spark imports.
+"""Transcript extraction kernels — pure Python per payload, no Spark imports.
 
-These are the batch bodies run inside ``mapInPandas`` (Arrow transfer, one
-call per record batch). Each implements the ``spec.py`` contract that
-``oracle.py`` also implements, as an independent vectorized code path:
+``extract_batch`` is the batch body run inside ``mapInPandas`` (Arrow
+transfer, one call per record batch). It sends each payload once to
+``extract_one``, which picks the family and runs that family's
+per-document function. Each implements the ``spec.py`` contract that
+``oracle.py`` also implements, as an independent code path:
 
-- family detection and the plain-text kernel are whole-Series operations;
-- the HTML kernel flattens all paragraphs of a batch into one frame and
-  cleans them with vectorized ``Series.str`` ops;
-- the PDF kernel does per-document structural slicing (regex + zlib, both C)
-  and a numpy line-fold; Python loops only iterate over regex matches /
-  pages, never characters (SURVEY §7.3 "no per-row Python" discipline).
+- plain text: CRLF -> LF and NFKC (reference bundled pdf.js
+  ``normalizeUnicode``, pdf.worker.js:5303-5309), one whole-payload span;
+- HTML: ``htmlk.extract_one`` (boilerplate strip);
+- PDF: ``pdfk.parse_one`` (structural slicing with regex + zlib, content
+  streams tokenized in C).
 """
 
 from __future__ import annotations
 
+import unicodedata
+
 import pandas as pd
 
 from pdf_parse_new_spark import spec
-from pdf_parse_new_spark.kernels import htmlk, pdfk, plaink
+from pdf_parse_new_spark.kernels import htmlk, pdfk
 
 OUT_COLS = ["family", "extracted_text", "spans", "error", "n_pages", "info"]
 
 
+def extract_one(raw: str) -> tuple:
+    """One payload -> its OUT_COLS values."""
+    if "\x00" in raw:
+        return spec.FAM_CORRUPT, "", [], spec.ERR_BINARY, 0, None
+    if raw.startswith("%PDF-"):
+        return (spec.FAM_PDF, *pdfk.parse_one(raw))
+    if raw.lstrip()[:16].lower().startswith(("<!doctype", "<html")):
+        return htmlk.extract_one(raw)
+    text = unicodedata.normalize("NFKC", raw.replace("\r\n", "\n"))
+    span = {"start": 0, "end": len(raw), "kind": "text"}
+    return spec.FAM_PLAIN, text, [span], None, 1, None
+
+
 def extract_batch(texts: pd.Series) -> pd.DataFrame:
-    """Dispatch a batch of raw payloads to family kernels; returns a frame
-    aligned to ``texts.index`` with columns OUT_COLS."""
-    texts = texts.fillna("")
-    is_bin = texts.str.contains("\x00", regex=False)
-    is_pdf = texts.str.startswith("%PDF-") & ~is_bin
-    head = texts.str.lstrip().str.slice(0, 16).str.lower()
-    is_html = (
-        (head.str.startswith("<!doctype") | head.str.startswith("<html"))
-        & ~is_bin
-        & ~is_pdf
-    )
-    is_plain = ~(is_bin | is_pdf | is_html)
-
+    """A batch of raw payloads (NULL reads as "") -> a frame aligned to
+    ``texts.index`` with columns OUT_COLS."""
     out = pd.DataFrame(
-        {
-            "family": spec.FAM_PLAIN,
-            "extracted_text": "",
-            "spans": [[] for _ in range(len(texts))],
-            "error": None,
-            "n_pages": 0,
-            "info": None,
-        },
-        index=texts.index,
+        [extract_one(raw) for raw in texts.fillna("")],
+        index=texts.index, columns=OUT_COLS, dtype=object,
     )
-    out["error"] = out["error"].astype(object)
-    out["info"] = out["info"].astype(object)
-
-    if is_bin.any():
-        out.loc[is_bin, "family"] = spec.FAM_CORRUPT
-        out.loc[is_bin, "error"] = spec.ERR_BINARY
-    if is_plain.any():
-        res = plaink.extract(texts[is_plain])
-        out.loc[is_plain, OUT_COLS] = res[OUT_COLS]
-    if is_html.any():
-        res = htmlk.extract(texts[is_html])
-        out.loc[is_html, OUT_COLS] = res[OUT_COLS]
-    if is_pdf.any():
-        res = pdfk.extract(texts[is_pdf])
-        out.loc[is_pdf, OUT_COLS] = res[OUT_COLS]
     out["n_pages"] = out["n_pages"].astype("int32")
     return out

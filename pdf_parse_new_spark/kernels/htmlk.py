@@ -1,13 +1,12 @@
-"""HTML boilerplate-strip kernel (north-rule axis B).
+"""HTML boilerplate-strip kernel (north-rule axis B), one document at a time.
 
-Strategy: flatten ALL ``<p>…</p>`` blocks of the whole Arrow batch into one
-flat frame (row id, span, inner html), clean them with vectorized
-``Series.str`` ops (tag strip, entity unescape, whitespace collapse), score
-each block by visible-text length and link-text ratio, then group back per
-row. The only per-row Python is the ``finditer`` that records span offsets —
-everything downstream is whole-batch.
+``extract_one`` collects the leaf ``<p>``/``<div>``/... blocks of a payload
+(recursing into containers), cleans each (tag strip, entity unescape,
+whitespace collapse) and keeps it by visible-text length, tag density and
+link-text ratio.
 
-Spec (spec.py): keep a paragraph iff ``len(text) >= HTML_MIN_TEXT_LEN`` and
+Spec (spec.py): keep a paragraph iff ``len(text) >= HTML_MIN_TEXT_LEN``,
+``count("<") <= HTML_MAX_TAG_DENSITY * words`` and
 ``link_len <= HTML_MAX_LINK_RATIO * max(1, len(text))``; kept texts join with
 "\\n"; NFKC at the end.
 """
@@ -15,20 +14,19 @@ Spec (spec.py): keep a paragraph iff ``len(text) >= HTML_MIN_TEXT_LEN`` and
 from __future__ import annotations
 
 import re
-
-import pandas as pd
+import unicodedata
 
 from pdf_parse_new_spark import spec
 
 _BLOCK = re.compile(r"<(p|div|article|li|section|main|blockquote)\b[^>]*>(.*?)</\1>", re.S | re.I)
 _LINK = re.compile(r"<a\b[^>]*>(.*?)</a>", re.S | re.I)
-_TAG_RE = r"<[^>]+>"
+_TAG_ONLY = re.compile(r"<[^>]+>")
+_ENT_ONLY = re.compile(r"&(?:[a-zA-Z]+|#\d{1,7}|#[xX][0-9A-Fa-f]{1,6});")
+_WS_RUN = re.compile(r"\s+")
 
 
-def _strip_sub(m: re.Match) -> str:
+def _entity_sub(m: re.Match) -> str:
     tok = m.group(0)
-    if tok[0] == "<":
-        return " "
     known = spec.HTML_ENTITIES.get(tok)
     if known is not None:
         return known
@@ -43,36 +41,18 @@ def _strip_sub(m: re.Match) -> str:
     return tok  # unknown named entity: keep literal
 
 
-_TAG_ONLY = re.compile(_TAG_RE)
-_ENT_ONLY = re.compile(r"&(?:[a-zA-Z]+|#\d{1,7}|#[xX][0-9A-Fa-f]{1,6});")
-
-
-_WS_RUN = re.compile(r"\s+")
-
-
 def _clean_one(s: str) -> str:
-    # split the fused sweep: tags first via a PLAIN C-level replace (97%
-    # of matches — no per-match Python), then the entity callback over
-    # the few "&...;" tokens. Equivalent to the fused pass: a tag
-    # becomes a space (never empty), so removals cannot splice new
-    # entities together, and entities decode AFTER tag stripping, so a
-    # decoded "<" (&lt;) is never re-stripped — the same decode-once
-    # ordering the fused alternation had. The "&" gate skips the
-    # callable-replacement pass for the (majority) entity-free blocks.
+    # tags first via a PLAIN C-level replace (97% of matches — no
+    # per-match Python), then the entity callback over the few "&...;"
+    # tokens. A tag becomes a space (never empty), so removals cannot
+    # splice new entities together, and entities decode AFTER tag
+    # stripping, so a decoded "<" (&lt;) is never re-stripped. The "&"
+    # gate skips the callable-replacement pass for the (majority)
+    # entity-free blocks.
     t = _TAG_ONLY.sub(" ", s)
     if "&" in t:
-        t = _ENT_ONLY.sub(_strip_sub, t)
+        t = _ENT_ONLY.sub(_entity_sub, t)
     return _WS_RUN.sub(" ", t).strip()
-
-
-def _clean(col: pd.Series) -> pd.Series:
-    # plain list comprehension over the flat block frame: three pandas
-    # .str passes cost an object-loop EACH; one loop with bound C-regex
-    # subs measured ~35% cheaper on the html kernel
-    return pd.Series(
-        [_clean_one(s) for s in col.to_numpy()],
-        index=col.index, dtype=object,
-    )
 
 
 def _collect_blocks(raw: str, base: int, out: list, depth: int = 0) -> None:
@@ -91,78 +71,32 @@ def _collect_blocks(raw: str, base: int, out: list, depth: int = 0) -> None:
             )
 
 
-def extract(texts: pd.Series) -> pd.DataFrame:
-    rows, starts, ends, inners, tags = [], [], [], [], []
-    for idx, raw in texts.items():
-        blocks: list = []
-        _collect_blocks(raw, 0, blocks)
-        for s, e, tag, inner in blocks:
-            rows.append(idx)
-            starts.append(s)
-            ends.append(e)
-            inners.append(inner)
-            tags.append(tag)
+def _link_len(inner: str) -> int:
+    # "<a" gate: most blocks carry no anchors at all — findall over
+    # every block was ~15% of the kernel
+    if "<a" not in inner and "<A" not in inner:
+        return 0
+    joined = "".join(_LINK.findall(inner))
+    return len(_TAG_ONLY.sub("", joined).strip())
 
-    out = pd.DataFrame(
-        {
-            "family": spec.FAM_HTML,
-            "extracted_text": "",
-            "spans": [[] for _ in range(len(texts))],
-            "error": None,
-            "n_pages": 1,
-            "info": None,
-        },
-        index=texts.index,
-    )
-    if not rows:
-        return out
 
-    flat = pd.DataFrame(
-        {"row": rows, "start": starts, "end": ends, "inner": inners, "tag": tags}
-    )
-    flat["text"] = _clean(flat["inner"])
-
-    def _link_len(s: str) -> int:
-        # "<a" gate: most blocks carry no anchors at all — findall over
-        # every block was ~15% of the kernel
-        if "<a" not in s and "<A" not in s:
-            return 0
-        joined = "".join(_LINK.findall(s))
-        return len(_TAG_ONLY.sub("", joined).strip())
-
-    flat["link_len"] = [_link_len(s) for s in flat["inner"].to_numpy()]
-    tlen = flat["text"].str.len()
-    # len(s.split(" ")) == s.count(" ") + 1 exactly (split on EVERY
-    # occurrence counts empty fields), without materializing the lists;
-    # the +1 also makes the old clip(lower=1) a no-op
-    n_words = flat["text"].str.count(" ") + 1
-    tag_count = flat["inner"].str.count("<")
-    keep = (
-        (tlen >= spec.HTML_MIN_TEXT_LEN)
-        & (flat["link_len"] <= spec.HTML_MAX_LINK_RATIO * tlen.clip(lower=1))
-        & (tag_count <= spec.HTML_MAX_TAG_DENSITY * n_words)
-    )
-    kept = flat[keep]
-    if len(kept):
-        # one cheap pass over the (few) kept paragraphs; flat is built in row
-        # order so append order == document order
-        texts_by_row: dict = {}
-        spans_by_row: dict = {}
-        for row, s, e, txt, tag in zip(
-            kept["row"].to_numpy(),
-            kept["start"].to_numpy(),
-            kept["end"].to_numpy(),
-            kept["text"].to_numpy(),
-            kept["tag"].to_numpy(),
+def extract_one(raw: str) -> tuple:
+    """One HTML payload -> its ``kernels.OUT_COLS`` values."""
+    blocks: list = []
+    _collect_blocks(raw, 0, blocks)
+    kept: list[str] = []
+    spans: list[dict] = []
+    for start, end, tag, inner in blocks:
+        text = _clean_one(inner)
+        tlen = len(text)
+        # cheapest test first; the word count is len(text.split(" ")),
+        # which equals text.count(" ") + 1 without building the list
+        if (
+            tlen >= spec.HTML_MIN_TEXT_LEN
+            and inner.count("<") <= spec.HTML_MAX_TAG_DENSITY * (text.count(" ") + 1)
+            and _link_len(inner) <= spec.HTML_MAX_LINK_RATIO * max(1, tlen)
         ):
-            texts_by_row.setdefault(row, []).append(txt)
-            spans_by_row.setdefault(row, []).append(
-                {"start": int(s), "end": int(e), "kind": tag}
-            )
-        joined = pd.Series(
-            {r: "\n".join(v) for r, v in texts_by_row.items()}
-        ).str.normalize("NFKC")
-        out.loc[joined.index, "extracted_text"] = joined
-        for idx, sl in spans_by_row.items():
-            out.at[idx, "spans"] = sl
-    return out
+            kept.append(text)
+            spans.append({"start": start, "end": end, "kind": tag})
+    text = unicodedata.normalize("NFKC", "\n".join(kept))
+    return spec.FAM_HTML, text, spans, None, 1, None

@@ -1,20 +1,20 @@
-"""Mini-PDF byte-stream kernel.
+"""Mini-PDF byte-stream kernel, one document at a time (``parse_one``).
 
 Per-document structural pass (header check -> startxref -> classic xref table
 -> object slicing, with the brute-force recovery scan as fallback — reference
 ``XRef.parse``/``indexObjects``, pdf.worker.js:58108-58476), then per page:
 base64 frame -> zlib inflate with cmf validation (reference FlateStream
 header check, pdf.worker.js:8610-8640) -> content-stream tokenization
-(Td/TD/Tm/TL/T*/Tj/TJ/'/\" — reference pdf.worker.js:36856-36945) -> numpy
+(Td/TD/Tm/TL/T*/Tj/TJ/'/\" — reference pdf.worker.js:36856-36945) ->
 Y-tolerance line fold (reference lib/pdf-parse.js:25-39).
 
 Content streams are tokenized by ``pdfs_tokenize`` in the compiled
 ``_ctext.c``, which pdfk requires: it raises at first use when the build
-failed. The other loops iterate over regex matches and pages only;
-zlib/base64/regex run in C, the fold is numpy. Per-page failures mask to ""
-and record the first error code (reference lib/pdf-parse.js:116-119);
-structural failures produce an error row, never an exception
-(test/03-invalid-default.js contract).
+failed. The other loops iterate over regex matches, pages and show-text
+items; zlib/base64/regex run in C, and numpy decodes xref streams.
+Per-page failures mask to "" and record the first error code (reference
+lib/pdf-parse.js:116-119); structural failures produce an error row, never
+an exception (test/03-invalid-default.js contract).
 """
 
 from __future__ import annotations
@@ -26,7 +26,6 @@ import unicodedata
 import zlib
 
 import numpy as np
-import pandas as pd
 
 from pdf_parse_new_spark import spec
 from pdf_parse_new_spark.kernels import cinterp as _cinterp
@@ -105,28 +104,20 @@ def _tokenize(stream: str) -> tuple[list[str], list[float], list[float]]:
 
 
 def _fold(strs: list[str], ys: list[float]) -> str:
-    n = len(strs)
-    if n == 0:
+    """Join show-text items; a Y move beyond Y_TOLERANCE starts a new line."""
+    if not strs:
         return ""
-    if n == 1:
-        return strs[0]
-    if n <= 64:  # short lists: plain loop beats numpy setup cost
-        parts = [strs[0]]
-        last = ys[0]
-        tol = spec.Y_TOLERANCE
-        for i in range(1, n):
-            cur = ys[i]
-            d = cur - last
-            if d > tol or d < -tol:
-                parts.append("\n")
-            parts.append(strs[i])
-            last = cur
-        return "".join(parts)
-    breaks = np.abs(np.diff(np.asarray(ys, dtype=np.float64))) > spec.Y_TOLERANCE
-    out = np.empty(2 * n - 1, dtype=object)
-    out[0::2] = strs
-    out[1::2] = np.where(breaks, "\n", "")
-    return "".join(out)
+    parts = [strs[0]]
+    last = ys[0]
+    tol = spec.Y_TOLERANCE
+    for i in range(1, len(strs)):
+        cur = ys[i]
+        d = cur - last
+        if d > tol or d < -tol:
+            parts.append("\n")
+        parts.append(strs[i])
+        last = cur
+    return "".join(parts)
 
 
 def _slice_objects(raw: str, offsets: dict[int, int]) -> dict[int, tuple[int, str]]:
@@ -268,7 +259,7 @@ def _doc_info(raw: str, objs: dict) -> str | None:
     return json.dumps(fields, sort_keys=True) if fields else None
 
 
-def _parse_one(raw: str) -> tuple[str, list[dict], str | None, int, str | None]:
+def parse_one(raw: str) -> tuple[str, list[dict], str | None, int, str | None]:
     """-> (text, spans, error, n_pages, info_json). Never raises."""
     m = _STARTXREF.search(raw)
     if m is None:
@@ -377,18 +368,3 @@ def _parse_one(raw: str) -> tuple[str, list[dict], str | None, int, str | None]:
         return "", [], err, len(pages), info
     text = unicodedata.normalize("NFKC", spec.PAGE_SEP.join(texts))
     return text, spans, err, len(pages), info
-
-
-def extract(texts: pd.Series) -> pd.DataFrame:
-    recs = [_parse_one(raw) for raw in texts]
-    return pd.DataFrame(
-        {
-            "family": spec.FAM_PDF,
-            "extracted_text": [r[0] for r in recs],
-            "spans": [r[1] for r in recs],
-            "error": [r[2] for r in recs],
-            "n_pages": [r[3] for r in recs],
-            "info": [r[4] for r in recs],
-        },
-        index=texts.index,
-    )

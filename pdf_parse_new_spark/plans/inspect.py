@@ -14,11 +14,6 @@ def formatted_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().explainString(mode)
 
 
-def plan_has(df: DataFrame, *needles: str) -> dict[str, bool]:
-    plan = formatted_plan(df)
-    return {n: (n in plan) for n in needles}
-
-
 def assert_plan(df: DataFrame, *needles: str, absent: tuple[str, ...] = ()) -> None:
     plan = formatted_plan(df)
     missing = [n for n in needles if n not in plan]

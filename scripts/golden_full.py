@@ -1,10 +1,11 @@
 """Correctness-tier golden run (FIXTURES.md §6): 500 conversations, median
-20 turns, 5 x 1,000-turn skew tail (~15k turns). Full per-turn byte equality
-of the distributed pipeline against the single-node oracle, plus
+20 turns, 5 x 1,000-turn skew tail (~15k turns). Full per-turn equality of
+every extracted field (text, error, family, spans, n_pages, info) of the
+distributed pipeline against the single-node oracle, plus
 conversation-level equality for both join modes. The heavyweight version of
 the pytest smoke tier — run per-round as evidence.
 
-Usage: python scripts/golden_full.py
+Usage: python scripts/golden_full.py   (cores: SPARK_GRAFT_CPUS, default 32)
 """
 
 from __future__ import annotations
@@ -24,7 +25,8 @@ N_CONVS, MEDIAN, SKEW_CONVS, SKEW_TURNS = 500, 20, 5, 1000
 
 
 def main() -> int:
-    spark = get_spark("golden-full", cores=32)
+    spark = get_spark("golden-full")
+    cores = spark.sparkContext.defaultParallelism
     spark.sparkContext.setLogLevel("ERROR")
     df = fixtures.make_transcripts_df_dist(
         spark, n_convs=N_CONVS, median_turns=MEDIAN,
@@ -50,6 +52,8 @@ def main() -> int:
             and r.error == ex.error
             and r.family == ex.family
             and [(s.start, s.end, s.kind) for s in r.spans] == ex.spans
+            and r.n_pages == ex.n_pages
+            and (json.loads(r.info) if r.info else None) == ex.info
         )
         checked += 1
         if not ok:
@@ -75,6 +79,7 @@ def main() -> int:
                 print(f"CONV MISMATCH {cid} leading={leading}", file=sys.stderr)
 
     result = {
+        "cores": cores,
         "turns_checked": checked,
         "turn_mismatches": mismatches,
         "conv_level_ok": conv_ok,

@@ -18,21 +18,46 @@ def _rows(n_convs=40, median=10, skew=(1, 80)):
     )
 
 
+def _assert_matches_oracle(k, raw: str, where) -> None:
+    ex = oracle.extract(raw)
+    assert k.extracted_text == ex.text, where
+    assert (k.error if pd.notna(k.error) else None) == ex.error, where
+    assert k.family == ex.family
+    assert k.n_pages == ex.n_pages
+    k_info = json.loads(k["info"]) if k["info"] else None
+    assert k_info == ex.info, where
+    assert list(k.spans) == [
+        {"start": s, "end": e, "kind": kd} for (s, e, kd) in ex.spans
+    ]
+
+
 def test_kernel_matches_oracle_bytewise():
     rows = _rows()
     out = kernels.extract_batch(pd.Series([r[3] for r in rows]))
     for i, r in enumerate(rows):
-        ex = oracle.extract(r[3])
-        k = out.iloc[i]
-        assert k.extracted_text == ex.text, (r[0], r[1])
-        assert (k.error if pd.notna(k.error) else None) == ex.error, (r[0], r[1])
-        assert k.family == ex.family
-        assert k.n_pages == ex.n_pages
-        k_info = json.loads(k["info"]) if k["info"] else None
-        assert k_info == ex.info, (r[0], r[1])
-        assert list(k.spans) == [
-            {"start": s, "end": e, "kind": kd} for (s, e, kd) in ex.spans
-        ]
+        _assert_matches_oracle(out.iloc[i], r[3], (r[0], r[1]))
+
+
+def test_extract_batch_contract():
+    """The output is aligned to the input's index (callers look rows up by
+    label), has OUT_COLS in order with n_pages int32 and the rest object,
+    reads a NULL payload as "", and an empty batch is a valid frame."""
+    import random
+
+    rows = _rows(n_convs=12, median=6, skew=(0, 0))
+    assert {fixtures.family_for(r[0], r[1]) for r in rows} == set(fixtures.FAMILIES)
+    payloads = [r[3] for r in rows] + [None]
+    labels = [1000 + 7 * i for i in range(len(payloads))]
+    random.Random(5).shuffle(labels)
+    mixed = pd.Series(payloads, index=labels, dtype=object)
+    dtypes = {c: "object" for c in kernels.OUT_COLS} | {"n_pages": "int32"}
+    for texts in (mixed, pd.Series([], dtype=object)):
+        out = kernels.extract_batch(texts)
+        assert out.index.equals(texts.index)
+        assert list(out.columns) == kernels.OUT_COLS
+        assert out.dtypes.astype(str).to_dict() == dtypes
+        for label, raw in texts.items():
+            _assert_matches_oracle(out.loc[label], raw or "", label)
 
 
 def test_line_fold_semantics():
