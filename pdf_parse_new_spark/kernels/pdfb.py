@@ -2230,914 +2230,6 @@ def _walk_pages(doc: Document, node_ref, pages: list, seen: set, resources) -> N
             _walk_pages(doc, kid, pages, seen, res)
 
 
-_OPERATOR = re.compile(rb"[A-Za-z'\"][A-Za-z0-9*'\"]*")
-
-# pdf.js EvaluatorPreprocessor.opMap (pdf.worker.js:38216-38592):
-# op -> (numArgs, variableArgs). The preprocessor (read(),
-# pdf.worker.js:38608-38672) enforces these counts with a
-# nonProcessedArgs stash: operand OVERFLOW on a fixed-arity op shifts
-# the EARLIEST operands into the stash; UNDERFLOW pops the stash back
-# onto the FRONT of the operand list; an op still short of operands is
-# skipped wholesale (args cleared, stash kept). Unknown commands KEEP
-# the pending operands (warn + continue). All semantics probed against
-# the live node reference (round-5): `(gamma) "` with 1-2 operands is
-# dropped entirely; `(hello) q Q Tj` shows "hello" through the stash;
-# `8 7 (a) Tj ... 30 Td` runs Td(7, 30).
-_OP_ARITY: dict[bytes, tuple[int, bool]] = {
-    b"w": (1, False), b"J": (1, False), b"j": (1, False),
-    b"M": (1, False), b"d": (2, False), b"ri": (1, False),
-    b"i": (1, False), b"gs": (1, False), b"q": (0, False),
-    b"Q": (0, False), b"cm": (6, False), b"m": (2, False),
-    b"l": (2, False), b"c": (6, False), b"v": (4, False),
-    b"y": (4, False), b"h": (0, False), b"re": (4, False),
-    b"S": (0, False), b"s": (0, False), b"f": (0, False),
-    b"F": (0, False), b"f*": (0, False), b"B": (0, False),
-    b"B*": (0, False), b"b": (0, False), b"b*": (0, False),
-    b"n": (0, False), b"W": (0, False), b"W*": (0, False),
-    b"BT": (0, False), b"ET": (0, False), b"Tc": (1, False),
-    b"Tw": (1, False), b"Tz": (1, False), b"TL": (1, False),
-    b"Tf": (2, False), b"Tr": (1, False), b"Ts": (1, False),
-    b"Td": (2, False), b"TD": (2, False), b"Tm": (6, False),
-    b"T*": (0, False), b"Tj": (1, False), b"TJ": (1, False),
-    b"'": (1, False), b'"': (3, False), b"d0": (2, False),
-    b"d1": (6, False), b"CS": (1, False), b"cs": (1, False),
-    b"SC": (4, True), b"SCN": (33, True), b"sc": (4, True),
-    b"scn": (33, True), b"G": (1, False), b"g": (1, False),
-    b"RG": (3, False), b"rg": (3, False), b"K": (4, False),
-    b"k": (4, False), b"sh": (1, False), b"BI": (0, False),
-    b"ID": (0, False), b"EI": (1, False), b"Do": (1, False),
-    b"MP": (1, False), b"DP": (2, False), b"BMC": (1, False),
-    b"BDC": (2, False), b"EMC": (0, False), b"BX": (0, False),
-    b"EX": (0, False),
-}
-
-
-# every opMap key — INCLUDING the null-valued prefix entries (BM, BD,
-# fa/fal/fals, nu/nul, true/false/null) whose whole purpose is steering
-# the Lexer's longest-known-prefix command scan (pdf.worker.js:
-# 14293-14307): a token that IS known stops extending the moment the
-# next extension is unknown, so "BQ" lexes as B then Q (and the Q
-# restores graphics state!), while a token that is NOT known extends
-# freely to the next special char ("Zz" stays one unknown command).
-_KNOWN_OPS = frozenset(_OP_ARITY) | {
-    b"BM", b"BD", b"true", b"fa", b"fal", b"fals", b"false",
-    b"nu", b"nul", b"null",
-}
-
-# pdf.js Lexer specialChars (pdf.worker.js:13933): whitespace +
-# delimiters stop a command token; EVERYTHING else (digits, +-.*,
-# quotes) extends it while the prefix rule allows
-_LEX_SPECIAL = frozenset(b"\x00\t\n\x0c\r %()/<>[]{}")
-
-
-class _LexThrow(ValueError):
-    """pdf.js Lexer FormatError (invalid number, illegal ')', command
-    token over 128 chars). The Parser's two-token lookahead (buf1/buf2)
-    means the throw fires while the two tokens BEFORE the bad one are
-    lexed-but-unprocessed — they are lost with it (probed live: a late
-    `+x` erases the preceding show AND its operand). Content loops stop
-    at `_prescan_lexer_throw`'s cut; reaching the raise directly maps
-    to _PageStop (same visible outcome in the covered cases)."""
-
-
-def _lex_op(data: bytes, pos: int) -> tuple[bytes, int]:
-    """pdf.js Lexer command scan: returns (token, end). ``pos`` must
-    sit on a non-special char. An unknown token extending past 128
-    chars throws FormatError (pdf.worker.js:14302-14304)."""
-    n = len(data)
-    end = pos + 1
-    tok = data[pos:end]
-    known = tok in _KNOWN_OPS
-    while end < n and data[end] not in _LEX_SPECIAL:
-        cand = data[pos:end + 1]
-        if known and cand not in _KNOWN_OPS:
-            break
-        if end - pos == 128:
-            raise _LexThrow()  # "Command token too long"
-        tok = cand
-        end += 1
-        known = tok in _KNOWN_OPS
-    return tok, end
-
-
-class _PageStop(Exception):
-    """The content stream hit a construct whose pdf.js handling throws
-    a FormatError/TypeError inside getTextContent — more than 33
-    pending operands (pdf.worker.js:38668 "Too many arguments") or an
-    array operand reaching showText (glyph iteration throws). With
-    ignoreErrors (pdf-parse's configuration) the evaluator resolves
-    with the PARTIAL text accumulated so far, so the catcher keeps the
-    pieces and stops interpreting the page (probed live: 34 numeric
-    operands before Tm end the page but keep prior text)."""
-
-# ---------------------------------------------------------------------------
-# Inline images (BI ... ID <data> EI), pdf.js Parser.makeInlineImage
-# (pdf.worker.js:13684-13762). The text pipeline never decodes the image —
-# only the resume position and the error semantics matter, but BOTH follow
-# pdf.js's machinery exactly: the dict parse throws on non-Name keys, the
-# stream end is found by a filter-specific scanner, the image substream
-# becomes ONE operand consumed by the 1-arg EI op, and the byte that
-# terminated the "ID" token was already swallowed as lexer.currentChar —
-# the token AFTER the image starts with it (the "stale splice").
-# ---------------------------------------------------------------------------
-
-# sentinel for the inline-image stream operand (worker:13761 returns the
-# imageStream object; the preprocessor pushes it and EI consumes it)
-class _InlineImg:
-    __slots__ = ()
-
-
-_IMG_OPERAND = _InlineImg()
-
-# specialChars === 1 set (whitespace-ish skip chars), pdf.worker.js:13933
-_WIN_WS = frozenset(b"\x00\t\n\x0c\r ")
-
-
-def _win_getnumber(w: bytes, i: int) -> int:
-    """Lexer.getNumber (pdf.worker.js:13958-14031) over the 15-byte
-    window: returns the index of the terminating char (the lexer's
-    currentChar); raises _PageStop where pdf.js throws FormatError
-    ("Invalid number: x") — a sign/dot followed by a non-digit that is
-    neither whitespace nor EOF."""
-    m = len(w)
-
-    def cur(j: int) -> int:
-        return w[j] if j < m else -1
-
-    ch = cur(i)
-    if ch == 0x2D:
-        i += 1
-        ch = cur(i)
-        if ch == 0x2D:  # "--" double minus tolerated
-            i += 1
-            ch = cur(i)
-    elif ch == 0x2B:
-        i += 1
-        ch = cur(i)
-    while ch == 0x0A or ch == 0x0D:  # CR/LF run between sign and digits
-        i += 1
-        ch = cur(i)
-    divide = False
-    if ch == 0x2E:
-        divide = True
-        i += 1
-        ch = cur(i)
-    if ch < 0x30 or ch > 0x39:
-        if ch in (0x20, 0x09, 0x0D, 0x0A) or ch == -1:
-            return i  # info() + return 0: a valid 0-valued operand
-        raise _PageStop()  # FormatError propagates out of the tmpLexer
-    while True:
-        i += 1
-        ch = cur(i)
-        if 0x30 <= ch <= 0x39:
-            continue
-        if ch == 0x2E:
-            if not divide:
-                divide = True
-                continue
-            break
-        if ch == 0x2D:
-            continue  # "minus sign in the middle" warn, keeps scanning
-        if ch == 0x45 or ch == 0x65:  # e-notation
-            nxt = cur(i + 1)
-            if nxt == 0x2B or nxt == 0x2D:
-                i += 1
-            elif nxt < 0x30 or nxt > 0x39:
-                break
-            continue
-        break
-    return i
-
-
-def _win_getstring(w: bytes, i: int) -> int:
-    """Lexer.getString (pdf.worker.js:14032-14129): EOF-graceful, returns
-    the index after the balanced ')'. ``i`` sits on '('."""
-    m = len(w)
-    depth = 1
-    i += 1
-    while i < m:
-        ch = w[i]
-        if ch == 0x28:
-            depth += 1
-            i += 1
-        elif ch == 0x29:
-            depth -= 1
-            i += 1
-            if depth == 0:
-                return i
-        elif ch == 0x5C:
-            i += 1
-            if i >= m:
-                return m
-            e = w[i]
-            if 0x30 <= e <= 0x37:  # up to three octal digits
-                i += 1
-                if i < m and 0x30 <= w[i] <= 0x37:
-                    i += 1
-                    if i < m and 0x30 <= w[i] <= 0x37:
-                        i += 1
-            elif e == 0x0D:
-                i += 1
-                if i < m and w[i] == 0x0A:
-                    i += 1
-            else:
-                i += 1
-        else:
-            i += 1
-    return m  # "Unterminated string" warn + done
-
-
-def _win_getname(w: bytes, i: int) -> int:
-    """Lexer.getName (pdf.worker.js:14130-14168) position walk incl. the
-    #-escape consumption quirks. ``i`` sits on '/'."""
-    m = len(w)
-    while True:
-        i += 1
-        if i >= m:
-            return m
-        ch = w[i]
-        if ch in _LEX_SPECIAL:
-            return i
-        if ch == 0x23:
-            i += 1
-            if i >= m:
-                return m
-            ch = w[i]
-            if ch in _LEX_SPECIAL:
-                return i  # "# should be followed by hex" -> break at it
-            x = _WIN_HEXD[ch]
-            if x == -1:
-                continue  # '#'+ch pushed, scan continues
-            i += 1
-            if i >= m:
-                return m
-            ch2 = w[i]
-            if _WIN_HEXD[ch2] == -1:
-                if ch2 in _LEX_SPECIAL:
-                    return i  # illegal digit + special -> break at it
-                continue  # pushed as literal, scan continues
-            # two hex digits consumed; loop advances past
-
-
-_WIN_HEXD = [-1] * 256
-for _c in range(0x30, 0x3A):
-    _WIN_HEXD[_c] = _c - 0x30
-for _c in list(range(0x41, 0x47)) + list(range(0x61, 0x67)):
-    _WIN_HEXD[_c] = (_c & 0x0F) + 9
-
-
-def _win_gethex(w: bytes, i: int) -> int:
-    """Lexer.getHexString (pdf.worker.js:14180-14219): graceful, scans to
-    '>' (consumed) or EOF. ``i`` sits on the char after '<'."""
-    m = len(w)
-    while i < m and w[i] != 0x3E:
-        i += 1
-    return i + 1 if i < m else m
-
-
-def _win_accept(w: bytes) -> bool:
-    """findDefaultInlineStreamEnd's candidate validation (pdf.worker.js:
-    13494-13515): a fresh Lexer over the 15-byte window counts operands
-    until a command token — unknown command (or a null-valued opMap
-    prefix entry like BM/BD, whose lookup is falsy) rejects, a known
-    command with matching arity accepts, EOF rejects. Lexer FormatErrors
-    (')' illegal char, invalid number) propagate as _PageStop."""
-    m = len(w)
-    i = 0
-    numargs = 0
-    while True:
-        comment = False
-        while True:  # Lexer.getObj skip loop (worker:14220-14237)
-            if i >= m:
-                return False  # EOF -> state = 0 -> reject
-            ch = w[i]
-            if comment:
-                if ch == 0x0A or ch == 0x0D:
-                    comment = False
-            elif ch == 0x25:
-                comment = True
-            elif ch not in _WIN_WS:
-                break
-            i += 1
-        if 0x30 <= ch <= 0x39 or ch in (0x2B, 0x2D, 0x2E):
-            i = _win_getnumber(w, i)
-            numargs += 1
-            continue
-        if ch == 0x28:
-            i = _win_getstring(w, i)
-            numargs += 1
-            continue
-        if ch == 0x2F:
-            i = _win_getname(w, i)
-            numargs += 1
-            continue
-        if ch in (0x5B, 0x5D, 0x7B, 0x7D):
-            return False  # Cmd "[", "]", "{", "}": not in the opMap
-        if ch == 0x3C:
-            if i + 1 < m and w[i + 1] == 0x3C:
-                return False  # Cmd "<<": unknown
-            i = _win_gethex(w, i + 1)
-            numargs += 1
-            continue
-        if ch == 0x3E:
-            return False  # Cmd ">>" / ">": unknown
-        if ch == 0x29:
-            raise _PageStop()  # Lexer FormatError "Illegal character"
-        # command token (incl. the unprintable single-char rule,
-        # worker:14287-14293)
-        if (ch < 0x20 or ch > 0x7F) and i + 1 < m and 0x20 <= w[i + 1] <= 0x7F:
-            tok = w[i:i + 1]
-            i += 1
-        else:
-            tok, i = _lex_op(w, i)
-        if tok in (b"true", b"false", b"null"):
-            numargs += 1  # keyword objects count as operands
-            continue
-        spec = _OP_ARITY.get(tok)
-        if spec is None:
-            return False
-        na, va = spec
-        if (numargs <= na) if va else (numargs == na):
-            return True
-        numargs = 0
-
-
-def _find_default_inline_end(data: bytes, start: int, n: int) -> int:
-    """findDefaultInlineStreamEnd (pdf.worker.js:13449-13538), position
-    only: E,I adjacency + SPACE/LF/CR (never tab) + the 15-byte
-    printable-window check (NUL allowed only before another non-NUL or at
-    the window edge) + the mini-lexer arity walk. On EOF, recovers to the
-    LAST candidate (even a rejected one); with no candidate the rest of
-    the stream is swallowed."""
-    state = 0
-    maybe = None
-    i = start
-    while i < n:
-        ch = data[i]
-        i += 1
-        if state == 0:
-            state = 1 if ch == 0x45 else 0
-        elif state == 1:
-            state = 2 if ch == 0x49 else 0
-        else:
-            if ch in (0x20, 0x0A, 0x0D):
-                maybe = i
-                win = data[i:i + 15]
-                if not win:
-                    return i  # peekBytes empty -> accepted at EOF
-                ok = True
-                wl = len(win)
-                for j in range(wl):
-                    b = win[j]
-                    if b == 0 and (j + 1 >= wl or win[j + 1] != 0):
-                        continue  # NUL before non-NUL (or OOB) allowed
-                    if b != 0x0A and b != 0x0D and (b < 0x20 or b > 0x7F):
-                        ok = False
-                        break
-                if not ok:
-                    state = 0
-                    continue
-                if _win_accept(win):
-                    return i
-                state = 0
-            else:
-                state = 0
-    return maybe if maybe is not None else n  # EOF recovery (worker:13524)
-
-
-def _skip_ei(data: bytes, i: int, n: int) -> int:
-    """inlineStreamSkipEI (pdf.worker.js:13669-13683): advance past the
-    next E,I adjacency ANYWHERE plus ONE more byte (the loop getBytes the
-    byte after I before noticing state === 2)."""
-    state = 0
-    while i < n:
-        ch = data[i]
-        i += 1
-        if state == 0:
-            state = 1 if ch == 0x45 else 0
-        elif state == 1:
-            state = 2 if ch == 0x49 else 0
-        else:
-            return i
-    return i
-
-
-def _find_ahx_end(data: bytes, i: int, n: int):
-    """findASCIIHexDecodeInlineStreamEnd (pdf.worker.js:13651-13668):
-    data ends at '>', then skip past the next EI anywhere."""
-    while i < n:
-        if data[i] == 0x3E:
-            return _skip_ei(data, i + 1, n), True
-        i += 1
-    return i, False  # EOD not found -> default finder from the start
-
-
-def _find_a85_end(data: bytes, i: int, n: int):
-    """findASCII85DecodeInlineStreamEnd (pdf.worker.js:13617-13650):
-    '~' + ws* + '>' ends the data; a '~' followed by whitespace and then
-    a bare "EI" also ends it (without consuming the EI — skipEI does)."""
-    while i < n:
-        ch = data[i]
-        i += 1
-        if ch != 0x7E:
-            continue
-        tilde = i
-        while i < n and data[i] in (0x20, 0x09, 0x0D, 0x0A):
-            i += 1
-        if i < n and data[i] == 0x3E:
-            return _skip_ei(data, i + 1, n), True
-        if i > tilde and data[i:i + 2] == b"EI":
-            return _skip_ei(data, i, n), True
-    return i, False
-
-
-_DCT_MARKERS = (
-    frozenset(range(0xC0, 0xD0)) - {0xC8}
-) | frozenset(range(0xDA, 0xF0)) | {0xFE}
-
-
-def _find_dct_end(data: bytes, i: int, n: int):
-    """findDCTDecodeInlineStreamEnd (pdf.worker.js:13540-13616): walk
-    JPEG markers to EOI (FFD9), skipping sized segments; then skip past
-    the next EI anywhere. EOF without EOI -> default finder."""
-    found = False
-    while i < n:
-        b = data[i]
-        i += 1
-        if b != 0xFF:
-            continue
-        b2 = data[i] if i < n else -1
-        if i < n:
-            i += 1
-        if b2 == 0x00:
-            pass
-        elif b2 == 0xFF:
-            i -= 1  # stream.skip(-1): re-examine
-        elif b2 == 0xD9:
-            found = True
-        elif b2 in _DCT_MARKERS:
-            hi = data[i] if i < n else -1
-            if i < n:
-                i += 1
-            lo = data[i] if i < n else -1
-            if i < n:
-                i += 1
-            ln = (hi << 8) + lo
-            if ln > 2:
-                i += ln - 2  # may run past n: subsequent getBytes are EOF
-            else:
-                i -= 2
-        if found:
-            break
-    return (i, True) if found else (i, False)
-
-
-def _inline_js_truthy(v) -> bool:
-    """JS truthiness of a parsed inline-dict value for the
-    ``dictMap.F || dictMap.Filter`` pick (worker:13703): Name objects are
-    ALWAYS truthy (even empty), arrays/dicts/Cmds truthy, null/false/0/""
-    falsy."""
-    if v is None or v is False:
-        return False
-    if isinstance(v, Name):
-        return True
-    if isinstance(v, bool):
-        return v
-    if isinstance(v, (int, float)):
-        return v != 0 and v == v
-    if isinstance(v, (bytes, str)):
-        return len(v) > 0
-    return True
-
-
-def _inline_image_scan(data: bytes, pos: int, n: int):
-    """Parser.makeInlineImage (pdf.worker.js:13684-13762) for the text
-    pipeline. ``pos`` sits right after the "BI" token. Returns
-    (resume_pos, id_terminator_byte_or_None): the terminator of the "ID"
-    token was consumed as lexer.currentChar, so when it is NOT a skip
-    char the next token after the image is the SPLICE of that byte with
-    the post-image bytes (worker:13759 synthesizes buf2 = Cmd("EI") and
-    shift() lexes from the stale currentChar). Raises _PageStop exactly
-    where pdf.js throws: a non-Name dict key (worker:13691), "ID" in a
-    value slot (buf1 becomes null next iteration), lexer FormatErrors.
-    Known approximations (all rare^3, excluded from generators): "ID" or
-    "BI" INSIDE an array/value (pdf.js stores the Cmd as an element /
-    recurses into a nested makeInlineImage), and a Ref-valued F/Filter
-    (pdf.js resolves it through the xref; we keep the Ref, which is not
-    a Name, so the default finder runs)."""
-    try:
-        return _inline_image_scan_inner(data, pos, n)
-    except _LexThrow:
-        raise _PageStop() from None
-
-
-def _inline_image_scan_inner(data: bytes, pos: int, n: int):
-    dm: dict = {}
-    idpos = None
-    while True:
-        pos = _skip_ws(data, pos)
-        if pos >= n:
-            break  # EOF: partial dict, end finder runs at stream end
-        c = data[pos]
-        if c == 0x2F:  # /Name key
-            key, pos = _parse_name(data, pos)
-            vpos = _skip_ws(data, pos)
-            if vpos >= n:
-                pos = vpos
-                break  # shift() -> EOF -> break (worker:13695)
-            vc = data[vpos]
-            if 0x30 <= vc <= 0x39 or vc in b"+-.":
-                # the inline dict is parsed by the FULL Parser with xref
-                # (worker:13698): `int int R` folds to one Ref value
-                val, pos = _lex_number(data, vpos, n)
-                if _is_js_integer(val):
-                    folded = _peek_ref(data, pos, n, val)
-                    if folded is not None:
-                        val, pos = folded
-                dm[str(key)] = val
-            elif vc == 0x3C and data[vpos:vpos + 2] != b"<<":
-                val, pos = _hex_content(data, vpos, n)
-                dm[str(key)] = val
-            elif vc == 0x5B:
-                val, pos = _parse_content_array(data, vpos, n)
-                dm[str(key)] = val
-            elif vc == 0x28 or vc == 0x3C or vc == 0x2F:
-                try:
-                    val, pos = parse_object(data, vpos, refs=True)
-                except ValueError:
-                    # Parser/Lexer throw (malformed dict, illegal char)
-                    raise _PageStop() from None
-                dm[str(key)] = val
-            elif _OPERATOR.match(data, vpos):
-                tok, pos = _lex_op(data, vpos)
-                if tok == b"ID":
-                    # value-slot ID: buf1 becomes null -> FormatError on
-                    # the next key iteration (worker:13690)
-                    raise _PageStop()
-                if tok == b"true":
-                    dm[str(key)] = True
-                elif tok == b"false":
-                    dm[str(key)] = False
-                elif tok == b"null":
-                    dm[str(key)] = None
-                else:
-                    dm[str(key)] = _IMG_OPERAND  # Cmd value: truthy, non-Name
-            elif vc == 0x29:
-                raise _PageStop()  # Lexer "Illegal character"
-            elif vc == 0x3E:
-                pos = vpos + (2 if data[vpos:vpos + 2] == b">>" else 1)
-                dm[str(key)] = _IMG_OPERAND
-            elif vc in b"]}{":
-                pos = vpos + 1
-                dm[str(key)] = _IMG_OPERAND
-            else:
-                # unprintable-lead command token (worker:14287-14293)
-                if ((vc < 0x20 or vc > 0x7F) and vpos + 1 < n
-                        and 0x20 <= data[vpos + 1] <= 0x7F):
-                    pos = vpos + 1
-                else:
-                    _, pos = _lex_op(data, vpos)
-                dm[str(key)] = _IMG_OPERAND
-        elif _OPERATOR.match(data, pos):
-            tok, pos = _lex_op(data, pos)
-            if tok == b"ID":
-                idpos = pos
-                break
-            raise _PageStop()  # non-Name key Cmd/keyword (worker:13691)
-        else:
-            raise _PageStop()  # number/string/delimiter key
-    if idpos is not None and idpos < n:
-        term = data[idpos]
-        start = idpos + 1
-    else:
-        term = None
-        start = n if idpos is None else idpos
-    f = dm.get("F")
-    flt = f if _inline_js_truthy(f) else dm.get("Filter")
-    fname = None
-    if isinstance(flt, Name):
-        fname = str(flt)
-    elif isinstance(flt, list) and flt and isinstance(flt[0], Name):
-        fname = str(flt[0])
-    if fname in ("DCT", "DCTDecode"):
-        end, found = _find_dct_end(data, start, n)
-    elif fname in ("A85", "ASCII85Decode"):
-        end, found = _find_a85_end(data, start, n)
-    elif fname in ("AHx", "ASCIIHexDecode"):
-        end, found = _find_ahx_end(data, start, n)
-    else:
-        end, found = _find_default_inline_end(data, start, n), True
-    if not found:
-        # EOD marker never seen: rewind and search for /EI/ instead
-        end = _find_default_inline_end(data, start, n)
-    return end, term
-
-
-# ---------------------------------------------------------------------------
-# Content-stream Ref operands and array elements. The preprocessor reads
-# through the FULL Parser (with xref), so three consecutive tokens
-# `int int R` fold into ONE Ref operand in any content stream
-# (pdf.worker.js:13432-13438; JS Number.isInteger — "0.0" qualifies), and
-# array elements are parsed by the same getObj: command tokens become
-# inert Cmd elements, refs fold inside arrays, an unclosed array is a
-# ParserEOFException (page stop keeping partial text). The Ref operand is
-# a JS object: ToString "5R" / "5R2" (gen appended only when nonzero,
-# worker:5525-5530), ToNumber NaN — the jsvm tier owns those use sites.
-# ---------------------------------------------------------------------------
-
-# inert JS-object array element (a Cmd stored by the array loop): truthy,
-# non-Name, non-bytes, non-number — dropped by showSpacedText
-_CMD_ELEM = _InlineImg()
-
-
-def _is_js_integer(v) -> bool:
-    return (
-        isinstance(v, (int, float))
-        and not isinstance(v, bool)
-        and float(v).is_integer()
-    )
-
-
-def _lex_number(data: bytes, pos: int, n: int):
-    """Lexer.getNumber (pdf.worker.js:13958-14031) transliteration:
-    returns (value, end) with end = the index of the terminating char.
-    One token covers e-notation ("1e2" == 100), a mid-token minus
-    ("5-6" warns and reads 56), double leading minus, and CR/LF runs
-    between the sign and the digits. A sign/dot followed by whitespace
-    or EOF is a GRACEFUL 0 operand; followed by anything else it raises
-    (FormatError "Invalid number"). Value arithmetic mirrors the
-    reference's accumulation (per-step double rounding past 2**53,
-    divideBy growth, 10**power); plain small integers return int for
-    the document-space Ref/xref machinery."""
-    i = pos
-
-    def cur(j: int) -> int:
-        return data[j] if j < n else -1
-
-    ch = cur(i)
-    sign = 1
-    if ch == 0x2D:
-        sign = -1
-        i += 1
-        ch = cur(i)
-        if ch == 0x2D:  # double minus tolerated
-            i += 1
-            ch = cur(i)
-    elif ch == 0x2B:
-        i += 1
-        ch = cur(i)
-    while ch == 0x0A or ch == 0x0D:
-        i += 1
-        ch = cur(i)
-    had_dot = False
-    if ch == 0x2E:
-        had_dot = True
-        i += 1
-        ch = cur(i)
-    if ch < 0x30 or ch > 0x39:
-        if ch in (0x20, 0x09, 0x0D, 0x0A) or ch == -1:
-            return 0, i  # info() + return 0: a valid 0-valued operand
-        raise _LexThrow()
-    base = ch - 0x30  # exact int twin of the double accumulation
-    basef = float(base)
-    divf = 10.0 if had_dot else 0.0
-    e_not = False
-    power = 0
-    psign = 1
-    while True:
-        i += 1
-        ch = cur(i)
-        if 0x30 <= ch <= 0x39:
-            d_ = ch - 0x30
-            if e_not:
-                power = power * 10 + d_
-            else:
-                if divf != 0.0:
-                    divf *= 10.0
-                base = base * 10 + d_
-                basef = basef * 10.0 + d_
-        elif ch == 0x2E:
-            if divf == 0.0:
-                divf = 1.0
-            else:
-                break  # second dot ends the token
-        elif ch == 0x2D:
-            pass  # "minus sign in the middle" warn; scan continues
-        elif ch == 0x45 or ch == 0x65:
-            nx = cur(i + 1)
-            if nx == 0x2B or nx == 0x2D:
-                psign = -1 if nx == 0x2D else 1
-                i += 1
-            elif nx < 0x30 or nx > 0x39:
-                break  # bare 'e': becomes the next token
-            e_not = True
-        else:
-            break
-    if divf == 0.0 and not e_not and base < (1 << 53):
-        return sign * base, i  # exact; int type for document space
-    val = basef
-    if divf != 0.0:
-        val /= divf  # inf divideBy (>308 fraction digits) -> 0.0, like JS
-    if e_not:
-        try:
-            val *= 10.0 ** (psign * power)
-        except OverflowError:
-            val *= math.inf
-    return sign * val, i
-
-
-def _hex_content(data: bytes, pos: int, n: int):
-    """Lexer.getHexString (pdf.worker.js:14180-14219) for content
-    streams: complete PAIRS only — a dangling first digit is DROPPED,
-    not zero-padded (probed live: `<414>` shows "A"; spec 7.3.4.3's
-    padding belongs to document space) — invalid chars warn-skipped,
-    whitespace-class skipped, graceful at EOF. ``pos`` sits on '<'."""
-    i = pos + 1
-    out = bytearray()
-    first = -1
-    while i < n:
-        ch = data[i]
-        if ch == 0x3E:
-            i += 1
-            break
-        if ch in _WS:
-            i += 1
-            continue
-        x = _WIN_HEXD[ch]
-        if x != -1:
-            if first < 0:
-                first = x
-            else:
-                out.append((first << 4) | x)
-                first = -1
-        i += 1
-    return bytes(out), i
-
-
-def _peek_ref(data: bytes, pos: int, n: int, num):
-    """After an integral numeric token: lookahead for `int R` completing
-    pdf.js's three-token Ref formation. Returns (Ref, next_pos) or
-    None. The R command must lex as exactly "R" (an unknown token
-    extends freely, so "R5"/"Rz" are single non-R commands)."""
-    p = _skip_ws(data, pos)
-    if p >= n:
-        return None
-    c = data[p]
-    if not (0x30 <= c <= 0x39 or c in (0x2B, 0x2D, 0x2E)):
-        return None
-    try:
-        gen, e2 = _lex_number(data, p, n)
-    except _LexThrow:
-        return None  # the throw fires when the scan reaches that token
-    if not _is_js_integer(gen):
-        return None
-    p2 = _skip_ws(data, e2)
-    if p2 >= n or not _OPERATOR.match(data, p2):
-        return None
-    opv, p3 = _lex_op(data, p2)
-    if opv != b"R":
-        return None
-    return Ref(num, gen), p3
-
-
-def _prescan_lexer_throw(data: bytes, n: int):
-    """Walk the token stream for the FIRST Lexer throw (illegal ')',
-    invalid number, >128-char command). The Parser's buf1/buf2
-    lookahead means the throw erases the two preceding tokens too, so
-    interpretation must stop at the CUT = start of the token two before
-    the throwing one (probed live: `(ab) Tj (cd) Tj (ef) Tj +x` keeps
-    only "abcd"). Returns the cut position, or None when the stream has
-    no lexer throw — or when it reaches a BI whose ID terminator forces
-    the stale-currentChar splice (the interpreter re-prescans on the
-    rebased stream) or a parser-level _PageStop (the interpreter hits
-    it at its own, later timing — dict tokens carry no side effects)."""
-    s1 = s2 = None
-    pos = 0
-    while True:
-        pos = _skip_ws(data, pos)
-        if pos >= n:
-            return None
-        start = pos
-        c = data[pos]
-        try:
-            if c == 0x29:
-                raise _LexThrow()  # Lexer "Illegal character"
-            if c == 0x28:
-                _, pos = _parse_literal_string(data, pos)  # EOF-graceful
-            elif c == 0x3C:
-                if data[pos:pos + 2] == b"<<":
-                    pos += 2
-                else:
-                    _, pos = _hex_content(data, pos, n)
-            elif c == 0x3E:
-                pos += 2 if data[pos:pos + 2] == b">>" else 1
-            elif c in b"[]{}":
-                pos += 1
-            elif c == 0x2F:
-                pos += 1
-                while pos < n and data[pos] not in _LEX_SPECIAL:
-                    pos += 1
-            elif 0x30 <= c <= 0x39 or c in b"+-.":
-                _, pos = _lex_number(data, pos, n)
-            elif _OPERATOR.match(data, pos):
-                tok, pos = _lex_op(data, pos)
-                if tok == b"BI":
-                    ipos, term = _inline_image_scan(data, pos, n)
-                    if term is not None and term not in _WS:
-                        return None  # splice: caller re-prescans rebased
-                    pos = ipos
-            else:
-                pos += 1  # mirror the interpreters' weird-byte skip
-        except _LexThrow:
-            if s2 is not None:
-                return s2
-            if s1 is not None:
-                return s1
-            return 0
-        except _PageStop:
-            return None
-        s2 = s1
-        s1 = start
-
-
-def _parse_content_array(data: bytes, pos: int, n: int):
-    """Content-dialect array (Parser.getObj "[" case, worker:13389-13401):
-    elements via the same dispatch as the operand loop — commands become
-    inert dropped elements, `int int R` folds to a Ref, ')' and parse
-    throws stop the page, EOF raises ParserEOFException (page stop).
-    ``pos`` sits on '['. Returns (elements, next_pos)."""
-    try:
-        return _parse_content_array_inner(data, pos, n)
-    except _LexThrow:
-        raise _PageStop() from None
-
-
-def _parse_content_array_inner(data: bytes, pos: int, n: int):
-    pos += 1
-    out: list = []
-    while True:
-        pos = _skip_ws(data, pos)
-        if pos >= n:
-            raise _PageStop()  # ParserEOFException (worker:13398)
-        c = data[pos]
-        if c == 0x5D:
-            return out, pos + 1
-        if c == 0x5B:
-            sub, pos = _parse_content_array(data, pos, n)
-            out.append(sub)
-            continue
-        if 0x30 <= c <= 0x39 or c in b"+-.":
-            try:
-                v, pos = _lex_number(data, pos, n)
-            except _LexThrow:
-                raise _PageStop() from None
-            if _is_js_integer(v):
-                folded = _peek_ref(data, pos, n, v)
-                if folded is not None:
-                    v, pos = folded
-            out.append(v)
-            continue
-        if c == 0x3C and data[pos:pos + 2] != b"<<":
-            v, pos = _hex_content(data, pos, n)
-            out.append(v)
-            continue
-        if c == 0x28 or c == 0x3C or c == 0x2F:
-            try:
-                v, pos = parse_object(data, pos, refs=False)
-            except ValueError:
-                raise _PageStop() from None
-            out.append(v)
-            continue
-        if _OPERATOR.match(data, pos):
-            tok, pos = _lex_op(data, pos)
-            if tok == b"true":
-                out.append(True)
-            elif tok == b"false":
-                out.append(False)
-            elif tok == b"null":
-                out.append(None)
-            else:
-                out.append(_CMD_ELEM)
-            continue
-        if c == 0x29:
-            raise _PageStop()  # Lexer "Illegal character"
-        if c == 0x3E:
-            pos += 2 if data[pos:pos + 2] == b">>" else 1
-            out.append(_CMD_ELEM)
-            continue
-        if c in b"}{":
-            pos += 1
-            out.append(_CMD_ELEM)
-            continue
-        if ((c < 0x20 or c > 0x7F) and pos + 1 < n
-                and 0x20 <= data[pos + 1] <= 0x7F):
-            pos += 1  # unprintable single-char Cmd (worker:14287-14293)
-            out.append(_CMD_ELEM)
-            continue
-        _, pos = _lex_op(data, pos)
-        out.append(_CMD_ELEM)
-
-
 # the C plan's pre-Tf default font, shared by every document
 _ASCII_FM = FontMap(
     {i: chr(i) if 32 <= i < 127 else "" for i in range(256)}, 1
