@@ -847,7 +847,7 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
              * (worker:13389-13401): command tokens become inert Cmd
              * elements (showSpacedText drops them), `int int R` folds
              * to a Ref element (eating both ints — DEFER: jsvm's
-             * _parse_content_array folds exactly), ')' throws, EOF inside the array
+             * content reader folds exactly), ')' throws, EOF inside the array
              * is a ParserEOFException — both page stops (DEFER). */
             if (tj_start >= 0) { /* a newer array supersedes the old one */
                 nev = tj_start;
@@ -1383,7 +1383,7 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
                 /* inline image: pdf.js's makeInlineImage end-finding
                  * (filter-specific scanners, 15-byte window mini-lexer,
                  * stale-currentChar splice — worker:13449-13762) lives
-                 * in jsvm (pdfb._inline_image_scan); zero hits on the
+                 * in jsvm (its content reader); zero hits on the
                  * real corpus, so DEFER the page rather than port it */
                 return -2;
             } else if (oplen == 3 && op[2] == 'C' &&
@@ -1403,8 +1403,8 @@ long pdftext_interpret(const unsigned char *d, long n, Ev *out, long cap,
         }
         if (c == ')')
             return -2; /* Lexer "Illegal character": page stop there,
-                        * two-token-early via jsvm's prescan cut
-                        * (pdfb._prescan_lexer_throw) */
+                        * two tokens early through the lookahead of
+                        * jsvm's content reader */
         /* unexpected byte (e.g. ']' '}' '{' '>'): skip, like jsvm */
         TKSHIFT(0);
         pos++;

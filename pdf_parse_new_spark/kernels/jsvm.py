@@ -27,9 +27,13 @@ per-glyph transcription of the reference algorithm
 page here whenever the C lexer + C replay cannot take one of its streams:
 multi-byte (CID) or RTL-capable fonts, rotated or skewed matrices, the
 operand stash, ExtGState fonts, width-register-sensitive constructs, and
-the coercion streams above. Those pages are rare fallbacks, so exactness
-is the point, not throughput (differential-tested against the live node
-reference by tests/test_node_differential.py).
+the coercion streams above. Exactness is the point (differential-tested
+against the live node reference by tests/test_node_differential.py).
+
+Each content stream and each Form XObject body is read by one
+``_Reader``, a transcription of pdf.js's Lexer.getObj and Parser: its
+buf1/buf2 lookahead gives the lexer-throw cut, the ``int int R`` fold,
+arrays and inline-image dicts in the one pass over the stream.
 """
 
 from __future__ import annotations
@@ -46,14 +50,10 @@ from .pdfb import (
     Ref,
     Stream,
     _normalize_unicode,
-    _parse_literal_string,
-    _parse_name,
     _skip_ws,
     _WS,
     parse_object,
 )
-
-_OPERATOR = re.compile(rb"[A-Za-z'\"][A-Za-z0-9*'\"]*")
 
 # pdf.js EvaluatorPreprocessor.opMap (pdf.worker.js:38216-38592):
 # op -> (numArgs, variableArgs). The preprocessor (read(),
@@ -118,9 +118,9 @@ class _LexThrow(ValueError):
     token over 128 chars). The Parser's two-token lookahead (buf1/buf2)
     means the throw fires while the two tokens BEFORE the bad one are
     lexed-but-unprocessed — they are lost with it (probed live: a late
-    `+x` erases the preceding show AND its operand). Content loops stop
-    at `_prescan_lexer_throw`'s cut; reaching the raise directly maps
-    to _PageStop (same visible outcome in the covered cases)."""
+    `+x` erases the preceding show AND its operand). ``_Reader`` raises
+    it while it lexes ahead, so the stream stops with those two tokens
+    unread; inside an inline-image dict it stops the page at "BI"."""
 
 
 def _lex_op(data: bytes, pos: int) -> tuple[bytes, int]:
@@ -164,219 +164,23 @@ class _PageStop(Exception):
 # the token AFTER the image starts with it (the "stale splice").
 # ---------------------------------------------------------------------------
 
-# sentinel for the inline-image stream operand (worker:13761 returns the
-# imageStream object; the preprocessor pushes it and EI consumes it)
-class _InlineImg:
-    __slots__ = ()
-
-
-_IMG_OPERAND = _InlineImg()
-
-# specialChars === 1 set (whitespace-ish skip chars), pdf.worker.js:13933
-_WIN_WS = frozenset(b"\x00\t\n\x0c\r ")
-
-
-def _win_getnumber(w: bytes, i: int) -> int:
-    """Lexer.getNumber (pdf.worker.js:13958-14031) over the 15-byte
-    window: returns the index of the terminating char (the lexer's
-    currentChar); raises _PageStop where pdf.js throws FormatError
-    ("Invalid number: x") — a sign/dot followed by a non-digit that is
-    neither whitespace nor EOF."""
-    m = len(w)
-
-    def cur(j: int) -> int:
-        return w[j] if j < m else -1
-
-    ch = cur(i)
-    if ch == 0x2D:
-        i += 1
-        ch = cur(i)
-        if ch == 0x2D:  # "--" double minus tolerated
-            i += 1
-            ch = cur(i)
-    elif ch == 0x2B:
-        i += 1
-        ch = cur(i)
-    while ch == 0x0A or ch == 0x0D:  # CR/LF run between sign and digits
-        i += 1
-        ch = cur(i)
-    divide = False
-    if ch == 0x2E:
-        divide = True
-        i += 1
-        ch = cur(i)
-    if ch < 0x30 or ch > 0x39:
-        if ch in (0x20, 0x09, 0x0D, 0x0A) or ch == -1:
-            return i  # info() + return 0: a valid 0-valued operand
-        raise _PageStop()  # FormatError propagates out of the tmpLexer
-    while True:
-        i += 1
-        ch = cur(i)
-        if 0x30 <= ch <= 0x39:
-            continue
-        if ch == 0x2E:
-            if not divide:
-                divide = True
-                continue
-            break
-        if ch == 0x2D:
-            continue  # "minus sign in the middle" warn, keeps scanning
-        if ch == 0x45 or ch == 0x65:  # e-notation
-            nxt = cur(i + 1)
-            if nxt == 0x2B or nxt == 0x2D:
-                i += 1
-            elif nxt < 0x30 or nxt > 0x39:
-                break
-            continue
-        break
-    return i
-
-
-def _win_getstring(w: bytes, i: int) -> int:
-    """Lexer.getString (pdf.worker.js:14032-14129): EOF-graceful, returns
-    the index after the balanced ')'. ``i`` sits on '('."""
-    m = len(w)
-    depth = 1
-    i += 1
-    while i < m:
-        ch = w[i]
-        if ch == 0x28:
-            depth += 1
-            i += 1
-        elif ch == 0x29:
-            depth -= 1
-            i += 1
-            if depth == 0:
-                return i
-        elif ch == 0x5C:
-            i += 1
-            if i >= m:
-                return m
-            e = w[i]
-            if 0x30 <= e <= 0x37:  # up to three octal digits
-                i += 1
-                if i < m and 0x30 <= w[i] <= 0x37:
-                    i += 1
-                    if i < m and 0x30 <= w[i] <= 0x37:
-                        i += 1
-            elif e == 0x0D:
-                i += 1
-                if i < m and w[i] == 0x0A:
-                    i += 1
-            else:
-                i += 1
-        else:
-            i += 1
-    return m  # "Unterminated string" warn + done
-
-
-def _win_getname(w: bytes, i: int) -> int:
-    """Lexer.getName (pdf.worker.js:14130-14168) position walk incl. the
-    #-escape consumption quirks. ``i`` sits on '/'."""
-    m = len(w)
-    while True:
-        i += 1
-        if i >= m:
-            return m
-        ch = w[i]
-        if ch in _LEX_SPECIAL:
-            return i
-        if ch == 0x23:
-            i += 1
-            if i >= m:
-                return m
-            ch = w[i]
-            if ch in _LEX_SPECIAL:
-                return i  # "# should be followed by hex" -> break at it
-            x = _WIN_HEXD[ch]
-            if x == -1:
-                continue  # '#'+ch pushed, scan continues
-            i += 1
-            if i >= m:
-                return m
-            ch2 = w[i]
-            if _WIN_HEXD[ch2] == -1:
-                if ch2 in _LEX_SPECIAL:
-                    return i  # illegal digit + special -> break at it
-                continue  # pushed as literal, scan continues
-            # two hex digits consumed; loop advances past
-
-
-_WIN_HEXD = [-1] * 256
-for _c in range(0x30, 0x3A):
-    _WIN_HEXD[_c] = _c - 0x30
-for _c in list(range(0x41, 0x47)) + list(range(0x61, 0x67)):
-    _WIN_HEXD[_c] = (_c & 0x0F) + 9
-
-
-def _win_gethex(w: bytes, i: int) -> int:
-    """Lexer.getHexString (pdf.worker.js:14180-14219): graceful, scans to
-    '>' (consumed) or EOF. ``i`` sits on the char after '<'."""
-    m = len(w)
-    while i < m and w[i] != 0x3E:
-        i += 1
-    return i + 1 if i < m else m
-
-
 def _win_accept(w: bytes) -> bool:
     """findDefaultInlineStreamEnd's candidate validation (pdf.worker.js:
     13494-13515): a fresh Lexer over the 15-byte window counts operands
     until a command token — unknown command (or a null-valued opMap
     prefix entry like BM/BD, whose lookup is falsy) rejects, a known
     command with matching arity accepts, EOF rejects. Lexer FormatErrors
-    (')' illegal char, invalid number) propagate as _PageStop."""
-    m = len(w)
-    i = 0
+    (')' illegal char, invalid number) propagate as _LexThrow."""
+    lexer = _Reader(w, 0, _SCAN)
     numargs = 0
     while True:
-        comment = False
-        while True:  # Lexer.getObj skip loop (worker:14220-14237)
-            if i >= m:
-                return False  # EOF -> state = 0 -> reject
-            ch = w[i]
-            if comment:
-                if ch == 0x0A or ch == 0x0D:
-                    comment = False
-            elif ch == 0x25:
-                comment = True
-            elif ch not in _WIN_WS:
-                break
-            i += 1
-        if 0x30 <= ch <= 0x39 or ch in (0x2B, 0x2D, 0x2E):
-            i = _win_getnumber(w, i)
-            numargs += 1
-            continue
-        if ch == 0x28:
-            i = _win_getstring(w, i)
-            numargs += 1
-            continue
-        if ch == 0x2F:
-            i = _win_getname(w, i)
-            numargs += 1
-            continue
-        if ch in (0x5B, 0x5D, 0x7B, 0x7D):
-            return False  # Cmd "[", "]", "{", "}": not in the opMap
-        if ch == 0x3C:
-            if i + 1 < m and w[i + 1] == 0x3C:
-                return False  # Cmd "<<": unknown
-            i = _win_gethex(w, i + 1)
-            numargs += 1
-            continue
-        if ch == 0x3E:
-            return False  # Cmd ">>" / ">": unknown
-        if ch == 0x29:
-            raise _PageStop()  # Lexer FormatError "Illegal character"
-        # command token (incl. the unprintable single-char rule,
-        # worker:14287-14293)
-        if (ch < 0x20 or ch > 0x7F) and i + 1 < m and 0x20 <= w[i + 1] <= 0x7F:
-            tok = w[i:i + 1]
-            i += 1
-        else:
-            tok, i = _lex_op(w, i)
-        if tok in (b"true", b"false", b"null"):
+        tok = lexer.lex()
+        if tok is _EOF:
+            return False
+        if type(tok) is not _Cmd:
             numargs += 1  # keyword objects count as operands
             continue
-        spec = _OP_ARITY.get(tok)
+        spec = _OP_ARITY.get(tok.op)
         if spec is None:
             return False
         na, va = spec
@@ -515,172 +319,6 @@ def _find_dct_end(data: bytes, i: int, n: int):
     return (i, True) if found else (i, False)
 
 
-def _inline_js_truthy(v) -> bool:
-    """JS truthiness of a parsed inline-dict value for the
-    ``dictMap.F || dictMap.Filter`` pick (worker:13703): Name objects are
-    ALWAYS truthy (even empty), arrays/dicts/Cmds truthy, null/false/0/""
-    falsy."""
-    if v is None or v is False:
-        return False
-    if isinstance(v, Name):
-        return True
-    if isinstance(v, bool):
-        return v
-    if isinstance(v, (int, float)):
-        return v != 0 and v == v
-    if isinstance(v, (bytes, str)):
-        return len(v) > 0
-    return True
-
-
-def _inline_image_scan(data: bytes, pos: int, n: int):
-    """Parser.makeInlineImage (pdf.worker.js:13684-13762) for the text
-    pipeline. ``pos`` sits right after the "BI" token. Returns
-    (resume_pos, id_terminator_byte_or_None): the terminator of the "ID"
-    token was consumed as lexer.currentChar, so when it is NOT a skip
-    char the next token after the image is the SPLICE of that byte with
-    the post-image bytes (worker:13759 synthesizes buf2 = Cmd("EI") and
-    shift() lexes from the stale currentChar). Raises _PageStop exactly
-    where pdf.js throws: a non-Name dict key (worker:13691), "ID" in a
-    value slot (buf1 becomes null next iteration), lexer FormatErrors.
-    Known approximations (all rare^3, excluded from generators): "ID" or
-    "BI" INSIDE an array/value (pdf.js stores the Cmd as an element /
-    recurses into a nested makeInlineImage), and a Ref-valued F/Filter
-    (pdf.js resolves it through the xref; we keep the Ref, which is not
-    a Name, so the default finder runs)."""
-    try:
-        return _inline_image_scan_inner(data, pos, n)
-    except _LexThrow:
-        raise _PageStop() from None
-
-
-def _inline_image_scan_inner(data: bytes, pos: int, n: int):
-    dm: dict = {}
-    idpos = None
-    while True:
-        pos = _skip_ws(data, pos)
-        if pos >= n:
-            break  # EOF: partial dict, end finder runs at stream end
-        c = data[pos]
-        if c == 0x2F:  # /Name key
-            key, pos = _parse_name(data, pos)
-            vpos = _skip_ws(data, pos)
-            if vpos >= n:
-                pos = vpos
-                break  # shift() -> EOF -> break (worker:13695)
-            vc = data[vpos]
-            if 0x30 <= vc <= 0x39 or vc in b"+-.":
-                # the inline dict is parsed by the FULL Parser with xref
-                # (worker:13698): `int int R` folds to one Ref value
-                val, pos = _lex_number(data, vpos, n)
-                if _is_js_integer(val):
-                    folded = _peek_ref(data, pos, n, val)
-                    if folded is not None:
-                        val, pos = folded
-                dm[str(key)] = val
-            elif vc == 0x3C and data[vpos:vpos + 2] != b"<<":
-                val, pos = _hex_content(data, vpos, n)
-                dm[str(key)] = val
-            elif vc == 0x5B:
-                val, pos = _parse_content_array(data, vpos, n)
-                dm[str(key)] = val
-            elif vc == 0x28 or vc == 0x3C or vc == 0x2F:
-                try:
-                    val, pos = parse_object(data, vpos, refs=True)
-                except ValueError:
-                    # Parser/Lexer throw (malformed dict, illegal char)
-                    raise _PageStop() from None
-                dm[str(key)] = val
-            elif _OPERATOR.match(data, vpos):
-                tok, pos = _lex_op(data, vpos)
-                if tok == b"ID":
-                    # value-slot ID: buf1 becomes null -> FormatError on
-                    # the next key iteration (worker:13690)
-                    raise _PageStop()
-                if tok == b"true":
-                    dm[str(key)] = True
-                elif tok == b"false":
-                    dm[str(key)] = False
-                elif tok == b"null":
-                    dm[str(key)] = None
-                else:
-                    dm[str(key)] = _IMG_OPERAND  # Cmd value: truthy, non-Name
-            elif vc == 0x29:
-                raise _PageStop()  # Lexer "Illegal character"
-            elif vc == 0x3E:
-                pos = vpos + (2 if data[vpos:vpos + 2] == b">>" else 1)
-                dm[str(key)] = _IMG_OPERAND
-            elif vc in b"]}{":
-                pos = vpos + 1
-                dm[str(key)] = _IMG_OPERAND
-            else:
-                # unprintable-lead command token (worker:14287-14293)
-                if ((vc < 0x20 or vc > 0x7F) and vpos + 1 < n
-                        and 0x20 <= data[vpos + 1] <= 0x7F):
-                    pos = vpos + 1
-                else:
-                    _, pos = _lex_op(data, vpos)
-                dm[str(key)] = _IMG_OPERAND
-        elif _OPERATOR.match(data, pos):
-            tok, pos = _lex_op(data, pos)
-            if tok == b"ID":
-                idpos = pos
-                break
-            raise _PageStop()  # non-Name key Cmd/keyword (worker:13691)
-        else:
-            raise _PageStop()  # number/string/delimiter key
-    if idpos is not None and idpos < n:
-        term = data[idpos]
-        start = idpos + 1
-    else:
-        term = None
-        start = n if idpos is None else idpos
-    f = dm.get("F")
-    flt = f if _inline_js_truthy(f) else dm.get("Filter")
-    fname = None
-    if isinstance(flt, Name):
-        fname = str(flt)
-    elif isinstance(flt, list) and flt and isinstance(flt[0], Name):
-        fname = str(flt[0])
-    if fname in ("DCT", "DCTDecode"):
-        end, found = _find_dct_end(data, start, n)
-    elif fname in ("A85", "ASCII85Decode"):
-        end, found = _find_a85_end(data, start, n)
-    elif fname in ("AHx", "ASCIIHexDecode"):
-        end, found = _find_ahx_end(data, start, n)
-    else:
-        end, found = _find_default_inline_end(data, start, n), True
-    if not found:
-        # EOD marker never seen: rewind and search for /EI/ instead
-        end = _find_default_inline_end(data, start, n)
-    return end, term
-
-
-# ---------------------------------------------------------------------------
-# Content-stream Ref operands and array elements. The preprocessor reads
-# through the FULL Parser (with xref), so three consecutive tokens
-# `int int R` fold into ONE Ref operand in any content stream
-# (pdf.worker.js:13432-13438; JS Number.isInteger — "0.0" qualifies), and
-# array elements are parsed by the same getObj: command tokens become
-# inert Cmd elements, refs fold inside arrays, an unclosed array is a
-# ParserEOFException (page stop keeping partial text). The Ref operand is
-# a JS object: ToString "5R" / "5R2" (gen appended only when nonzero,
-# worker:5525-5530), ToNumber NaN — the jsvm tier owns those use sites.
-# ---------------------------------------------------------------------------
-
-# inert JS-object array element (a Cmd stored by the array loop): truthy,
-# non-Name, non-bytes, non-number — dropped by showSpacedText
-_CMD_ELEM = _InlineImg()
-
-
-def _is_js_integer(v) -> bool:
-    return (
-        isinstance(v, (int, float))
-        and not isinstance(v, bool)
-        and float(v).is_integer()
-    )
-
-
 def _lex_number(data: bytes, pos: int, n: int):
     """Lexer.getNumber (pdf.worker.js:13958-14031) transliteration:
     returns (value, end) with end = the index of the terminating char.
@@ -769,6 +407,13 @@ def _lex_number(data: bytes, pos: int, n: int):
     return sign * val, i
 
 
+_HEX_VALUE = [-1] * 256
+for _c in range(0x30, 0x3A):
+    _HEX_VALUE[_c] = _c - 0x30
+for _c in list(range(0x41, 0x47)) + list(range(0x61, 0x67)):
+    _HEX_VALUE[_c] = (_c & 0x0F) + 9
+
+
 def _hex_content(data: bytes, pos: int, n: int):
     """Lexer.getHexString (pdf.worker.js:14180-14219) for content
     streams: complete PAIRS only — a dangling first digit is DROPPED,
@@ -786,7 +431,7 @@ def _hex_content(data: bytes, pos: int, n: int):
         if ch in _WS:
             i += 1
             continue
-        x = _WIN_HEXD[ch]
+        x = _HEX_VALUE[ch]
         if x != -1:
             if first < 0:
                 first = x
@@ -797,168 +442,433 @@ def _hex_content(data: bytes, pos: int, n: int):
     return bytes(out), i
 
 
-def _peek_ref(data: bytes, pos: int, n: int, num):
-    """After an integral numeric token: lookahead for `int R` completing
-    pdf.js's three-token Ref formation. Returns (Ref, next_pos) or
-    None. The R command must lex as exactly "R" (an unknown token
-    extends freely, so "R5"/"Rz" are single non-R commands)."""
-    p = _skip_ws(data, pos)
-    if p >= n:
-        return None
-    c = data[p]
-    if not (0x30 <= c <= 0x39 or c in (0x2B, 0x2D, 0x2E)):
-        return None
-    try:
-        gen, e2 = _lex_number(data, p, n)
-    except _LexThrow:
-        return None  # the throw fires when the scan reaches that token
-    if not _is_js_integer(gen):
-        return None
-    p2 = _skip_ws(data, e2)
-    if p2 >= n or not _OPERATOR.match(data, p2):
-        return None
-    opv, p3 = _lex_op(data, p2)
-    if opv != b"R":
-        return None
-    return Ref(num, gen), p3
+# ---------------------------------------------------------------------------
+# The content reader: pdf.js Lexer.getObj + Parser (pdf.worker.js:
+# 13370-13440), one per content stream and one per Form XObject body. The
+# Parser keeps two lexed tokens buffered (buf1/buf2) and getObj shifts the
+# next one in before it returns buf1. That one lookahead gives:
+# - the lexer-throw cut: a Lexer throw (illegal ')', invalid number,
+#   command token over 128 chars) fires while the two tokens before the
+#   bad one are buffered and unprocessed, so they are lost with it (probed
+#   live: `(ab) Tj (cd) Tj (ef) Tj +x` keeps only "abcd");
+# - the Ref fold: three tokens `int int R` become ONE Ref operand, at top
+#   level, in arrays and in inline-image dicts (JS Number.isInteger: "5.0"
+#   qualifies; "R5" is one unknown command, not R). The Ref is a JS
+#   object: ToString "5R" / "5R2" (gen appended only when nonzero,
+#   worker:5525-5530), ToNumber NaN;
+# - arrays and inline-image dict values, read by the same getObj:
+#   commands are inert elements, an unclosed array is a
+#   ParserEOFException (page stop, partial text kept).
+# Strings, names and dicts are read by pdfb.parse_object. Where the reader
+# keeps an older reading than pdf.js's Parser, the spot says "kept".
+# ---------------------------------------------------------------------------
 
 
-def _prescan_lexer_throw(data: bytes, n: int):
-    """Walk the token stream for the FIRST Lexer throw (illegal ')',
-    invalid number, >128-char command). The Parser's buf1/buf2
-    lookahead means the throw erases the two preceding tokens too, so
-    interpretation must stop at the CUT = start of the token two before
-    the throwing one (probed live: `(ab) Tj (cd) Tj (ef) Tj +x` keeps
-    only "abcd"). Returns the cut position, or None when the stream has
-    no lexer throw — or when it reaches a BI whose ID terminator forces
-    the stale-currentChar splice (the interpreter re-prescans on the
-    rebased stream) or a parser-level _PageStop (the interpreter hits
-    it at its own, later timing — dict tokens carry no side effects)."""
-    s1 = s2 = None
-    pos = 0
-    while True:
-        pos = _skip_ws(data, pos)
+class _Cmd:
+    """A command token (pdf.js Cmd); known commands are interned. As an
+    array element or inline-dict value a Cmd is an inert JS object:
+    truthy, ToString "[object Object]", dropped by showSpacedText."""
+
+    __slots__ = ("op",)
+
+    def __init__(self, op: bytes) -> None:
+        self.op = op
+
+
+class _Tok:
+    """A reader-internal token. A ``barrier`` ends the lookahead: nothing
+    is lexed past it until the parser has read it."""
+
+    __slots__ = ("barrier",)
+
+    def __init__(self, barrier: bool) -> None:
+        self.barrier = barrier
+
+
+_EOF = _Tok(False)
+# the inline-image stream operand (worker:13761 returns the imageStream
+# object; the preprocessor pushes it and the 1-arg EI consumes it)
+_IMG_OPERAND = _Tok(False)
+_EMPTY = _Tok(True)  # a slot not lexed yet: filled when it is reached
+_PAD = _Tok(False)  # a dict's first slot (pdf.js reads it as >= 2 tokens)
+_STOP = _Tok(True)  # the stream stops here (an image pdf.js throws on, ...)
+_SPLICED = _Tok(True)  # an inline image whose ID terminator starts the rest
+_ID = _Tok(True)  # the "ID" that ends an inline-image dict
+_THROW = _Tok(False)  # a Lexer throw due at the next token (see _dict)
+
+_UNKNOWN = object()
+_CMDS: dict = {op: _Cmd(op) for op in _KNOWN_OPS | {b"R"}}
+_CMDS.update({b"true": True, b"false": False, b"null": None})
+_BI = _CMDS[b"BI"]
+_IDC = _CMDS[b"ID"]
+_R = _CMDS[b"R"]
+_LBRACK = _Cmd(b"[")
+_RBRACK = _Cmd(b"]")
+_PUNCT = {0x5B: _LBRACK, 0x5D: _RBRACK, 0x7B: _Cmd(b"{"), 0x7D: _Cmd(b"}")}
+_JUNK = _Cmd(b"")  # ">", ">>" or a byte no token starts with
+_BAD = _Cmd(b"<<")  # a top-level "<<" that parse_object rejects
+_NUM_START = frozenset(b"+-.0123456789")
+_OP_START = frozenset(
+    b"ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz'\""
+)
+_NO_CUT = 1 << 62
+
+# reader modes: a content stream; an inline-image dict (every throw in it
+# stops the page at "BI", so its lookahead loses nothing); pdf.js's bare
+# Lexer ("BI" and "<<" are plain commands), for _win_accept and _zone
+_STREAM, _INLINE, _SCAN = 0, 1, 2
+
+
+class _Reader:
+    """pdf.js Lexer + Parser over ``data`` from ``pos``. ``get_obj``
+    returns the next operand or ``_Cmd`` (``_EOF`` at the end) and raises
+    ``_LexThrow`` / ``_PageStop`` where pdf.js throws."""
+
+    __slots__ = (
+        "data", "n", "pos", "mode", "buf1", "buf2", "pend", "depth",
+        "cut", "zone_end",
+    )
+
+    def __init__(self, data: bytes, pos: int = 0, mode: int = _STREAM):
+        self.data = data
+        self.n = len(data)
+        self.pos = pos
+        self.mode = mode
+        self.buf1 = self.buf2 = _EMPTY
+        self.pend = None  # the token due next: the dict behind a _PAD
+        self.depth = 0  # "[" lexed and not yet closed
+        self.cut = _NO_CUT  # no token is read from here on (see _dict)
+        self.zone_end = -1  # before it the old loop's rules hold (_zone)
+
+    # ---- Lexer.getObj ----
+    def lex(self):
+        if self.pend is not None:
+            tok, self.pend = self.pend, None
+            if tok is _THROW:
+                raise _LexThrow()
+            return tok
+        data = self.data
+        pos = _skip_ws(data, self.pos)
+        if pos >= self.cut:
+            return _STOP
+        n = self.n
         if pos >= n:
-            return None
-        start = pos
+            self.pos = pos
+            return _EOF
         c = data[pos]
-        try:
-            if c == 0x29:
-                raise _LexThrow()  # Lexer "Illegal character"
-            if c == 0x28:
-                _, pos = _parse_literal_string(data, pos)  # EOF-graceful
-            elif c == 0x3C:
-                if data[pos:pos + 2] == b"<<":
-                    pos += 2
-                else:
-                    _, pos = _hex_content(data, pos, n)
-            elif c == 0x3E:
-                pos += 2 if data[pos:pos + 2] == b">>" else 1
-            elif c in b"[]{}":
-                pos += 1
-            elif c == 0x2F:
-                pos += 1
-                while pos < n and data[pos] not in _LEX_SPECIAL:
-                    pos += 1
-            elif 0x30 <= c <= 0x39 or c in b"+-.":
-                _, pos = _lex_number(data, pos, n)
-            elif _OPERATOR.match(data, pos):
-                tok, pos = _lex_op(data, pos)
-                if tok == b"BI":
-                    ipos, term = _inline_image_scan(data, pos, n)
-                    if term is not None and term not in _WS:
-                        return None  # splice: caller re-prescans rebased
-                    pos = ipos
-            else:
-                pos += 1  # mirror the interpreters' weird-byte skip
-        except _LexThrow:
-            if s2 is not None:
-                return s2
-            if s1 is not None:
-                return s1
-            return 0
-        except _PageStop:
-            return None
-        s2 = s1
-        s1 = start
-
-
-def _parse_content_array(data: bytes, pos: int, n: int):
-    """Content-dialect array (Parser.getObj "[" case, worker:13389-13401):
-    elements via the same dispatch as the operand loop — commands become
-    inert dropped elements, `int int R` folds to a Ref, ')' and parse
-    throws stop the page, EOF raises ParserEOFException (page stop).
-    ``pos`` sits on '['. Returns (elements, next_pos)."""
-    try:
-        return _parse_content_array_inner(data, pos, n)
-    except _LexThrow:
-        raise _PageStop() from None
-
-
-def _parse_content_array_inner(data: bytes, pos: int, n: int):
-    pos += 1
-    out: list = []
-    while True:
-        pos = _skip_ws(data, pos)
-        if pos >= n:
-            raise _PageStop()  # ParserEOFException (worker:13398)
-        c = data[pos]
-        if c == 0x5D:
-            return out, pos + 1
-        if c == 0x5B:
-            sub, pos = _parse_content_array(data, pos, n)
-            out.append(sub)
-            continue
-        if 0x30 <= c <= 0x39 or c in b"+-.":
+        if c in _NUM_START:
             try:
-                v, pos = _lex_number(data, pos, n)
+                tok, self.pos = _lex_number(data, pos, n)
             except _LexThrow:
-                raise _PageStop() from None
-            if _is_js_integer(v):
-                folded = _peek_ref(data, pos, n, v)
-                if folded is not None:
-                    v, pos = folded
-            out.append(v)
-            continue
-        if c == 0x3C and data[pos:pos + 2] != b"<<":
-            v, pos = _hex_content(data, pos, n)
-            out.append(v)
-            continue
-        if c == 0x28 or c == 0x3C or c == 0x2F:
+                if pos < self.zone_end:
+                    return _STOP
+                raise
+            return tok
+        if c in _OP_START:
             try:
-                v, pos = parse_object(data, pos, refs=False)
-            except ValueError:
-                raise _PageStop() from None
-            out.append(v)
-            continue
-        if _OPERATOR.match(data, pos):
-            tok, pos = _lex_op(data, pos)
-            if tok == b"true":
-                out.append(True)
-            elif tok == b"false":
-                out.append(False)
-            elif tok == b"null":
-                out.append(None)
-            else:
-                out.append(_CMD_ELEM)
-            continue
+                op, self.pos = _lex_op(data, pos)
+            except _LexThrow:
+                if pos < self.zone_end:
+                    return _STOP
+                raise
+            tok = _CMDS.get(op, _UNKNOWN)
+            if tok is _UNKNOWN:
+                return _Cmd(op)
+            if tok is _BI and self.mode == _STREAM:
+                if not self.depth:
+                    return self._image()
+                # kept: in an array "BI" is an inert element (pdf.js
+                # reads a nested inline image)
+                return self._diverge(pos, _image_skip(data, self.pos)) or tok
+            if tok is _IDC and self.mode == _INLINE:
+                return _ID
+            return tok
+        if c == 0x28 or c == 0x2F:  # (string) or /Name
+            tok, self.pos = parse_object(data, pos, refs=False)
+            return tok
+        if c == 0x3C:
+            if data.startswith(b"<<", pos):
+                return self._dict(pos)
+            tok, self.pos = _hex_content(data, pos, n)
+            return tok
+        self.pos = pos + 1
+        tok = _PUNCT.get(c)
+        if tok is not None:
+            if tok is _LBRACK:
+                self.depth += 1
+            elif tok is _RBRACK and self.depth:
+                self.depth -= 1
+            return tok
         if c == 0x29:
-            raise _PageStop()  # Lexer "Illegal character"
+            if pos < self.zone_end:
+                return _BAD if self.depth else _JUNK
+            raise _LexThrow()  # "Illegal character"
         if c == 0x3E:
-            pos += 2 if data[pos:pos + 2] == b">>" else 1
-            out.append(_CMD_ELEM)
-            continue
-        if c in b"}{":
-            pos += 1
-            out.append(_CMD_ELEM)
-            continue
-        if ((c < 0x20 or c > 0x7F) and pos + 1 < n
-                and 0x20 <= data[pos + 1] <= 0x7F):
-            pos += 1  # unprintable single-char Cmd (worker:14287-14293)
-            out.append(_CMD_ELEM)
-            continue
-        _, pos = _lex_op(data, pos)
-        out.append(_CMD_ELEM)
+            if data.startswith(b">>", pos):
+                self.pos = pos + 2
+            return _JUNK
+        if (
+            (self.mode == _INLINE or (self.mode == _STREAM and self.depth))
+            and not ((c < 0x20 or c > 0x7F) and pos + 1 < n
+                     and 0x20 <= data[pos + 1] <= 0x7F)
+        ):
+            # pdf.js's command scan from any other byte; the unprintable
+            # single-char Cmd rule is worker:14287-14293
+            try:
+                op, self.pos = _lex_op(data, pos)
+            except _LexThrow:
+                if self.mode == _INLINE:
+                    raise
+                return _STOP  # kept: the old array loop stopped at "["
+            tok = _Cmd(op)
+            if self.mode == _INLINE or self.pos == pos + 1:
+                return tok
+            return self._diverge(pos, pos + 1) or tok
+        # kept: outside arrays such a byte is a token on its own, so
+        # "*Tj" runs Tj (pdf.js: one unknown command "*Tj")
+        return _JUNK
+
+    def _dict(self, pos: int):
+        """A "<<" dict read by pdfb.parse_object. In a content stream it
+        fills two lookahead slots (_PAD, then the dict): pdf.js's Parser
+        reads it from at least two tokens, none of which can throw when
+        the document grammar accepts it."""
+        data = self.data
+        if self.mode == _SCAN:
+            self.pos = pos + 2
+            return _JUNK
+        try:
+            tok, end = parse_object(data, pos, refs=self.mode == _INLINE)
+        except ValueError:
+            if self.mode == _INLINE:
+                raise _PageStop() from None
+            # kept: a rejected dict skips its first byte, so "<" starts a
+            # hex string ("<< 5 6 >> Tj" shows "V"; pdf.js's Parser drops
+            # the non-Name keys and shows nothing)
+            self.pos = pos + 1
+            return self._diverge(pos, pos + 2) or _BAD
+        self.pos = end
+        if self.mode == _INLINE:
+            return tok
+        self.pend = tok
+        return _PAD
+
+    def _diverge(self, start: int, theirs: int | None):
+        """This reader's token at ``start`` is not pdf.js's, whose next
+        token starts at ``theirs`` (None: the old prescan gave up there).
+        Sets the span and the cut of ``_zone``; returns _STOP when the cut
+        falls on this token, else None."""
+        if start < self.zone_end:
+            return None  # the walk that set this span covered it
+        if theirs is None:
+            self.zone_end = _NO_CUT
+            return None
+        end, cut = _zone(self.data, self.pos, theirs, start, self.depth)
+        self.zone_end = end
+        if cut is None:
+            return None
+        if cut < 0:
+            self.pend = _THROW
+        elif cut == start:
+            return _STOP
+        else:
+            self.cut = min(self.cut, cut)
+        return None
+
+    def _image(self):
+        """Parser.makeInlineImage (pdf.worker.js:13684-13762) for the
+        text pipeline, read as ONE token from right after "BI": the image
+        operand the 1-arg EI consumes, or _STOP where pdf.js throws (a
+        non-Name dict key, "ID" in a value slot, a Lexer throw in the
+        dict or in the end finder's window). The byte that terminated
+        "ID" was swallowed as lexer.currentChar; when it is not a skip
+        char the token after the image starts with it (the stale splice:
+        worker:13759 synthesizes buf2 = Cmd("EI") and shift() lexes from
+        the stale currentChar), so the reader goes on over that byte and
+        the rest, and the image is a barrier."""
+        data, n = self.data, self.n
+        try:
+            end, term = _image_end(data, self.pos, n)
+        except (_LexThrow, _PageStop):
+            return _STOP
+        if term is not None and term not in _WS:
+            self.data = bytes((term,)) + data[end:]
+            self.n = len(self.data)
+            self.pos = 0
+            self.cut = _NO_CUT
+            self.zone_end = -1
+            return _SPLICED
+        self.pos = end
+        return _IMG_OPERAND
+
+    # ---- Parser ----
+    def refill(self) -> None:
+        b1 = self.buf1 = self.lex()
+        self.buf2 = _EMPTY if type(b1) is _Tok and b1.barrier else self.lex()
+
+    def shift(self) -> None:
+        b2 = self.buf1 = self.buf2
+        self.buf2 = _EMPTY if type(b2) is _Tok and b2.barrier else self.lex()
+
+    def get_obj(self):
+        b = self.buf1
+        if type(b) is _Tok:
+            if b is _EOF:
+                return b
+            if b is _EMPTY:
+                self.refill()
+                return self.get_obj()
+            if b is _STOP:
+                raise _PageStop()
+            self.shift()
+            if b is _PAD:
+                return self.get_obj()
+            return _IMG_OPERAND if b is _SPLICED else b
+        b2 = self.buf1 = self.buf2  # shift()
+        self.buf2 = _EMPTY if type(b2) is _Tok and b2.barrier else self.lex()
+        t = type(b)
+        if t is int or t is float:
+            g = self.buf1
+            tg = type(g)
+            if (
+                self.buf2 is _R
+                and (t is int or b.is_integer())
+                and (tg is int or (tg is float and g.is_integer()))
+            ):
+                self.shift()
+                self.shift()
+                return Ref(b, g)
+            return b
+        if b is _LBRACK:
+            out = []
+            while True:
+                e = self.buf1
+                if e is _RBRACK:
+                    self.shift()
+                    return out
+                if e is _EOF:
+                    raise _PageStop()  # ParserEOFException
+                if e is _EMPTY:
+                    self.refill()
+                    continue
+                e = self.get_obj()
+                if e is _BAD:
+                    # kept: pdf.js would keep the dict minus its non-Name
+                    # keys as the element
+                    raise _PageStop()
+                out.append(e)
+        return b
+
+    def inline_dict(self):
+        """The inline-image dict up to "ID": (entries, end of the "ID"
+        token, or None at EOF). Raises _PageStop at a non-Name key
+        (worker:13691) and at "ID" in a value slot (buf1 becomes null the
+        next iteration). Kept: "BI" in here is an inert command (pdf.js
+        recurses into a nested makeInlineImage)."""
+        dm: dict = {}
+        while True:
+            if self.buf1 is _EMPTY:
+                self.refill()
+            key = self.buf1
+            if key is _ID:
+                return dm, self.pos
+            if key is _EOF:
+                return dm, None
+            if type(key) is not Name:
+                raise _PageStop()
+            self.shift()
+            if self.buf1 is _ID:
+                raise _PageStop()
+            if self.buf1 is _EOF:
+                return dm, None
+            dm[str(key)] = self.get_obj()
+
+
+def _image_end(data: bytes, pos: int, n: int):
+    """(end, ID terminator byte or None) of the inline image whose dict
+    starts at ``pos``. Kept: a Ref-valued F/Filter stays a Ref (pdf.js
+    resolves it), so the default end finder runs."""
+    dm, idpos = _Reader(data, pos, _INLINE).inline_dict()
+    if idpos is not None and idpos < n:
+        term = data[idpos]
+        start = idpos + 1
+    else:
+        term = None
+        start = n if idpos is None else idpos
+    f = dm.get("F")
+    flt = f if truthy(f) else dm.get("Filter")  # dictMap.F || dictMap.Filter
+    fname = None
+    if isinstance(flt, Name):
+        fname = str(flt)
+    elif isinstance(flt, list) and flt and isinstance(flt[0], Name):
+        fname = str(flt[0])
+    if fname in ("DCT", "DCTDecode"):
+        end, found = _find_dct_end(data, start, n)
+    elif fname in ("A85", "ASCII85Decode"):
+        end, found = _find_a85_end(data, start, n)
+    elif fname in ("AHx", "ASCIIHexDecode"):
+        end, found = _find_ahx_end(data, start, n)
+    else:
+        end, found = _find_default_inline_end(data, start, n), True
+    if not found:
+        # EOD marker never seen: rewind and search for /EI/ instead
+        end = _find_default_inline_end(data, start, n)
+    return end, term
+
+
+def _image_skip(data: bytes, pos: int) -> int | None:
+    """The end of the inline image whose dict starts at ``pos``, or None
+    where pdf.js throws on it or the token after it is spliced."""
+    try:
+        end, term = _image_end(data, pos, len(data))
+    except (_LexThrow, _PageStop):
+        return None
+    return end if term is None or term in _WS else None
+
+
+def _zone(data: bytes, ours: int, theirs: int, start: int, depth: int):
+    """Where this reader's token at ``start`` differs from pdf.js's, it
+    goes on at ``ours`` with its own tokens and pdf.js's Lexer at
+    ``theirs`` with its own. Returns (end, cut). Up to ``end``, where the
+    two token streams meet again (or where ours stops), the reader keeps
+    the old loop's rules: ')' is skipped (a page stop in an array) and
+    its own Lexer throws stop the stream where they stand. ``cut`` is
+    where pdf.js's first Lexer throw up to two tokens past ``end`` stops
+    it: the start of the second token before the throwing one (-1: the
+    one before ``start``), or None."""
+    n = len(data)
+    rd = _Reader(data, ours)
+    rd.zone_end = _NO_CUT
+    rd.depth = depth
+    pdfjs = _Reader(data, theirs, _SCAN)
+    starts = [-1, start]
+    end = None
+    past = 0
+    r = _skip_ws(data, ours)
+    while True:
+        p = _skip_ws(data, pdfjs.pos)
+        while end is None and r < p:
+            if rd.lex() in (_STOP, _SPLICED):
+                end = r + 1  # ours stops at r under the old rules
+            r = _skip_ws(data, rd.pos)
+        if end is None and r == p:
+            end = p
+        if end is not None:
+            if past == 2:
+                return end, None
+            past += 1
+        if p >= n:
+            return (n if end is None else end), None
+        try:
+            tok = pdfjs.lex()
+        except _LexThrow:
+            return (n if end is None else end), starts[-2]
+        if tok is _BI:
+            pdfjs.pos = _image_skip(data, pdfjs.pos)
+            if pdfjs.pos is None:
+                # the old prescan gave up at this image: no cut from here
+                return (_NO_CUT if end is None else end), None
+        starts.append(p)
 
 
 NAN = float("nan")
@@ -979,18 +889,33 @@ _JS_TRIM = "".join(sorted(_JS_WS)) + "  "
 
 
 def js_num_str(x: float) -> str:
-    """JS Number#toString for the value range content streams produce
-    (no 1e21 thresholds needed: stringification only happens to PARSED
-    literal operands, whose grammar has no exponents)."""
+    """ECMAScript Number::toString(x) (ECMA-262 6.1.6.1.20): the shortest
+    round-trip digits (``repr``'s, as in V8), written out for decimal
+    exponents -6 < n <= 21 and in e-notation beyond ("1e-7",
+    "123456789012345680000", "1e+21")."""
     if x != x:
         return "NaN"
+    if x == 0:
+        return "0"  # -0 too
+    if x < 0:
+        return "-" + js_num_str(-x)
     if x == INF:
         return "Infinity"
-    if x == -INF:
-        return "-Infinity"
-    if x == int(x) and abs(x) < 1e21:
-        return str(int(x))  # drops ".0"; -0.0 prints "0" like JS
-    return repr(x)  # shortest round-trip, same algorithm family as V8
+    mant, _, e = repr(x).partition("e")
+    whole, _, frac = mant.partition(".")
+    s = (whole + frac).lstrip("0")
+    k = len(s.rstrip("0"))
+    # x = s[:k] * 10**(n - k)
+    n = int(e or 0) - len(frac) + len(s)
+    s = s[:k]
+    if k <= n <= 21:
+        return s + "0" * (n - k)
+    if 0 < n <= 21:
+        return s[:n] + "." + s[n:]
+    if -6 < n <= 0:
+        return "0." + "0" * -n + s
+    exp = f"e{'+' if n > 0 else '-'}{abs(n - 1)}"
+    return (s[0] + "." + s[1:] if k > 1 else s) + exp
 
 
 def to_string(v) -> str:
@@ -1689,87 +1614,29 @@ class JsVM:
         stack: list = []
         opstash: list = []
         buffer: list[bytes] = []  # showSpacedTextBuffer
-        pos, ndata = 0, len(data)
-        # Lexer-throw cut: the Parser's two-token lookahead loses the
-        # two tokens before a throwing one (see _prescan_lexer_throw)
-        cut = _prescan_lexer_throw(data, ndata)
+        # this stream's own reader: its own lookahead, its own cut
+        get_obj = _Reader(data).get_obj
         # Each getTextContent invocation catches its OWN errors
         # (ignoreErrors .catch, pdf.worker.js:37129-37140): a stop
         # flushes this frame's open item and resolves, so an error
         # INSIDE a form does not abort the outer page (paintXObject's
         # catch swallows the rejection, pdf.worker.js:37025-37033).
         try:
-            while pos < ndata:
-                pos = _skip_ws(data, pos)
-                if pos >= ndata:
+            while True:
+                obj = get_obj()
+                if type(obj) is _Cmd:
+                    op = obj.op
+                elif obj is _EOF:
                     break
-                if cut is not None and pos >= cut:
-                    raise JsStop()
-                c = data[pos]
-                if (
-                    c in b"/(<[" or c == 0x2B or c == 0x2D or c == 0x2E
-                    or 0x30 <= c <= 0x39
-                ):
-                    if c == 0x5B:
-                        # full-Parser array semantics (Cmd elements
-                        # inert, refs fold, EOF/')' stop the page)
-                        try:
-                            obj, pos = _parse_content_array(data, pos,
-                                                            ndata)
-                        except _PageStop:
-                            raise JsStop() from None
-                    elif (0x30 <= c <= 0x39 or c == 0x2B
-                          or c == 0x2D or c == 0x2E):
-                        try:
-                            obj, pos = _lex_number(data, pos, ndata)
-                        except _LexThrow:
-                            raise JsStop() from None
-                        if _is_js_integer(obj):
-                            # `int int R` -> ONE Ref operand
-                            folded = _peek_ref(data, pos, ndata, obj)
-                            if folded is not None:
-                                obj, pos = folded
-                    elif c == 0x3C and data[pos:pos + 2] != b"<<":
-                        obj, pos = _hex_content(data, pos, ndata)
-                    else:
-                        try:
-                            obj, pos = parse_object(data, pos, refs=False)
-                        except ValueError:
-                            pos += 1
-                            continue
+                else:
+                    if obj is None:
+                        continue  # read(): `if (obj !== null)`
                     stack.append(obj)
                     if len(stack) > 33:
                         raise JsStop()  # "Too many arguments"
-                    continue
-                if not _OPERATOR.match(data, pos):
-                    pos += 1
-                    continue
-                try:
-                    op, pos = _lex_op(data, pos)
-                except _LexThrow:
-                    raise JsStop() from None  # >128-char command token
-                if op == b"BI":  # inline image (worker:13387)
-                    try:
-                        pos, _term = _inline_image_scan(data, pos, ndata)
-                    except _PageStop:
-                        raise JsStop() from None
-                    stack.append(_IMG_OPERAND)
-                    if len(stack) > 33:
-                        raise JsStop()
-                    if _term is not None and _term not in _WS:
-                        # stale-currentChar splice (see pdfb._inline_image_scan)
-                        data = bytes((_term,)) + data[pos:]
-                        ndata = len(data)
-                        pos = 0
-                        cut = _prescan_lexer_throw(data, ndata)
-                    op = b"EI"  # fall through: image operand + 1-arg EI
-                if op == b"true" or op == b"false":
-                    stack.append(op == b"true")
-                    if len(stack) > 33:
-                        raise JsStop()
-                    continue
-                if op == b"null":
-                    continue  # read(): `if (obj !== null)` — never pushed
+                    if obj is not _IMG_OPERAND:
+                        continue
+                    op = b"EI"  # the image operand + its 1-arg EI
                 spec = _OP_ARITY.get(op)
                 if spec is None:
                     continue  # unknown command keeps pending operands
@@ -1924,7 +1791,7 @@ class JsVM:
                                 handle_set_font(None, ref=gref)
                 # every other known operator: no text effect
                 stack.clear()
-        except JsStop:
+        except (JsStop, _LexThrow, _PageStop):
             # this frame's ignoreErrors .catch: flush the open item and
             # resolve — an error inside a form stops only the form
             flush_item()

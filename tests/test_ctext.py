@@ -492,3 +492,71 @@ def test_generator_sweep_paths_identical():
             c, js = _both(doc)
             for key in ("text", "page_spans", "error"):
                 assert c[key] == js[key], (name, s, key)
+
+
+_H = b"BT /F1 12 Tf 72 700 Td "
+
+# (content stream, extracted text): the content reader's edge cases. The
+# live differential tests check these shapes only with node; here the
+# text is pinned on any host with a C compiler, C path on and off.
+READER_STREAMS = [
+    # a Lexer throw loses the two tokens the Parser had buffered
+    (_H + b"(ab) Tj (cd) Tj (ef) Tj +x ET", "abcd"),
+    (b") BT /F1 12 Tf 72 700 Td (ab) Tj ET", ""),  # the first token
+    (b"BT ) /F1 12 Tf 72 700 Td (ab) Tj ET", ""),  # the second token
+    (_H + b"(ab) Tj +x (cd) Tj ET", ""),
+    (_H + b"(ab) Tj (cd) Tj ) (ef) Tj ET", "ab"),  # a stray ')'
+    (_H + b"(ab) Tj (cd) Tj " + b"Z" * 129 + b" (ef) Tj ET", "ab"),
+    (_H + b"(ab) Tj (cd) Tj " + b"Z" * 128 + b" (ef) Tj ET", "abcdef"),
+    # `int int R` folds to one Ref operand: at top level ("5R" is its
+    # charsCache key), in an array and as an inline-dict value
+    (_H + b"(ab) Tj 5 0 R Tj (5R) Tj (z) Tj ET", "abz"),
+    (_H + b"(ab) Tj [(c) 5000 0 R (d)] TJ (z) Tj ET", "abcdz"),
+    (_H + b"(ab) Tj BI /W 5 0 R /H 1 ID \x01 EI (z) Tj ET", "abz"),
+    (_H + b"(ab) Tj 0 -40 R5 Td (z) Tj ET", "ab\nz"),  # R5 is no R
+    (_H + b"(ab) Tj [(cd) (ef)", "ab"),  # EOF inside an array
+    # the ID terminator X is glued to the data: the token after the
+    # image starts with it; a throw after that keeps what came before
+    (_H + b"(ab) Tj BI /W 1 IDX\x01 EI Q (cd) Tj (ef) Tj +x ET", "abcd"),
+    (_H + b"(ab) Tj BI /W 1 IDX\x01 EI Q +x (cd) Tj ET", "ab"),
+    (_H + b"(ab) Tj BI 5 ID \x01 EI (cd) Tj ET", "ab"),  # non-Name key
+    # 34 pending operands stop the page; 33 do not
+    (_H + b"(ab) Tj " + b" ".join(b"%d" % i for i in range(34))
+     + b" Tm (cd) Tj ET", "ab"),
+    (_H + b"(ab) Tj " + b" ".join(b"%d" % i for i in range(33))
+     + b" Tj (cd) Tj ET", "abcd"),
+    # a dict parse_object rejects reads on from its second byte as hex
+    (_H + b"(ab) Tj << 5 6 >> Tj ET", "abV"),
+    (_H + b"(ab) Tj /Span << /ActualText (a>b) /Alt 5 0 R >> BDC (cd) Tj "
+     b"EMC ET", "abcd"),
+]
+
+
+@pytest.mark.parametrize("ops,text", READER_STREAMS)
+def test_reader_streams_pinned(ops, text):
+    c, js = _both(_scaffold(ops))
+    assert c["text"] == js["text"] == "\n\n" + text
+
+
+def test_js_num_str_follows_number_to_string():
+    from pdf_parse_new_spark.kernels.jsvm import js_num_str
+
+    for x, s in [
+        (1e-7, "1e-7"), (1.5e-7, "1.5e-7"), (1e-6, "0.000001"),
+        (1.2345678901234568e20, "123456789012345680000"),
+        (1e21, "1e+21"), (-0.0, "0"), (100.0, "100"), (-2.5, "-2.5"),
+    ]:
+        assert js_num_str(x) == s
+
+
+def test_exponent_operand_keys_the_chars_cache():
+    # the number operand poisons the charsCache key "1e-7", so the
+    # string show after it is silent (the `5 Tj (5) Tj` model)
+    cinterp.AVAILABLE = False
+    try:
+        out = pdfb.parse_pdf_bytes(
+            _scaffold(_H + b".0000001 Tj (1e-7) Tj (z) Tj ET")
+        )
+    finally:
+        cinterp.AVAILABLE = True
+    assert out["text"] == "\n\nz"
