@@ -494,7 +494,7 @@ _PAD = _Tok(False)  # a dict's first slot (pdf.js reads it as >= 2 tokens)
 _STOP = _Tok(True)  # the stream stops here (an image pdf.js throws on, ...)
 _SPLICED = _Tok(True)  # an inline image whose ID terminator starts the rest
 _ID = _Tok(True)  # the "ID" that ends an inline-image dict
-_THROW = _Tok(False)  # a Lexer throw due at the next token (see _dict)
+_THROW = _Tok(False)  # a Lexer throw due at the next token (_diverge)
 
 _UNKNOWN = object()
 _CMDS: dict = {op: _Cmd(op) for op in _KNOWN_OPS | {b"R"}}
@@ -537,8 +537,8 @@ class _Reader:
         self.buf1 = self.buf2 = _EMPTY
         self.pend = None  # the token due next: the dict behind a _PAD
         self.depth = 0  # "[" lexed and not yet closed
-        self.cut = _NO_CUT  # no token is read from here on (see _dict)
-        self.zone_end = -1  # before it the old loop's rules hold (_zone)
+        self.cut = _NO_CUT  # no token is read from here on (_diverge)
+        self.zone_end = -1  # before it the rules of _zone hold
 
     # ---- Lexer.getObj ----
     def lex(self):
@@ -579,6 +579,8 @@ class _Reader:
                     return self._image()
                 # kept: in an array "BI" is an inert element (pdf.js
                 # reads a nested inline image)
+                if pos < self.zone_end:
+                    return tok
                 return self._diverge(pos, _image_skip(data, self.pos)) or tok
             if tok is _IDC and self.mode == _INLINE:
                 return _ID
@@ -619,7 +621,7 @@ class _Reader:
             except _LexThrow:
                 if self.mode == _INLINE:
                     raise
-                return _STOP  # kept: the old array loop stopped at "["
+                return _STOP  # a page stop at "["
             tok = _Cmd(op)
             if self.mode == _INLINE or self.pos == pos + 1:
                 return tok
@@ -655,7 +657,7 @@ class _Reader:
 
     def _diverge(self, start: int, theirs: int | None):
         """This reader's token at ``start`` is not pdf.js's, whose next
-        token starts at ``theirs`` (None: the old prescan gave up there).
+        token starts at ``theirs`` (None: no cut is sought past here).
         Sets the span and the cut of ``_zone``; returns _STOP when the cut
         falls on this token, else None."""
         if start < self.zone_end:
@@ -724,8 +726,7 @@ class _Reader:
             if b is _PAD:
                 return self.get_obj()
             return _IMG_OPERAND if b is _SPLICED else b
-        b2 = self.buf1 = self.buf2  # shift()
-        self.buf2 = _EMPTY if type(b2) is _Tok and b2.barrier else self.lex()
+        self.shift()
         t = type(b)
         if t is int or t is float:
             g = self.buf1
@@ -829,36 +830,38 @@ def _image_skip(data: bytes, pos: int) -> int | None:
 def _zone(data: bytes, ours: int, theirs: int, start: int, depth: int):
     """Where this reader's token at ``start`` differs from pdf.js's, it
     goes on at ``ours`` with its own tokens and pdf.js's Lexer at
-    ``theirs`` with its own. Returns (end, cut). Up to ``end``, where the
-    two token streams meet again (or where ours stops), the reader keeps
-    the old loop's rules: ')' is skipped (a page stop in an array) and
-    its own Lexer throws stop the stream where they stand. ``cut`` is
-    where pdf.js's first Lexer throw up to two tokens past ``end`` stops
-    it: the start of the second token before the throwing one (-1: the
-    one before ``start``), or None."""
+    ``theirs`` with its own. Returns (end, cut). Before ``end``, where the
+    two token streams meet again (or where ours stops), only pdf.js's
+    tokens throw: the reader skips its own ')' (a page stop in an array)
+    and stops where its own Lexer throw stands. ``cut`` is where pdf.js's
+    first Lexer throw up to two tokens past ``end`` stops the stream: the
+    start of the second token before the throwing one (-1: the one
+    before ``start``), or None. An inline image on pdf.js's side that
+    throws or splices ends the search with no cut (kept: pdf.js reads
+    on)."""
     n = len(data)
     rd = _Reader(data, ours)
     rd.zone_end = _NO_CUT
     rd.depth = depth
     pdfjs = _Reader(data, theirs, _SCAN)
-    starts = [-1, start]
-    end = None
+    starts = [-1, start]  # pdf.js's token starts so far
+    meet = end = None
     past = 0
     r = _skip_ws(data, ours)
     while True:
         p = _skip_ws(data, pdfjs.pos)
-        while end is None and r < p:
-            if rd.lex() in (_STOP, _SPLICED):
-                end = r + 1  # ours stops at r under the old rules
-            r = _skip_ws(data, rd.pos)
-        if end is None and r == p:
-            end = p
-        if end is not None:
-            if past == 2:
+        while meet is None and r < p:
+            tok = rd.lex()
+            if tok is _STOP or tok is _SPLICED:
+                meet, end = r, r + 1  # ours stops at r
+            else:
+                r = _skip_ws(data, rd.pos)
+        if meet is None and r == p:
+            meet = end = p
+        if meet is not None and p >= meet:
+            if past == 2 or p >= n:
                 return end, None
             past += 1
-        if p >= n:
-            return (n if end is None else end), None
         try:
             tok = pdfjs.lex()
         except _LexThrow:
@@ -866,7 +869,6 @@ def _zone(data: bytes, ours: int, theirs: int, start: int, depth: int):
         if tok is _BI:
             pdfjs.pos = _image_skip(data, pdfjs.pos)
             if pdfjs.pos is None:
-                # the old prescan gave up at this image: no cut from here
                 return (_NO_CUT if end is None else end), None
         starts.append(p)
 
